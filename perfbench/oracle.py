@@ -15,7 +15,7 @@ import importlib.util
 import json
 import os
 
-from datagen import TABLES
+from inputs import TABLES
 
 
 def load_oracle_utils(root: str):

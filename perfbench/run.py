@@ -3,17 +3,17 @@
 
 Usage (from the repository root):
 
-    python3 perfbench/run.py --workload interactive --seed 1 --seconds 5 --trace 0
+    python3 perfbench/run.py --workload interactive --seed 1 --seconds 8 --trace 0
 
 One run builds (or reuses) the workload's input tables and oracle answers
 under ``.perfbench/``, then starts fresh Spark processes with a pinned
 environment: with ``--trace 0`` a set-up probe and one measured process,
 with ``--trace 1`` one traced process.  The measured process runs a cold pass
-and then warm passes over the workload's queries, one client submitting one
-query after another, each pass in an order drawn from ``--seed``, each query
-forced by a noop-sink write.  Afterwards every answer is checked against its
-DuckDB oracle.  The last line of stdout is the JSON result; the full record
-goes to ``.perfbench/results/``.
+over the workload's queries, checks every answer against its DuckDB oracle,
+then runs warm passes: one client submitting one query after another, each
+pass in an order drawn from ``--seed``, each query forced by a noop-sink
+write.  The last line of stdout is the JSON result; the full record goes to
+``.perfbench/results/``.
 """
 
 from __future__ import annotations
@@ -30,10 +30,10 @@ import subprocess
 import sys
 import time
 
-import datagen
+import inputs
 import oracle
 import stats
-from workloads import BASE_SF, DATA_SEED, WORKLOADS
+from workloads import WORKLOADS
 
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
@@ -45,11 +45,11 @@ RUN_BUDGET_S = 150  # the whole run, set-up probes included, ends well inside 18
 SETUP_PROBES = 1
 
 # BENCHMARK.json's end-to-end metrics: the JSON result of an untraced run
-END_TO_END_UNITS = {
-    "setup_s": "s", "cold_pass_s": "s", "warm_pass_s": "s", "query_geomean_s": "s",
-}
+END_TO_END_UNITS = {"setup_s": "s", "warm_pass_s": "s", "query_geomean_s": "s"}
 # printed and recorded beside them; too noisy between runs to gate on
-REPORTED_UNITS = {"query_p50_s": "s", "query_tail_s": "s", "jvm_peak_rss_mb": "MB"}
+REPORTED_UNITS = {
+    "cold_pass_s": "s", "query_p50_s": "s", "query_tail_s": "s", "jvm_peak_rss_mb": "MB",
+}
 LAYER_UNITS = {
     "session.start_s": "s", "registry.load_s": "s",
     "sources.reader_calls": "count", "sources.reader_s": "s",
@@ -83,7 +83,6 @@ def pinned_env() -> dict[str, str]:
         "SPARK_GRAFT_CPUS": str(len(os.sched_getaffinity(0))),
         "SPARK_GRAFT_SCRATCH": scratch,
         "SPARK_LOCAL_DIRS": scratch,
-        "SPARK_DRIVER_MEMORY": "2g",
         "TMPDIR": tmp,
         "PYTHONPATH": os.pathsep.join(p for p in (ROOT, os.environ.get("PYTHONPATH")) if p),
         "PYSPARK_PYTHON": sys.executable,
@@ -100,21 +99,30 @@ def cpu_ticks() -> tuple[int, int]:
     return fields[7], sum(fields[:8])
 
 
-def source_identity() -> dict:
-    """The commit when the checkout is a git repository, and always a hash
-    of the package sources."""
+def _sources_sha256(paths: list[str]) -> str:
     h = hashlib.sha256()
-    for path in sorted(glob.glob(os.path.join(ROOT, PACKAGE, "**", "*.py"), recursive=True)):
+    for path in sorted(paths):
         h.update(os.path.relpath(path, ROOT).encode())
         with open(path, "rb") as f:
             h.update(f.read())
+    return h.hexdigest()[:16]
+
+
+def source_identity() -> dict:
+    """The commit when the checkout is a git repository, and always hashes
+    of the package's and the benchmark's sources."""
     try:
         commit = subprocess.run(
             ["git", "-C", ROOT, "rev-parse", "HEAD"], capture_output=True, text=True, timeout=10
         ).stdout.strip() or None
     except OSError:
         commit = None
-    return {"commit": commit, "source_sha256": h.hexdigest()[:16]}
+    return {
+        "commit": commit,
+        "source_sha256": _sources_sha256(
+            glob.glob(os.path.join(ROOT, PACKAGE, "**", "*.py"), recursive=True)),
+        "bench_sha256": _sources_sha256(glob.glob(os.path.join(HERE, "*.py"))),
+    }
 
 
 def kill_group(proc: subprocess.Popen) -> None:
@@ -157,7 +165,9 @@ def spawn_worker(args: list[str], env: dict, log: str, deadline: float) -> dict:
 
 
 def end_to_end(setups: list[float], res: dict) -> tuple[dict, dict]:
-    """The end-to-end metrics and the context the record keeps beside them."""
+    """The end-to-end metrics and the context the record keeps beside them.
+    A metric without samples (no warm pass, or every warm execution failed)
+    is None; such a run is reported as not correct."""
     passes = res["passes"]
     warm = passes[1:]
     samples = [t for p in warm for t in p["times"].values()]
@@ -165,20 +175,25 @@ def end_to_end(setups: list[float], res: dict) -> tuple[dict, dict]:
     for p in warm:
         for q, t in p["times"].items():
             per_query.setdefault(q, []).append(t)
-    tail, pct, n = stats.tail(samples)
+    tail, pct, n = stats.tail(samples) if samples else (None, None, 0)
     metrics = {
         "setup_s": statistics.median(setups),
         "cold_pass_s": passes[0]["wall"],
-        "warm_pass_s": statistics.median([p["wall"] for p in warm]),
-        "query_geomean_s": stats.geomean([statistics.median(v) for v in per_query.values()]),
-        "query_p50_s": statistics.median(samples),
+        # fastest warm pass and fastest warm time per query: the host only
+        # ever adds time, so the minimum of a run is its least disturbed sample
+        "warm_pass_s": min(p["wall"] for p in warm) if warm else None,
+        "query_geomean_s": (stats.geomean([min(v) for v in per_query.values()])
+                            if per_query else None),
+        "query_p50_s": statistics.median(samples) if samples else None,
         "query_tail_s": tail,
         "jvm_peak_rss_mb": res["jvm_peak_rss_mb"],
     }
     context = {
         "setup_samples_s": setups, "warm_passes": len(warm), "samples": n,
         "query_tail_percentile": pct,
-        "query_median_s": {q: statistics.median(v) for q, v in sorted(per_query.items())},
+        "cold_query_s": passes[0]["times"],
+        "warm_pass_walls_s": [p["wall"] for p in warm],
+        "query_samples_s": {q: v for q, v in sorted(per_query.items())},
     }
     return metrics, context
 
@@ -203,7 +218,8 @@ def per_layer(res: dict) -> dict:
         es = s.get("exec.s", 0.0)
         s["exec.util"] = s.get("exec.task_s", 0.0) / (es * cores) if es else 0.0
         sums.append(s)
-    out = {k: statistics.median([s.get(k, 0.0) for s in sums]) for k in LAYER_UNITS}
+    out = {k: statistics.median([s.get(k, 0.0) for s in sums]) if sums else None
+           for k in LAYER_UNITS}
     for k in ("session.start_s", "registry.load_s"):
         out[k] = res["setup"][k]
     out["jvm.peak_rss_mb"] = res["jvm_peak_rss_mb"]
@@ -212,14 +228,18 @@ def per_layer(res: dict) -> dict:
 
 def tracing_overhead(record: dict) -> float | None:
     """Traced minus untraced warm_pass_s, against the untraced records of the
-    same workload and package sources already in this checkout."""
+    same workload, package sources and benchmark sources already in this
+    checkout."""
     untraced = []
     for path in glob.glob(os.path.join(WORK, "results", f"{record['workload']}-trace0-*.json")):
         with open(path) as f:
             r = json.load(f)
-        if r["queries"] == record["queries"] and r["env"]["source_sha256"] == record["env"]["source_sha256"]:
+        same = all(r["env"].get(k) == record["env"][k] for k in ("source_sha256", "bench_sha256"))
+        if r["queries"] == record["queries"] and same:
             untraced.append(r["metrics"]["warm_pass_s"])
-    return record["metrics"]["warm_pass_s"] - statistics.median(untraced) if untraced else None
+    untraced = [u for u in untraced if u is not None]
+    traced = record["metrics"]["warm_pass_s"]
+    return traced - statistics.median(untraced) if untraced and traced is not None else None
 
 
 def main() -> int:
@@ -243,11 +263,10 @@ def main() -> int:
 
     # inputs and oracle answers: built once per checkout, kept out of setup_s
     t = time.perf_counter()
-    data = os.path.join(WORK, "data", "base")
-    datagen.ensure(data, BASE_SF, DATA_SEED)
+    data = inputs.BASE
     if w.copies > 1:
-        data = os.path.join(WORK, "data", f"x{w.copies}")
-        datagen.ensure(data, BASE_SF, DATA_SEED, copies=w.copies)
+        with open(log, "ab") as lf:
+            data = inputs.scaled(ROOT, w.copies, os.path.join(WORK, "data", f"x{w.copies}"), lf)
     fixture_s = time.perf_counter() - t
     t = time.perf_counter()
     sys.path.insert(0, ROOT)
@@ -307,10 +326,10 @@ def main() -> int:
     print(f"workload {w.name}  seed {a.seed}  trace {a.trace}  "
           f"nproc {res['env']['nproc']}  spark {res['env']['spark']}  java {res['env']['java']}")
     for k, (v, u) in {**shown, **extra}.items():
-        print(f"  {k:28s} {v:12.4f} {u}")
+        print(f"  {k:28s} {'-' if v is None else f'{v:.4f}':>12s} {u}")
     print(f"  {'failed_frac':28s} {frac:12.4f} ratio  ({errors + mismatches}/{attempted})")
-    print(f"  query_tail_s is p{context['query_tail_percentile']:.0f} of {context['samples']} "
-          f"warm executions; {context['warm_passes']} warm passes; "
+    print(f"  query_tail_s is p{context['query_tail_percentile'] or 0:.0f} of "
+          f"{context['samples']} warm executions; {context['warm_passes']} warm passes; "
           f"host CPU steal {100 * context['host_steal_frac']:.1f} %")
     if a.trace and record["tracing_overhead_s"] is not None:
         print(f"  tracing overhead (traced - untraced warm_pass_s): "
@@ -320,8 +339,11 @@ def main() -> int:
     for errs in record["pass_errors"]:
         for q, msg in errs.items():
             print(f"  ERROR {q}: {msg}")
+    missing = [k for k, (v, _) in shown.items() if v is None]
+    if missing:
+        print(f"  NO SAMPLES for {' '.join(missing)}")
     print(json.dumps({
-        "correct": errors + mismatches == 0,
+        "correct": errors + mismatches == 0 and not missing,
         "attempted": attempted,
         "failed": errors + mismatches,
         "metrics": {k: {"value": v, "unit": u} for k, (v, u) in shown.items()},

@@ -93,3 +93,22 @@ def test_pass_order_differs_across_seeds_and_passes():
     by_pass = {tuple(stats.pass_order(names, 7, p)) for p in range(20)}
     assert len(by_pass) == 20
 
+
+
+def test_end_to_end_takes_fastest_warm_samples_and_survives_none():
+    import run
+
+    def p(wall, **times):
+        return {"wall": wall, "times": times}
+
+    res = {"jvm_peak_rss_mb": 1.0, "passes": [
+        p(9.0, a=6.0, b=3.0), p(5.0, a=2.0, b=3.0), p(4.0, a=3.0, b=1.0), p(6.0, a=4.0)]}
+    m, _ = run.end_to_end([2.0, 4.0], res)
+    assert (m["setup_s"], m["cold_pass_s"], m["warm_pass_s"]) == (3.0, 9.0, 4.0)
+    assert m["query_geomean_s"] == pytest.approx(math.sqrt(2.0 * 1.0))
+
+    # no warm pass, or every warm execution failed: no value, no crash
+    for passes in ([p(9.0, a=6.0)], [p(9.0, a=6.0), p(1.0)]):
+        m, ctx = run.end_to_end([2.0], {"jvm_peak_rss_mb": 1.0, "passes": passes})
+        assert m["query_geomean_s"] is None and m["query_tail_s"] is None
+        assert ctx["samples"] == 0

@@ -2,9 +2,9 @@
 
 ``run.py`` starts this file as a child process, with the environment already
 pinned.  With ``--probe`` it only sets up (import, ``get_spark``,
-``query_fns()``) and exits; otherwise it also warms up, runs the timed passes,
-checks every answer against the oracle and writes its raw samples as JSON to
-``--out``.  Numbers are turned into metrics by ``run.py``.
+``query_fns()``) and exits; otherwise it also runs the cold pass, checks
+every answer against the oracle, runs the warm passes and writes its raw
+samples as JSON to ``--out``.  Numbers are turned into metrics by ``run.py``.
 """
 
 from __future__ import annotations
@@ -19,6 +19,11 @@ import time
 
 import stats
 from workloads import WORKLOADS
+
+# warm passes a run makes at least, however short --seconds is: warm_pass_s
+# is the fastest of them, and more passes make it likelier that one ran while
+# the host was quiet
+MIN_WARM_PASSES = 4
 
 
 def parse_args() -> argparse.Namespace:
@@ -137,6 +142,8 @@ def main() -> None:
         tracer, listener = Tracer(), StreamCounters()
         spark.streams.addListener(listener)
         untrace = trace_readers(tracer)
+    with open(a.expected) as f:
+        expected = json.load(f)
     passes = []
     warm_start = None
     while True:
@@ -161,20 +168,27 @@ def main() -> None:
             rec["cached_mb"] = counters.cached_mb()
         passes.append(rec)
         if warm_start is None:
+            # the correctness gate runs between the cold and the warm passes:
+            # outside the timed passes, and one more execution of every query
+            # before the warm passes, which start past the steepest part of
+            # the JIT warm-up
+            if a.trace:
+                tracer.exec_id = f"{w.name}/gate"
+            problems = gate(fns, list(w.queries), spark, a.data, expected, a.root)
+            if a.trace:  # drop the gate's streaming and Python counters
+                counters.flush()
+                listener.take()
+                counters.python_metrics()
             warm_start = time.perf_counter()
             continue
         warm = len(passes) - 1
-        done = warm >= 2 and time.perf_counter() - warm_start >= a.seconds
+        done = warm >= MIN_WARM_PASSES and time.perf_counter() - warm_start >= a.seconds
         if done or time.time() > a.deadline:
             break
     rss_mb = counters.jvm_peak_rss_mb()
     if a.trace:
         untrace()
         spark.streams.removeListener(listener)
-
-    with open(a.expected) as f:
-        expected = json.load(f)
-    problems = gate(fns, list(w.queries), spark, a.data, expected, a.root)
     import pyarrow
 
     env = {

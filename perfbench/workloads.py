@@ -1,18 +1,15 @@
 """The benchmark's workloads: which registered queries run on which input.
 
-Every workload runs on tables generated by ``datagen`` with data seed 42 at
-base scale factor 0.01; ``copies`` replicates that base by key offsets.  The
-workload seed given on the command line permutes the query order of every
-pass.  Why each workload exists, and which layer metrics it should move, is
-recorded in ``perfbench/README.md``.
+Every workload runs on the engine's sf0.01 test tables (``inputs.BASE``);
+``copies`` replicates them by key offsets.  The workload seed given on the
+command line permutes the query order of every pass.  Why each workload
+exists, and which layer metrics it should move, is recorded in
+``perfbench/README.md``.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
-
-BASE_SF = 0.01
-DATA_SEED = 42
 
 
 @dataclass(frozen=True)
