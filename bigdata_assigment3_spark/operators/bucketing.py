@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .multimodal import _sf_tag
 from ..registry import query
+from ..session import conf_pin
 from ..sources import load_table
 
 N_BUCKETS = 8
@@ -190,21 +191,8 @@ def q_runtime_bloom_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         "spark.sql.adaptive.autoBroadcastJoinThreshold": "-1",
         "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold": "0",
     }
-    saved = {}
-    for k, v in scoped.items():
-        try:
-            saved[k] = spark.conf.get(k)
-        except Exception:
-            saved[k] = None
-        spark.conf.set(k, v)
-    try:
+    with conf_pin(spark, scoped):
         # force logical optimization NOW (lazy vals cache on the
         # DataFrame's QueryExecution, so later actions reuse this plan)
         out._jdf.queryExecution().optimizedPlan()
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
     return out

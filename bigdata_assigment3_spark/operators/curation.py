@@ -22,9 +22,8 @@ from pyspark.sql.window import Window
 
 from ..functions.hashing import md5_int56_duck, md5_int56_spark
 from ..registry import query
-from ..session import lineage_checkpoint
-from ..sources import load_table
-from .dedup import _docs_parallel
+from ..session import lineage_checkpoint, session_memo
+from ..sources import load_table_parallel
 
 # ---------------------------------------------------------------- n-grams
 
@@ -87,7 +86,7 @@ def q_repetition_ngram_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     Pure per-document array math — a map-only stage with no shuffle;
     at 100 TB this pipelines with the scan at full parquet read speed.
     """
-    docs = _docs_parallel(spark, sf_dir)
+    docs = load_table_parallel(spark, sf_dir, "documents")
     words = _words()
     grams = _ngrams(words, 2)
     g = docs.filter(F.size(words) >= 2).select(
@@ -153,7 +152,7 @@ def q_decontamination_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     the build side of the join, so Spark broadcasts it and the 100 TB
     side streams through a semi-join — never the reverse.
     """
-    docs = _docs_parallel(spark, sf_dir)
+    docs = load_table_parallel(spark, sf_dir, "documents")
     words = _words()
     grams = (
         docs.filter(F.size(words) >= DECON_N)
@@ -232,7 +231,7 @@ def q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     the 100 TB anti-pattern; per-shard streams are how real packers
     (and this query) stay embarrassingly parallel.
     """
-    docs = _docs_parallel(spark, sf_dir)
+    docs = load_table_parallel(spark, sf_dir, "documents")
     t = docs.select("doc_id", "source", F.size(_words()).alias("n_tokens"))
     w = (
         Window.partitionBy("source")
@@ -292,7 +291,7 @@ def q_domain_mixture_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     One hash agg + a 1-row broadcast of the totals; integer token
     counts make the two output ratios the only float ops.
     """
-    docs = _docs_parallel(spark, sf_dir)
+    docs = load_table_parallel(spark, sf_dir, "documents")
     t = docs.groupBy("source").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_docs"),
         F.sum(F.size(_words())).cast("bigint").alias("n_tokens"),
@@ -332,7 +331,7 @@ _STOP_IN = ", ".join(f"'{w}'" for w in _STOPWORDS)
 def _quality_verdict_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-doc quality verdict (doc_id, verdict) — the shared core of
     the aggregate report and the composed pipeline verdict."""
-    docs = _docs_parallel(spark, sf_dir)
+    docs = load_table_parallel(spark, sf_dir, "documents")
     words = _words()
     grams = _ngrams(words, 2)
     f = docs.select(
@@ -466,7 +465,7 @@ def q_lm_bigram_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     ~1e-12 association-order drift of the sum, so the score is
     cross-engine stable.
     """
-    docs = _docs_parallel(spark, sf_dir)
+    docs = load_table_parallel(spark, sf_dir, "documents")
     words = _words()
     w = docs.select("doc_id", words.alias("words"))
     uni = w.select(F.explode("words").alias("word"))
@@ -538,7 +537,7 @@ def q_span_dedup_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     is a shuffle join on the same key — sub-quadratic end to end, the
     distributable stand-in for a suffix array at 100 TB.
     """
-    docs = _docs_parallel(spark, sf_dir)
+    docs = load_table_parallel(spark, sf_dir, "documents")
     words = _words()
     spans = (
         docs.filter(F.size(words) >= SPAN_N)
@@ -664,7 +663,7 @@ def q_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     regex (Spark) and RE2 (DuckDB) match identically; redaction is
     ``regexp_replace`` in the JVM, no Python.
     """
-    docs = _docs_parallel(spark, sf_dir)
+    docs = load_table_parallel(spark, sf_dir, "documents")
     email = F.when(
         F.col("doc_id") % 5 == 0,
         F.concat(F.lit(" contact u"), F.col("doc_id").cast("string"), F.lit("@mail.com")),
@@ -706,7 +705,23 @@ def _lm_oracle() -> str:
 
 
 N_BUCKETS = 10
-_RANGED_CACHE: dict[tuple[str, str], "DataFrame"] = {}
+
+
+@session_memo
+def _ranged_lm_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """lm_bigram_score range-partitioned on (mean_nll, doc_id), tagged
+    with its partition id, persisted.  Memoized so repeat invocations
+    reuse one range copy instead of stacking a new persist per call,
+    and never unpersisted while its session lives: a still-held
+    curriculum result reads offsets collected from THIS copy's
+    boundaries, which a re-sample could move."""
+    n_part = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+    return (
+        q_lm_bigram_score(spark, sf_dir)
+        .repartitionByRange(n_part, "mean_nll", "doc_id")
+        .withColumn("pid", F.spark_partition_id())
+        .persist()
+    )
 
 
 @query(
@@ -752,28 +767,7 @@ def q_curriculum_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     shape Spark uses for a distributed sort: one range shuffle + a
     driver-side O(#partitions) cumsum.
     """
-    lm = q_lm_bigram_score(spark, sf_dir)
-    n_part = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    # memoized per (session, sf_dir) like the dedup inverted index:
-    # repeat invocations (bench) reuse one cached range copy instead
-    # of stacking a new persist per call
-    ckey = (spark.sparkContext.applicationId, sf_dir)
-    ranged = _RANGED_CACHE.get(ckey)
-    if ranged is None:
-        # NEVER unpersist same-session entries: the persisted range
-        # copy is load-bearing for any still-held result DF (offsets
-        # were collected from ITS boundaries; a re-sample could move
-        # them).  Only dead sessions' keys are dropped (their blocks
-        # are already gone); live entries are one per sf_dir, bounded.
-        for k in list(_RANGED_CACHE):
-            if k[0] != ckey[0]:
-                del _RANGED_CACHE[k]
-        ranged = (
-            lm.repartitionByRange(n_part, "mean_nll", "doc_id")
-            .withColumn("pid", F.spark_partition_id())
-            .persist()
-        )
-        _RANGED_CACHE[ckey] = ranged
+    ranged = _ranged_lm_scores(spark, sf_dir)
     counts = {r.pid: r.n for r in
               ranged.groupBy("pid").agg(F.count(F.lit(1)).alias("n")).collect()}
     n = sum(counts.values())

@@ -25,7 +25,7 @@ from pyspark.sql.window import Window
 
 from ..functions.hashing import md5_int56_duck, md5_int56_spark
 from ..registry import REGISTRY, query
-from ..session import lineage_checkpoint
+from ..session import lineage_checkpoint, session_memo
 from ..sources import load_table, load_table_parallel
 
 K = 16        # char-shingle length
@@ -98,29 +98,7 @@ jacc AS (
 """
 
 
-_INV_CACHE: dict = {}
-_PAIRS_CACHE: dict = {}
-_CANON_CACHE: dict = {}
-
-
-def _docs_parallel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """documents scan with a small-file guard: the testdata table is
-    ONE parquet file -> one partition, which would run the whole
-    shingle-hash fan-out single-threaded.  Repartition the (tiny) doc
-    rows up to the cluster's parallelism BEFORE the per-doc position
-    explode, so the heavy hashing runs wide.  At real corpus scale
-    the scan already has >= defaultParallelism splits and this is a
-    no-op."""
-    docs = load_table(spark, sf_dir, "documents")
-    want = spark.sparkContext.defaultParallelism
-    # File count is the cheap proxy for scan width (no .rdd conversion,
-    # which would build a whole RDD lineage just to read a number): a
-    # real corpus has >= want files and skips the shuffle entirely.
-    if len(docs.inputFiles()) < want:
-        docs = docs.repartition(want)
-    return docs
-
-
+@session_memo
 def _inverted_index_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(sh:int56, docs: sorted array<doc_id>) — the inverted shingle
     index, df-pruned.
@@ -129,21 +107,11 @@ def _inverted_index_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     collect_set both dedups (doc, shingle) repeats and builds the
     posting list in ONE shuffle; the df-prune is a size() filter on
     the array (no second shuffle, no join-back).  Persisted and
-    memoized per (session, sf_dir): every dedup variant derives from
-    this index, so repeat queries reuse one cached copy instead of
-    stacking a new persist per call; stale entries (other sessions /
-    scale factors) are unpersisted on miss.
+    session-memoized: every dedup variant derives from this index, so
+    repeat queries reuse one cached copy instead of stacking a new
+    persist per call.
     """
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _INV_CACHE.get(key)
-    if hit is not None:
-        return hit
-    for k in list(_INV_CACHE):
-        if k[0] == key[0]:
-            _INV_CACHE.pop(k).unpersist()
-        else:
-            del _INV_CACHE[k]  # dead session: blocks are already gone
-    docs = _docs_parallel(spark, sf_dir)
+    docs = load_table_parallel(spark, sf_dir, "documents")
     # Positions derive from each doc's own length (no fixed cap: a
     # 10 kB doc gets ~2.5k shingles, not just the first 600 chars).
     shingle_str = f"substring(text, 1 + i * {STRIDE}, {K})"
@@ -165,7 +133,6 @@ def _inverted_index_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     built.count()  # materialize NOW: every consumer fans into several
     # branches of one job, which would each recompute the build chain
     # if the cache were still lazy when the job launches.
-    _INV_CACHE[key] = built
     return built
 
 
@@ -283,6 +250,7 @@ cand AS (
     FROM cand c LEFT JOIN jacc j ON j.doc_a = c.doc_a AND j.doc_b = c.doc_b
     """,
 )
+@session_memo
 def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash(J=8) + LSH banding (4 bands x 2 rows): candidate pairs
     from band collisions, then exact-Jaccard verification of only the
@@ -291,20 +259,11 @@ def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     Signature: mh_j = min over shingles of ((2j+3)*h56(sh) + 7j+1) mod P.
     All integer math -> bit-identical across engines.
 
-    The verified-pair table is persisted and memoized per (session,
-    sf_dir) exactly like the inverted index: the canonicalization and
-    the composed pipeline both consume it, and it is tiny (corpus-
-    dup-rate-sized), so downstream consumers pay the LSH chain once.
+    The verified-pair table is persisted and session-memoized like
+    the inverted index: the canonicalization and the composed pipeline
+    both consume it, and it is tiny (corpus-dup-rate-sized), so
+    downstream consumers pay the LSH chain once.
     """
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _PAIRS_CACHE.get(key)
-    if hit is not None:
-        return hit
-    for k in list(_PAIRS_CACHE):
-        if k[0] == key[0]:
-            _PAIRS_CACHE.pop(k).unpersist()
-        else:
-            del _PAIRS_CACHE[k]
     sh = _shingles_df(spark, sf_dir)
     # All J signatures in per-doc array math: ONE shuffle (the
     # doc_id groupBy) instead of a J-fat crossJoin + (doc, j)
@@ -378,7 +337,6 @@ def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         .persist()
     )
     out.count()  # materialize: consumers fan into multiple branches
-    _PAIRS_CACHE[key] = out
     return out
 
 
@@ -408,7 +366,7 @@ def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """24-bit SimHash per document: bitwise majority vote over word
     hashes.  Near-dups land in equal buckets — dedup becomes a plain
     groupBy on the sketch (constant state per doc at any scale)."""
-    docs = _docs_parallel(spark, sf_dir)
+    docs = load_table_parallel(spark, sf_dir, "documents")
     words = F.array_distinct(F.filter(F.split("text", " "), lambda x: x != ""))
     w = docs.select("doc_id", F.explode(words).alias("word"))
     wh = w.select("doc_id", F.expr(md5_int56_spark("word")).alias("h"))
@@ -480,7 +438,7 @@ def q_dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     Learned float embeddings slot into the same plan after
     milli-quantization (see similarity.py).
     """
-    docs = _docs_parallel(spark, sf_dir)
+    docs = load_table_parallel(spark, sf_dir, "documents")
     shingle_str = f"substring(text, 1 + i * {STRIDE}, {K})"
     feat0 = (
         docs.filter(F.length("text") >= K)
@@ -560,6 +518,7 @@ def _minhash_pairs_oracle() -> str:
     FROM reach GROUP BY v
     """,
 )
+@session_memo
 def q_dedup_canonical_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The dedup *decision* step that turns near-dup pairs into an
     actionable keep/drop list: connected components over the verified
@@ -574,18 +533,6 @@ def q_dedup_canonical_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     unreachable.  The cap raises rather than returning unconverged
     labels (same contract as largest_component).
     """
-    from ..session import lineage_checkpoint
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _CANON_CACHE.get(key)
-    if hit is not None:
-        return hit
-    for k in list(_CANON_CACHE):
-        if k[0] == key[0]:
-            _CANON_CACHE.pop(k).unpersist()
-        else:
-            del _CANON_CACHE[k]  # dead session: blocks are already gone
-
     pairs = q_dedup_minhash_lsh(spark, sf_dir).filter(F.col("is_dup")).select(
         "doc_a", "doc_b"
     )
@@ -644,7 +591,6 @@ def q_dedup_canonical_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sizes, cascade funnel, keep-longest) each trigger their own jobs
     # — memoizing the converged labels means the multi-round
     # propagation runs once per (session, sf_dir), not once per query.
-    _CANON_CACHE[key] = out
     return out
 
 
@@ -883,30 +829,19 @@ _SEM_QUANT_DUCK = (
     "list_transform(embedding, x -> CAST(ROUND(CAST(x AS DOUBLE) * 1000) AS BIGINT))"
 )
 
-_SEM_ASSIGN_CACHE: dict = {}
-
-
+@session_memo
 def _semantic_assign_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(vec_id, cluster_id, e: bigint[], n2) — every nonzero-norm
     vector with its one-step-Lloyd cluster assignment (nearest of the
     {K_SEM} lowest-vec_id seeds by cosine, ties to the lowest
     seed_id).
 
-    Persisted and memoized per (session, sf_dir) like the shingle
-    inverted index: the dedup query consumes the assignment THREE
+    Persisted and session-memoized like the shingle inverted index:
+    the dedup query consumes the assignment THREE
     times (both sides of the within-cluster pair join plus the final
     verdict join), and without a persist each consumer would re-run
     the corpus-wide seed scoring pass — 3 full corpus scans instead
     of 1 at 100 TB."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _SEM_ASSIGN_CACHE.get(key)
-    if hit is not None:
-        return hit
-    for k in list(_SEM_ASSIGN_CACHE):
-        if k[0] == key[0]:
-            _SEM_ASSIGN_CACHE.pop(k).unpersist()
-        else:
-            del _SEM_ASSIGN_CACHE[k]  # dead session: blocks are already gone
     emb = load_table_parallel(spark, sf_dir, "embeddings")
     norm2 = F.expr("aggregate(transform(e, x -> x * x), 0L, (a, b) -> a + b)")
     nz = (
@@ -939,8 +874,7 @@ def _semantic_assign_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     built.count()  # materialize NOW: the dedup query fans into three
     # consumers of this relation inside one job, which would each
     # recompute the seed-scoring chain if the cache were still lazy
-    # when the job launches (same rationale as _INV_CACHE).
-    _SEM_ASSIGN_CACHE[key] = built
+    # when the job launches (same rationale as _inverted_index_df).
     return built
 
 
@@ -1116,7 +1050,7 @@ def q_dedup_cascade_attrition(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows themselves are three 1-row count aggregates cross-joined —
     nothing here adds a corpus-growing shuffle beyond the stages it
     measures."""
-    docs = _docs_parallel(spark, sf_dir)
+    docs = load_table_parallel(spark, sf_dir, "documents")
     ex = docs.groupBy(F.md5("text").alias("h")).agg(F.min("doc_id").alias("doc_id"))
     canon = q_dedup_canonical_docs(spark, sf_dir).select("doc_id", "canonical_id")
     lab = ex.join(canon, "doc_id", "left").select(
@@ -1180,7 +1114,7 @@ def q_dedup_keep_longest(spark: SparkSession, sf_dir: str) -> DataFrame:
     rank window partitioned by component_id — a high-cardinality key
     (components are small by construction), so the window is fully
     parallel."""
-    docs = _docs_parallel(spark, sf_dir)
+    docs = load_table_parallel(spark, sf_dir, "documents")
     canon = q_dedup_canonical_docs(spark, sf_dir).select("doc_id", "canonical_id")
     lab = (
         docs.select("doc_id", F.length("text").alias("n_chars_actual"))
@@ -1208,23 +1142,12 @@ def q_dedup_keep_longest(spark: SparkSession, sf_dir: str) -> DataFrame:
 # recall-greedy (8x1) to precision-greedy (1x8).
 BAND_CONFIGS = [(8, 1), (4, 2), (2, 4), (1, 8)]
 
-_SIG_CACHE: dict = {}
-
-
+@session_memo
 def _signature_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-doc minhash signature arrays (doc_id, mh), persisted and
-    memoized per (session, sf_dir) like the inverted index: the
+    session-memoized like the inverted index: the
     band-tuning audit regroups this ONE table four ways, so the
     signature hash runs once per corpus, not once per configuration."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _SIG_CACHE.get(key)
-    if hit is not None:
-        return hit
-    for k in list(_SIG_CACHE):
-        if k[0] == key[0]:
-            _SIG_CACHE.pop(k).unpersist()
-        else:
-            del _SIG_CACHE[k]
     sig = (
         _shingles_df(spark, sf_dir)
         .groupBy("doc_id")
@@ -1233,7 +1156,6 @@ def _signature_df(spark: SparkSession, sf_dir: str) -> DataFrame:
         .persist()
     )
     sig.count()
-    _SIG_CACHE[key] = sig
     return sig
 
 

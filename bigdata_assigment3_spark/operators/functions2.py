@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..registry import query
+from ..session import conf_pin
 from ..sources import load_table
 
 
@@ -692,9 +693,7 @@ def q_sql_scripting_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources import register_views
 
     register_views(spark, sf_dir)
-    old = spark.conf.get("spark.sql.scripting.enabled", None)
-    spark.conf.set("spark.sql.scripting.enabled", "true")
-    try:
+    with conf_pin(spark, {"spark.sql.scripting.enabled": "true"}):
         return spark.sql(
             """
             BEGIN
@@ -712,8 +711,3 @@ def q_sql_scripting_query(spark: SparkSession, sf_dir: str) -> DataFrame:
             END
             """
         )
-    finally:
-        if old is None:
-            spark.conf.unset("spark.sql.scripting.enabled")
-        else:
-            spark.conf.set("spark.sql.scripting.enabled", old)

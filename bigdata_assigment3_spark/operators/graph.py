@@ -22,35 +22,22 @@ is one final correctly-rounded divide.
 
 from __future__ import annotations
 
-import contextlib
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..registry import query
-from ..session import lineage_checkpoint
+from ..session import conf_pin, lineage_checkpoint
 from ..sources import load_table
 
-
-@contextlib.contextmanager
-def _no_aqe(spark: SparkSession):
-    """Disable AQE around a lineage_checkpoint materialization.
-
-    Round-16 finding (round-15 verdict #3): under AQE the physical
-    plan handed to ``Dataset.localCheckpoint`` is an
-    AdaptiveSparkPlanExec whose outputPartitioning reads
-    UnknownPartitioning, so the checkpointed LogicalRDD LOSES the
-    explicit ``repartition(n, "v")`` partitioning and every downstream
-    join re-exchanges both inputs (measured: 3 exchanges per PageRank
-    iteration).  With AQE off for the checkpoint build, the
-    HashPartitioning survives into the LogicalRDD and the iteration
-    joins need no exchange at all.  Session-global conf pin, same
-    no-concurrent-planning invariant as streaming._state_partitions."""
-    old = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", old)
+# Checkpoints that must keep their partitioning are built with AQE off
+# (round-16 finding, round-15 verdict #3): under AQE the physical plan
+# handed to ``Dataset.localCheckpoint`` is an AdaptiveSparkPlanExec
+# whose outputPartitioning reads UnknownPartitioning, so the
+# checkpointed LogicalRDD LOSES the explicit ``repartition(n, "v")``
+# and every downstream join re-exchanges both inputs (measured: 3
+# exchanges per PageRank iteration).  With AQE off for the build, the
+# HashPartitioning survives into the LogicalRDD and the iteration
+# joins need no exchange at all.
+_AQE_OFF = {"spark.sql.adaptive.enabled": "false"}
 
 OUT_K = 5          # out-links generated per document
 PR_ITERS = 5       # fixed PageRank iterations (unrolled in the oracle)
@@ -146,7 +133,7 @@ def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # work whose result never changes.  Round 16: the round-15 claim
     # that the checkpoint preserves the explicit repartition was
     # FALSE under AQE (the dumped LogicalRDDs read UnknownPartitioning
-    # — verdict #3); every checkpoint here now runs inside _no_aqe so
+    # — verdict #3); every checkpoint here is now built with AQE off so
     # the HashPartitioning(v, n_part) genuinely survives, and the
     # captured per-iteration plan (plans/r16/pagerank_iteration_*.txt)
     # shows the edges x rank join and the verts left-join re-anchor
@@ -156,7 +143,7 @@ def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # with the agg planned non-adaptive its exchange is already
     # exactly (v, n_part).
     n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    with _no_aqe(spark):
+    with conf_pin(spark, _AQE_OFF):
         edges_deg = lineage_checkpoint(edges_deg.repartition(n_part, "v"), big=True)
         verts = lineage_checkpoint(verts.repartition(n_part, "v"), big=True)
     rank = verts.select("v", F.lit(PR_SCALE).cast("bigint").alias("rank_i"))
@@ -175,7 +162,7 @@ def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         # checkpoint non-adaptive too: rank's left-join partitioning
         # (v, n_part) must survive into the next iteration's join
-        with _no_aqe(spark):
+        with conf_pin(spark, _AQE_OFF):
             rank = lineage_checkpoint(rank)
     return rank.select(
         "v",

@@ -21,7 +21,7 @@ from ..functions.hashing import md5_int56_duck, md5_int56_spark
 from ..plans.hints import bounded_broadcast
 from ..registry import query
 from ..session import lineage_checkpoint
-from ..sources import load_table
+from ..sources import load_table, load_table_parallel
 
 # Shared sliding-window chunk rule (used by chunk_documents here, the
 # UDTF span expander in functions2.py, and the rag_chunk_index census
@@ -782,18 +782,16 @@ def q_langid_nb_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     sublinear in corpus) built with a 5-row broadcast of the class
     totals; scoring shuffles on ``word`` then on ``(doc_id, class)``
     — the classic MapReduce NB, nothing grows quadratically."""
-    from .dedup import _docs_parallel
-
     docs = load_table(spark, sf_dir, "documents")
     words_arr = F.filter(F.split("text", " "), lambda x: x != "")
     # the single corpus-wide tokenize pass: everything below derives
     # from this (doc, word) count table or from plain `documents`.
     # Checkpointed because BOTH the model build (wc) and the scoring
     # join consume it — without materialization the tokenize pass runs
-    # twice; _docs_parallel widens the single-file testdata scan so
+    # twice; load_table_parallel widens the single-file testdata scan so
     # the explode runs at cluster parallelism (no-op at real scale)
     dw = lineage_checkpoint(
-        _docs_parallel(spark, sf_dir)
+        load_table_parallel(spark, sf_dir, "documents")
         .select("doc_id", "lang", F.explode(words_arr).alias("word"))
         .groupBy("doc_id", "lang", "word")
         .agg(F.count(F.lit(1)).alias("cnt")),
@@ -934,8 +932,6 @@ def q_langid_char_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts, one LN per (bucket, class), per-(doc, class) sums rounded
     to INTEGER 1e-4 units before the argmax, ties lexicographic.
     """
-    from .dedup import _docs_parallel
-
     docs = load_table(spark, sf_dir, "documents")
     t = F.concat(F.lit("_"), F.regexp_replace("text", " ", "_"), F.lit("_"))
     base = docs.select("doc_id", "lang", t.alias("t")).filter(
@@ -946,7 +942,7 @@ def q_langid_char_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     # width of a single-file testdata scan (no-op at real corpus
     # scale); cls and the output join stay on the plain scan, and the
     # guard's exchange runs once at dw's lineage checkpoint
-    gbase = _docs_parallel(spark, sf_dir).select(
+    gbase = load_table_parallel(spark, sf_dir, "documents").select(
         "doc_id", "lang", t.alias("t")
     ).filter(F.length("t") >= LANGID_NGRAM_N)
     grams = gbase.select(
@@ -1256,9 +1252,7 @@ def q_bm25_topk_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     when the scan has fewer splits than cores — a no-op on a real
     multi-split corpus).
     """
-    from .dedup import _docs_parallel
-
-    docs = _docs_parallel(spark, sf_dir).select(
+    docs = load_table_parallel(spark, sf_dir, "documents").select(
         "doc_id",
         F.split("text", " ").alias("ws"),
         F.size(F.split("text", " ")).alias("dl"),

@@ -1,16 +1,47 @@
-"""SparkSession construction + per-session config hardening.
+"""SparkSession construction, per-session config hardening, and the
+two pieces of session-global state the operators share.
 
 Every config here is chosen for the 100 TB target, not just local
 tests: AQE re-plans shuffles at runtime (skew joins, partition
 coalescing), Arrow keeps the Python<->JVM boundary vectorized, and
 UTC session time keeps results comparable across engines/clusters.
+
+Session memos (:func:`session_memo`).  An index-like intermediate
+that several queries consume (the shingle inverted index, the
+verified minhash pairs, the PQ codebooks ...) is built once per
+(session, builder, sf_dir) and reused by every later query of that
+session.  A miss first drops the entries of dead sessions — their
+persisted blocks died with their SparkContext, so there is nothing to
+unpersist — and then builds.  An entry of the LIVE session is never
+unpersisted: a result DataFrame the caller still holds may read its
+blocks (the curriculum range copy's offsets were collected from ITS
+boundaries), and persisted frames are MEMORY_AND_DISK, so the block
+manager can still evict them under pressure.  A session therefore
+holds at most one entry per (builder, sf_dir).
+
+Conf pins (:func:`conf_pin`).  Some plans need a conf other than the
+session's for one build (AQE off for a partitioning-preserving
+checkpoint, keyspace-sized state partitions for a stream start).
+Session confs are global to the session: a query planned on any
+thread while a pin is active plans with the pinned value.  So the pin
+is scoped as tightly as the plan allows, restores every key on exit
+(unsetting the ones that were unset), and pins never overlap — a
+second pin while one is active, nested or from another thread,
+raises instead of silently interleaving save/restore pairs.
 """
 
 from __future__ import annotations
 
+import contextlib
+import functools
 import os
+import threading
+from collections.abc import Callable, Iterator
+from typing import TypeVar
 
 from pyspark.sql import SparkSession
+
+T = TypeVar("T")
 
 # Dynamic SQL confs that queries rely on.  Applied defensively at query
 # entry too (ensure_session_conf) because the driver may hand us a
@@ -159,3 +190,56 @@ def get_spark(app_name: str = "bigdata_assigment3_spark") -> SparkSession:
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     return ensure_session_conf(spark)
+
+
+# (applicationId, builder, sf_dir) -> built value; see the module docstring
+_MEMO: dict[tuple[str, str, str], object] = {}
+_PIN_LOCK = threading.Lock()
+
+
+def session_memo(build: Callable[[SparkSession, str], T]) -> Callable[[SparkSession, str], T]:
+    """Memoize a ``(spark, sf_dir)`` builder per live session (policy in
+    the module docstring).  Two threads missing the same key at once
+    both build and the last one is kept; both values stay valid."""
+    name = f"{build.__module__}.{build.__qualname__}"
+
+    @functools.wraps(build)
+    def memoized(spark: SparkSession, sf_dir: str) -> T:
+        app = spark.sparkContext.applicationId
+        key = (app, name, sf_dir)
+        hit = _MEMO.get(key)
+        if hit is not None:
+            return hit
+        for k in list(_MEMO):
+            if k[0] != app:
+                _MEMO.pop(k, None)
+        built = _MEMO[key] = build(spark, sf_dir)
+        return built
+
+    return memoized
+
+
+@contextlib.contextmanager
+def conf_pin(spark: SparkSession, confs: dict[str, str]) -> Iterator[None]:
+    """Set ``confs`` for the body, then restore each key (or unset it if
+    it had no value).  Raises ``RuntimeError`` if another pin is active
+    (see the module docstring)."""
+    if not _PIN_LOCK.acquire(blocking=False):
+        raise RuntimeError(
+            f"conf_pin({sorted(confs)}) overlaps an active pin: session confs "
+            "are global, so pins must not nest or run concurrently"
+        )
+    try:
+        saved = {k: spark.conf.get(k, None) for k in confs}
+        try:
+            for k, v in confs.items():
+                spark.conf.set(k, v)
+            yield
+        finally:
+            for k, old in saved.items():
+                if old is None:
+                    spark.conf.unset(k)
+                else:
+                    spark.conf.set(k, old)
+    finally:
+        _PIN_LOCK.release()

@@ -61,19 +61,21 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 
 def load_table_parallel(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """:func:`load_table` + a small-file scan-width guard (round 16,
-    generalizing dedup._docs_parallel): a testdata table is ONE
-    parquet file with one row group, so every stage computing heavy
-    per-row work directly on the scan (quantization HOFs, SRP/argmin
-    expressions, Arrow kernels) runs SINGLE-TASK regardless of core
-    count — measured at the 10x audit fixture: ann_ivf_probe spent
-    9.9s of task time across 7 one-task stages (util 0.03).
-    Repartition the scan up to the cluster's parallelism BEFORE the
-    heavy expressions; at real corpus scale the scan already has
-    >= defaultParallelism splits and this is a no-op (file-count
-    guard, same as _docs_parallel)."""
+    """:func:`load_table` + a small-file scan-width guard: a testdata
+    table is ONE parquet file with one row group, so every stage
+    computing heavy per-row work directly on the scan (shingle-hash
+    explodes, quantization HOFs, SRP/argmin expressions, Arrow
+    kernels) runs SINGLE-TASK regardless of core count — measured at
+    the 10x audit fixture: ann_ivf_probe spent 9.9s of task time
+    across 7 one-task stages (util 0.03).  Repartition the scan up to
+    the cluster's parallelism BEFORE the heavy expressions; at real
+    corpus scale the scan already has >= defaultParallelism splits
+    and this is a no-op."""
     df = load_table(spark, sf_dir, name)
     want = spark.sparkContext.defaultParallelism
+    # File count is the cheap proxy for scan width (no .rdd conversion,
+    # which would build a whole RDD lineage just to read a number): a
+    # real corpus has >= want files and skips the shuffle entirely.
     if len(df.inputFiles()) < want:
         df = df.repartition(want)
     return df

@@ -29,7 +29,7 @@ from pyspark.sql.window import Window
 from ..operators.relational import SCD2_HIST_CTES
 from ..plans.hints import bounded_broadcast
 from ..registry import query
-from ..session import ensure_session_conf, scratch_dir
+from ..session import conf_pin, ensure_session_conf, scratch_dir
 from ..sources import load_table
 from ..sources.tables import normalize_events_ts
 
@@ -67,10 +67,9 @@ def _stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 _STATE_PARTS_DEFAULT = 4
 
 
-@contextlib.contextmanager
-def _state_partitions(spark: SparkSession, n: int = _STATE_PARTS_DEFAULT):
-    """Pin ``spark.sql.shuffle.partitions`` around a stateful stream
-    start, restoring the caller's value afterwards.
+def _state_partitions() -> int:
+    """State-store partition count for a KEYSPACE-BOUNDED stateful
+    stream, pinned as ``spark.sql.shuffle.partitions`` around its start.
 
     A stateful streaming aggregation runs one state-store partition
     per shuffle partition, fixed at first start (AQE never coalesces
@@ -91,30 +90,17 @@ def _state_partitions(spark: SparkSession, n: int = _STATE_PARTS_DEFAULT):
     scales with the cluster.  ``SPARK_GRAFT_STREAM_STATE_PARTS``
     overrides for deployments whose keyspace-bounded state outgrows
     the floor (e.g. billion-user audiences: size to state bytes /
-    ~64 MB per partition).
-
-    INVARIANT (round-15 advice): the conf mutation is session-global —
-    no OTHER batch query may be planned on this session while the pin
-    is active, or it silently plans with ``n`` shuffle partitions.
-    Today every caller is sequential (the bench, the oracle sweep, and
-    the bitmap_overlap thread-pool staging all finish their concurrent
-    jobs BEFORE entering the pin); any future concurrent-planning
-    caller must scope the conf per-stream instead."""
+    ~64 MB per partition)."""
     raw = _os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTS")
-    if raw is not None:
-        try:
-            n = int(raw)
-        except ValueError as ex:
-            raise ValueError(
-                "SPARK_GRAFT_STREAM_STATE_PARTS must be an integer "
-                f"(state-store partition count), got {raw!r}"
-            ) from ex
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
+    if raw is None:
+        return _STATE_PARTS_DEFAULT
     try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
+        return int(raw)
+    except ValueError as ex:
+        raise ValueError(
+            "SPARK_GRAFT_STREAM_STATE_PARTS must be an integer "
+            f"(state-store partition count), got {raw!r}"
+        ) from ex
 
 
 def _run_to_memory(
@@ -123,11 +109,12 @@ def _run_to_memory(
     """Drain ``agg`` into a complete-mode memory sink.  Returns the
     (terminated) StreamingQuery so tests can assert progress metrics
     (e.g. stateOperators.numShufflePartitions)."""
-    with contextlib.ExitStack() as stack:
-        if state_partitions is not None:
-            stack.enter_context(
-                _state_partitions(agg.sparkSession, state_partitions)
-            )
+    pin = (
+        conf_pin(agg.sparkSession, {"spark.sql.shuffle.partitions": str(state_partitions)})
+        if state_partitions is not None
+        else contextlib.nullcontext()
+    )
+    with pin:
         q = (
             agg.writeStream.outputMode("complete")
             .format("memory")
@@ -183,7 +170,7 @@ def q_stream_type_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("double")
         .alias("total_value"),
     )
-    _run_to_memory(agg, "stream_type_totals_sink", state_partitions=_STATE_PARTS_DEFAULT)
+    _run_to_memory(agg, "stream_type_totals_sink", state_partitions=_state_partitions())
     return spark.table("stream_type_totals_sink")
 
 
@@ -425,13 +412,8 @@ def q_stream_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFrame
     )
     # transformWithState requires the RocksDB state store; scope the
     # provider switch to this query and restore the session default.
-    provider_key = "spark.sql.streaming.stateStore.providerClass"
-    saved = spark.conf.get(provider_key, None)
-    spark.conf.set(
-        provider_key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
+    rocksdb = "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+    with conf_pin(spark, {"spark.sql.streaming.stateStore.providerClass": rocksdb}):
         q = (
             out.writeStream.outputMode("update")
             .format("memory")
@@ -440,11 +422,6 @@ def q_stream_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFrame
             .start()
         )
         q.awaitTermination()
-    finally:
-        if saved is not None:
-            spark.conf.set(provider_key, saved)
-        else:
-            spark.conf.unset(provider_key)
     sink = spark.table("stream_tws_sink")
     # update-mode memory sink appends per-batch cumulative rows: keep
     # each user's final row (largest n_events) for multi-batch safety
@@ -763,7 +740,7 @@ def q_stream_late_data_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # (window x type) state is keyspace-bounded: right-size the state
     # store partitions (see _state_partitions)
-    with _state_partitions(spark):
+    with conf_pin(spark, {"spark.sql.shuffle.partitions": str(_state_partitions())}):
         q = (
             agg.writeStream.outputMode("append")
             .format("memory")
@@ -906,7 +883,7 @@ def q_stream_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = ev.groupBy(F.window("ts", "4 days", "2 days"), "event_type").agg(
         F.count(F.lit(1)).alias("n")
     )
-    _run_to_memory(agg, "stream_sliding_window_sink", state_partitions=_STATE_PARTS_DEFAULT)
+    _run_to_memory(agg, "stream_sliding_window_sink", state_partitions=_state_partitions())
     out = spark.table("stream_sliding_window_sink")
     return out.select(
         F.unix_timestamp(F.col("window.start")).alias("window_start"),
@@ -1023,7 +1000,7 @@ def q_stream_union_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n"),
         F.collect_set("user_id").alias("users"),
     )
-    _run_to_memory(agg, "stream_union_sources_sink", state_partitions=_STATE_PARTS_DEFAULT)
+    _run_to_memory(agg, "stream_union_sources_sink", state_partitions=_state_partitions())
     out = spark.table("stream_union_sources_sink")
     return out.select(
         "event_type", "n", F.size("users").cast("bigint").alias("n_users")
@@ -1065,7 +1042,7 @@ def q_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("double")
         .alias("total_value"),
     )
-    _run_to_memory(agg, "stream_static_join_sink", state_partitions=_STATE_PARTS_DEFAULT)
+    _run_to_memory(agg, "stream_static_join_sink", state_partitions=_state_partitions())
     return spark.table("stream_static_join_sink")
 
 
@@ -1144,7 +1121,7 @@ def q_stream_topk_per_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = ev.groupBy(F.window("ts", "1 day"), "event_type").agg(
         F.count(F.lit(1)).alias("n")
     )
-    _run_to_memory(agg, "stream_topk_window_sink", state_partitions=_STATE_PARTS_DEFAULT)
+    _run_to_memory(agg, "stream_topk_window_sink", state_partitions=_state_partitions())
     sink = spark.table("stream_topk_window_sink")
     w = Window.partitionBy("window").orderBy(F.col("n").desc(), F.col("event_type"))
     return (
@@ -1436,7 +1413,7 @@ def q_stream_pit_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("double")
         .alias("total_price"),
     )
-    _run_to_memory(agg, "stream_pit_enrich_sink", state_partitions=_STATE_PARTS_DEFAULT)
+    _run_to_memory(agg, "stream_pit_enrich_sink", state_partitions=_state_partitions())
     return spark.table("stream_pit_enrich_sink")
 
 
@@ -1537,7 +1514,7 @@ def q_stream_bitmap_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     word, mask = bitmap_word_mask("user_id")
     words = ev.select("event_type", word.alias("word"), mask.alias("mask"))
     agg = words.groupBy("event_type", "word").agg(F.bit_or("mask").alias("bits"))
-    _run_to_memory(agg, "stream_bitmap_distinct_sink", state_partitions=_STATE_PARTS_DEFAULT)
+    _run_to_memory(agg, "stream_bitmap_distinct_sink", state_partitions=_state_partitions())
     out = spark.table("stream_bitmap_distinct_sink")
     return out.groupBy("event_type").agg(
         F.sum(F.bit_count("bits")).cast("bigint").alias("n_users"),
@@ -1727,7 +1704,7 @@ def q_stream_bitmap_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
         # across the three triggers for near-empty stores.  Right-size
         # to the keyspace (round-14 verdict finding #2: this is the
         # named mechanism behind the residual fixed per-batch cost).
-        with _state_partitions(spark):
+        with conf_pin(spark, {"spark.sql.shuffle.partitions": str(_state_partitions())}):
             q = (
                 agg.writeStream.outputMode("update")
                 .format("memory")

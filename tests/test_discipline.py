@@ -88,9 +88,9 @@ def test_no_pandas_collect_in_engine():
 # change).
 
 _SCALED_RE = re.compile(
-    r"load_table\s*\([^)]*[\"'](?:customer|supplier|part|orders|lineitem"
-    r"|events|documents|embeddings)[\"']"
-    r"|_docs_parallel\s*\(|_shingles_df\s*\(|\bq_\w+\s*\("
+    r"load_table(?:_parallel)?\s*\([^)]*[\"'](?:customer|supplier|part|orders"
+    r"|lineitem|events|documents|embeddings)[\"']"
+    r"|_shingles_df\s*\(|\bq_\w+\s*\("
     r"|customer_priority_history\s*\(|readStream"
 )
 _BOUNDED_RE = re.compile(
@@ -243,6 +243,14 @@ def test_broadcast_gate_fires_on_bad_plan():
         "    return docs.crossJoin(F.broadcast(mx))\n"
     )
     assert _broadcast_violations(glob, "glob.py") == []
+    # the scan-width-guarded loader is as SF-scaled as the plain one
+    wide = (
+        "def q(spark, sf_dir):\n"
+        "    emb = load_table_parallel(spark, sf_dir, 'embeddings')\n"
+        "    norms = emb.groupBy('vec_id').agg(F.sum('x').alias('n2'))\n"
+        "    return emb.join(F.broadcast(norms), 'vec_id')\n"
+    )
+    assert _broadcast_violations(wide, "wide.py") == ["wide.py:4 in q"]
 
 
 def test_bounded_broadcast_waivers_pinned():

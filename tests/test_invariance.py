@@ -127,24 +127,22 @@ def _rows(spark, name):
 
 
 def _clear_memo_caches():
-    """Drop every module-level memoized/persisted artifact so the
-    hostile-conf rerun really re-executes the full build chain.
-    Without this the second run of a cached query (minhash pair table,
-    canonical labels, semantic assignment, PQ index, ranged layout)
-    reads blocks persisted under the DEFAULT partitioning and the gate
-    silently stops testing the part most likely to be order-sensitive."""
+    """Drop every session-memoized artifact so the hostile-conf rerun
+    really re-executes the full build chain.  Without this the second
+    run of a memoized query (minhash pair table, canonical labels,
+    semantic assignment, PQ index, KM/PQ training sample, ranged
+    layout) reuses what was built under the DEFAULT partitioning and
+    the gate silently stops testing the part most likely to be
+    order-sensitive."""
     from pyspark.sql import DataFrame
 
-    from bigdata_assigment3_spark.operators import curation, dedup, similarity
+    from bigdata_assigment3_spark import session
 
-    for cache in (dedup._INV_CACHE, dedup._PAIRS_CACHE, dedup._CANON_CACHE,
-                  dedup._SEM_ASSIGN_CACHE, dedup._SIG_CACHE,
-                  curation._RANGED_CACHE, similarity._PQ_CACHE):
-        for val in cache.values():
-            for part in val if isinstance(val, tuple) else (val,):
-                if isinstance(part, DataFrame):
-                    part.unpersist()
-        cache.clear()
+    for val in session._MEMO.values():
+        for part in val if isinstance(val, tuple) else (val,):
+            if isinstance(part, DataFrame):
+                part.unpersist()
+    session._MEMO.clear()
 
 
 @pytest.mark.parametrize("name", INVARIANCE_QUERIES)

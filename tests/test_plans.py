@@ -568,9 +568,9 @@ def test_pagerank_iteration_single_exchange(spark):
     does and pins the exchange count and the preserved partitioning."""
     from pyspark.sql import functions as F
 
-    from bigdata_assigment3_spark.operators.graph import PR_SCALE, _edges, _no_aqe
+    from bigdata_assigment3_spark.operators.graph import _AQE_OFF, PR_SCALE, _edges
     from bigdata_assigment3_spark.plans.explain import shuffle_exchanges
-    from bigdata_assigment3_spark.session import lineage_checkpoint
+    from bigdata_assigment3_spark.session import conf_pin, lineage_checkpoint
 
     edges = _edges(spark, SF_ORACLE)
     deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
@@ -581,7 +581,7 @@ def test_pagerank_iteration_single_exchange(spark):
     )
     edges_deg = edges.join(deg, "src").select(F.col("src").alias("v"), "dst", "deg")
     n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    with _no_aqe(spark):
+    with conf_pin(spark, _AQE_OFF):
         edges_deg = lineage_checkpoint(edges_deg.repartition(n_part, "v"), big=True)
         verts = lineage_checkpoint(verts.repartition(n_part, "v"), big=True)
     rank = verts.select("v", F.lit(PR_SCALE).cast("bigint").alias("rank_i"))
