@@ -150,10 +150,10 @@ HEADLINE = [
 # shift, so a noisy round subtracts the floor instead of arguing it.
 # Keep this list to queries nobody optimizes.
 ENV_SENTINELS = (
-    "pricing_summary",
+    "order_priority_check",
     "json_extract",
     "window_topk_orders",
-    "region_revenue",
+    "rate_limit_window",
     "segment_derive",
 )
 
@@ -279,6 +279,23 @@ def retime_query(name: str, sf_dir: str, n: int = 3) -> dict:
             # the retime's own box mode: a confirmed regression measured
             # on a degraded box is a suspect confirmation (verdict r15)
             "cpu_sentinel": cpu_sentinel_sec(spark)}
+
+
+FLOORS_USAGE = "usage: bench.py --floors DIR QUERY [QUERY ...]"
+
+
+def floors_args(argv: list[str]) -> tuple[str, list[str]]:
+    """``DIR QUERY ...`` of a ``--floors`` invocation.  Exits non-zero
+    with the usage line when no query is named or a name is not a
+    registered query, before any session is built, so a bad invocation
+    never prints a floors record."""
+    if len(argv) < 2:
+        sys.exit(FLOORS_USAGE)
+    dir_path, names = argv[0], argv[1:]
+    unknown = [n for n in names if n not in query_fns()]
+    if unknown:
+        sys.exit(f"{FLOORS_USAGE}\nunknown queries: {' '.join(unknown)}")
+    return dir_path, names
 
 
 def floors_pass(dir_path: str, names: list[str], n: int = 3) -> dict:
@@ -746,8 +763,8 @@ if __name__ == "__main__":
         _n = int(sys.argv[3]) if len(sys.argv) > 3 else 3
         _sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
         print(json.dumps(retime_query(_name, _sf_dir, _n)))
-    elif len(sys.argv) >= 3 and sys.argv[1] == "--floors":
+    elif len(sys.argv) >= 2 and sys.argv[1] == "--floors":
         # scaled-fixture floor pass: bench.py --floors DIR q1 q2 ...
-        print(json.dumps(floors_pass(sys.argv[2], sys.argv[3:])))
+        print(json.dumps(floors_pass(*floors_args(sys.argv[2:]))))
     else:
         main()

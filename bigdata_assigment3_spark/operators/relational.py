@@ -8,18 +8,51 @@ cube, and set operations, all DuckDB-oracle-checked.
 
 Cross-engine exactness: money math runs in DECIMAL (association-order
 independent), final outputs are DOUBLE/BIGINT so schemas line up.
+Money sums go through the integer kernel in ``functions/scalar.py``:
+each query projects the exact unscaled longs of its DECIMAL casts once,
+before the aggregate, and sums them with :func:`money_sum`, which
+returns the same DECIMAL value as a decimal ``SUM`` without a per-row
+BigDecimal update.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window
 
+from ..functions.scalar import money_sum, unscaled
 from ..registry import query
 from ..sources import load_table, register_views
 
 _DEC_EXT = "decimal(12,2)"
 _DEC_PCT = "decimal(6,4)"
+# ext·(1-disc) on the unscaled longs of _DEC_EXT and _DEC_PCT, at scale 6
+_REV_U = "ext_u * (10000 - disc_u)"
+
+
+def _u_ext(col: str, alias: str) -> str:
+    """Projection of the unscaled long of ``CAST(col AS _DEC_EXT)``."""
+    return f"{unscaled(col, 12, 2)} AS {alias}"
+
+
+def _u_pct(col: str, alias: str) -> str:
+    """Projection of the unscaled long of ``CAST(col AS _DEC_PCT)``."""
+    return f"{unscaled(col, 6, 4)} AS {alias}"
+
+
+_U_REV = (_u_ext("l_extendedprice", "ext_u"), _u_pct("l_discount", "disc_u"))
+
+
+def _money(u: str, s: int, name: str) -> Column:
+    """``ROUND(SUM(money), 3)`` as DOUBLE, from the unscaled long ``u``
+    at scale ``s``."""
+    return F.expr(f"CAST(round({money_sum(u, s)}, 3) AS DOUBLE) AS {name}")
+
+
+def _money_avg(u: str, s: int, digits: int, name: str) -> Column:
+    """Exact decimal sum / count, rounded to ``digits``: a float avg is
+    association-order dependent and drifts 1 ulp across engines/runs."""
+    return F.expr(f"round(CAST({money_sum(u, s)} AS DOUBLE) / count({u}), {digits}) AS {name}")
 
 
 @query(
@@ -54,23 +87,21 @@ def q_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     combine is what makes this 100 TB-safe).
     """
     li = load_table(spark, sf_dir, "lineitem")
-    qty = F.col("l_quantity").cast(_DEC_EXT)
-    ext = F.col("l_extendedprice").cast(_DEC_EXT)
-    disc = F.col("l_discount").cast(_DEC_PCT)
-    tax = F.col("l_tax").cast(_DEC_PCT)
     return (
         li.filter(F.col("l_shipdate") <= F.lit("1998-09-02 00:00:00").cast("timestamp"))
+        .selectExpr(
+            "l_returnflag", "l_linestatus", _u_ext("l_quantity", "qty_u"), *_U_REV,
+            _u_pct("l_tax", "tax_u"),
+        )
         .groupBy("l_returnflag", "l_linestatus")
         .agg(
-            F.round(F.sum(qty), 3).cast("double").alias("sum_qty"),
-            F.round(F.sum(ext), 3).cast("double").alias("sum_base_price"),
-            F.round(F.sum(ext * (F.lit(1) - disc)), 3).cast("double").alias("sum_disc_price"),
-            F.round(F.sum(ext * (F.lit(1) - disc) * (F.lit(1) + tax)), 3).cast("double").alias("sum_charge"),
-            # avg as exact-decimal-sum / count: float avg is association-
-            # order dependent and drifts 1 ulp across engines/runs.
-            F.round(F.sum(qty).cast("double") / F.count("l_quantity"), 4).alias("avg_qty"),
-            F.round(F.sum(ext).cast("double") / F.count("l_extendedprice"), 4).alias("avg_price"),
-            F.round(F.sum(disc).cast("double") / F.count("l_discount"), 6).alias("avg_disc"),
+            _money("qty_u", 2, "sum_qty"),
+            _money("ext_u", 2, "sum_base_price"),
+            _money(_REV_U, 6, "sum_disc_price"),
+            _money(f"{_REV_U} * (10000 + tax_u)", 10, "sum_charge"),
+            _money_avg("qty_u", 2, 4, "avg_qty"),
+            _money_avg("ext_u", 2, 4, "avg_price"),
+            _money_avg("disc_u", 4, 6, "avg_disc"),
             F.count(F.lit(1)).alias("count_order"),
         )
     )
@@ -103,13 +134,12 @@ def q_top_revenue_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = load_table(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
     orders = load_table(spark, sf_dir, "orders")
     li = load_table(spark, sf_dir, "lineitem")
-    rev = (F.col("l_extendedprice").cast(_DEC_EXT)
-           * (F.lit(1) - F.col("l_discount").cast(_DEC_PCT)))
     return (
         orders.join(cust, orders.o_custkey == cust.c_custkey)
         .join(li, li.l_orderkey == orders.o_orderkey)
+        .selectExpr("l_orderkey", "o_orderdate", *_U_REV)
         .groupBy(F.col("l_orderkey").alias("orderkey"), F.col("o_orderdate"))
-        .agg(F.round(F.sum(rev), 3).cast("double").alias("revenue"))
+        .agg(_money(_REV_U, 6, "revenue"))
         .select("orderkey", "revenue", F.date_format("o_orderdate", "yyyy-MM-dd").alias("orderdate"))
         .orderBy(F.desc("revenue"), F.asc("orderkey"))
         .limit(10)
@@ -144,16 +174,15 @@ def q_region_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders")
     l = load_table(spark, sf_dir, "lineitem")
     s = load_table(spark, sf_dir, "supplier")
-    rev = (F.col("l_extendedprice").cast(_DEC_EXT)
-           * (F.lit(1) - F.col("l_discount").cast(_DEC_PCT)))
     return (
         o.join(l, l.l_orderkey == o.o_orderkey)
         .join(c, o.o_custkey == c.c_custkey)
         .join(s, (s.s_suppkey == l.l_suppkey) & (s.s_nationkey == c.c_nationkey))
         .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
         .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
+        .selectExpr("n_name", *_U_REV)
         .groupBy(F.col("n_name").alias("nation"))
-        .agg(F.round(F.sum(rev), 3).cast("double").alias("revenue"))
+        .agg(_money(_REV_U, 6, "revenue"))
     )
 
 
@@ -192,23 +221,21 @@ def q_product_type_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = load_table(spark, sf_dir, "nation")
     o = load_table(spark, sf_dir, "orders")
     li = load_table(spark, sf_dir, "lineitem")
-    amount = (
-        F.col("l_extendedprice").cast(_DEC_EXT)
-        * (F.lit(1) - F.col("l_discount").cast(_DEC_PCT))
-        - F.col("p_retailprice").cast(_DEC_EXT)
-        * F.col("l_quantity").cast(_DEC_EXT)
-        * F.lit(0.8).cast("decimal(2,1)")
-    )
     return (
         li.join(p, p.p_partkey == li.l_partkey)
         .join(s, F.col("s_suppkey") == li.l_suppkey)
         .join(o, o.o_orderkey == li.l_orderkey)
         .join(F.broadcast(n), F.col("s_nationkey") == n.n_nationkey)
+        .selectExpr(
+            "n_name", "o_orderdate", *_U_REV,
+            _u_ext("p_retailprice", "retail_u"), _u_ext("l_quantity", "qty_u"),
+        )
         .groupBy(
             F.col("n_name").alias("nation"),
             F.year("o_orderdate").cast("bigint").alias("o_year"),
         )
-        .agg(F.round(F.sum(amount), 3).cast("double").alias("sum_profit"))
+        # revenue at scale 6 minus retail·qty·0.8 at scale 5, rescaled to 6
+        .agg(_money(f"{_REV_U} - retail_u * qty_u * 80", 6, "sum_profit"))
     )
 
 
@@ -299,14 +326,15 @@ def q_window_running_total(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Running total per customer — frame-based window aggregate (SURVEY W2)."""
     o = load_table(spark, sf_dir, "orders")
     w = (
-        Window.partitionBy("o_custkey")
-        .orderBy("o_orderdate", "o_orderkey")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+        "PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey"
+        " ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW"
     )
-    return o.select(
-        F.col("o_custkey").alias("custkey"),
-        F.col("o_orderkey").alias("orderkey"),
-        F.round(F.sum(F.col("o_totalprice").cast(_DEC_EXT)).over(w), 3).cast("double").alias("running_total"),
+    return o.selectExpr(
+        "o_custkey", "o_orderkey", "o_orderdate", _u_ext("o_totalprice", "price_u"),
+    ).selectExpr(
+        "o_custkey AS custkey",
+        "o_orderkey AS orderkey",
+        f"CAST(round({money_sum('price_u', 2, over=w)}, 3) AS DOUBLE) AS running_total",
     )
 
 
@@ -385,9 +413,10 @@ def q_set_operations(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_rollup_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ROLLUP hierarchy totals (SURVEY §2.4 'absent' row — free in Spark)."""
     li = load_table(spark, sf_dir, "lineitem")
-    return li.rollup("l_returnflag", "l_linestatus").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.round(F.sum(F.col("l_quantity").cast(_DEC_EXT)), 3).cast("double").alias("sum_qty"),
+    return (
+        li.selectExpr("l_returnflag", "l_linestatus", _u_ext("l_quantity", "qty_u"))
+        .rollup("l_returnflag", "l_linestatus")
+        .agg(F.count(F.lit(1)).alias("n"), _money("qty_u", 2, "sum_qty"))
     )
 
 
@@ -423,12 +452,16 @@ def q_part_brand_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-aggregate dimension profile (min/max/avg/count-distinct)."""
     p = load_table(spark, sf_dir, "part")
     price = F.col("p_retailprice")
-    return p.groupBy(F.col("p_brand").alias("brand")).agg(
-        F.count(F.lit(1)).alias("n_parts"),
-        F.countDistinct("p_type").alias("n_types"),
-        F.min(price.cast(_DEC_EXT)).cast("decimal(38,3)").cast("double").alias("min_price"),
-        F.max(price.cast(_DEC_EXT)).cast("decimal(38,3)").cast("double").alias("max_price"),
-        F.round(F.sum(price.cast(_DEC_EXT)).cast("double") / F.count("p_retailprice"), 4).alias("avg_price"),
+    return (
+        p.selectExpr("p_brand", "p_type", "p_retailprice", _u_ext("p_retailprice", "price_u"))
+        .groupBy(F.col("p_brand").alias("brand"))
+        .agg(
+            F.count(F.lit(1)).alias("n_parts"),
+            F.countDistinct("p_type").alias("n_types"),
+            F.min(price.cast(_DEC_EXT)).cast("decimal(38,3)").cast("double").alias("min_price"),
+            F.max(price.cast(_DEC_EXT)).cast("decimal(38,3)").cast("double").alias("max_price"),
+            _money_avg("price_u", 2, 4, "avg_price"),
+        )
     )
 
 
@@ -482,14 +515,8 @@ def q_forecast_revenue_change(spark: SparkSession, sf_dir: str) -> DataFrame:
             & F.col("l_discount").between(0.05, 0.07)
             & (F.col("l_quantity") < 24)
         )
-        .agg(
-            F.round(
-                F.sum(F.col("l_extendedprice").cast(_DEC_EXT) * F.col("l_discount").cast(_DEC_PCT)),
-                3,
-            )
-            .cast("double")
-            .alias("revenue")
-        )
+        .selectExpr(*_U_REV)
+        .agg(_money("ext_u * disc_u", 6, "revenue"))
     )
 
 
@@ -516,11 +543,12 @@ def q_promo_revenue_share(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("l_shipdate") < F.lit("1996-07-01").cast("timestamp"))
     )
     p = load_table(spark, sf_dir, "part")
-    rev = F.col("l_extendedprice").cast(_DEC_EXT) * (F.lit(1) - F.col("l_discount").cast(_DEC_PCT))
-    j = li.join(p, p.p_partkey == li.l_partkey)
-    promo = F.round(F.sum(F.when(F.col("p_type") == "PROMO", rev).otherwise(F.lit(0).cast("decimal(12,2)"))) * 100, 3)
-    total = F.round(F.sum(rev), 3)
-    return j.agg((promo.cast("double") / total.cast("double")).alias("promo_share_pct"))
+    j = li.join(p, p.p_partkey == li.l_partkey).selectExpr("p_type", *_U_REV)
+    promo = money_sum(f"CASE WHEN p_type = 'PROMO' THEN {_REV_U} ELSE 0 END", 6)
+    total = money_sum(_REV_U, 6)
+    return j.agg(F.expr(
+        f"CAST(round({promo} * 100, 3) AS DOUBLE) / CAST(round({total}, 3) AS DOUBLE) AS promo_share_pct"
+    ))
 
 
 @query(
@@ -550,9 +578,8 @@ def q_disjunctive_predicate_revenue(spark: SparkSession, sf_dir: str) -> DataFra
         | ((F.col("p_brand") == "Brand#3") & F.col("p_size").between(10, 30) & F.col("l_quantity").between(10, 35))
         | ((F.col("p_brand") == "Brand#5") & F.col("p_size").between(20, 50) & F.col("l_quantity").between(20, 50))
     )
-    rev = F.col("l_extendedprice").cast(_DEC_EXT) * (F.lit(1) - F.col("l_discount").cast(_DEC_PCT))
-    return j.filter(cond).agg(
-        F.round(F.sum(rev), 3).cast("double").alias("revenue"),
+    return j.filter(cond).selectExpr(*_U_REV).agg(
+        _money(_REV_U, 6, "revenue"),
         F.count(F.lit(1)).alias("n"),
     )
 
@@ -686,15 +713,13 @@ def q_nation_revenue_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders")
     c = load_table(spark, sf_dir, "customer")
     n = load_table(spark, sf_dir, "nation")
-    rev = F.col("l_extendedprice").cast("decimal(12,2)") * (
-        F.lit(1) - F.col("l_discount").cast("decimal(6,4)")
-    )
     nrev = (
         li.join(o, li.l_orderkey == o.o_orderkey)
         .join(c, o.o_custkey == c.c_custkey)
         .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
+        .selectExpr("n_name", *_U_REV)
         .groupBy("n_name")
-        .agg(F.sum(rev).alias("rev"))
+        .agg(F.expr(f"{money_sum(_REV_U, 6)} AS rev"))
     )
     total = F.sum("rev").over(Window.partitionBy())
     return nrev.select(
@@ -911,15 +936,13 @@ def q_returned_item_ranking(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = load_table(spark, sf_dir, "customer")
     o = load_table(spark, sf_dir, "orders")
     li = load_table(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
-    rev = F.col("l_extendedprice").cast(_DEC_EXT) * (
-        F.lit(1) - F.col("l_discount").cast(_DEC_PCT)
-    )
     return (
         li.join(o, li.l_orderkey == o.o_orderkey)
         .join(c, o.o_custkey == c.c_custkey)
+        .selectExpr("c_name", "o_orderkey", *_U_REV)
         .groupBy("c_name")
         .agg(
-            F.round(F.sum(rev), 3).cast("double").alias("revenue"),
+            _money(_REV_U, 6, "revenue"),
             F.countDistinct("o_orderkey").alias("n_orders"),
         )
         .orderBy(F.desc("revenue"), F.asc("c_name"))
@@ -956,16 +979,14 @@ def q_top_supplier_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     li = load_table(spark, sf_dir, "lineitem")
     s = load_table(spark, sf_dir, "supplier")
-    rev_expr = F.col("l_extendedprice").cast(_DEC_EXT) * (
-        F.lit(1) - F.col("l_discount").cast(_DEC_PCT)
-    )
     rev = (
         li.filter(
             (F.col("l_shipdate") >= F.lit("1996-01-01 00:00:00").cast("timestamp"))
             & (F.col("l_shipdate") < F.lit("1996-04-01 00:00:00").cast("timestamp"))
         )
+        .selectExpr("l_suppkey", *_U_REV)
         .groupBy("l_suppkey")
-        .agg(F.sum(rev_expr).alias("r"))
+        .agg(F.expr(f"{money_sum(_REV_U, 6)} AS r"))
     )
     mx = rev.agg(F.max("r").alias("mr"))
     return (
@@ -1006,8 +1027,9 @@ def q_large_quantity_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders")
     c = load_table(spark, sf_dir, "customer")
     big = (
-        li.groupBy("l_orderkey")
-        .agg(F.sum(F.col("l_quantity").cast(_DEC_EXT)).alias("sum_qty"))
+        li.selectExpr("l_orderkey", _u_ext("l_quantity", "qty_u"))
+        .groupBy("l_orderkey")
+        .agg(F.expr(f"{money_sum('qty_u', 2)} AS sum_qty"))
         .filter(F.col("sum_qty") > 250)
     )
     return (

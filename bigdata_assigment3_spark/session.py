@@ -8,16 +8,18 @@ UTC session time keeps results comparable across engines/clusters.
 
 Session memos (:func:`session_memo`).  An index-like intermediate
 that several queries consume (the shingle inverted index, the
-verified minhash pairs, the PQ codebooks ...) is built once per
-(session, builder, sf_dir) and reused by every later query of that
-session.  A miss first drops the entries of dead sessions — their
-persisted blocks died with their SparkContext, so there is nothing to
-unpersist — and then builds.  An entry of the LIVE session is never
-unpersisted: a result DataFrame the caller still holds may read its
-blocks (the curriculum range copy's offsets were collected from ITS
-boundaries), and persisted frames are MEMORY_AND_DISK, so the block
-manager can still evict them under pressure.  A session therefore
-holds at most one entry per (builder, sf_dir).
+verified minhash pairs, the PQ codebooks, a parquet table's inferred
+schema ...) is built once per (session, builder, args) and reused by
+every later query of that session; ``args`` are the builder's
+arguments after ``spark``, all hashable.  A miss first drops the
+entries of dead sessions — their persisted blocks died with their
+SparkContext, so there is nothing to unpersist — and then builds.  An
+entry of the LIVE session is never unpersisted: a result DataFrame the
+caller still holds may read its blocks (the curriculum range copy's
+offsets were collected from ITS boundaries), and persisted frames are
+MEMORY_AND_DISK, so the block manager can still evict them under
+pressure.  A session therefore holds at most one entry per (builder,
+args).  Hits and misses are counted per builder (:func:`memo_stats`).
 
 Conf pins (:func:`conf_pin`).  Some plans need a conf other than the
 session's for one build (AQE off for a partitioning-preserving
@@ -192,28 +194,47 @@ def get_spark(app_name: str = "bigdata_assigment3_spark") -> SparkSession:
     return ensure_session_conf(spark)
 
 
-# (applicationId, builder, sf_dir) -> built value; see the module docstring
-_MEMO: dict[tuple[str, str, str], object] = {}
+# (applicationId, builder, *args) -> built value; see the module docstring
+_MEMO: dict[tuple, object] = {}
+# builder -> {"hits": n, "misses": n}, for the life of the process
+_MEMO_STATS: dict[str, dict[str, int]] = {}
+_STATS_LOCK = threading.Lock()
 _PIN_LOCK = threading.Lock()
 
 
-def session_memo(build: Callable[[SparkSession, str], T]) -> Callable[[SparkSession, str], T]:
-    """Memoize a ``(spark, sf_dir)`` builder per live session (policy in
-    the module docstring).  Two threads missing the same key at once
-    both build and the last one is kept; both values stay valid."""
+def _count(name: str, outcome: str) -> None:
+    with _STATS_LOCK:
+        stats = _MEMO_STATS.setdefault(name, {"hits": 0, "misses": 0})
+        stats[outcome] += 1
+
+
+def memo_stats() -> dict[str, dict[str, int]]:
+    """A copy of the hit/miss counts per memoized builder
+    (module-qualified name), over every session of this process."""
+    with _STATS_LOCK:
+        return {name: dict(stats) for name, stats in _MEMO_STATS.items()}
+
+
+def session_memo(build: Callable[..., T]) -> Callable[..., T]:
+    """Memoize a ``(spark, *args)`` builder per live session, keyed on
+    the hashable ``args`` (policy in the module docstring).  Two threads
+    missing the same key at once both build and the last one is kept;
+    both values stay valid."""
     name = f"{build.__module__}.{build.__qualname__}"
 
     @functools.wraps(build)
-    def memoized(spark: SparkSession, sf_dir: str) -> T:
+    def memoized(spark: SparkSession, *args) -> T:
         app = spark.sparkContext.applicationId
-        key = (app, name, sf_dir)
+        key = (app, name, *args)
         hit = _MEMO.get(key)
         if hit is not None:
+            _count(name, "hits")
             return hit
+        _count(name, "misses")
         for k in list(_MEMO):
             if k[0] != app:
                 _MEMO.pop(k, None)
-        built = _MEMO[key] = build(spark, sf_dir)
+        built = _MEMO[key] = build(spark, *args)
         return built
 
     return memoized

@@ -5,13 +5,35 @@ Scale notes: ``spark.read.parquet`` gives Catalyst full pushdown
 partition sizing is governed by ``spark.sql.files.maxPartitionBytes``
 — on a 1000-executor cluster the same code splits 100 TB into
 input-sized tasks with no changes here.
+
+Schema memo: a plain ``spark.read.parquet(path)`` infers the schema
+with a Spark job that reads a parquet footer — on small tables most of
+a reader's cost, paid again by every query that loads the table.  Each
+table's inferred schema is memoized per session (through
+:func:`~bigdata_assigment3_spark.session.session_memo`), keyed on the
+path and its file identity (``st_mtime_ns``, ``st_size``, ``st_ino`` of
+the file, or of every file under a directory), and every call reads
+with the memoized schema.  A table rewritten in place misses and is
+inferred again; a path ``os.stat`` cannot resolve (an object-store URI)
+is inferred on every call, unmemoized.  The memo holds the schema, never the
+DataFrame: each call still returns a fresh relation with fresh
+attribute ids, so a query that loads one table twice and self-joins it
+keeps its two sides apart — a shared DataFrame would alias them and
+break the join.  The schema-affecting confs (``nanosAsLong``,
+``inferTimestampNTZ``) are re-pinned by
+:func:`~bigdata_assigment3_spark.session.ensure_session_conf` before
+every lookup, so a schema is always inferred and read under the same
+values.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+import os
 
-from ..session import ensure_session_conf
+from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import StructType
+
+from ..session import ensure_session_conf, session_memo
 
 TABLES = (
     "region",
@@ -50,11 +72,51 @@ def normalize_events_ts(df: DataFrame) -> DataFrame:
     return df
 
 
+def _file_identity(path: str) -> tuple | None:
+    """``(relpath, st_mtime_ns, st_size, st_ino)`` of ``path``, or of
+    every file under it when it is a directory; ``None`` when
+    ``os.stat`` cannot resolve it."""
+    try:
+        if not os.path.isdir(path):
+            st = os.stat(path)
+            return (("", st.st_mtime_ns, st.st_size, st.st_ino),)
+        ident = []
+        for root, dirs, files in os.walk(path):
+            dirs.sort()
+            for f in sorted(files):
+                full = os.path.join(root, f)
+                st = os.stat(full)
+                ident.append((os.path.relpath(full, path), st.st_mtime_ns, st.st_size, st.st_ino))
+        return tuple(ident)
+    except OSError:
+        return None
+
+
+@session_memo
+def _parquet_schema(spark: SparkSession, path: str, identity: tuple) -> StructType:
+    """The schema ``spark.read.parquet`` infers for ``path`` (one footer
+    job).  ``identity`` is only part of the memo key."""
+    return spark.read.parquet(path).schema
+
+
+def parquet_schema(spark: SparkSession, path: str) -> StructType:
+    """The inferred schema of the parquet table at ``path``, memoized per
+    session and file identity (see the module docstring).  The caller
+    has run :func:`ensure_session_conf`."""
+    identity = _file_identity(path)
+    if identity is None:
+        return _parquet_schema.__wrapped__(spark, path, identity)  # unmemoized
+    return _parquet_schema(spark, path, identity)
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one testdata table, normalizing physical quirks (see
-    :func:`normalize_events_ts` for the ``events.ts`` forms)."""
+    :func:`normalize_events_ts` for the ``events.ts`` forms).  The
+    reader takes the session's memoized schema, so only the first call
+    per table runs the footer-inference job."""
     ensure_session_conf(spark)
-    df = spark.read.parquet(f"{sf_dir.rstrip('/')}/{name}.parquet")
+    path = f"{sf_dir.rstrip('/')}/{name}.parquet"
+    df = spark.read.schema(parquet_schema(spark, path)).parquet(path)
     if name == "events":
         df = normalize_events_ts(df)
     return df

@@ -31,13 +31,14 @@ from ..plans.hints import bounded_broadcast
 from ..registry import query
 from ..session import conf_pin, ensure_session_conf, scratch_dir
 from ..sources import load_table
-from ..sources.tables import normalize_events_ts
+from ..sources.tables import normalize_events_ts, parquet_schema
 
 _SESSION_GAP_S = 7200  # 2h
 
 
 def _stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """events.parquet as a streaming source (schema from a batch probe).
+    """events.parquet as a streaming source (schema from the session's
+    memoized parquet schema, the one ``load_table`` reads with).
 
     The probe and the stream share one physical-form normalization
     (:func:`normalize_events_ts`), so batch and stream cannot diverge
@@ -47,7 +48,7 @@ def _stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     read a TIMESTAMP(NANOS) probe without nanosAsLong."""
     ensure_session_conf(spark)
     path = f"{sf_dir}/events.parquet"
-    raw_schema = spark.read.parquet(path).schema
+    raw_schema = parquet_schema(spark, path)
     # stream the table path itself (works whether events.parquet is a
     # single file or a directory of part files) — a pathGlobFilter on
     # the parent dir would match only a literal single-file name and
@@ -1389,7 +1390,7 @@ def q_stream_pit_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ensure_session_conf(spark)
     path = f"{sf_dir}/orders.parquet"
-    schema = spark.read.parquet(path).schema
+    schema = parquet_schema(spark, path)
     orders_stream = (
         spark.readStream.schema(schema)
         .option("recursiveFileLookup", "true")

@@ -17,7 +17,10 @@ import importlib.util
 import inspect
 import os
 import pathlib
+import subprocess
 import sys
+
+import pytest
 
 REPO = pathlib.Path(__file__).resolve().parent.parent
 
@@ -41,10 +44,10 @@ bench = _load_bench()
 # that provably cannot change the plan — re-pin the hash in the same
 # commit and say so in the commit message.
 SENTINEL_SRC_SHA256 = {
-    "pricing_summary": "d41d11f5d8c1bf017bafc2bbbdcad1eba6ac90e2aa6fd0579dfed79c2d0af9f9",
+    "order_priority_check": "7737c25234ad409c1b55bb9454591730ae2ec3957701fec8e642771e84c86f9d",
     "json_extract": "31cfbb26aca521a629fbceb3cfc78e8b10a25d727263974f8e3ca8710e21d72d",
     "window_topk_orders": "0d6dbf3e1192344eecab51a7c379fc964cb75dc0f1170cb5e7c6e8a43545eff6",
-    "region_revenue": "7862ae965addab585695f68a43b29102fb697927017505f336f2722cd5c409d4",
+    "rate_limit_window": "e0d7c486dc46d1783e7e952dafdd63a8edbb816ed6cdbf70748cc76ac2210ac4",
     "segment_derive": "3616c2d80d7acfa9087f7cba7d464b262f676fdb8d5a840071914f7435e2ae8a",
 }
 
@@ -202,8 +205,6 @@ def test_scratch_dir_accepts_roomy_tmpfs(monkeypatch):
 
     monkeypatch.delenv("SPARK_GRAFT_SCRATCH", raising=False)
     if not (os.path.isdir("/dev/shm") and os.access("/dev/shm", os.W_OK)):
-        import pytest
-
         pytest.skip("no writable /dev/shm on this box")
 
     class BigVfs:
@@ -217,3 +218,26 @@ def test_scratch_dir_accepts_roomy_tmpfs(monkeypatch):
         lambda p: BigVfs() if p == "/dev/shm" else real_statvfs(p),
     )
     assert session.scratch_dir().startswith("/dev/shm")
+
+
+# ------------------------------------------------------------ --floors CLI
+
+
+@pytest.mark.parametrize(
+    "args",
+    [
+        pytest.param(["--floors", "fixture_dir"], id="no-query"),
+        pytest.param(["--floors"], id="no-dir"),
+        pytest.param(["--floors", "fixture_dir", "region_revenue", "no_such_query"], id="unknown"),
+    ],
+)
+def test_floors_without_valid_queries_is_a_usage_error(args):
+    """A floors pass with nothing (or something unknown) to time must
+    fail up front, not print an empty or partial floors record."""
+    proc = subprocess.run(
+        [sys.executable, str(REPO / "bench.py"), *args],
+        capture_output=True, text=True, timeout=120, cwd=REPO,
+    )
+    assert proc.returncode != 0
+    assert "usage: bench.py --floors DIR QUERY" in proc.stderr
+    assert "floors_wall_seconds" not in proc.stdout and proc.stdout.strip() == ""

@@ -1,9 +1,10 @@
 """The two pieces of session-global state in ``session.py``: the
-per-session memo behind every index-like intermediate, and the conf
-pin behind every scoped conf override."""
+per-session memo behind every index-like intermediate (and its hit/miss
+counts), and the conf pin behind every scoped conf override."""
 
 from __future__ import annotations
 
+import sys
 import threading
 from types import SimpleNamespace
 
@@ -61,6 +62,70 @@ def test_memo_builds_once_per_session_builder_and_sf_dir(memo):
         ("app-1", f"{__name__}._build_a", "sf2"),
         ("app-1", f"{__name__}._build_b", "sf1"),
     ]
+
+
+@session_memo
+def _build_c(spark, path, identity):
+    CALLS.append(("c", path, identity))
+    return object()
+
+
+def test_memo_keys_on_every_argument(memo):
+    CALLS.clear()
+    spark = _fake_spark("app-1")
+    x = _build_c(spark, "p", (1, 2))
+    assert _build_c(spark, "p", (1, 2)) is x
+    y, z = _build_c(spark, "p", (1, 3)), _build_c(spark, "q", (1, 2))
+    assert len({id(x), id(y), id(z)}) == 3
+    assert _build_c(spark, "p", (1, 3)) is y and _build_c(spark, "q", (1, 2)) is z
+    assert CALLS == [("c", "p", (1, 2)), ("c", "p", (1, 3)), ("c", "q", (1, 2))]
+    assert sorted(memo) == [
+        ("app-1", f"{__name__}._build_c", "p", (1, 2)),
+        ("app-1", f"{__name__}._build_c", "p", (1, 3)),
+        ("app-1", f"{__name__}._build_c", "q", (1, 2)),
+    ]
+
+
+def test_memo_counts_hits_and_misses_per_builder(memo, monkeypatch):
+    monkeypatch.setattr(session, "_MEMO_STATS", {})
+    spark = _fake_spark("app-1")
+    for sf_dir in ("sf1", "sf1", "sf2"):
+        _build_a(spark, sf_dir)
+    _build_c(spark, "p", ())
+    stats = session.memo_stats()
+    assert stats == {
+        f"{__name__}._build_a": {"hits": 1, "misses": 2},
+        f"{__name__}._build_c": {"hits": 0, "misses": 1},
+    }
+    # a copy: the caller cannot change the counts
+    stats[f"{__name__}._build_a"]["hits"] = 99
+    assert session.memo_stats()[f"{__name__}._build_a"]["hits"] == 1
+
+
+def test_memo_counts_survive_concurrent_callers(memo, monkeypatch):
+    """Query builders call memoized builders from thread pools; the
+    counts are read-modify-write, so a lost update would show here."""
+    monkeypatch.setattr(session, "_MEMO_STATS", {})
+    spark, n_threads, n_calls = _fake_spark("app-1"), 16, 2000
+
+    def hammer():
+        for j in range(n_calls):
+            _build_c(spark, "p", j % 4)
+
+    old_interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=hammer) for _ in range(n_threads)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(60)
+    finally:
+        sys.setswitchinterval(old_interval)
+    assert not any(t.is_alive() for t in threads)
+    counts = session.memo_stats()[f"{__name__}._build_c"]
+    assert counts["hits"] + counts["misses"] == n_threads * n_calls
+    assert counts["misses"] >= 4
 
 
 def test_memo_new_session_rebuilds_and_drops_dead_keys(memo):
