@@ -17,14 +17,10 @@ distribution because it groups on the bucket key).
 
 from __future__ import annotations
 
-import os
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from .multimodal import _sf_tag
 from ..registry import query
-from ..session import conf_pin
+from ..session import conf_pin, sf_tag, stage_dir, staged_fixture
 from ..sources import load_table
 
 N_BUCKETS = 8
@@ -35,12 +31,12 @@ _DEC_PCT = "decimal(6,4)"
 
 def _bucketed_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     """Write orders/lineitem bucketed by orderkey (once per sf_dir per
-    session) into a scratch dir; return the catalog table names."""
-    tag = _sf_tag(sf_dir)  # full-path-hashed: same-basename dirs never collide
+    session) into a staging dir; return the catalog table names."""
+    tag = sf_tag(sf_dir)
     t_orders, t_lineitem = f"orders_b_{tag}", f"lineitem_b_{tag}"
     if spark.catalog.tableExists(t_orders) and spark.catalog.tableExists(t_lineitem):
         return t_orders, t_lineitem
-    base = os.path.join(tempfile.gettempdir(), f"spark_graft_bucketed_{tag}")
+    base = stage_dir(spark, "bucketed", sf_dir)
     for name, table, key in (
         ("orders", t_orders, "o_orderkey"),
         ("lineitem", t_lineitem, "l_orderkey"),
@@ -50,7 +46,7 @@ def _bucketed_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
             .write.mode("overwrite")
             .bucketBy(N_BUCKETS, key)
             .sortBy(key)
-            .option("path", os.path.join(base, table))
+            .option("path", f"{base}/{table}")
             .format("parquet")
             .saveAsTable(table)
         )
@@ -113,17 +109,17 @@ def q_partitioned_write_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan's PartitionFilters prune at planning time, before any I/O
     (plan-asserted in tests).  At scale this is the difference
     between scanning 6/84 months and scanning everything."""
-    tag = _sf_tag(sf_dir)  # full-path-hashed: same-basename dirs never collide
-    base = os.path.join(tempfile.gettempdir(), f"spark_graft_part_{tag}", "orders_by_month")
-    if not os.path.exists(os.path.join(base, "_SUCCESS")):
+
+    def write_table(stage: str) -> None:
         (
             load_table(spark, sf_dir, "orders")
             .withColumn("order_month", F.date_format("o_orderdate", "yyyy-MM"))
-            .write.mode("overwrite")
-            .partitionBy("order_month")
-            .parquet(base)
+            .write.partitionBy("order_month")
+            .parquet(f"{stage}/orders_by_month")
         )
-    part = spark.read.parquet(base)
+
+    base = staged_fixture(spark, "part", write_table, sf_dir)
+    part = spark.read.parquet(f"{base}/orders_by_month")
     return (
         part.filter((F.col("order_month") >= "1997-01") & (F.col("order_month") < "1997-07"))
         .groupBy("order_month", F.col("o_orderpriority").alias("priority"))

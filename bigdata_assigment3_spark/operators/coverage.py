@@ -8,12 +8,12 @@ and a parquet sink round-trip.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window
 
 from ..registry import query
+from ..session import stage_dir, staged_fixture
 from ..sources import load_table, register_views
 from ..sources.custom import SYNTH_PARTS, SYNTH_ROWS, register_synthtx
 
@@ -80,19 +80,12 @@ def q_custom_sink_write(spark: SparkSession, sf_dir: str) -> DataFrame:
     value-checked against the same range() oracle as the source —
     write path and read path close the loop under the gate."""
     import json as _json
-    import os
-    import shutil
-    import tempfile
 
     from ..sources.custom import register_synthtx, register_synthtx_sink
 
     register_synthtx(spark)
     register_synthtx_sink(spark)
-    out = os.path.join(
-        tempfile.gettempdir(),
-        f"bd3_synthtxsink_{spark.sparkContext.applicationId}",
-    )
-    shutil.rmtree(out, ignore_errors=True)
+    out = stage_dir(spark, "synthtxsink")
     src = spark.read.format("synthtx").load().select("tx_id", "user_id", "amount")
     src.write.format("synthtxsink").option("path", out).mode("append").save()
     with open(os.path.join(out, "_manifest", "manifest.json")) as fh:
@@ -449,19 +442,14 @@ _SINK_ROUNDTRIP_ORACLE = """
 def _sink_roundtrip(spark, sf_dir, fmt, tag, partition_by=None):
     """Shared columnar-sink roundtrip: ONE aggregate + staging
     convention for every format, so the contract can't drift per
-    format.  Staging dir keyed by sf_dir + app id (concurrent sessions
-    must not share)."""
+    format."""
     ev = load_table(spark, sf_dir, "events")
     agg = ev.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n"),
         F.round(F.sum(F.col("value").cast("decimal(18,2)")), 3).cast("double").alias("total"),
     )
-    out_dir = os.path.join(
-        tempfile.gettempdir(),
-        f"bd3_{tag}_{os.path.basename(os.path.normpath(sf_dir))}"
-        f"_{spark.sparkContext.applicationId}",
-    )
-    writer = agg.write.mode("overwrite")
+    out_dir = stage_dir(spark, tag, sf_dir)
+    writer = agg.write
     if partition_by:
         writer = writer.partitionBy(partition_by)
     writer.format(fmt).save(out_dir)
@@ -578,17 +566,13 @@ def q_csv_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     returns rows where the two round-trips agree (must be all)."""
     ev = load_table(spark, sf_dir, "events")
     agg = ev.groupBy("event_type").agg(F.count(F.lit(1)).alias("n"))
-    base = os.path.join(
-        tempfile.gettempdir(),
-        f"bd3_fmt_roundtrip_{os.path.basename(os.path.normpath(sf_dir))}"
-        f"_{spark.sparkContext.applicationId}",
-    )
-    agg.write.mode("overwrite").option("header", True).csv(base + "_csv")
-    agg.write.mode("overwrite").json(base + "_json")
+    base = stage_dir(spark, "fmt_roundtrip", sf_dir)
+    agg.write.option("header", True).csv(f"{base}/csv")
+    agg.write.json(f"{base}/json")
     csv_back = spark.read.option("header", True).schema("event_type STRING, n BIGINT").csv(
-        base + "_csv"
+        f"{base}/csv"
     )
-    json_back = spark.read.schema("event_type STRING, n BIGINT").json(base + "_json")
+    json_back = spark.read.schema("event_type STRING, n BIGINT").json(f"{base}/json")
     return (
         csv_back.alias("c")
         .join(json_back.alias("j"), "event_type")
@@ -862,27 +846,17 @@ def q_csv_malformed_handling(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows are a certainty, and quarantining them IS the pipeline
     contract.  Returns per-disposition counts plus the parsed sum
     (proving bad rows never pollute the aggregate)."""
-    tag = os.path.basename(os.path.normpath(sf_dir)).replace(".", "_")
-    # keyed by app id (the staging convention everywhere else in this
-    # file): concurrent sessions must not share the fixture; written
-    # via tmp+rename so a killed run can't leave a truncated file that
-    # later runs trust
-    base = os.path.join(
-        tempfile.gettempdir(),
-        f"spark_graft_badcsv_{tag}_{spark.sparkContext.applicationId}",
-    )
-    path = os.path.join(base, "input.csv")
-    if not os.path.exists(path):
-        os.makedirs(base, exist_ok=True)
-        tmp = path + ".tmp"
-        with open(tmp, "w") as f:
+
+    def write_input(stage: str) -> None:
+        with open(os.path.join(stage, "input.csv"), "w") as f:
             f.write("id,amount\n")
             for i in range(100):
                 f.write(f"{i},{i * 10}\n")
             f.write("oops,not_a_number\n")
             f.write("42\n")  # too few columns
             f.write("7,77,extra\n")  # too many columns
-        os.replace(tmp, path)
+
+    path = os.path.join(staged_fixture(spark, "badcsv", write_input), "input.csv")
     schema = "id BIGINT, amount BIGINT, _corrupt_record STRING"
     df = (
         spark.read.schema(schema)
@@ -1068,17 +1042,13 @@ def q_parquet_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     preservation are both under the hash check.
     """
     o = load_table(spark, sf_dir, "orders")
-    out_dir = os.path.join(
-        tempfile.gettempdir(),
-        f"bd3_schema_evo_{os.path.basename(os.path.normpath(sf_dir))}"
-        f"_{spark.sparkContext.applicationId}",
-    )
+    out_dir = stage_dir(spark, "schema_evo", sf_dir)
     v1 = o.filter(F.col("o_orderkey") % 2 == 1).select("o_orderkey", "o_orderstatus")
     v2 = o.filter(F.col("o_orderkey") % 2 == 0).select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
-    v1.write.mode("overwrite").parquet(f"{out_dir}/gen=1")
-    v2.write.mode("overwrite").parquet(f"{out_dir}/gen=2")
+    v1.write.parquet(f"{out_dir}/gen=1")
+    v2.write.parquet(f"{out_dir}/gen=2")
     merged = spark.read.option("mergeSchema", "true").parquet(
         f"{out_dir}/gen=1", f"{out_dir}/gen=2"
     )
@@ -1480,11 +1450,7 @@ def q_dynamic_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame
     this mode exists to prevent; at 100 TB the daily reload touches
     one date partition out of thousands.
     """
-    out_dir = os.path.join(
-        tempfile.gettempdir(),
-        f"bd3_dyn_overwrite_{os.path.basename(os.path.normpath(sf_dir))}"
-        f"_{spark.sparkContext.applicationId}",
-    )
+    out_dir = stage_dir(spark, "dyn_overwrite", sf_dir)
     agg = (
         load_table(spark, sf_dir, "orders")
         .groupBy(
@@ -1493,7 +1459,7 @@ def q_dynamic_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame
         )
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    agg.write.mode("overwrite").partitionBy("yr").parquet(out_dir)
+    agg.write.partitionBy("yr").parquet(out_dir)
     patch = agg.filter(F.col("yr").isin(1996, 1997)).withColumn(
         "n", (F.col("n") * 2).cast("bigint")
     )

@@ -32,7 +32,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window
 
 from ..registry import query
-from ..session import lineage_checkpoint
+from ..session import lineage_checkpoint, stage_dir, staged_fixture
 
 Z, Y, X = 16, 32, 32
 NVOX = Z * Y * X
@@ -1123,14 +1123,12 @@ def q_mask_npy_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     import numpy as np
 
-    from .multimodal import _staged_fixture
-
     def write_mask(stage: str) -> None:
         zz, yy, xx = np.ogrid[0:Z, 0:Y, 0:X]
         d2 = (zz - 8) ** 2 * 4 + (yy - 16) ** 2 + (xx - 16) ** 2
         np.save(os.path.join(stage, "mask.npy"), d2 < 256)
 
-    mask_dir = _staged_fixture(spark, "maskfile", write_mask)
+    mask_dir = staged_fixture(spark, "maskfile", write_mask)
 
     z_dim, y_dim, x_dim = Z, Y, X
 
@@ -1200,14 +1198,8 @@ def q_volume_npy_export(spark: SparkSession, sf_dir: str) -> DataFrame:
     the reference's `nib.save` loop (`brain_segmentation.py:425-438`),
     distributed."""
     import os
-    import shutil
-    import tempfile
 
-    out_dir = os.path.join(
-        tempfile.gettempdir(),
-        f"bd3_volexport_{spark.sparkContext.applicationId}",
-    )
-    shutil.rmtree(out_dir, ignore_errors=True)
+    out_dir = stage_dir(spark, "volexport")
     os.makedirs(out_dir)
     z_dim, y_dim, x_dim = Z, Y, X
 
@@ -1301,14 +1293,8 @@ def q_volume_nifti_export(spark: SparkSession, sf_dir: str) -> DataFrame:
     rides binaryFile's split-by-file partitioning, and the header parse
     is O(1) per file."""
     import os
-    import shutil
-    import tempfile
 
-    out_dir = os.path.join(
-        tempfile.gettempdir(),
-        f"bd3_niftiexport_{spark.sparkContext.applicationId}",
-    )
-    shutil.rmtree(out_dir, ignore_errors=True)
+    out_dir = stage_dir(spark, "niftiexport")
     os.makedirs(out_dir)
     z_dim, y_dim, x_dim = Z, Y, X
 

@@ -28,8 +28,8 @@ import re
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..functions.hashing import md5_int56_duck, md5_int56_spark
-from .multimodal import _sf_tag
 from ..registry import query
+from ..session import sf_tag, stage_dir, staged_fixture
 from ..sources import load_table
 
 Z_BITS = 8          # bits per dimension -> 16-bit Z value
@@ -158,16 +158,9 @@ def q_compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     count; the range shuffle is the only cost and it amortizes every
     subsequent scan."""
     import os
-    import shutil
-    import tempfile
 
     orders = load_table(spark, sf_dir, "orders")
-    base = os.path.join(
-        tempfile.gettempdir(),
-        f"bd3_compact_{os.path.basename(os.path.normpath(sf_dir))}"
-        f"_{spark.sparkContext.applicationId}",
-    )
-    shutil.rmtree(base, ignore_errors=True)
+    base = stage_dir(spark, "compact", sf_dir)
     small, compact = f"{base}/small", f"{base}/compact"
     orders.repartition(N_SMALL).write.parquet(small)
     n_before = len([f for f in os.listdir(small) if f.endswith(".parquet")])
@@ -198,70 +191,24 @@ def q_compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ------------------------------------------- dynamic partition pruning
 
-def _promote_staged_dir(stage: str, final: str) -> None:
-    """Atomically promote a staged fixture dir into place.  On rename
-    failure the usual cause is a concurrent session having won the
-    race — but that must be VERIFIED, not assumed: any other OSError
-    (permissions, a partial dir left by external interference) would
-    otherwise leave a broken or absent fixture that downstream queries
-    consume silently."""
-    import os
-    import shutil
-
-    try:
-        os.rename(stage, final)
-    except OSError as exc:
-        shutil.rmtree(stage, ignore_errors=True)
-        if not os.path.exists(os.path.join(final, "_SUCCESS")):
-            raise RuntimeError(
-                f"fixture promotion failed: {final} has no _SUCCESS marker "
-                f"after rename error ({exc}); no concurrent winner present"
-            ) from exc
-
-
 def _dpp_paths(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
-    """Stage (once per sf_dir) the month-partitioned orders fact and a
-    tiny month->fiscal-quarter dim as parquet; return both paths.
+    """Stage (once per session and sf_dir) the month-partitioned orders
+    fact and a tiny month->fiscal-quarter dim as parquet; return both
+    paths.
 
     The dim must come back from DISK: a local-relation dim constant-
     folds into a static IN-list at planning time, which tests static
-    pruning, not the runtime kind.
+    pruning, not the runtime kind."""
 
-    Concurrency + staleness safety: the fixture dir name embeds a
-    fingerprint of the source orders parquet (mtime+size), so a
-    regenerated testdata tree gets a fresh fixture instead of silently
-    reusing the old one; each writer stages under a private
-    applicationId-suffixed dir and atomically renames into place, so
-    two concurrent sessions never interleave writes (the loser's
-    rename simply finds the dir already present and discards its
-    staging copy)."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
-    tag = os.path.basename(os.path.normpath(sf_dir)).replace(".", "_")
-    src = os.path.join(sf_dir, "orders.parquet")
-    st = os.stat(src)
-    fp = hashlib.md5(f"{st.st_mtime_ns}:{st.st_size}".encode()).hexdigest()[:10]
-    base = os.path.join(tempfile.gettempdir(), f"spark_graft_dpp_{tag}_{fp}")
-    fact, dim = os.path.join(base, "orders_by_month"), os.path.join(base, "month_dim")
-    app = re.sub(r"\W", "_", spark.sparkContext.applicationId)
-    if not os.path.exists(os.path.join(fact, "_SUCCESS")):
-        stage = f"{fact}.{app}.tmp"
+    def write_tables(stage: str) -> None:
+        orders = load_table(spark, sf_dir, "orders")
         (
-            load_table(spark, sf_dir, "orders")
-            .withColumn("order_month", F.date_format("o_orderdate", "yyyy-MM"))
-            .write.mode("overwrite")
-            .partitionBy("order_month")
-            .parquet(stage)
+            orders.withColumn("order_month", F.date_format("o_orderdate", "yyyy-MM"))
+            .write.partitionBy("order_month")
+            .parquet(f"{stage}/orders_by_month")
         )
-        _promote_staged_dir(stage, fact)
-    if not os.path.exists(os.path.join(dim, "_SUCCESS")):
-        stage = f"{dim}.{app}.tmp"
         (
-            load_table(spark, sf_dir, "orders")
-            .select(F.date_format("o_orderdate", "yyyy-MM").alias("order_month"))
+            orders.select(F.date_format("o_orderdate", "yyyy-MM").alias("order_month"))
             .distinct()
             .withColumn(
                 "fiscal_quarter",
@@ -272,11 +219,11 @@ def _dpp_paths(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
                 ),
             )
             .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(stage)
+            .write.parquet(f"{stage}/month_dim")
         )
-        _promote_staged_dir(stage, dim)
-    return fact, dim
+
+    base = staged_fixture(spark, "dpp", write_tables, sf_dir)
+    return f"{base}/orders_by_month", f"{base}/month_dim"
 
 
 @query(
@@ -440,18 +387,12 @@ def q_retention_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB this is `ALTER TABLE DROP PARTITION` / Delta `VACUUM`
     economics: retention on a partition column costs O(#partitions)
     metadata ops; retention on a non-partition column would cost a
-    full rewrite.  Staging is keyed by applicationId — vacuum mutates
-    the layout, so the fixture is never shared across sessions."""
+    full rewrite.  Vacuum mutates the layout, so every call stages
+    afresh."""
     import os
     import shutil
-    import tempfile
 
-    base = os.path.join(
-        tempfile.gettempdir(),
-        f"bd3_vacuum_{os.path.basename(os.path.normpath(sf_dir))}"
-        f"_{spark.sparkContext.applicationId}",
-    )
-    shutil.rmtree(base, ignore_errors=True)
+    base = stage_dir(spark, "vacuum", sf_dir)
     (
         load_table(spark, sf_dir, "orders")
         .select("o_orderkey", F.date_format("o_orderdate", "yyyy-MM").alias("order_month"))
@@ -514,19 +455,12 @@ def q_txn_log_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     At 100 TB the log IS the scaling trick: commits are one appended
     JSON line + atomically-visible files, and time travel costs a log
-    replay, not a table copy.  Staging keys on applicationId (the
-    fixture mutates across versions)."""
+    replay, not a table copy.  The fixture mutates across versions, so
+    every call stages afresh."""
     import json as _json
     import os
-    import shutil
-    import tempfile
 
-    base = os.path.join(
-        tempfile.gettempdir(),
-        f"bd3_txnlog_{os.path.basename(os.path.normpath(sf_dir))}"
-        f"_{spark.sparkContext.applicationId}",
-    )
-    shutil.rmtree(base, ignore_errors=True)
+    base = stage_dir(spark, "txnlog", sf_dir)
     os.makedirs(os.path.join(base, "_log"))
     orders = load_table(spark, sf_dir, "orders").select("o_orderkey")
     mx = orders.agg(F.max("o_orderkey")).collect()[0][0]
@@ -611,17 +545,12 @@ def q_catalog_stats_cbo(spark: SparkSession, sf_dir: str) -> DataFrame:
     scanning — and min/max envelopes are the same machinery file
     skipping uses (see zorder_layout_stats).  The ANALYZE scan itself
     is one pass, amortized over every subsequent plan."""
-    import os
-    import tempfile
-
-    # Key both the path and the table name by applicationId: concurrent
-    # sessions on one machine must not race on a shared /tmp dir, and a
-    # repeat invocation within one session (bench runs 3×) skips the
-    # rewrite+ANALYZE entirely — the catalog already holds the stats.
-    tag = _sf_tag(sf_dir)  # full-path-hashed: same-basename dirs never collide
+    # The table name is keyed by sf_dir and applicationId like its
+    # path: a repeat invocation within one session (bench runs 3×)
+    # skips the rewrite+ANALYZE entirely — the catalog already holds
+    # the stats.
     app = re.sub(r"\W", "_", spark.sparkContext.applicationId)
-    tname = f"orders_stats_{tag}_{app}"
-    base = os.path.join(tempfile.gettempdir(), f"spark_graft_stats_{tag}_{app}")
+    tname = f"orders_stats_{sf_tag(sf_dir)}_{app}"
 
     def _stats_present() -> bool:
         # gate on the stats ACTUALLY being in the catalog, not on mere
@@ -643,7 +572,7 @@ def q_catalog_stats_cbo(spark: SparkSession, sf_dir: str) -> DataFrame:
             (
                 load_table(spark, sf_dir, "orders")
                 .write.mode("overwrite")
-                .option("path", base)
+                .option("path", stage_dir(spark, "stats", sf_dir))
                 .format("parquet")
                 .saveAsTable(tname)
             )

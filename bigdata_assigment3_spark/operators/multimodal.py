@@ -40,6 +40,7 @@ from pyspark.sql.types import (
 )
 
 from ..registry import query
+from ..session import staged_fixture
 from ..sources import load_table
 
 
@@ -628,38 +629,6 @@ def q_audio_frame_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ----------------------------------------------- REAL codecs (no cv2)
 
-def _sf_tag(sf_dir: str) -> str:
-    """Collision-safe fixture tag for a DATA-dependent staged dir:
-    readable basename + a hash of the FULL path, so two data dirs that
-    happen to share a basename (e.g. /a/sf0.01 and /b/sf0.01) can
-    never be served each other's staged artifacts within a session."""
-    import hashlib
-
-    norm = os.path.normpath(sf_dir)
-    base = os.path.basename(norm).replace(".", "_")
-    return f"{base}_{hashlib.md5(norm.encode()).hexdigest()[:8]}"
-
-
-def _staged_fixture(spark: SparkSession, tag: str, write_files) -> str:
-    """Session-scoped codec-fixture staging with a crash-safe sentinel:
-    reuse is gated on the ``_DONE`` marker, written only after
-    ``write_files(stage_dir)`` returns — a crash mid-write leaves no
-    marker, so a retry regenerates instead of consuming a truncated
-    fixture.  The dir is keyed by applicationId so concurrent sessions
-    never share state.  (One pattern for every staged codec fixture:
-    PGM, PNG, WAV, Y4M, DICOM, and hmrf's .npy mask.)"""
-    import tempfile
-
-    stage = os.path.join(
-        tempfile.gettempdir(), f"bd3_{tag}_{spark.sparkContext.applicationId}"
-    )
-    if not os.path.exists(os.path.join(stage, "_DONE")):
-        os.makedirs(stage, exist_ok=True)
-        write_files(stage)
-        open(os.path.join(stage, "_DONE"), "w").close()
-    return stage
-
-
 N_PGM, PGM_W, PGM_H = 64, 32, 24
 
 
@@ -701,7 +670,7 @@ def q_image_pgm_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
             with open(os.path.join(stage, f"img-{img:04d}.pgm"), "wb") as fh:
                 fh.write(b"P5\n%d %d\n255\n" % (PGM_W, PGM_H) + arr.tobytes())
 
-    stage = _staged_fixture(spark, "pgm", write_pgms)
+    stage = staged_fixture(spark, "pgm", write_pgms)
 
     def decode(batches):
         import re
@@ -797,7 +766,7 @@ def q_audio_wav_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
                 wf.setframerate(16000)
                 wf.writeframes(samples.tobytes())
 
-    stage = _staged_fixture(spark, "wav", write_wavs)
+    stage = staged_fixture(spark, "wav", write_wavs)
 
     frame_len = WAV_FRAME
 
@@ -892,7 +861,7 @@ def q_video_y4m_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
                 u = np.full((Y4M_H // 2, Y4M_W // 2), 128, np.uint8)
                 fh.write(b"FRAME\n" + yp.tobytes() + u.tobytes() + u.tobytes())
 
-    stage = _staged_fixture(spark, "y4m", write_clip)
+    stage = staged_fixture(spark, "y4m", write_clip)
 
     def demux(batches):
         import re
@@ -989,7 +958,7 @@ def _stage_dicom(spark: SparkSession) -> str:
             with open(os.path.join(stage, f"slice-{s:03d}.dcm"), "wb") as fh:
                 fh.write(b"\x00" * 128 + b"DICM" + body)
 
-    return _staged_fixture(spark, "dcm", write_slices)
+    return staged_fixture(spark, "dcm", write_slices)
 
 
 @query(
@@ -1209,7 +1178,7 @@ def q_image_png_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
             with open(os.path.join(stage, f"img-{img:04d}.png"), "wb") as fh:
                 fh.write(blob)
 
-    stage = _staged_fixture(spark, "png", write_pngs)
+    stage = staged_fixture(spark, "png", write_pngs)
 
     def decode(batches):
         import re
@@ -1334,11 +1303,8 @@ def q_figure_heatmap_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # artifact keyed by data dir AND grid content: a different sf_dir
     # (or regenerated events) must produce a fresh figure
-    import hashlib as _hl
-
-    tag = _sf_tag(sf_dir)
-    fp = _hl.md5(grid.tobytes()).hexdigest()[:10]
-    stage = _staged_fixture(spark, f"heatmap_{tag}_{fp}", write_figure)
+    fp = hashlib.md5(grid.tobytes()).hexdigest()[:10]
+    stage = staged_fixture(spark, f"heatmap_{fp}", write_figure, sf_dir)
 
     cell = HEAT_CELL
 
@@ -1484,7 +1450,7 @@ def q_image_jpeg_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
             with open(os.path.join(stage, f"img-{img:04d}.jpg"), "wb") as fh:
                 fh.write(jpeg_encode_gray(arr))
 
-    stage = _staged_fixture(spark, "jpg", write_jpegs)
+    stage = staged_fixture(spark, "jpg", write_jpegs)
     return _jpeg_stats_df(spark, stage)
 
 
@@ -1549,7 +1515,7 @@ def q_image_jpeg_q100_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
             with open(os.path.join(stage, f"img-{img:04d}.jpg"), "wb") as fh:
                 fh.write(jpeg_encode_gray(v.astype(np.uint8), qtable=QTABLE_Q100))
 
-    stage = _staged_fixture(spark, "jpgq100", write_jpegs)
+    stage = staged_fixture(spark, "jpgq100", write_jpegs)
     return _jpeg_stats_df(spark, stage)
 
 
@@ -1569,8 +1535,6 @@ def _gz_corpus_stage(spark: SparkSession, sf_dir: str) -> str:
         F.coalesce(F.col("text"), F.lit("")).alias("text"),
         (F.col("doc_id") % GZ_SHARDS).alias("shard"),
     )
-
-    tag = _sf_tag(sf_dir)
 
     def write_shards(stage: str) -> None:
         def write_one(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -1594,7 +1558,7 @@ def _gz_corpus_stage(spark: SparkSession, sf_dir: str) -> str:
         )
         assert len(manifest) == GZ_SHARDS
 
-    return _staged_fixture(spark, f"gz_{tag}", write_shards)
+    return staged_fixture(spark, "gz", write_shards, sf_dir)
 
 
 def _gz_parse_kernel():
@@ -1701,8 +1665,6 @@ def q_multiformat_text_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("doc_id") % 3).alias("codec_id"),
     )
 
-    tag = _sf_tag(sf_dir)
-
     def write_shards(stage: str) -> None:
         def write_one(pdf: pd.DataFrame) -> pd.DataFrame:
             import bz2 as _bz2
@@ -1728,7 +1690,7 @@ def q_multiformat_text_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         assert len(manifest) == 3
 
-    stage = _staged_fixture(spark, f"multifmt_{tag}", write_shards)
+    stage = staged_fixture(spark, "multifmt", write_shards, sf_dir)
 
     def ingest(batches):
         import bz2 as _bz2
@@ -1800,8 +1762,6 @@ def q_arrow_ipc_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "n_chars", (F.col("doc_id") % ARROW_SHARDS).alias("shard")
     )
 
-    tag = _sf_tag(sf_dir)
-
     def write_shards(stage: str) -> None:
         def write_one(pdf: pd.DataFrame) -> pd.DataFrame:
             import pyarrow as pa
@@ -1827,7 +1787,7 @@ def q_arrow_ipc_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         assert len(manifest) == ARROW_SHARDS
 
-    stage = _staged_fixture(spark, f"arrowipc_{tag}", write_shards)
+    stage = staged_fixture(spark, "arrowipc", write_shards, sf_dir)
 
     def ingest(batches):
         import io
@@ -1899,8 +1859,6 @@ def q_sqlite_db_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("doc_id") % SQLITE_SHARDS).alias("shard"),
     )
 
-    tag = _sf_tag(sf_dir)
-
     def write_shards(stage: str) -> None:
         def write_one(pdf: pd.DataFrame) -> pd.DataFrame:
             import sqlite3
@@ -1925,7 +1883,7 @@ def q_sqlite_db_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         assert len(manifest) == SQLITE_SHARDS
 
-    stage = _staged_fixture(spark, f"sqlite_{tag}", write_shards)
+    stage = staged_fixture(spark, "sqlite", write_shards, sf_dir)
 
     def ingest(batches):
         import hashlib as _hl
@@ -2030,7 +1988,7 @@ def q_webdataset_tar_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
                         info.size = len(payload)
                         tf.addfile(info, io.BytesIO(payload))
 
-    stage = _staged_fixture(spark, "wds", write_shards)
+    stage = staged_fixture(spark, "wds", write_shards)
 
     def ingest(batches):
         import hashlib as _hl
@@ -2115,8 +2073,6 @@ def q_avro_ocf_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("doc_id") % AVRO_SHARDS).alias("shard"),
     )
 
-    tag = _sf_tag(sf_dir)
-
     def write_shards(stage: str) -> None:
         def write_one(pdf: pd.DataFrame) -> pd.DataFrame:
             from bigdata_assigment3_spark.functions.avro import avro_ocf_bytes
@@ -2140,7 +2096,7 @@ def q_avro_ocf_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         assert len(manifest) == AVRO_SHARDS
 
-    stage = _staged_fixture(spark, f"avro_{tag}", write_shards)
+    stage = staged_fixture(spark, "avro", write_shards, sf_dir)
 
     def ingest(batches):
         import hashlib as _hl
@@ -2219,8 +2175,6 @@ def q_protobuf_stream_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("doc_id") % PB_SHARDS).alias("shard"),
     )
 
-    tag = _sf_tag(sf_dir)
-
     def write_shards(stage: str) -> None:
         def write_one(pdf: pd.DataFrame) -> pd.DataFrame:
             from bigdata_assigment3_spark.functions.protowire import (
@@ -2246,7 +2200,7 @@ def q_protobuf_stream_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         assert len(manifest) == PB_SHARDS
 
-    stage = _staged_fixture(spark, f"pb_{tag}", write_shards)
+    stage = staged_fixture(spark, "pb", write_shards, sf_dir)
 
     def ingest(batches):
         import hashlib as _hl
@@ -2325,7 +2279,7 @@ def q_gif_frames_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
         with open(os.path.join(stage, "clip.gif"), "wb") as fh:
             fh.write(gif_encode_gray(frames))
 
-    stage = _staged_fixture(spark, "gif", write_clip)
+    stage = staged_fixture(spark, "gif", write_clip)
 
     def demux(batches):
         import numpy as np

@@ -1,5 +1,5 @@
 """SparkSession construction, per-session config hardening, and the
-two pieces of session-global state the operators share.
+three pieces of session-global state the operators share.
 
 Every config here is chosen for the 100 TB target, not just local
 tests: AQE re-plans shuffles at runtime (skew joins, partition
@@ -30,13 +30,31 @@ is scoped as tightly as the plan allows, restores every key on exit
 (unsetting the ones that were unset), and pins never overlap — a
 second pin while one is active, nested or from another thread,
 raises instead of silently interleaving save/restore pairs.
+
+Staging dirs (:func:`stage_dir`, :func:`staged_fixture`).  A query
+that writes files to read them back (a sink round trip, a codec
+artifact, a streamed micro-batch) stages them in one place:
+``scratch_dir()/bd3_{tag}[_{sf_tag(sf_dir)}]_{applicationId}``.  The
+sf part (:func:`sf_tag`) hashes the full data-dir path, so two data
+dirs that share a basename never share a dir; the applicationId means
+two sessions never share one either, so no session can empty or
+rewrite files another session is still reading, and nothing needs a
+cross-session lock or a stage-and-rename.  :func:`stage_dir` is the
+fresh per-call kind: every call empties the dir and leaves it
+uncreated for the writer, so a lazy result of an earlier call with the
+same (tag, sf_dir) no longer reads.  :func:`staged_fixture` is the
+write-once kind: written once per (session, tag, sf_dir) and reused,
+with a ``_DONE`` marker written only after the writer returns, so a
+crash mid-write is rewritten instead of trusted.
 """
 
 from __future__ import annotations
 
 import contextlib
 import functools
+import hashlib
 import os
+import shutil
 import threading
 from collections.abc import Callable, Iterator
 from typing import TypeVar
@@ -264,3 +282,46 @@ def conf_pin(spark: SparkSession, confs: dict[str, str]) -> Iterator[None]:
                     spark.conf.set(k, old)
     finally:
         _PIN_LOCK.release()
+
+
+def sf_tag(sf_dir: str) -> str:
+    """``sf_dir``'s basename plus a hash of its full normalised path:
+    ``/a/sf0.01`` and ``/b/sf0.01`` get different tags."""
+    norm = os.path.normpath(sf_dir)
+    base = os.path.basename(norm).replace(".", "_")
+    return f"{base}_{hashlib.md5(norm.encode()).hexdigest()[:8]}"
+
+
+def _stage_path(spark: SparkSession, tag: str, sf_dir: str | None) -> str:
+    name = tag if sf_dir is None else f"{tag}_{sf_tag(sf_dir)}"
+    return os.path.join(
+        scratch_dir(), f"bd3_{name}_{spark.sparkContext.applicationId}"
+    )
+
+
+def stage_dir(spark: SparkSession, tag: str, sf_dir: str | None = None) -> str:
+    """A fresh staging dir for one call (naming in the module
+    docstring): emptied and not yet created, so a writer with Spark's
+    default ``errorifexists`` mode creates it."""
+    path = _stage_path(spark, tag, sf_dir)
+    shutil.rmtree(path, ignore_errors=True)
+    return path
+
+
+def staged_fixture(
+    spark: SparkSession,
+    tag: str,
+    write_files: Callable[[str], None],
+    sf_dir: str | None = None,
+) -> str:
+    """The staging dir for ``(tag, sf_dir)``, filled by
+    ``write_files(dir)`` once per session and reused after that.  Reuse
+    is gated on a ``_DONE`` marker written after ``write_files``
+    returns; without it the dir is emptied and written again."""
+    path = _stage_path(spark, tag, sf_dir)
+    done = os.path.join(path, "_DONE")
+    if not os.path.exists(done):
+        os.makedirs(stage_dir(spark, tag, sf_dir))
+        write_files(path)
+        open(done, "w").close()
+    return path

@@ -29,7 +29,7 @@ from pyspark.sql.window import Window
 from ..operators.relational import SCD2_HIST_CTES
 from ..plans.hints import bounded_broadcast
 from ..registry import query
-from ..session import conf_pin, ensure_session_conf, scratch_dir
+from ..session import conf_pin, ensure_session_conf, stage_dir, staged_fixture
 from ..sources import load_table
 from ..sources.tables import normalize_events_ts, parquet_schema
 
@@ -125,6 +125,31 @@ def _run_to_memory(
         )
         q.awaitTermination()
     return q
+
+
+def _stamp_arrival(stage: str, i: int) -> None:
+    """Stamp staged batch ``i``'s files with arrival time ``i``: the
+    file source orders new files by modification time."""
+    for f in _os.listdir(f"{stage}/b{i}"):
+        _os.utime(f"{stage}/b{i}/{f}", (1_000_000 + i * 100,) * 2)
+
+
+def _stage_batch(df: DataFrame, stage: str, i: int) -> None:
+    """Stage ``df`` as micro-batch ``i``: one parquet file, stamped."""
+    df.coalesce(1).write.parquet(f"{stage}/b{i}")
+    _stamp_arrival(stage, i)
+
+
+def _staged_stream(spark: SparkSession, schema, stage: str) -> DataFrame:
+    """The batches staged under ``stage`` as a file stream that reads
+    one file per trigger, in arrival order."""
+    return (
+        spark.readStream.schema(schema)
+        .option("pathGlobFilter", "*.parquet")
+        .option("recursiveFileLookup", "true")
+        .option("maxFilesPerTrigger", "1")
+        .parquet(stage)
+    )
 
 
 @query(
@@ -455,16 +480,7 @@ def q_stream_etl_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     append log): parquet stream -> projection/enrichment -> parquet
     append sink with checkpoint (exactly-once via the commit log),
     then read the sink back.  availableNow drains and stops."""
-    import os
-    import shutil
-    import tempfile
-
-    base = os.path.join(
-        scratch_dir(),
-        f"bd3_stream_etl_{os.path.basename(os.path.normpath(sf_dir))}"
-        f"_{spark.sparkContext.applicationId}",
-    )
-    shutil.rmtree(base, ignore_errors=True)
+    base = stage_dir(spark, "stream_etl", sf_dir)
     ev = _stream_events(spark, sf_dir).select(
         "event_id",
         "user_id",
@@ -692,18 +708,8 @@ def q_stream_late_data_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     the watermark horizon), not O(stream history); the staged
     file-per-trigger source stands in for Kafka partitions.
     """
-    import os
-    import shutil
-    import tempfile
-
     ev = load_table(spark, sf_dir, "events")
-    stage = os.path.join(
-        scratch_dir(),
-        # keyed by app id: concurrent sessions must not share staging
-        f"bd3_late_drop_{os.path.basename(os.path.normpath(sf_dir))}"
-        f"_{spark.sparkContext.applicationId}",
-    )
-    shutil.rmtree(stage, ignore_errors=True)
+    stage = stage_dir(spark, "late_drop", sf_dir)
     on_time = ev.filter(F.col("event_id") % 4 != 0)
     late = ev.filter(F.col("event_id") % 4 == 0)
     # the bridge batch: late-file rows that are still above the
@@ -723,17 +729,8 @@ def q_stream_late_data_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     # and the late-drop metric counts rows, not columns
     stage_cols = ("ts", "event_type")
     for i, df in enumerate(batches, 1):
-        df.select(*stage_cols).coalesce(1).write.parquet(f"{stage}/b{i}")
-        for f in os.listdir(f"{stage}/b{i}"):
-            # deterministic arrival order for the file source
-            os.utime(f"{stage}/b{i}/{f}", (1_000_000 + i * 100,) * 2)
-    stream = (
-        spark.readStream.schema(ev.select(*stage_cols).schema)
-        .option("pathGlobFilter", "*.parquet")
-        .option("recursiveFileLookup", "true")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(stage)
-    )
+        _stage_batch(df.select(*stage_cols), stage, i)
+    stream = _staged_stream(spark, ev.select(*stage_cols).schema, stage)
     agg = (
         stream.withWatermark("ts", "2 days")
         .groupBy(F.window("ts", "1 day"), "event_type")
@@ -790,21 +787,12 @@ def q_stream_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import os
     import shutil
-    import tempfile
 
     ev = load_table(spark, sf_dir, "events")
-    base = os.path.join(
-        scratch_dir(),
-        f"bd3_upsert_{os.path.basename(os.path.normpath(sf_dir))}"
-        f"_{spark.sparkContext.applicationId}",
-    )
+    base = stage_dir(spark, "upsert", sf_dir)
     stage, target = f"{base}/in", f"{base}/target"
-    shutil.rmtree(base, ignore_errors=True)
     for i in range(3):
-        df = ev.filter(F.col("event_id") % 3 == i)
-        df.coalesce(1).write.parquet(f"{stage}/b{i}")
-        for f in os.listdir(f"{stage}/b{i}"):
-            os.utime(f"{stage}/b{i}/{f}", (1_000_000 + i * 100,) * 2)
+        _stage_batch(ev.filter(F.col("event_id") % 3 == i), stage, i)
 
     def merge_batch(batch: DataFrame, batch_id: int) -> None:
         sess = batch.sparkSession
@@ -831,13 +819,7 @@ def q_stream_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         shutil.rmtree(target, ignore_errors=True)
         os.rename(tmp, target)
 
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("pathGlobFilter", "*.parquet")
-        .option("recursiveFileLookup", "true")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(stage)
-    )
+    stream = _staged_stream(spark, ev.schema, stage)
     q = (
         stream.writeStream.foreachBatch(merge_batch)
         .trigger(availableNow=True)
@@ -973,8 +955,6 @@ def q_stream_union_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the complete-mode result equals the batch aggregate over the
     union — which the oracle states over the original table.
     """
-    from ..operators.multimodal import _sf_tag, _staged_fixture
-
     ensure_session_conf(spark)
     ev = load_table(spark, sf_dir, "events")
 
@@ -986,10 +966,7 @@ def q_stream_union_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
             "overwrite"
         ).parquet(f"{stage}/even")
 
-    # shared crash-safe stager; _sf_tag hashes the FULL sf_dir path so
-    # a second dir with the same basename in one session cannot be
-    # served the first dataset's staged legs
-    stage = _staged_fixture(spark, f"union_src_{_sf_tag(sf_dir)}", write_legs)
+    stage = staged_fixture(spark, "union_src", write_legs, sf_dir)
     schema = ev.schema
     s_odd = spark.readStream.schema(schema).parquet(f"{stage}/odd")
     s_even = spark.readStream.schema(schema).parquet(f"{stage}/even")
@@ -1174,17 +1151,8 @@ def q_stream_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     like the inner form; the 1-hour delay (vs the inner join's lazy
     30 days) is what a production attribution pipeline would run,
     trading reorder tolerance for result latency."""
-    import os
-    import shutil
-    import tempfile
-
     ev = load_table(spark, sf_dir, "events")
-    stage = os.path.join(
-        scratch_dir(),
-        f"bd3_outer_join_{os.path.basename(os.path.normpath(sf_dir))}"
-        f"_{spark.sparkContext.applicationId}",
-    )
-    shutil.rmtree(stage, ignore_errors=True)
+    stage = stage_dir(spark, "outer_join", sf_dir)
     mx = ev.agg(F.max("ts").alias("m"))
 
     def sentinel(days: int) -> DataFrame:
@@ -1201,16 +1169,8 @@ def q_stream_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).select(*ev.columns)
 
     for i, df in enumerate((ev, sentinel(30), sentinel(90)), 1):
-        df.coalesce(1).write.parquet(f"{stage}/b{i}")
-        for f in os.listdir(f"{stage}/b{i}"):
-            os.utime(f"{stage}/b{i}/{f}", (1_000_000 + i * 100,) * 2)
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("pathGlobFilter", "*.parquet")
-        .option("recursiveFileLookup", "true")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(stage)
-    )
+        _stage_batch(df, stage, i)
+    stream = _staged_stream(spark, ev.schema, stage)
     views = (
         stream.filter(F.col("event_type") == "view")
         .select(F.col("user_id").alias("v_user"), F.col("ts").alias("v_ts"))
@@ -1269,40 +1229,24 @@ def q_stream_restart_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
     drive its complete-mode output (an availableNow restart with
     nothing new can legally run zero batches and emit nothing).
     """
-    import os
-    import shutil
-    import tempfile
     import time
 
     ev = load_table(spark, sf_dir, "events")
-    base = os.path.join(
-        scratch_dir(),
-        f"bd3_restart_{os.path.basename(os.path.normpath(sf_dir))}"
-        f"_{spark.sparkContext.applicationId}",
-    )
-    shutil.rmtree(base, ignore_errors=True)
+    base = stage_dir(spark, "restart", sf_dir)
     stage, ckpt = f"{base}/stage", f"{base}/ckpt"
     mx = ev.agg(F.max("event_id").alias("m")).collect()[0][0]
     cuts = ((0, mx // 3), (mx // 3, 2 * mx // 3), (2 * mx // 3, mx + 1))
 
     def write_batch(i: int, lo: int, hi: int) -> None:
-        ev.filter((F.col("event_id") >= lo) & (F.col("event_id") < hi)).coalesce(
-            1
-        ).write.parquet(f"{stage}/b{i}")
-        for f in os.listdir(f"{stage}/b{i}"):
-            os.utime(f"{stage}/b{i}/{f}", (1_000_000 + i * 100,) * 2)
+        _stage_batch(
+            ev.filter((F.col("event_id") >= lo) & (F.col("event_id") < hi)), stage, i
+        )
 
     for i, (lo, hi) in enumerate(cuts[:2], 1):
         write_batch(i, lo, hi)
 
     def agg_stream() -> DataFrame:
-        s = (
-            spark.readStream.schema(ev.schema)
-            .option("pathGlobFilter", "*.parquet")
-            .option("recursiveFileLookup", "true")
-            .option("maxFilesPerTrigger", "1")
-            .parquet(stage)
-        )
+        s = _staged_stream(spark, ev.schema, stage)
         return s.groupBy("event_type").agg(
             F.count(F.lit(1)).alias("n"),
             F.sum(F.col("value").cast("decimal(18,2)")).alias("tv"),
@@ -1445,19 +1389,10 @@ def q_stream_corpus_backfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     At scale this is the standing ingest job: new WET/WARC shards
     arrive, the checkpoint remembers what's been consumed, and a
     restart resumes without re-reading or double-counting."""
-    import os
-    import shutil
-    import tempfile
-
     from ..operators.multimodal import _gz_corpus_stage, _gz_parse_kernel
 
     stage = _gz_corpus_stage(spark, sf_dir)
-    base = os.path.join(
-        scratch_dir(),
-        f"bd3_stream_backfill_{os.path.basename(os.path.normpath(sf_dir))}"
-        f"_{spark.sparkContext.applicationId}",
-    )
-    shutil.rmtree(base, ignore_errors=True)
+    base = stage_dir(spark, "stream_backfill", sf_dir)
     ingest = _gz_parse_kernel()  # SAME kernel as the batch ingest
     parsed = (
         spark.readStream.format("binaryFile")
@@ -1577,19 +1512,12 @@ def q_stream_bitmap_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-day COUNT(DISTINCT ...) self-joins, independent of the bitmap
     plumbing.
     """
-    import os
     import shutil
-    import tempfile
 
     from ..operators.sketches import AUDIENCE_VALUE_MIN, bitmap_word_mask
 
     ev = load_table(spark, sf_dir, "events")
-    stage = os.path.join(
-        scratch_dir(),
-        f"bd3_bitmap_overlap_{os.path.basename(os.path.normpath(sf_dir))}"
-        f"_{spark.sparkContext.applicationId}",
-    )
-    shutil.rmtree(stage, ignore_errors=True)
+    stage = stage_dir(spark, "bitmap_overlap", sf_dir)
     # three TIME-ORDERED micro-batches; batch 2 additionally REPLAYS
     # the whole boundary day (at-least-once delivery, the Kafka
     # contract): bit_or state is idempotent under replay, so the
@@ -1680,15 +1608,9 @@ def q_stream_bitmap_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
                     f"midnight-cut batches; batch {i} (cuts {c1} / {c2}) "
                     f"is empty for ts in [{lo}, {hi}]"
                 )
-            for f in os.listdir(f"{stage}/b{i}"):
-                os.utime(f"{stage}/b{i}/{f}", (1_000_000 + i * 100,) * 2)
-        staged_schema = ev.select(*stage_cols).schema
+            _stamp_arrival(stage, i)
         stream = normalize_events_ts(
-            spark.readStream.schema(staged_schema)
-            .option("pathGlobFilter", "*.parquet")
-            .option("recursiveFileLookup", "true")
-            .option("maxFilesPerTrigger", "1")
-            .parquet(stage)
+            _staged_stream(spark, ev.select(*stage_cols).schema, stage)
         )
         word, mask = bitmap_word_mask("user_id")
         agg = (
@@ -1731,9 +1653,9 @@ def q_stream_bitmap_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark.conf.set("bd3.stream_bitmap_overlap.n_updates", str(n_updates))
     finally:
         # the memory sink holds the drained updates — the staged parquet
-        # is dead weight once the stream terminates, and the appId-keyed
-        # dir name means the pre-run rmtree above can't reclaim OTHER
-        # sessions' leftovers, so clean up eagerly (round-11 advice)
+        # is dead weight once the stream terminates, and a later
+        # session's stage_dir can't reclaim this session's dir, so clean
+        # up eagerly (round-11 advice)
         shutil.rmtree(stage, ignore_errors=True)
     upd = spark.table(sink).select(
         F.unix_timestamp(F.col("window.start")).alias("window_start"),

@@ -279,3 +279,63 @@ def test_bounded_broadcast_waivers_pinned():
         ("operators/text.py", "q_langid_char_ngram"),
         ("streaming/queries.py", "q_stream_pit_enrich"),
     }, sites
+
+
+# --------------------------------------------------------------------
+# One staging root: every dir a query writes files into comes from
+# session.stage_dir / session.staged_fixture, which name it after the
+# session's applicationId (see the session.py docstring).
+
+def _callee(call: ast.Call) -> str:
+    f = call.func
+    return f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", "")
+
+
+def _is_scratch_dir(node: ast.AST) -> bool:
+    return isinstance(node, ast.Call) and _callee(node) == "scratch_dir"
+
+
+def _staging_violations(src: str, rel: str) -> list[str]:
+    """Sites that pick a staging path themselves: a temp-dir call, or a
+    path joined onto ``scratch_dir()`` (``os.path.join``, f-string, +)."""
+    hits = []
+    for node in ast.walk(ast.parse(src)):
+        if isinstance(node, ast.Call) and _callee(node) in ("gettempdir", "mkdtemp"):
+            hits.append(node)
+        elif isinstance(node, ast.Call) and _callee(node) == "join" and any(
+            _is_scratch_dir(a) for a in node.args
+        ):
+            hits.append(node)
+        elif isinstance(node, ast.JoinedStr) and any(
+            isinstance(v, ast.FormattedValue) and _is_scratch_dir(v.value)
+            for v in node.values
+        ):
+            hits.append(node)
+        elif isinstance(node, ast.BinOp) and _is_scratch_dir(node.left):
+            hits.append(node)
+    return [f"{rel}:{n.lineno}" for n in sorted(hits, key=lambda n: n.lineno)]
+
+
+def test_staging_dirs_come_from_session():
+    hits = []
+    for path in sorted(PKG.rglob("*.py")):
+        rel = str(path.relative_to(PKG))
+        if rel != "session.py":
+            hits += _staging_violations(path.read_text(), rel)
+    assert hits == [], hits
+
+
+def test_staging_gate_fires_on_bad_code():
+    bad = (
+        "import os, tempfile\n"
+        "from ..session import scratch_dir\n"
+        "a = os.path.join(tempfile.gettempdir(), 'x')\n"
+        "b = tempfile.mkdtemp()\n"
+        "c = os.path.join(scratch_dir(), 'x')\n"
+        "d = f'{scratch_dir()}/x'\n"
+        "e = scratch_dir() + '/x'\n"
+        "f = scratch_dir()\n"
+    )
+    assert _staging_violations(bad, "bad.py") == [
+        "bad.py:3", "bad.py:4", "bad.py:5", "bad.py:6", "bad.py:7",
+    ]

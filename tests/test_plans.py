@@ -517,9 +517,9 @@ def test_cbo_stats_flip_join_strategy(spark):
 
     # ensure the ANALYZEd catalog table exists (same one the query uses)
     REGISTRY["catalog_stats_cbo"].fn(spark, SF_ORACLE).collect()
-    from bigdata_assigment3_spark.operators.multimodal import _sf_tag
+    from bigdata_assigment3_spark.session import sf_tag
 
-    tag = _sf_tag(SF_ORACLE)
+    tag = sf_tag(SF_ORACLE)
     app = _re.sub(r"\W", "_", spark.sparkContext.applicationId)
     tname = f"orders_stats_{tag}_{app}"
 

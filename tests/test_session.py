@@ -1,9 +1,11 @@
-"""The two pieces of session-global state in ``session.py``: the
+"""The three pieces of session-global state in ``session.py``: the
 per-session memo behind every index-like intermediate (and its hit/miss
-counts), and the conf pin behind every scoped conf override."""
+counts), the conf pin behind every scoped conf override, and the
+staging dirs behind every query that writes files to read back."""
 
 from __future__ import annotations
 
+import os
 import sys
 import threading
 from types import SimpleNamespace
@@ -11,7 +13,12 @@ from types import SimpleNamespace
 import pytest
 
 from bigdata_assigment3_spark import session
-from bigdata_assigment3_spark.session import conf_pin, session_memo
+from bigdata_assigment3_spark.session import (
+    conf_pin,
+    session_memo,
+    stage_dir,
+    staged_fixture,
+)
 
 SET_KEY = "spark.sql.shuffle.partitions"  # always set on the test session
 UNSET_KEY = "bd3.test.conf_pin_probe"  # never set outside these tests
@@ -201,3 +208,117 @@ def test_conf_pin_from_second_thread_raises(spark):
         release.set()
         holder.join()
     assert _snapshot(spark) == before
+
+
+@pytest.fixture
+def scratch(monkeypatch, tmp_path):
+    """``scratch_dir()`` pointed at a fresh dir for the test."""
+    monkeypatch.setenv("SPARK_GRAFT_SCRATCH", str(tmp_path))
+    return str(tmp_path)
+
+
+def test_stage_dir_is_fresh_and_session_scoped(scratch):
+    path = stage_dir(_fake_spark("app-1"), "sink", "/data/sf0.01")
+    assert not os.path.exists(path)
+    assert os.path.dirname(path) == scratch
+    assert os.path.basename(path).startswith("bd3_sink_sf0_01_")
+    assert path.endswith("_app-1")
+    assert stage_dir(_fake_spark("app-2"), "sink", "/data/sf0.01") != path
+    assert stage_dir(_fake_spark("app-1"), "sink") == os.path.join(
+        scratch, "bd3_sink_app-1"
+    )
+
+
+def test_stage_dir_keeps_same_basename_sf_dirs_apart(scratch):
+    spark = _fake_spark("app-1")
+    a = stage_dir(spark, "sink", "/a/sf0.01")
+    b = stage_dir(spark, "sink", "/b/sf0.01")
+    assert a != b
+    assert stage_dir(spark, "sink", "/a/./sf0.01/") == a
+
+
+def test_stage_dir_second_call_empties_the_first(scratch):
+    spark = _fake_spark("app-1")
+    path = stage_dir(spark, "sink", "/a/sf0.01")
+    os.makedirs(os.path.join(path, "part"))
+    open(os.path.join(path, "part", "f.parquet"), "w").close()
+    assert stage_dir(spark, "sink", "/a/sf0.01") == path
+    assert not os.path.exists(path)
+
+
+def test_staged_fixture_writes_once_per_session_tag_and_sf_dir(scratch):
+    calls = []
+
+    def write(stage):
+        calls.append(stage)
+        open(os.path.join(stage, "f.bin"), "w").close()
+
+    s1, s2 = _fake_spark("app-1"), _fake_spark("app-2")
+    first = staged_fixture(s1, "fx", write, "/a/sf0.01")
+    for _ in range(2):
+        assert staged_fixture(s1, "fx", write, "/a/sf0.01") == first
+    others = [
+        staged_fixture(s1, "fx", write, "/b/sf0.01"),
+        staged_fixture(s1, "fx", write),
+        staged_fixture(s1, "fy", write, "/a/sf0.01"),
+        staged_fixture(s2, "fx", write, "/a/sf0.01"),
+    ]
+    assert calls == [first, *others]
+    assert len(set(calls)) == 5
+    assert all(os.path.exists(os.path.join(c, "f.bin")) for c in calls)
+
+
+def test_staged_fixture_rewrites_after_a_failed_write(scratch):
+    spark = _fake_spark("app-1")
+
+    def crash(stage):
+        open(os.path.join(stage, "partial.bin"), "w").close()
+        raise OSError("disk full")
+
+    with pytest.raises(OSError, match="disk full"):
+        staged_fixture(spark, "fx", crash)
+    path = os.path.join(scratch, "bd3_fx_app-1")
+    assert os.listdir(path) == ["partial.bin"]  # no _DONE marker
+    calls = []
+
+    def write(stage):
+        calls.append(sorted(os.listdir(stage)))
+        open(os.path.join(stage, "f.bin"), "w").close()
+
+    assert staged_fixture(spark, "fx", write) == path
+    assert calls == [[]]  # rewritten into an emptied dir, not reused
+    assert sorted(os.listdir(path)) == ["_DONE", "f.bin"]
+
+
+def test_sink_roundtrip_results_of_two_same_basename_sf_dirs_coexist(
+    spark, tmp_path
+):
+    """A lazy ``parquet_sink_roundtrip`` result must still read after
+    the same query ran on another data dir with the same basename: the
+    two calls stage into different dirs, so the second cannot empty the
+    first's files."""
+    import duckdb
+
+    from bigdata_assigment3_spark.registry import REGISTRY, _load_all
+    from bigdata_assigment3_spark.sources import load_table
+    from tests.conftest import SF_ORACLE
+    from tests.oracle_utils import compare
+
+    _load_all()
+    spec = REGISTRY["parquet_sink_roundtrip"]
+    events = load_table(spark, SF_ORACLE, "events")
+    a, b = str(tmp_path / "a" / "sf0.01"), str(tmp_path / "b" / "sf0.01")
+    events.filter("event_id % 2 = 0").write.parquet(f"{a}/events.parquet")
+    events.filter("event_id % 2 = 1").write.parquet(f"{b}/events.parquet")
+
+    held = spec.fn(spark, a)
+    spec.fn(spark, b).collect()
+    con = duckdb.connect()
+    try:
+        con.execute(
+            "CREATE VIEW events AS SELECT * FROM "
+            f"read_parquet('{a}/events.parquet/*.parquet')"
+        )
+        assert compare(held, con.sql(spec.oracle), spec.name) == []
+    finally:
+        con.close()
