@@ -28,11 +28,19 @@ reliable checkpoint dir via SPARK_GRAFT_CHECKPOINT_DIR at cluster scale).
 
 from __future__ import annotations
 
+import io
+import os
+from collections.abc import Callable
+
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window
 
+from ..functions.nifti import nifti1_bytes, parse_nifti1
 from ..registry import query
 from ..session import lineage_checkpoint, stage_dir, staged_fixture
+from ..sources.files import decode_files, staged_files, write_shards
 
 Z, Y, X = 16, 32, 32
 NVOX = Z * Y * X
@@ -1119,10 +1127,6 @@ def q_mask_npy_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     unroll is batch-columnar (numpy reshape, no per-voxel Python) and
     the coordinate join is an equi-join Catalyst plans like any other.
     """
-    import os
-
-    import numpy as np
-
     def write_mask(stage: str) -> None:
         zz, yy, xx = np.ogrid[0:Z, 0:Y, 0:X]
         d2 = (zz - 8) ** 2 * 4 + (yy - 16) ** 2 + (xx - 16) ** 2
@@ -1130,33 +1134,14 @@ def q_mask_npy_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     mask_dir = staged_fixture(spark, "maskfile", write_mask)
 
-    z_dim, y_dim, x_dim = Z, Y, X
+    def unroll(_path: str, blob: bytes) -> dict:
+        m = np.load(io.BytesIO(blob))
+        assert m.shape == (Z, Y, X)
+        idx = np.arange(m.size, dtype=np.int64)
+        return {"z": idx // (Y * X), "y": (idx // X) % Y, "x": idx % X, "in_mask": m.reshape(-1)}
 
-    def unroll(batches):
-        import io
-
-        import pandas as pd
-
-        for pdf in batches:
-            for blob in pdf["content"]:
-                m = np.load(io.BytesIO(bytes(blob)))
-                assert m.shape == (z_dim, y_dim, x_dim)
-                idx = np.arange(m.size, dtype=np.int64)
-                yield pd.DataFrame(
-                    {
-                        "z": idx // (y_dim * x_dim),
-                        "y": (idx // x_dim) % y_dim,
-                        "x": idx % x_dim,
-                        "in_mask": m.reshape(-1),
-                    }
-                )
-
-    mask = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.npy")
-        .load(mask_dir)
-        .select("content")
-        .mapInPandas(unroll, "z BIGINT, y BIGINT, x BIGINT, in_mask BOOLEAN")
+    mask = decode_files(
+        staged_files(spark, mask_dir, "*.npy"), unroll, "z BIGINT, y BIGINT, x BIGINT, in_mask BOOLEAN"
     )
     vox = _voxels(spark).select("z", "y", "x", "inten_m")  # NO generator mask
     return (
@@ -1170,6 +1155,49 @@ def q_mask_npy_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("coord_checksum"),
         )
     )
+
+
+def _export_volume(
+    spark: SparkSession, tag: str, ext: str, encode: Callable[[int, np.ndarray], bytes]
+) -> str:
+    """Export the threshold-labelled volume as one ``vol-{id}.{ext}``
+    file per volume into a fresh stage dir and return the dir.  One
+    bounded task per volume scatters its rows into a dense (Z,Y,X)
+    int8 array — volumes are per-patient bounded, which is what makes
+    the per-group densify safe — and ``encode(vol_id, arr)`` turns it
+    into the file's bytes."""
+    labeled = _voxels(spark).select(
+        F.lit(0).alias("vol_id"), "z", "y", "x",
+        F.expr(_INIT_LABEL).alias("label"),
+    )
+
+    def write_one(vol: int, pdf: pd.DataFrame) -> tuple[str, bytes]:
+        arr = np.full((Z, Y, X), -1, dtype=np.int8)
+        arr[pdf["z"].to_numpy(), pdf["y"].to_numpy(), pdf["x"].to_numpy()] = (
+            pdf["label"].to_numpy()
+        )
+        assert (arr >= 0).all()  # every voxel present exactly once
+        return f"vol-{vol}.{ext}", encode(vol, arr)
+
+    out_dir = stage_dir(spark, tag)
+    manifest = write_shards(labeled, "vol_id", write_one, out_dir)
+    assert sum(r.n for r in manifest) == NVOX
+    return out_dir
+
+
+_LABEL_STATS = "label BIGINT, n_vox BIGINT, coord_checksum BIGINT"
+
+
+def _label_rows(vol: np.ndarray) -> list[tuple]:
+    """(label, n_vox, coord_checksum) per label of a read-back label
+    volume; the checksum xors the voxels' flat C-order positions."""
+    flat = vol.reshape(-1)
+    idx = np.arange(flat.size, dtype=np.int64)
+    rows = []
+    for lab in np.unique(flat):
+        sel = idx[flat == lab]
+        rows.append((int(lab), len(sel), int(np.bitwise_xor.reduce(sel))))
+    return rows
 
 
 @query(
@@ -1197,60 +1225,16 @@ def q_volume_npy_export(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded task and the artifact write is embarrassingly parallel —
     the reference's `nib.save` loop (`brain_segmentation.py:425-438`),
     distributed."""
-    import os
+    def encode(_vol: int, arr: np.ndarray) -> bytes:
+        buf = io.BytesIO()
+        np.save(buf, arr)
+        return buf.getvalue()
 
-    out_dir = stage_dir(spark, "volexport")
-    os.makedirs(out_dir)
-    z_dim, y_dim, x_dim = Z, Y, X
-
-    labeled = _voxels(spark).select(
-        F.lit(0).alias("vol_id"), "z", "y", "x",
-        F.expr(_INIT_LABEL).alias("label"),
-    )
-
-    def export(pdf):
-        import numpy as np
-        import pandas as pd
-
-        arr = np.full((z_dim, y_dim, x_dim), -1, dtype=np.int8)
-        arr[pdf["z"].to_numpy(), pdf["y"].to_numpy(), pdf["x"].to_numpy()] = (
-            pdf["label"].to_numpy()
-        )
-        assert (arr >= 0).all()  # every voxel present exactly once
-        path = os.path.join(out_dir, f"vol-{int(pdf['vol_id'].iloc[0])}.npy")
-        np.save(path, arr)
-        return pd.DataFrame({"vol_id": [int(pdf["vol_id"].iloc[0])], "n": [len(pdf)]})
-
-    manifest = (
-        labeled.groupBy("vol_id")
-        .applyInPandas(export, "vol_id BIGINT, n BIGINT")
-        .collect()
-    )
-    assert sum(r.n for r in manifest) == NVOX
-
-    def readback(batches):
-        import io
-
-        import numpy as np
-        import pandas as pd
-
-        for pdf in batches:
-            for blob in pdf["content"]:
-                arr = np.load(io.BytesIO(bytes(blob))).reshape(-1)
-                idx = np.arange(arr.size, dtype=np.int64)
-                out = []
-                for lab in np.unique(arr):
-                    sel = idx[arr == lab]
-                    out.append(
-                        (int(lab), len(sel), int(np.bitwise_xor.reduce(sel)))
-                    )
-                yield pd.DataFrame(out, columns=["label", "n_vox", "coord_checksum"])
-
-    per_file = (
-        spark.read.format("binaryFile")
-        .load(out_dir)
-        .select("content")
-        .mapInPandas(readback, "label BIGINT, n_vox BIGINT, coord_checksum BIGINT")
+    out_dir = _export_volume(spark, "volexport", "npy", encode)
+    per_file = decode_files(
+        staged_files(spark, out_dir, "*.npy"),
+        lambda _path, blob: _label_rows(np.load(io.BytesIO(blob))),
+        _LABEL_STATS,
     )
     # re-aggregate across volumes (bit_xor merges, counts sum)
     return per_file.groupBy("label").agg(
@@ -1292,94 +1276,25 @@ def q_volume_nifti_export(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``.nii`` to shared storage (embarrassingly parallel); the read-back
     rides binaryFile's split-by-file partitioning, and the header parse
     is O(1) per file."""
-    import os
+    def encode(vol: int, arr: np.ndarray) -> bytes:
+        return nifti1_bytes(arr, (1.0, 1.0, 2.5), descrip=f"bd3 seg vol {vol}")
 
-    out_dir = stage_dir(spark, "niftiexport")
-    os.makedirs(out_dir)
-    z_dim, y_dim, x_dim = Z, Y, X
-
-    labeled = _voxels(spark).select(
-        F.lit(0).alias("vol_id"), "z", "y", "x",
-        F.expr(_INIT_LABEL).alias("label"),
-    )
-
-    def export(pdf):
-        import numpy as np
-        import pandas as pd
-
-        from bigdata_assigment3_spark.functions.nifti import nifti1_bytes
-
-        arr = np.full((z_dim, y_dim, x_dim), -1, dtype=np.int8)
-        arr[pdf["z"].to_numpy(), pdf["y"].to_numpy(), pdf["x"].to_numpy()] = (
-            pdf["label"].to_numpy()
+    def decode_one(_path: str, blob: bytes) -> list[tuple]:
+        fields, arr = parse_nifti1(blob)
+        header = (
+            *fields["dim"], fields["datatype"], fields["bitpix"], fields["vox_offset"],
+            *(int(round(p * 10)) for p in fields["pixdim"][:3]),
+            fields["magic"][:3].decode(),
         )
-        assert (arr >= 0).all()  # every voxel present exactly once
-        vol = int(pdf["vol_id"].iloc[0])
-        blob = nifti1_bytes(arr, (1.0, 1.0, 2.5), descrip=f"bd3 seg vol {vol}")
-        path = os.path.join(out_dir, f"vol-{vol}.nii")
-        with open(path, "wb") as f:
-            f.write(blob)
-        return pd.DataFrame({"vol_id": [vol], "n": [len(pdf)]})
+        return [stats + header for stats in _label_rows(arr)]
 
-    manifest = (
-        labeled.groupBy("vol_id")
-        .applyInPandas(export, "vol_id BIGINT, n BIGINT")
-        .collect()
-    )
-    assert sum(r.n for r in manifest) == NVOX
-
-    def readback(batches):
-        import io  # noqa: F401
-
-        import numpy as np
-        import pandas as pd
-
-        from bigdata_assigment3_spark.functions.nifti import parse_nifti1
-
-        for pdf in batches:
-            for blob in pdf["content"]:
-                fields, arr = parse_nifti1(bytes(blob))
-                nx, ny, nz = fields["dim"]
-                flat = arr.reshape(-1)
-                idx = np.arange(flat.size, dtype=np.int64)
-                out = []
-                for lab in np.unique(flat):
-                    sel = idx[flat == lab]
-                    out.append(
-                        (
-                            int(lab),
-                            len(sel),
-                            int(np.bitwise_xor.reduce(sel)),
-                            nx, ny, nz,
-                            fields["datatype"], fields["bitpix"],
-                            fields["vox_offset"],
-                            int(round(fields["pixdim"][0] * 10)),
-                            int(round(fields["pixdim"][1] * 10)),
-                            int(round(fields["pixdim"][2] * 10)),
-                            fields["magic"][:3].decode(),
-                        )
-                    )
-                yield pd.DataFrame(
-                    out,
-                    columns=[
-                        "label", "n_vox", "coord_checksum",
-                        "nx", "ny", "nz", "datatype", "bitpix", "vox_offset",
-                        "pixdim_x10_x", "pixdim_x10_y", "pixdim_x10_z", "magic",
-                    ],
-                )
-
-    per_file = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.nii")
-        .load(out_dir)
-        .select("content")
-        .mapInPandas(
-            readback,
-            "label BIGINT, n_vox BIGINT, coord_checksum BIGINT, "
-            "nx BIGINT, ny BIGINT, nz BIGINT, datatype BIGINT, bitpix BIGINT, "
-            "vox_offset BIGINT, pixdim_x10_x BIGINT, pixdim_x10_y BIGINT, "
-            "pixdim_x10_z BIGINT, magic STRING",
-        )
+    out_dir = _export_volume(spark, "niftiexport", "nii", encode)
+    per_file = decode_files(
+        staged_files(spark, out_dir, "*.nii"),
+        decode_one,
+        _LABEL_STATS + ", nx BIGINT, ny BIGINT, nz BIGINT, datatype BIGINT, bitpix BIGINT, "
+        "vox_offset BIGINT, pixdim_x10_x BIGINT, pixdim_x10_y BIGINT, "
+        "pixdim_x10_z BIGINT, magic STRING",
     )
     # re-aggregate across volumes (bit_xor merges, counts sum); header
     # fields are per-file constants — min() keeps them decoded-not-assumed

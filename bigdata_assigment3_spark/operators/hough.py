@@ -472,9 +472,6 @@ def q_hough_peak_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
     §4.2b): for dense edge maps the per-image numpy accumulator wins;
     for sparse maps / gigapixel images the relational form wins.
     Verified equal to `hough_peak` in tests.
-
-    The closure is self-contained (numpy only) — workers lack this
-    repo on sys.path.
     """
     edge = _edge_df(spark)
     size, r, acc_thresh = SIZE, R, ACC_THRESH

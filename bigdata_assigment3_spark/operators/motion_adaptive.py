@@ -52,8 +52,7 @@ def _paired_pixels(spark: SparkSession) -> DataFrame:
 
 
 def _make_search(kind: str):
-    """Build the per-group pandas function (self-contained closure —
-    Spark workers don't have this repo on sys.path)."""
+    """Build the per-group pandas function for search ``kind``."""
     blk, search, h, w = BLK, SEARCH, H, W
 
     def run(pdf: pd.DataFrame) -> pd.DataFrame:

@@ -24,11 +24,24 @@ feature aggregation is an ordinary groupBy afterwards.
 
 from __future__ import annotations
 
+import bz2
+import gzip
 import hashlib
+import io
+import lzma
 import os
+import re
+import sqlite3
+import struct
+import tarfile
+import wave
 from collections.abc import Iterator
+from contextlib import closing
 
+import numpy as np
 import pandas as pd
+import pyarrow as pa
+from pyarrow import ipc
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import (
     BinaryType,
@@ -39,9 +52,15 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..functions.avro import avro_ocf_bytes, read_avro_ocf
+from ..functions.gif import gif_decode_gray, gif_encode_gray
+from ..functions.jpeg import QTABLE_Q100, SIG44, jpeg_decode_gray, jpeg_encode_gray
+from ..functions.png import png_decode, png_encode
+from ..functions.protowire import _varint, decode_stream, encode_doc, fixed64_field
 from ..registry import query
 from ..session import staged_fixture
 from ..sources import load_table
+from ..sources.files import decode_files, staged_files, write_shards
 
 
 def _fake_decode(payload: bytes) -> tuple[int, int, int]:
@@ -51,6 +70,31 @@ def _fake_decode(payload: bytes) -> tuple[int, int, int]:
     """
     h = hashlib.md5(payload).digest()
     return 16 + h[0] % 48, 16 + h[1] % 48, (1, 3)[h[2] % 2]
+
+
+def _file_id(path: str) -> int:
+    """The number in a staged file's name (``img-0007.png`` -> 7)."""
+    return int(re.search(r"-(\d+)\.\w+$", path).group(1))
+
+
+def _pixel_stats(px: np.ndarray, mul: int = 1024) -> tuple[int, int, int]:
+    """(sum, max, xor of ``v * mul + flat position``) of a decoded
+    raster — the per-image stats the codec oracles pin."""
+    v = px.reshape(-1).astype(np.int64)
+    pos = np.arange(v.size, dtype=np.int64)
+    return int(v.sum()), int(v.max()), int(np.bitwise_xor.reduce(v * mul + pos))
+
+
+def _md5_bits(raw: bytes, n_hex: int) -> int:
+    """The first ``n_hex`` hex digits of md5(raw) as an int, as the
+    oracles replay it with ``('0x' || substr(md5(...), 1, n_hex))``."""
+    return int(hashlib.md5(raw).hexdigest()[:n_hex], 16)
+
+
+_IMAGE_STATS = (
+    "image_id BIGINT, width INTEGER, height INTEGER, "
+    "pixel_sum BIGINT, pixel_max BIGINT, pixel_checksum BIGINT"
+)
 
 
 _DECODE_SCHEMA = StructType(
@@ -98,20 +142,9 @@ def q_multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", F.encode(F.coalesce(F.col("text"), F.lit("")), "utf-8").cast(BinaryType()).alias("payload")
     )
 
-    # NOTE: the closure must be fully self-contained (stdlib-only refs):
-    # Spark Python workers don't have this repo on their sys.path when
-    # the driver imports us via a path hack, so referencing any
-    # module-level symbol of this package breaks unpickling there.
     def decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib as _hl
-
-        def fake_decode(payload: bytes) -> tuple[int, int, int]:
-            # mirrors module-level _fake_decode (the documented stub)
-            h = _hl.md5(payload).digest()
-            return 16 + h[0] % 48, 16 + h[1] % 48, (1, 3)[h[2] % 2]
-
         for pdf in batches:
-            metas = [fake_decode(bytes(p)) for p in pdf["payload"]]
+            metas = [_fake_decode(bytes(p)) for p in pdf["payload"]]
             yield pd.DataFrame(
                 {
                     "doc_id": pdf["doc_id"],
@@ -120,7 +153,7 @@ def q_multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
                     "width": [m[1] for m in metas],
                     "channels": [m[2] for m in metas],
                     "content_hash": [
-                        _hl.md5(bytes(p)).hexdigest()[:16] for p in pdf["payload"]
+                        hashlib.md5(bytes(p)).hexdigest()[:16] for p in pdf["payload"]
                     ],
                 }
             )
@@ -285,12 +318,6 @@ def q_multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     max_side = 32
 
     def resize_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib as _hl
-
-        def fake_decode(payload: bytes) -> tuple[int, int, int]:
-            h = _hl.md5(payload).digest()
-            return 16 + h[0] % 48, 16 + h[1] % 48, (1, 3)[h[2] % 2]
-
         def fake_resize(payload: bytes, oh: int, ow: int, c: int) -> int:
             # STUB: cv2.resize(img, (ow, oh)) would go here; the fake
             # returns the exact byte size the real one would produce.
@@ -300,7 +327,7 @@ def q_multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
             rows = []
             for doc_id, p in zip(pdf["doc_id"], pdf["payload"]):
                 b = bytes(p)
-                h, w, c = fake_decode(b)
+                h, w, c = _fake_decode(b)
                 scale_num, scale_den = max_side, max(h, w)
                 oh = max(1, h * scale_num // scale_den)
                 ow = max(1, w * scale_num // scale_den)
@@ -350,8 +377,6 @@ def q_multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     stride, max_frames = 4, 16
 
     def sample_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib as _hl
-
         for pdf in batches:
             out_id, out_idx, out_hash = [], [], []
             for doc_id, p in zip(pdf["doc_id"], pdf["payload"]):
@@ -361,7 +386,7 @@ def q_multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
                     # STUB: cap.read() + decode would land here.
                     out_id.append(int(doc_id))
                     out_idx.append(i)
-                    out_hash.append(_hl.md5(b + i.to_bytes(4, "big")).hexdigest()[:12])
+                    out_hash.append(hashlib.md5(b + i.to_bytes(4, "big")).hexdigest()[:12])
             yield pd.DataFrame(
                 {"doc_id": out_id, "frame_idx": out_idx, "frame_hash": out_hash}
             )
@@ -465,14 +490,12 @@ def q_image_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def phash_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib as _hl
-
         def thumb(payload: bytes) -> list[int]:
             # STUB decode+resize: cv2.imdecode + cv2.resize((8, 8))
             # would land here; the fake derives the 64 pixels from
             # rolling md5 digests of the payload.
             return [
-                _hl.md5(payload + str(j // 16).encode()).digest()[j % 16]
+                hashlib.md5(payload + str(j // 16).encode()).digest()[j % 16]
                 for j in range(64)
             ]
 
@@ -597,8 +620,6 @@ def q_audio_frame_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def frame_energy(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib as _hl
-
         for pdf in batches:
             out_id, out_win, out_e = [], [], []
             for doc_id, p in zip(pdf["doc_id"], pdf["payload"]):
@@ -608,7 +629,7 @@ def q_audio_frame_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
                 # derives sample bytes from rolling md5 digests.
                 energies: dict[int, int] = {}
                 for i in range(n):
-                    d = _hl.md5(b + str(i // 16).encode()).digest()
+                    d = hashlib.md5(b + str(i // 16).encode()).digest()
                     v = d[i % 16] - 128
                     energies[i // 32] = energies.get(i // 32, 0) + v * v
                 for w, e in energies.items():
@@ -661,8 +682,6 @@ def q_image_pgm_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     This is the S8 shape with the codec REAL (the cv2/JPEG variant
     stays a stub until the sandbox grows a codec lib); at scale the
     per-file kernel is the same one that wraps cv2.imdecode."""
-    import numpy as np
-
     def write_pgms(stage: str) -> None:
         yy, xx = np.mgrid[0:PGM_H, 0:PGM_W]
         for img in range(N_PGM):
@@ -672,53 +691,15 @@ def q_image_pgm_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     stage = staged_fixture(spark, "pgm", write_pgms)
 
-    def decode(batches):
-        import re
+    def decode_one(path: str, b: bytes) -> list[tuple]:
+        # real P5 parse: magic, 3 ASCII tokens, single ws, raster
+        m = re.match(rb"P5\s+(\d+)\s+(\d+)\s+(\d+)\s", b)
+        w, h, maxval = (int(g) for g in m.groups())
+        assert maxval == 255
+        px = np.frombuffer(b[m.end():], dtype=np.uint8, count=w * h)
+        return [(_file_id(path), w, h, *_pixel_stats(px))]
 
-        import numpy as np
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for path, blob in zip(pdf["path"], pdf["content"]):
-                img_id = int(re.search(r"img-(\d+)\.pgm", path).group(1))
-                b = bytes(blob)
-                # real P5 parse: magic, 3 ASCII tokens, single ws, raster
-                m = re.match(rb"P5\s+(\d+)\s+(\d+)\s+(\d+)\s", b)
-                w, h, maxval = (int(g) for g in m.groups())
-                assert maxval == 255
-                px = np.frombuffer(b[m.end():], dtype=np.uint8, count=w * h)
-                v = px.astype(np.int64)
-                pos = np.arange(w * h, dtype=np.int64)
-                rows.append(
-                    (
-                        img_id,
-                        w,
-                        h,
-                        int(v.sum()),
-                        int(v.max()),
-                        int(np.bitwise_xor.reduce(v * 1024 + pos)),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "image_id", "width", "height",
-                    "pixel_sum", "pixel_max", "pixel_checksum",
-                ],
-            )
-
-    return (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.pgm")
-        .load(stage)
-        .select("path", "content")
-        .mapInPandas(
-            decode,
-            "image_id BIGINT, width INTEGER, height INTEGER, "
-            "pixel_sum BIGINT, pixel_max BIGINT, pixel_checksum BIGINT",
-        )
-    )
+    return decode_files(staged_files(spark, stage, "*.pgm"), decode_one, _IMAGE_STATS)
 
 
 N_WAV, WAV_SAMPLES, WAV_FRAME = 16, 2048, 256
@@ -752,10 +733,6 @@ def q_audio_wav_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
     container, the 16-bit little-endian codec, and the framing are all
     under the value gate.  (`audio_frame_energy` keeps the SQL-fixture
     twin; this one exercises an actual file format end to end.)"""
-    import wave
-
-    import numpy as np
-
     def write_wavs(stage: str) -> None:
         i = np.arange(WAV_SAMPLES, dtype=np.int64)
         for f in range(N_WAV):
@@ -768,43 +745,17 @@ def q_audio_wav_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     stage = staged_fixture(spark, "wav", write_wavs)
 
-    frame_len = WAV_FRAME
+    def decode_one(path: str, b: bytes) -> list[tuple]:
+        with wave.open(io.BytesIO(b), "rb") as wf:
+            assert wf.getsampwidth() == 2 and wf.getnchannels() == 1
+            pcm = np.frombuffer(wf.readframes(wf.getnframes()), dtype="<i2").astype(np.int64)
+        e = (pcm * pcm).reshape(-1, WAV_FRAME).sum(axis=1)
+        return [(_file_id(path), len(e), int(e.sum()), int(e.max()))]
 
-    def decode(batches):
-        import io
-        import re
-        import wave as _wave
-
-        import numpy as np
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for path, blob in zip(pdf["path"], pdf["content"]):
-                audio_id = int(re.search(r"audio-(\d+)\.wav", path).group(1))
-                with _wave.open(io.BytesIO(bytes(blob)), "rb") as wf:
-                    assert wf.getsampwidth() == 2 and wf.getnchannels() == 1
-                    pcm = np.frombuffer(
-                        wf.readframes(wf.getnframes()), dtype="<i2"
-                    ).astype(np.int64)
-                e = (pcm * pcm).reshape(-1, frame_len).sum(axis=1)
-                rows.append(
-                    (audio_id, len(e), int(e.sum()), int(e.max()))
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["audio_id", "n_frames", "total_energy", "peak_frame_energy"],
-            )
-
-    return (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.wav")
-        .load(stage)
-        .select("path", "content")
-        .mapInPandas(
-            decode,
-            "audio_id BIGINT, n_frames BIGINT, total_energy BIGINT, peak_frame_energy BIGINT",
-        )
+    return decode_files(
+        staged_files(spark, stage, "*.wav"),
+        decode_one,
+        "audio_id BIGINT, n_frames BIGINT, total_energy BIGINT, peak_frame_energy BIGINT",
     )
 
 
@@ -850,8 +801,6 @@ def q_video_y4m_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     clip/segment and the same kernel demuxes them in parallel — the
     frame-diff then feeds `motion_decision_counts` exactly as the
     reference's calibration pass does."""
-    import numpy as np
-
     def write_clip(stage: str) -> None:
         yy, xx = np.mgrid[0:Y4M_H, 0:Y4M_W]
         with open(os.path.join(stage, "clip.y4m"), "wb") as fh:
@@ -863,48 +812,29 @@ def q_video_y4m_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     stage = staged_fixture(spark, "y4m", write_clip)
 
-    def demux(batches):
-        import re
+    def demux(_path: str, b: bytes) -> list[tuple]:
+        nl = b.index(b"\n")
+        header = b[:nl].decode("ascii")
+        w = int(re.search(r"W(\d+)", header).group(1))
+        h = int(re.search(r"H(\d+)", header).group(1))
+        assert "C420" in header
+        fsz = w * h + 2 * (w // 2) * (h // 2)
+        body = b[nl + 1:]
+        rows, prev, pos = [], None, 0
+        while pos < len(body):
+            assert body[pos:pos + 6] == b"FRAME\n"
+            pos += 6
+            yplane = np.frombuffer(body, np.uint8, count=w * h, offset=pos).astype(np.int64)
+            sad = int(np.abs(yplane - prev).sum()) if prev is not None else 0
+            rows.append((len(rows), int(yplane.sum()), sad))
+            prev = yplane
+            pos += fsz
+        return rows
 
-        import numpy as np
-        import pandas as pd
-
-        for pdf in batches:
-            for blob in pdf["content"]:
-                b = bytes(blob)
-                nl = b.index(b"\n")
-                header = b[:nl].decode("ascii")
-                w = int(re.search(r"W(\d+)", header).group(1))
-                h = int(re.search(r"H(\d+)", header).group(1))
-                assert "C420" in header
-                fsz = w * h + 2 * (w // 2) * (h // 2)
-                body = b[nl + 1:]
-                frames = []
-                pos = 0
-                while pos < len(body):
-                    assert body[pos:pos + 6] == b"FRAME\n"
-                    pos += 6
-                    frames.append(
-                        np.frombuffer(body, np.uint8, count=w * h, offset=pos)
-                        .astype(np.int64)
-                    )
-                    pos += fsz
-                rows = []
-                prev = None
-                for i, yplane in enumerate(frames):
-                    sad = int(np.abs(yplane - prev).sum()) if prev is not None else 0
-                    rows.append((i, int(yplane.sum()), sad))
-                    prev = yplane
-                yield pd.DataFrame(
-                    rows, columns=["frame_id", "luma_sum", "sad_vs_prev"]
-                )
-
-    return (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.y4m")
-        .load(stage)
-        .select("content")
-        .mapInPandas(demux, "frame_id BIGINT, luma_sum BIGINT, sad_vs_prev BIGINT")
+    return decode_files(
+        staged_files(spark, stage, "*.y4m"),
+        demux,
+        "frame_id BIGINT, luma_sum BIGINT, sad_vs_prev BIGINT",
     )
 
 
@@ -920,10 +850,6 @@ def _stage_dicom(spark: SparkSession) -> str:
     trailing space (the standard's padding rule — odd-length elements
     are rejected by strict readers), and the file meta group carries
     the mandatory FileMetaInformationGroupLength (0002,0000)."""
-    import struct
-
-    import numpy as np
-
     def _ds(val: int) -> bytes:
         b = b"%d" % val
         return b + b" " if len(b) % 2 else b
@@ -961,6 +887,29 @@ def _stage_dicom(spark: SparkSession) -> str:
     return staged_fixture(spark, "dcm", write_slices)
 
 
+_LONG_VRS = {b"OB", b"OW", b"OF", b"SQ", b"UT", b"UN"}
+
+
+def _dicom_elements(b: bytes) -> dict[tuple[int, int], bytes]:
+    """Walk a Part-10 file's explicit-VR little-endian element stream
+    (after the 128-byte preamble and 'DICM' magic) into
+    ``{(group, elem): value bytes}`` — a real tag/VR/length parser,
+    long-form 4-byte lengths for the OB/OW/OF/SQ/UT/UN VRs."""
+    assert b[128:132] == b"DICM"
+    pos, tags = 132, {}
+    while pos < len(b):
+        group, elem = struct.unpack_from("<HH", b, pos)
+        if b[pos + 4:pos + 6] in _LONG_VRS:
+            (ln,) = struct.unpack_from("<I", b, pos + 8)
+            start = pos + 12
+        else:
+            (ln,) = struct.unpack_from("<H", b, pos + 6)
+            start = pos + 8
+        tags[(group, elem)] = b[start:start + ln]
+        pos = start + ln
+    return tags
+
+
 @query(
     "dicom_decode_rescale",
     oracle=f"""
@@ -992,69 +941,22 @@ def q_dicom_decode_rescale(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Slope/intercept are integers here so HU stays integer-exact; a
     fractional slope would move the oracle to the DECIMAL idiom."""
-    stage = _stage_dicom(spark)
+    def decode_one(path: str, b: bytes) -> list[tuple]:
+        tags = _dicom_elements(b)
+        (h,) = struct.unpack("<H", tags[(0x0028, 0x0010)])
+        (w,) = struct.unpack("<H", tags[(0x0028, 0x0011)])
+        intercept = int(tags[(0x0028, 0x1052)].decode().strip())
+        slope = int(tags[(0x0028, 0x1053)].decode().strip())
+        raw = np.frombuffer(tags[(0x7FE0, 0x0010)], dtype="<u2", count=w * h)
+        hu = raw.astype(np.int64) * slope + intercept
+        checksum = _pixel_stats(raw)[2]
+        return [(_file_id(path), h, w, int(hu.sum()), int(hu.max()), checksum)]
 
-    def decode(batches):
-        import re
-        import struct as _st
-
-        import numpy as np
-        import pandas as pd
-
-        # NB: the element walk is duplicated in q_dicom_series_sort on
-        # purpose — mapInPandas closures must stay self-contained
-        # (workers lack this repo on sys.path under bare sessions)
-        long_vrs = {b"OB", b"OW", b"OF", b"SQ", b"UT", b"UN"}
-
-        for pdf in batches:
-            rows = []
-            for path, blob in zip(pdf["path"], pdf["content"]):
-                slice_id = int(re.search(r"slice-(\d+)\.dcm", path).group(1))
-                b = bytes(blob)
-                assert b[128:132] == b"DICM"
-                pos, tags = 132, {}
-                while pos < len(b):
-                    group, elem = _st.unpack_from("<HH", b, pos)
-                    vr = b[pos + 4:pos + 6]
-                    if vr in long_vrs:
-                        (ln,) = _st.unpack_from("<I", b, pos + 8)
-                        start = pos + 12
-                    else:
-                        (ln,) = _st.unpack_from("<H", b, pos + 6)
-                        start = pos + 8
-                    tags[(group, elem)] = (vr, b[start:start + ln])
-                    pos = start + ln
-                (h,) = _st.unpack("<H", tags[(0x0028, 0x0010)][1])
-                (w,) = _st.unpack("<H", tags[(0x0028, 0x0011)][1])
-                intercept = int(tags[(0x0028, 0x1052)][1].decode().strip())
-                slope = int(tags[(0x0028, 0x1053)][1].decode().strip())
-                raw = np.frombuffer(
-                    tags[(0x7FE0, 0x0010)][1], dtype="<u2", count=w * h
-                ).astype(np.int64)
-                hu = raw * slope + intercept
-                pos_idx = np.arange(w * h, dtype=np.int64)
-                rows.append(
-                    (
-                        slice_id, h, w,
-                        int(hu.sum()), int(hu.max()),
-                        int(np.bitwise_xor.reduce(raw * 1024 + pos_idx)),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["slice_id", "rows_", "cols_", "hu_sum", "hu_max", "raw_checksum"],
-            )
-
-    return (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.dcm")
-        .load(stage)
-        .select("path", "content")
-        .mapInPandas(
-            decode,
-            "slice_id BIGINT, rows_ INTEGER, cols_ INTEGER, "
-            "hu_sum BIGINT, hu_max BIGINT, raw_checksum BIGINT",
-        )
+    return decode_files(
+        staged_files(spark, _stage_dicom(spark), "*.dcm"),
+        decode_one,
+        "slice_id BIGINT, rows_ INTEGER, cols_ INTEGER, "
+        "hu_sum BIGINT, hu_max BIGINT, raw_checksum BIGINT",
     )
 
 
@@ -1085,45 +987,16 @@ def q_dicom_series_sort(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Downstream, ORDER BY instance_no assembles the volume; the z-axis
     neighbor joins (icm_step) then rely on this order being right."""
-    stage = _stage_dicom(spark)
+    def decode_one(path: str, b: bytes) -> list[tuple]:
+        tags = _dicom_elements(b)
+        instance = int(tags[(0x0020, 0x0013)].decode().strip())
+        raw = np.frombuffer(tags[(0x7FE0, 0x0010)], dtype="<u2").astype(np.int64)
+        return [(_file_id(path), instance, int(raw.sum()))]
 
-    def parse(batches):
-        import re
-        import struct
-
-        import numpy as np
-        import pandas as pd
-
-        long_vrs = {b"OB", b"OW", b"OF", b"SQ", b"UT", b"UN"}
-        for pdf in batches:
-            rows = []
-            for path, blob in zip(pdf["path"], pdf["content"]):
-                slice_id = int(re.search(r"slice-(\d+)\.dcm", path).group(1))
-                b = bytes(blob)
-                assert b[128:132] == b"DICM"
-                pos, tags = 132, {}
-                while pos < len(b):
-                    group, elem = struct.unpack_from("<HH", b, pos)
-                    vr = b[pos + 4:pos + 6]
-                    if vr in long_vrs:
-                        (ln,) = struct.unpack_from("<I", b, pos + 8)
-                        start = pos + 12
-                    else:
-                        (ln,) = struct.unpack_from("<H", b, pos + 6)
-                        start = pos + 8
-                    tags[(group, elem)] = b[start:start + ln]
-                    pos = start + ln
-                instance = int(tags[(0x0020, 0x0013)].decode().strip())
-                raw = np.frombuffer(tags[(0x7FE0, 0x0010)], dtype="<u2").astype(np.int64)
-                rows.append((slice_id, instance, int(raw.sum())))
-            yield pd.DataFrame(rows, columns=["slice_id", "instance_no", "raw_sum"])
-
-    return (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.dcm")
-        .load(stage)
-        .select("path", "content")
-        .mapInPandas(parse, "slice_id BIGINT, instance_no BIGINT, raw_sum BIGINT")
+    return decode_files(
+        staged_files(spark, _stage_dicom(spark), "*.dcm"),
+        decode_one,
+        "slice_id BIGINT, instance_no BIGINT, raw_sum BIGINT",
     )
 
 
@@ -1166,10 +1039,6 @@ def q_image_png_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: identical to image_pgm_decode — binaryFile splits by
     file, the kernel is batch-columnar per blob, stats aggregate
     JVM-side."""
-    import numpy as np
-
-    from ..functions.png import png_encode
-
     def write_pngs(stage: str) -> None:
         yy, xx = np.mgrid[0:PNG_H, 0:PNG_W]
         for img in range(N_PNG):
@@ -1180,50 +1049,17 @@ def q_image_png_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     stage = staged_fixture(spark, "png", write_pngs)
 
-    def decode(batches):
-        import re
+    def decode_one(path: str, b: bytes) -> list[tuple]:
+        arr, filters = png_decode(b, with_filters=True)
+        h, w = arr.shape
+        return [(_file_id(path), w, h, int(np.unique(filters).size), *_pixel_stats(arr))]
 
-        import numpy as np
-        import pandas as pd
-
-        from bigdata_assigment3_spark.functions.png import png_decode
-
-        for pdf in batches:
-            rows = []
-            for path, blob in zip(pdf["path"], pdf["content"]):
-                img_id = int(re.search(r"img-(\d+)\.png", path).group(1))
-                arr, filters = png_decode(bytes(blob), with_filters=True)
-                h, w = arr.shape
-                v = arr.reshape(-1).astype(np.int64)
-                pos = np.arange(v.size, dtype=np.int64)
-                rows.append(
-                    (
-                        img_id, w, h,
-                        int(np.unique(filters).size),
-                        int(v.sum()),
-                        int(v.max()),
-                        int(np.bitwise_xor.reduce(v * 1024 + pos)),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "image_id", "width", "height", "n_filter_types",
-                    "pixel_sum", "pixel_max", "pixel_checksum",
-                ],
-            )
-
-    return (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.png")
-        .load(stage)
-        .select("path", "content")
-        .mapInPandas(
-            decode,
-            "image_id BIGINT, width INTEGER, height INTEGER, "
-            "n_filter_types BIGINT, pixel_sum BIGINT, pixel_max BIGINT, "
-            "pixel_checksum BIGINT",
-        )
+    return decode_files(
+        staged_files(spark, stage, "*.png"),
+        decode_one,
+        "image_id BIGINT, width INTEGER, height INTEGER, "
+        "n_filter_types BIGINT, pixel_sum BIGINT, pixel_max BIGINT, "
+        "pixel_checksum BIGINT",
     )
 
 
@@ -1278,11 +1114,6 @@ def q_figure_heatmap_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     collect is the honest plan, because a figure IS a small-data sink.
     A 100 TB deployment renders one such QA panel per partition/day the
     same way."""
-    import numpy as np
-
-    from ..functions.png import png_decode, png_encode
-    from ..sources import load_table
-
     cnt = (
         load_table(spark, sf_dir, "events")
         .groupBy("event_type", F.hour("ts").cast("int").alias("h"))
@@ -1306,47 +1137,25 @@ def q_figure_heatmap_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     fp = hashlib.md5(grid.tobytes()).hexdigest()[:10]
     stage = staged_fixture(spark, f"heatmap_{fp}", write_figure, sf_dir)
 
-    cell = HEAT_CELL
+    def decode_one(_path: str, b: bytes) -> list[tuple]:
+        arr = png_decode(b)
+        n_rows, n_cols = arr.shape[0] // HEAT_CELL, arr.shape[1] // HEAT_CELL
+        blocks = arr.reshape(n_rows, HEAT_CELL, n_cols, HEAT_CELL)
+        # every cell block must be uniform — a smeared render
+        # means the figure lies about the data
+        assert (blocks == blocks[:, :1, :, :1]).all()
+        v = blocks[:, 0, :, 0].astype(np.int64)
+        h = np.arange(n_cols, dtype=np.int64)
+        return [
+            (r, n_cols, int(v[r].sum()), int(np.bitwise_xor.reduce(v[r] * 32 + h)))
+            for r in range(n_rows)
+        ]
 
-    def decode(batches):
-        import numpy as np
-        import pandas as pd
-
-        for pdf in batches:
-            for blob in pdf["content"]:
-                arr = png_decode(bytes(blob))
-                n_rows, n_cols = arr.shape[0] // cell, arr.shape[1] // cell
-                blocks = arr.reshape(n_rows, cell, n_cols, cell)
-                # every cell block must be uniform — a smeared render
-                # means the figure lies about the data
-                assert (blocks == blocks[:, :1, :, :1]).all()
-                v = blocks[:, 0, :, 0].astype(np.int64)
-                rows = []
-                for r in range(n_rows):
-                    h = np.arange(n_cols, dtype=np.int64)
-                    rows.append(
-                        (
-                            r,
-                            n_cols,
-                            int(v[r].sum()),
-                            int(np.bitwise_xor.reduce(v[r] * 32 + h)),
-                        )
-                    )
-                yield pd.DataFrame(
-                    rows,
-                    columns=["row_idx", "n_cols", "intensity_sum", "intensity_checksum"],
-                )
-
-    return (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.png")
-        .load(stage)
-        .select("content")
-        .mapInPandas(
-            decode,
-            "row_idx BIGINT, n_cols BIGINT, intensity_sum BIGINT, "
-            "intensity_checksum BIGINT",
-        )
+    return decode_files(
+        staged_files(spark, stage, "*.png"),
+        decode_one,
+        "row_idx BIGINT, n_cols BIGINT, intensity_sum BIGINT, "
+        "intensity_checksum BIGINT",
     )
 
 
@@ -1358,50 +1167,12 @@ def _jpeg_stats_df(spark: SparkSession, stage: str) -> DataFrame:
     scan over the staged *.jpg fixtures, per-blob decode via the
     hand-rolled T.81 codec, and the (sum, max, xor-checksum) pixel
     stats the value oracles pin."""
+    def decode_one(path: str, b: bytes) -> list[tuple]:
+        arr = jpeg_decode_gray(b)
+        h, w = arr.shape
+        return [(_file_id(path), w, h, *_pixel_stats(arr))]
 
-    def decode(batches):
-        import re
-
-        import numpy as np
-        import pandas as pd
-
-        from bigdata_assigment3_spark.functions.jpeg import jpeg_decode_gray
-
-        for pdf in batches:
-            rows = []
-            for path, blob in zip(pdf["path"], pdf["content"]):
-                img_id = int(re.search(r"img-(\d+)\.jpg", path).group(1))
-                arr = jpeg_decode_gray(bytes(blob))
-                h, w = arr.shape
-                v = arr.reshape(-1).astype(np.int64)
-                pos = np.arange(v.size, dtype=np.int64)
-                rows.append(
-                    (
-                        img_id, w, h,
-                        int(v.sum()),
-                        int(v.max()),
-                        int(np.bitwise_xor.reduce(v * 1024 + pos)),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "image_id", "width", "height",
-                    "pixel_sum", "pixel_max", "pixel_checksum",
-                ],
-            )
-
-    return (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.jpg")
-        .load(stage)
-        .select("path", "content")
-        .mapInPandas(
-            decode,
-            "image_id BIGINT, width INTEGER, height INTEGER, "
-            "pixel_sum BIGINT, pixel_max BIGINT, pixel_checksum BIGINT",
-        )
-    )
+    return decode_files(staged_files(spark, stage, "*.jpg"), decode_one, _IMAGE_STATS)
 
 
 @query(
@@ -1438,10 +1209,6 @@ def q_image_jpeg_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: identical to the PGM/PNG queries — binaryFile splits
     by file, per-blob batch-columnar kernel, JVM-side aggregation."""
-    import numpy as np
-
-    from ..functions.jpeg import jpeg_encode_gray
-
     def write_jpegs(stage: str) -> None:
         for img in range(N_JPG):
             by, bx = np.mgrid[0:JPG_BH, 0:JPG_BW]
@@ -1496,10 +1263,6 @@ def q_image_jpeg_q100_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: identical to the other codec queries — binaryFile
     splits by file, per-blob batch-columnar kernel, JVM aggregation."""
-    import numpy as np
-
-    from ..functions.jpeg import QTABLE_Q100, SIG44, jpeg_encode_gray
-
     def write_jpegs(stage: str) -> None:
         sx = np.tile(SIG44, JPG_BW)[None, :]
         sy = np.tile(SIG44, JPG_BH)[:, None]
@@ -1522,72 +1285,57 @@ def q_image_jpeg_q100_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 GZ_SHARDS = 8
 
 
+def _sharded_docs(spark: SparkSession, sf_dir: str, n: int, key: str = "shard") -> DataFrame:
+    """documents as (doc_id, text with NULL read as '', ``key`` =
+    doc_id % n) — the input of every corpus-shard export."""
+    return load_table(spark, sf_dir, "documents").select(
+        "doc_id",
+        F.coalesce(F.col("text"), F.lit("")).alias("text"),
+        (F.col("doc_id") % n).alias(key),
+    )
+
+
+def _hex_lines(pdf: pd.DataFrame) -> bytes:
+    """A shard's ``doc_id<TAB>hex(text)`` lines, the plain body of
+    every compressed corpus shard."""
+    return "".join(
+        f"{int(d)}\t{t.encode('utf-8').hex()}\n" for d, t in zip(pdf["doc_id"], pdf["text"])
+    ).encode("ascii")
+
+
+def _parse_hex_lines(body: bytes) -> list[tuple]:
+    """(doc_id, byte_len, h56) per ``doc_id<TAB>hex(text)`` line."""
+    rows = []
+    for line in body.decode("ascii").splitlines():
+        sid, hx = line.split("\t", 1)
+        raw = bytes.fromhex(hx)
+        rows.append((int(sid), len(raw), _md5_bits(raw, 14)))
+    return rows
+
+
 def _gz_corpus_stage(spark: SparkSession, sf_dir: str) -> str:
     """Stage (once per session+sf_dir) the documents table as
     {GZ_SHARDS} genuine gzip shards of ``doc_id<TAB>hex(text)`` lines,
     written DISTRIBUTED (one bounded applyInPandas task per shard).
     Shared by the batch ingest (compressed_text_ingest) and the
     streaming backfill (stream_corpus_backfill)."""
-    import pandas as pd
+    docs = _sharded_docs(spark, sf_dir, GZ_SHARDS)
 
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id",
-        F.coalesce(F.col("text"), F.lit("")).alias("text"),
-        (F.col("doc_id") % GZ_SHARDS).alias("shard"),
-    )
+    def write_one(shard: int, pdf: pd.DataFrame) -> tuple[str, bytes]:
+        return f"shard-{shard:03d}.gz", gzip.compress(_hex_lines(pdf))
 
-    def write_shards(stage: str) -> None:
-        def write_one(pdf: pd.DataFrame) -> pd.DataFrame:
-            import gzip as _gz
+    def write(stage: str) -> None:
+        assert len(write_shards(docs, "shard", write_one, stage)) == GZ_SHARDS
 
-            shard = int(pdf["shard"].iloc[0])
-            lines = [
-                f"{int(d)}\t{t.encode('utf-8').hex()}\n"
-                for d, t in zip(pdf["doc_id"], pdf["text"])
-            ]
-            with _gz.open(
-                os.path.join(stage, f"shard-{shard:03d}.gz"), "wb"
-            ) as fh:
-                fh.write("".join(lines).encode("ascii"))
-            return pd.DataFrame({"shard": [shard], "n": [len(pdf)]})
-
-        manifest = (
-            docs.groupBy("shard")
-            .applyInPandas(write_one, "shard BIGINT, n BIGINT")
-            .collect()
-        )
-        assert len(manifest) == GZ_SHARDS
-
-    return staged_fixture(spark, "gz", write_shards, sf_dir)
+    return staged_fixture(spark, "gz", write, sf_dir)
 
 
-def _gz_parse_kernel():
-    """Build the gunzip/parse mapInPandas kernel shared by the batch
-    ingest and the streaming backfill — ONE definition, so the
-    'streaming result equals the batch ingest' invariant can't drift.
-    Returned as a fresh closure (pickled by value) because workers
-    can't import this package by reference (see module note above)."""
-
-    def ingest(batches):
-        import gzip as _gz
-        import hashlib as _hl
-
-        import pandas as pd
-
-        for pdf in batches:
-            out_id, out_len, out_h = [], [], []
-            for blob in pdf["content"]:
-                for line in _gz.decompress(bytes(blob)).decode("ascii").splitlines():
-                    sid, hx = line.split("\t", 1)
-                    raw = bytes.fromhex(hx)
-                    out_id.append(int(sid))
-                    out_len.append(len(raw))
-                    out_h.append(int(_hl.md5(raw).hexdigest()[:14], 16))
-            yield pd.DataFrame(
-                {"doc_id": out_id, "byte_len": out_len, "h56": out_h}
-            )
-
-    return ingest
+def _gz_parse(_path: str, blob: bytes) -> list[tuple]:
+    """Gunzip and parse one corpus shard into (doc_id, byte_len, h56)
+    rows.  Shared by the batch ingest and the streaming backfill — ONE
+    definition, so the 'streaming result equals the batch ingest'
+    invariant can't drift."""
+    return _parse_hex_lines(gzip.decompress(blob))
 
 
 @query(
@@ -1619,12 +1367,8 @@ def q_compressed_text_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     one file per task is the real contract at 100 TB (WET/WARC
     shards), and the kernel is batch-columnar per blob."""
     stage = _gz_corpus_stage(spark, sf_dir)
-    parsed = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.gz")
-        .load(stage)
-        .select("content")
-        .mapInPandas(_gz_parse_kernel(), "doc_id BIGINT, byte_len BIGINT, h56 BIGINT")
+    parsed = decode_files(
+        staged_files(spark, stage, "*.gz"), _gz_parse, "doc_id BIGINT, byte_len BIGINT, h56 BIGINT"
     )
     return parsed.groupBy((F.col("doc_id") % GZ_SHARDS).alias("shard")).agg(
         F.count(F.lit(1)).cast("bigint").alias("n_docs"),
@@ -1634,6 +1378,7 @@ def q_compressed_text_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # one shard per codec (gz / bz2 / xz), written by codec_id = doc_id % 3
+_CODECS = {"gz": gzip, "bz2": bz2, "xz": lzma}
 
 
 @query(
@@ -1657,70 +1402,23 @@ def q_multiformat_text_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     recomputes them from the table, so all three decompressors are
     under the same value gate.  (Scale notes as compressed_text_ingest:
     one non-splittable file per task is the sharding contract.)"""
-    import pandas as pd
+    docs = _sharded_docs(spark, sf_dir, 3, key="codec_id")
 
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id",
-        F.coalesce(F.col("text"), F.lit("")).alias("text"),
-        (F.col("doc_id") % 3).alias("codec_id"),
-    )
+    def write_one(codec_id: int, pdf: pd.DataFrame) -> tuple[str, bytes]:
+        ext = list(_CODECS)[codec_id]
+        return f"shard-{codec_id}.{ext}", _CODECS[ext].compress(_hex_lines(pdf))
 
-    def write_shards(stage: str) -> None:
-        def write_one(pdf: pd.DataFrame) -> pd.DataFrame:
-            import bz2 as _bz2
-            import gzip as _gz
-            import lzma as _lzma
+    def write(stage: str) -> None:
+        assert len(write_shards(docs, "codec_id", write_one, stage)) == 3
 
-            codec_id = int(pdf["codec_id"].iloc[0])
-            ext, comp = [
-                ("gz", _gz.compress), ("bz2", _bz2.compress), ("xz", _lzma.compress)
-            ][codec_id]
-            payload = "".join(
-                f"{int(d)}\t{t.encode('utf-8').hex()}\n"
-                for d, t in zip(pdf["doc_id"], pdf["text"])
-            ).encode("ascii")
-            with open(os.path.join(stage, f"shard-{codec_id}.{ext}"), "wb") as fh:
-                fh.write(comp(payload))
-            return pd.DataFrame({"codec_id": [codec_id], "n": [len(pdf)]})
+    stage = staged_fixture(spark, "multifmt", write, sf_dir)
 
-        manifest = (
-            docs.groupBy("codec_id")
-            .applyInPandas(write_one, "codec_id BIGINT, n BIGINT")
-            .collect()
-        )
-        assert len(manifest) == 3
+    def decode_one(path: str, blob: bytes) -> list[tuple]:
+        ext = path.rsplit(".", 1)[1]
+        return [(ext, n, h) for _d, n, h in _parse_hex_lines(_CODECS[ext].decompress(blob))]
 
-    stage = staged_fixture(spark, "multifmt", write_shards, sf_dir)
-
-    def ingest(batches):
-        import bz2 as _bz2
-        import gzip as _gz
-        import hashlib as _hl
-        import lzma as _lzma
-
-        import pandas as pd
-
-        decomp = {"gz": _gz.decompress, "bz2": _bz2.decompress, "xz": _lzma.decompress}
-        for pdf in batches:
-            out_codec, out_len, out_h = [], [], []
-            for path, blob in zip(pdf["path"], pdf["content"]):
-                ext = path.rsplit(".", 1)[1]
-                for line in decomp[ext](bytes(blob)).decode("ascii").splitlines():
-                    _sid, hx = line.split("\t", 1)
-                    raw = bytes.fromhex(hx)
-                    out_codec.append(ext)
-                    out_len.append(len(raw))
-                    out_h.append(int(_hl.md5(raw).hexdigest()[:14], 16))
-            yield pd.DataFrame(
-                {"codec": out_codec, "byte_len": out_len, "h56": out_h}
-            )
-
-    parsed = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "shard-*")
-        .load(stage)
-        .select("path", "content")
-        .mapInPandas(ingest, "codec STRING, byte_len BIGINT, h56 BIGINT")
+    parsed = decode_files(
+        staged_files(spark, stage, "shard-*"), decode_one, "codec STRING, byte_len BIGINT, h56 BIGINT"
     )
     return parsed.groupBy("codec").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_docs"),
@@ -1756,60 +1454,34 @@ def q_arrow_ipc_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: Arrow IPC is record-batch-framed, so a 100 TB handoff
     arrives as many stream files; each is one task and the in-kernel
     read is zero-parse columnar."""
-    import pandas as pd
-
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "n_chars", (F.col("doc_id") % ARROW_SHARDS).alias("shard")
     )
 
-    def write_shards(stage: str) -> None:
-        def write_one(pdf: pd.DataFrame) -> pd.DataFrame:
-            import pyarrow as pa
-            import pyarrow.ipc as ipc
-
-            shard = int(pdf["shard"].iloc[0])
-            tbl = pa.table(
-                {
-                    "doc_id": pa.array(pdf["doc_id"], pa.int64()),
-                    "n_chars": pa.array(pdf["n_chars"], pa.int64()),
-                }
-            )
-            with ipc.new_stream(
-                os.path.join(stage, f"shard-{shard:03d}.arrow"), tbl.schema
-            ) as w:
-                w.write_table(tbl)
-            return pd.DataFrame({"shard": [shard], "n": [len(pdf)]})
-
-        manifest = (
-            docs.groupBy("shard")
-            .applyInPandas(write_one, "shard BIGINT, n BIGINT")
-            .collect()
+    def write_one(shard: int, pdf: pd.DataFrame) -> tuple[str, bytes]:
+        tbl = pa.table(
+            {
+                "doc_id": pa.array(pdf["doc_id"], pa.int64()),
+                "n_chars": pa.array(pdf["n_chars"], pa.int64()),
+            }
         )
-        assert len(manifest) == ARROW_SHARDS
+        sink = pa.BufferOutputStream()
+        with ipc.new_stream(sink, tbl.schema) as w:
+            w.write_table(tbl)
+        return f"shard-{shard:03d}.arrow", sink.getvalue().to_pybytes()
 
-    stage = staged_fixture(spark, "arrowipc", write_shards, sf_dir)
+    def write(stage: str) -> None:
+        assert len(write_shards(docs, "shard", write_one, stage)) == ARROW_SHARDS
 
-    def ingest(batches):
-        import io
+    stage = staged_fixture(spark, "arrowipc", write, sf_dir)
 
-        import pandas as pd
-        import pyarrow.ipc as ipc
+    def decode_one(_path: str, blob: bytes) -> dict:
+        with ipc.open_stream(blob) as r:
+            out = r.read_all().to_pandas()
+        return {"doc_id": out["doc_id"], "n_chars": out["n_chars"]}
 
-        for pdf in batches:
-            for blob in pdf["content"]:
-                with ipc.open_stream(io.BytesIO(bytes(blob))) as r:
-                    tbl = r.read_all()
-                out = tbl.to_pandas()
-                yield pd.DataFrame(
-                    {"doc_id": out["doc_id"], "n_chars": out["n_chars"]}
-                )
-
-    parsed = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.arrow")
-        .load(stage)
-        .select("content")
-        .mapInPandas(ingest, "doc_id BIGINT, n_chars BIGINT")
+    parsed = decode_files(
+        staged_files(spark, stage, "*.arrow"), decode_one, "doc_id BIGINT, n_chars BIGINT"
     )
     return parsed.groupBy((F.col("doc_id") % ARROW_SHARDS).alias("shard")).agg(
         F.count(F.lit(1)).cast("bigint").alias("n_docs"),
@@ -1821,6 +1493,23 @@ def q_arrow_ipc_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 SQLITE_SHARDS = 4
+_DOC_STATS = "doc_id BIGINT, byte_len BIGINT, h48 BIGINT"
+
+
+def _text_stats(text: str) -> tuple[int, int]:
+    """(byte_len, h48) of a document's UTF-8 bytes."""
+    raw = text.encode("utf-8")
+    return len(raw), _md5_bits(raw, 12)
+
+
+def _doc_shard_stats(parsed: DataFrame, n_shards: int, mul: int) -> DataFrame:
+    """Per-shard (n_docs, total_bytes, content_checksum) of decoded
+    (doc_id, byte_len, h48) rows; the checksum xors doc_id*mul + h48."""
+    return parsed.groupBy((F.col("doc_id") % n_shards).alias("shard")).agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_docs"),
+        F.sum("byte_len").cast("bigint").alias("total_bytes"),
+        F.bit_xor(F.col("doc_id") * mul + F.col("h48")).cast("bigint").alias("content_checksum"),
+    )
 
 
 @query(
@@ -1851,75 +1540,30 @@ def q_sqlite_db_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one dump file per task (edge databases are small by
     nature — the fleet is what's big); the kernel is batch-per-file
     and the aggregation stays JVM-side."""
-    import pandas as pd
+    docs = _sharded_docs(spark, sf_dir, SQLITE_SHARDS)
 
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id",
-        F.coalesce(F.col("text"), F.lit("")).alias("text"),
-        (F.col("doc_id") % SQLITE_SHARDS).alias("shard"),
-    )
-
-    def write_shards(stage: str) -> None:
-        def write_one(pdf: pd.DataFrame) -> pd.DataFrame:
-            import sqlite3
-
-            shard = int(pdf["shard"].iloc[0])
-            con = sqlite3.connect(":memory:")
+    def write_one(shard: int, pdf: pd.DataFrame) -> tuple[str, bytes]:
+        with closing(sqlite3.connect(":memory:")) as con:
             con.execute("CREATE TABLE docs (doc_id INTEGER PRIMARY KEY, text TEXT)")
             con.executemany(
                 "INSERT INTO docs VALUES (?, ?)",
                 [(int(d), t) for d, t in zip(pdf["doc_id"], pdf["text"])],
             )
             con.commit()
-            with open(os.path.join(stage, f"dump-{shard:03d}.db"), "wb") as fh:
-                fh.write(con.serialize())
-            con.close()
-            return pd.DataFrame({"shard": [shard], "n": [len(pdf)]})
+            return f"dump-{shard:03d}.db", con.serialize()
 
-        manifest = (
-            docs.groupBy("shard")
-            .applyInPandas(write_one, "shard BIGINT, n BIGINT")
-            .collect()
-        )
-        assert len(manifest) == SQLITE_SHARDS
+    def write(stage: str) -> None:
+        assert len(write_shards(docs, "shard", write_one, stage)) == SQLITE_SHARDS
 
-    stage = staged_fixture(spark, "sqlite", write_shards, sf_dir)
+    stage = staged_fixture(spark, "sqlite", write, sf_dir)
 
-    def ingest(batches):
-        import hashlib as _hl
-        import sqlite3
+    def decode_one(_path: str, blob: bytes) -> list[tuple]:
+        with closing(sqlite3.connect(":memory:")) as con:
+            con.deserialize(blob)
+            return [(d, *_text_stats(t)) for d, t in con.execute("SELECT doc_id, text FROM docs")]
 
-        import pandas as pd
-
-        for pdf in batches:
-            out_id, out_len, out_h = [], [], []
-            for blob in pdf["content"]:
-                con = sqlite3.connect(":memory:")
-                con.deserialize(bytes(blob))
-                for doc_id, text in con.execute("SELECT doc_id, text FROM docs"):
-                    raw = text.encode("utf-8")
-                    out_id.append(doc_id)
-                    out_len.append(len(raw))
-                    out_h.append(int(_hl.md5(raw).hexdigest()[:12], 16))
-                con.close()
-            yield pd.DataFrame(
-                {"doc_id": out_id, "byte_len": out_len, "h48": out_h}
-            )
-
-    parsed = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.db")
-        .load(stage)
-        .select("content")
-        .mapInPandas(ingest, "doc_id BIGINT, byte_len BIGINT, h48 BIGINT")
-    )
-    return parsed.groupBy((F.col("doc_id") % SQLITE_SHARDS).alias("shard")).agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_docs"),
-        F.sum("byte_len").cast("bigint").alias("total_bytes"),
-        F.bit_xor(F.col("doc_id") * 8191 + F.col("h48"))
-        .cast("bigint")
-        .alias("content_checksum"),
-    )
+    parsed = decode_files(staged_files(spark, stage, "*.db"), decode_one, _DOC_STATS)
+    return _doc_shard_stats(parsed, SQLITE_SHARDS, 8191)
 
 
 WDS_SHARDS, WDS_PER_SHARD = 4, 8  # 32 (image, caption) samples
@@ -1965,14 +1609,7 @@ def q_webdataset_tar_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: shard-per-task is exactly how WebDataset scales
     (sequential tar reads, no per-sample object-store round trips);
     the kernel is batch-per-shard and aggregation stays JVM-side."""
-    import numpy as np
-
-    from ..functions.jpeg import jpeg_encode_gray
-
-    def write_shards(stage: str) -> None:
-        import io
-        import tarfile
-
+    def write_tars(stage: str) -> None:
         by, bx = np.mgrid[0:JPG_BH, 0:JPG_BW]
         for sh in range(WDS_SHARDS):
             with tarfile.open(
@@ -1988,42 +1625,23 @@ def q_webdataset_tar_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
                         info.size = len(payload)
                         tf.addfile(info, io.BytesIO(payload))
 
-    stage = staged_fixture(spark, "wds", write_shards)
+    stage = staged_fixture(spark, "wds", write_tars)
 
-    def ingest(batches):
-        import hashlib as _hl
-        import io
-        import tarfile
+    def decode_one(_path: str, blob: bytes) -> list[tuple]:
+        samples: dict[str, dict[str, bytes]] = {}
+        with tarfile.open(fileobj=io.BytesIO(blob)) as tf:
+            for m in tf.getmembers():
+                stem, ext = m.name.rsplit(".", 1)
+                samples.setdefault(stem, {})[ext] = tf.extractfile(m).read()
+        rows = []
+        for stem, parts in samples.items():
+            assert set(parts) == {"jpg", "txt"}, f"incomplete sample {stem}"
+            psum = int(jpeg_decode_gray(parts["jpg"]).astype(np.int64).sum())
+            rows.append((int(stem), psum, _md5_bits(parts["txt"], 14)))
+        return rows
 
-        import numpy as np
-        import pandas as pd
-
-        from bigdata_assigment3_spark.functions.jpeg import jpeg_decode_gray
-
-        for pdf in batches:
-            out_sid, out_psum, out_cap = [], [], []
-            for blob in pdf["content"]:
-                samples: dict[str, dict[str, bytes]] = {}
-                with tarfile.open(fileobj=io.BytesIO(bytes(blob))) as tf:
-                    for m in tf.getmembers():
-                        stem, ext = m.name.rsplit(".", 1)
-                        samples.setdefault(stem, {})[ext] = tf.extractfile(m).read()
-                for stem, parts in samples.items():
-                    assert set(parts) == {"jpg", "txt"}, f"incomplete sample {stem}"
-                    arr = jpeg_decode_gray(parts["jpg"])
-                    out_sid.append(int(stem))
-                    out_psum.append(int(arr.astype(np.int64).sum()))
-                    out_cap.append(int(_hl.md5(parts["txt"]).hexdigest()[:14], 16))
-            yield pd.DataFrame(
-                {"sample_id": out_sid, "psum": out_psum, "cap56": out_cap}
-            )
-
-    parsed = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.tar")
-        .load(stage)
-        .select("content")
-        .mapInPandas(ingest, "sample_id BIGINT, psum BIGINT, cap56 BIGINT")
+    parsed = decode_files(
+        staged_files(spark, stage, "*.tar"), decode_one, "sample_id BIGINT, psum BIGINT, cap56 BIGINT"
     )
     return parsed.groupBy(
         (F.col("sample_id") / WDS_PER_SHARD).cast("bigint").alias("shard")
@@ -2065,74 +1683,26 @@ def q_avro_ocf_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: OCF is block-framed for exactly this — shard-per-task
     scans with per-block integrity checks; aggregation stays JVM-side."""
-    import pandas as pd
+    docs = _sharded_docs(spark, sf_dir, AVRO_SHARDS)
+    fields = [("doc_id", "long"), ("text", "string")]
 
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id",
-        F.coalesce(F.col("text"), F.lit("")).alias("text"),
-        (F.col("doc_id") % AVRO_SHARDS).alias("shard"),
-    )
+    def write_one(shard: int, pdf: pd.DataFrame) -> tuple[str, bytes]:
+        recs = [{"doc_id": int(d), "text": t} for d, t in zip(pdf["doc_id"], pdf["text"])]
+        sync = bytes([shard]) * 16  # deterministic per-shard marker
+        return f"part-{shard:03d}.avro", avro_ocf_bytes(recs, fields, sync)
 
-    def write_shards(stage: str) -> None:
-        def write_one(pdf: pd.DataFrame) -> pd.DataFrame:
-            from bigdata_assigment3_spark.functions.avro import avro_ocf_bytes
+    def write(stage: str) -> None:
+        assert len(write_shards(docs, "shard", write_one, stage)) == AVRO_SHARDS
 
-            shard = int(pdf["shard"].iloc[0])
-            recs = [
-                {"doc_id": int(d), "text": t}
-                for d, t in zip(pdf["doc_id"], pdf["text"])
-            ]
-            sync = bytes([shard]) * 16  # deterministic per-shard marker
-            with open(os.path.join(stage, f"part-{shard:03d}.avro"), "wb") as fh:
-                fh.write(
-                    avro_ocf_bytes(recs, [("doc_id", "long"), ("text", "string")], sync)
-                )
-            return pd.DataFrame({"shard": [shard], "n": [len(pdf)]})
+    stage = staged_fixture(spark, "avro", write, sf_dir)
 
-        manifest = (
-            docs.groupBy("shard")
-            .applyInPandas(write_one, "shard BIGINT, n BIGINT")
-            .collect()
-        )
-        assert len(manifest) == AVRO_SHARDS
+    def decode_one(_path: str, blob: bytes) -> list[tuple]:
+        got, recs = read_avro_ocf(blob)
+        assert got == fields
+        return [(rec["doc_id"], *_text_stats(rec["text"])) for rec in recs]
 
-    stage = staged_fixture(spark, "avro", write_shards, sf_dir)
-
-    def ingest(batches):
-        import hashlib as _hl
-
-        import pandas as pd
-
-        from bigdata_assigment3_spark.functions.avro import read_avro_ocf
-
-        for pdf in batches:
-            out_id, out_len, out_h = [], [], []
-            for blob in pdf["content"]:
-                fields, recs = read_avro_ocf(bytes(blob))
-                assert fields == [("doc_id", "long"), ("text", "string")]
-                for rec in recs:
-                    raw = rec["text"].encode("utf-8")
-                    out_id.append(rec["doc_id"])
-                    out_len.append(len(raw))
-                    out_h.append(int(_hl.md5(raw).hexdigest()[:12], 16))
-            yield pd.DataFrame(
-                {"doc_id": out_id, "byte_len": out_len, "h48": out_h}
-            )
-
-    parsed = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.avro")
-        .load(stage)
-        .select("content")
-        .mapInPandas(ingest, "doc_id BIGINT, byte_len BIGINT, h48 BIGINT")
-    )
-    return parsed.groupBy((F.col("doc_id") % AVRO_SHARDS).alias("shard")).agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_docs"),
-        F.sum("byte_len").cast("bigint").alias("total_bytes"),
-        F.bit_xor(F.col("doc_id") * 524287 + F.col("h48"))
-        .cast("bigint")
-        .alias("content_checksum"),
-    )
+    parsed = decode_files(staged_files(spark, stage, "*.avro"), decode_one, _DOC_STATS)
+    return _doc_shard_stats(parsed, AVRO_SHARDS, 524287)
 
 
 PB_SHARDS = 4
@@ -2167,74 +1737,26 @@ def q_protobuf_stream_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: shard-per-task delimited streams, batch-per-blob
     kernel, JVM-side aggregation — the standing Kafka-archive backfill
     plan."""
-    import pandas as pd
+    docs = _sharded_docs(spark, sf_dir, PB_SHARDS)
 
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id",
-        F.coalesce(F.col("text"), F.lit("")).alias("text"),
-        (F.col("doc_id") % PB_SHARDS).alias("shard"),
-    )
+    def write_one(shard: int, pdf: pd.DataFrame) -> tuple[str, bytes]:
+        out = bytearray()
+        for d, t in zip(pdf["doc_id"], pdf["text"]):
+            # unknown field 3 in every message: the reader must skip it
+            msg = encode_doc(int(d), t) + fixed64_field(3, int(d) * 17)
+            out += _varint(len(msg)) + msg
+        return f"part-{shard:03d}.pb", bytes(out)
 
-    def write_shards(stage: str) -> None:
-        def write_one(pdf: pd.DataFrame) -> pd.DataFrame:
-            from bigdata_assigment3_spark.functions.protowire import (
-                _varint,
-                encode_doc,
-                fixed64_field,
-            )
+    def write(stage: str) -> None:
+        assert len(write_shards(docs, "shard", write_one, stage)) == PB_SHARDS
 
-            shard = int(pdf["shard"].iloc[0])
-            out = bytearray()
-            for d, t in zip(pdf["doc_id"], pdf["text"]):
-                # unknown field 3 in every message: the reader must skip it
-                msg = encode_doc(int(d), t) + fixed64_field(3, int(d) * 17)
-                out += _varint(len(msg)) + msg
-            with open(os.path.join(stage, f"part-{shard:03d}.pb"), "wb") as fh:
-                fh.write(bytes(out))
-            return pd.DataFrame({"shard": [shard], "n": [len(pdf)]})
+    stage = staged_fixture(spark, "pb", write, sf_dir)
 
-        manifest = (
-            docs.groupBy("shard")
-            .applyInPandas(write_one, "shard BIGINT, n BIGINT")
-            .collect()
-        )
-        assert len(manifest) == PB_SHARDS
+    def decode_one(_path: str, blob: bytes) -> list[tuple]:
+        return [(d, *_text_stats(t)) for d, t in decode_stream(blob)]
 
-    stage = staged_fixture(spark, "pb", write_shards, sf_dir)
-
-    def ingest(batches):
-        import hashlib as _hl
-
-        import pandas as pd
-
-        from bigdata_assigment3_spark.functions.protowire import decode_stream
-
-        for pdf in batches:
-            out_id, out_len, out_h = [], [], []
-            for blob in pdf["content"]:
-                for doc_id, text in decode_stream(bytes(blob)):
-                    raw = text.encode("utf-8")
-                    out_id.append(doc_id)
-                    out_len.append(len(raw))
-                    out_h.append(int(_hl.md5(raw).hexdigest()[:12], 16))
-            yield pd.DataFrame(
-                {"doc_id": out_id, "byte_len": out_len, "h48": out_h}
-            )
-
-    parsed = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.pb")
-        .load(stage)
-        .select("content")
-        .mapInPandas(ingest, "doc_id BIGINT, byte_len BIGINT, h48 BIGINT")
-    )
-    return parsed.groupBy((F.col("doc_id") % PB_SHARDS).alias("shard")).agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_docs"),
-        F.sum("byte_len").cast("bigint").alias("total_bytes"),
-        F.bit_xor(F.col("doc_id") * 262139 + F.col("h48"))
-        .cast("bigint")
-        .alias("content_checksum"),
-    )
+    parsed = decode_files(staged_files(spark, stage, "*.pb"), decode_one, _DOC_STATS)
+    return _doc_shard_stats(parsed, PB_SHARDS, 262139)
 
 
 GIF_W, GIF_H, GIF_FRAMES = 48, 32, 6
@@ -2266,10 +1788,6 @@ def q_gif_frames_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     under an exact value gate.  Like video_y4m_frames, one file is one
     binaryFile row; at scale each row is a clip and frames feed the
     motion pipeline."""
-    import numpy as np
-
-    from ..functions.gif import gif_encode_gray
-
     def write_clip(stage: str) -> None:
         yy, xx = np.mgrid[0:GIF_H, 0:GIF_W]
         frames = [
@@ -2281,38 +1799,14 @@ def q_gif_frames_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     stage = staged_fixture(spark, "gif", write_clip)
 
-    def demux(batches):
-        import numpy as np
-        import pandas as pd
+    def demux(_path: str, blob: bytes) -> list[tuple]:
+        return [
+            (i, *_pixel_stats(frame, 2048))
+            for i, frame in enumerate(gif_decode_gray(blob))
+        ]
 
-        from bigdata_assigment3_spark.functions.gif import gif_decode_gray
-
-        for pdf in batches:
-            for blob in pdf["content"]:
-                rows = []
-                for i, frame in enumerate(gif_decode_gray(bytes(blob))):
-                    v = frame.reshape(-1).astype(np.int64)
-                    pos = np.arange(v.size, dtype=np.int64)
-                    rows.append(
-                        (
-                            i,
-                            int(v.sum()),
-                            int(v.max()),
-                            int(np.bitwise_xor.reduce(v * 2048 + pos)),
-                        )
-                    )
-                yield pd.DataFrame(
-                    rows,
-                    columns=["frame_id", "pixel_sum", "pixel_max", "pixel_checksum"],
-                )
-
-    return (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.gif")
-        .load(stage)
-        .select("content")
-        .mapInPandas(
-            demux,
-            "frame_id BIGINT, pixel_sum BIGINT, pixel_max BIGINT, pixel_checksum BIGINT",
-        )
+    return decode_files(
+        staged_files(spark, stage, "*.gif"),
+        demux,
+        "frame_id BIGINT, pixel_sum BIGINT, pixel_max BIGINT, pixel_checksum BIGINT",
     )

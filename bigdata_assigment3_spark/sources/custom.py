@@ -17,12 +17,8 @@ At scale this pattern is how Spark ingests from systems without a
 native connector (internal APIs, bespoke storage): one InputPartition
 per remote shard, arrow-batched rows out.
 
-The classes are defined INSIDE the registration function: Spark
-pickles the DataSource class to Python workers, and a module-level
-class would pickle by reference to this package, which workers don't
-have on sys.path under a bare driver session.  Function-local classes
-cloudpickle by value — fully self-contained (same contract as the
-repo's pandas-UDF closures).
+Spark pickles the DataSource class to the Python workers; like every
+kernel of this package it ships by value (see the package docstring).
 """
 
 from __future__ import annotations

@@ -26,11 +26,13 @@ import os as _os
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window
 
+from ..operators.multimodal import _gz_corpus_stage, _gz_parse
 from ..operators.relational import SCD2_HIST_CTES
 from ..plans.hints import bounded_broadcast
 from ..registry import query
 from ..session import conf_pin, ensure_session_conf, stage_dir, staged_fixture
 from ..sources import load_table
+from ..sources.files import decode_files
 from ..sources.tables import normalize_events_ts, parquet_schema
 
 _SESSION_GAP_S = 7200  # 2h
@@ -386,8 +388,6 @@ def q_stream_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFrame
     operator: one state row per active key in the state store,
     updated in place, no re-aggregation of history.
 
-    The processor class is defined inside the function so cloudpickle
-    ships it by value (workers don't have this package importable).
     Registered only when the runtime supports it (see
     :func:`_tws_available`); applyInPandasWithState covers the same
     ST3 surface unconditionally via ``stream_stateful_rate_limit``."""
@@ -1389,21 +1389,18 @@ def q_stream_corpus_backfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     At scale this is the standing ingest job: new WET/WARC shards
     arrive, the checkpoint remembers what's been consumed, and a
     restart resumes without re-reading or double-counting."""
-    from ..operators.multimodal import _gz_corpus_stage, _gz_parse_kernel
-
     stage = _gz_corpus_stage(spark, sf_dir)
     base = stage_dir(spark, "stream_backfill", sf_dir)
-    ingest = _gz_parse_kernel()  # SAME kernel as the batch ingest
-    parsed = (
+    files = (
         spark.readStream.format("binaryFile")
         # streaming sources require an explicit schema; binaryFile's is fixed
         .schema("path STRING, modificationTime TIMESTAMP, length BIGINT, content BINARY")
         .option("pathGlobFilter", "*.gz")
         .option("maxFilesPerTrigger", "3")
         .load(stage)
-        .select("content")
-        .mapInPandas(ingest, "doc_id BIGINT, byte_len BIGINT, h56 BIGINT")
     )
+    # SAME per-file parse as the batch ingest
+    parsed = decode_files(files, _gz_parse, "doc_id BIGINT, byte_len BIGINT, h56 BIGINT")
     q = (
         parsed.writeStream.format("parquet")
         .option("path", base + "/data")

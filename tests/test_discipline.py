@@ -339,3 +339,64 @@ def test_staging_gate_fires_on_bad_code():
     assert _staging_violations(bad, "bad.py") == [
         "bad.py:3", "bad.py:4", "bad.py:5", "bad.py:6", "bad.py:7",
     ]
+
+
+# --------------------------------------------------------------------
+# One way for worker code to reach the package: the package pickles by
+# value (see its __init__ docstring), so a Python worker never imports
+# it.  A package import inside a nested function — the shape of a UDF,
+# kernel or DataSource method — would run on the worker and fail under
+# a bare driver session; such code imports on the driver side instead.
+
+_PKG_NAME = PKG.name
+
+
+def _nested_package_imports(src: str, rel: str) -> list[str]:
+    """Package imports (absolute, or any relative import) inside a
+    function that is itself inside another function."""
+    hits = []
+
+    def visit(node: ast.AST, fn_depth: int) -> None:
+        for child in ast.iter_child_nodes(node):
+            if fn_depth >= 2 and (
+                (isinstance(child, ast.ImportFrom) and (
+                    child.level > 0 or (child.module or "").split(".")[0] == _PKG_NAME
+                ))
+                or (isinstance(child, ast.Import) and any(
+                    a.name.split(".")[0] == _PKG_NAME for a in child.names
+                ))
+            ):
+                hits.append(child.lineno)
+            is_fn = isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef, ast.Lambda))
+            visit(child, fn_depth + is_fn)
+
+    visit(ast.parse(src), 0)
+    return [f"{rel}:{n}" for n in sorted(hits)]
+
+
+def test_no_package_import_in_worker_code():
+    hits = []
+    for path in sorted(PKG.rglob("*.py")):
+        hits += _nested_package_imports(path.read_text(), str(path.relative_to(PKG)))
+    assert hits == [], hits
+
+
+def test_worker_import_gate_fires_on_bad_code():
+    bad = (
+        "from ..functions.png import png_decode\n"
+        "def q(spark):\n"
+        "    from ..session import stage_dir\n"
+        "    def kernel(batches):\n"
+        "        import numpy as np\n"
+        f"        from {_PKG_NAME}.functions.jpeg import jpeg_decode_gray\n"
+        "        from .png import png_encode\n"
+        f"        import {_PKG_NAME}.functions.gif as gif\n"
+        "        class Reader:\n"
+        "            def read(self):\n"
+        "                from ..functions import avro\n"
+        "        return png_decode\n"
+        "    return kernel\n"
+    )
+    assert _nested_package_imports(bad, "bad.py") == [
+        "bad.py:6", "bad.py:7", "bad.py:8", "bad.py:11",
+    ]
