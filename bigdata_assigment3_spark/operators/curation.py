@@ -710,18 +710,16 @@ N_BUCKETS = 10
 @session_memo
 def _ranged_lm_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     """lm_bigram_score range-partitioned on (mean_nll, doc_id), tagged
-    with its partition id, persisted.  Memoized so repeat invocations
-    reuse one range copy instead of stacking a new persist per call,
-    and never unpersisted while its session lives: a still-held
-    curriculum result reads offsets collected from THIS copy's
-    boundaries, which a re-sample could move."""
+    with its partition id.  Memoized so repeat invocations reuse one
+    range copy: a still-held curriculum result reads offsets collected
+    from THIS copy's boundaries, which a re-sample could move."""
     n_part = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    return (
+    ranged = (
         q_lm_bigram_score(spark, sf_dir)
         .repartitionByRange(n_part, "mean_nll", "doc_id")
         .withColumn("pid", F.spark_partition_id())
-        .persist()
     )
+    return lineage_checkpoint(ranged, big=True)
 
 
 @query(
@@ -762,7 +760,7 @@ def q_curriculum_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     4. NTILE's first-(n mod B)-buckets-get-one-extra formula applied
        arithmetically to the exact rank.
 
-    The input stays persisted so the offset map and the ranked pass
+    The input is a checkpoint, so the offset map and the ranked pass
     see the identical range partitioning.  At 100 TB this is the same
     shape Spark uses for a distributed sort: one range shuffle + a
     driver-side O(#partitions) cumsum.

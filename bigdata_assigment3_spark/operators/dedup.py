@@ -106,10 +106,9 @@ def _inverted_index_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     Shingles hash to integers immediately (see _DUCK_SHINGLES note).
     collect_set both dedups (doc, shingle) repeats and builds the
     posting list in ONE shuffle; the df-prune is a size() filter on
-    the array (no second shuffle, no join-back).  Persisted and
-    session-memoized: every dedup variant derives from this index, so
-    repeat queries reuse one cached copy instead of stacking a new
-    persist per call.
+    the array (no second shuffle, no join-back).  Session-memoized:
+    every dedup variant derives from this index, so repeat queries
+    read one checkpointed copy.
     """
     docs = load_table_parallel(spark, sf_dir, "documents")
     # Positions derive from each doc's own length (no fixed cap: a
@@ -128,12 +127,8 @@ def _inverted_index_df(spark: SparkSession, sf_dir: str) -> DataFrame:
         sh_all.groupBy("sh")
         .agg(F.array_sort(F.collect_set("doc_id")).alias("docs"))
         .filter(F.size("docs") <= _df_cap(docs))
-        .persist()
     )
-    built.count()  # materialize NOW: every consumer fans into several
-    # branches of one job, which would each recompute the build chain
-    # if the cache were still lazy when the job launches.
-    return built
+    return lineage_checkpoint(built, big=True)
 
 
 def _shingles_df(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -259,10 +254,10 @@ def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     Signature: mh_j = min over shingles of ((2j+3)*h56(sh) + 7j+1) mod P.
     All integer math -> bit-identical across engines.
 
-    The verified-pair table is persisted and session-memoized like
-    the inverted index: the canonicalization and the composed pipeline
-    both consume it, and it is tiny (corpus-dup-rate-sized), so
-    downstream consumers pay the LSH chain once.
+    The verified-pair table is session-memoized like the inverted
+    index: the canonicalization and the composed pipeline both consume
+    it, and it is tiny (corpus-dup-rate-sized), so downstream consumers
+    pay the LSH chain once.
     """
     sh = _shingles_df(spark, sf_dir)
     # All J signatures in per-doc array math: ONE shuffle (the
@@ -334,10 +329,8 @@ def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.coalesce("jaccard", F.lit(0.0)), 6).alias("jaccard"),
             (F.coalesce("jaccard", F.lit(0.0)) >= JACC_T).alias("is_dup"),
         )
-        .persist()
     )
-    out.count()  # materialize: consumers fan into multiple branches
-    return out
+    return lineage_checkpoint(out)
 
 
 @query(
@@ -586,12 +579,8 @@ def q_dedup_canonical_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("v").alias("doc_id"),
         F.col("lbl").cast("bigint").alias("canonical_id"),
         (F.col("lbl") == F.col("v")).alias("is_survivor"),
-    ).persist()
-    out.count()  # materialize: four consumers (canonical, cluster
-    # sizes, cascade funnel, keep-longest) each trigger their own jobs
-    # — memoizing the converged labels means the multi-round
-    # propagation runs once per (session, sf_dir), not once per query.
-    return out
+    )
+    return lineage_checkpoint(out)
 
 
 @query(
@@ -836,12 +825,11 @@ def _semantic_assign_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     {K_SEM} lowest-vec_id seeds by cosine, ties to the lowest
     seed_id).
 
-    Persisted and session-memoized like the shingle inverted index:
-    the dedup query consumes the assignment THREE
-    times (both sides of the within-cluster pair join plus the final
-    verdict join), and without a persist each consumer would re-run
-    the corpus-wide seed scoring pass — 3 full corpus scans instead
-    of 1 at 100 TB."""
+    Session-memoized like the shingle inverted index: the dedup query
+    consumes the assignment THREE times (both sides of the
+    within-cluster pair join plus the final verdict join), and without
+    a materialized copy each consumer would re-run the corpus-wide
+    seed scoring pass — 3 full corpus scans instead of 1 at 100 TB."""
     emb = load_table_parallel(spark, sf_dir, "embeddings")
     norm2 = F.expr("aggregate(transform(e, x -> x * x), 0L, (a, b) -> a + b)")
     nz = (
@@ -869,13 +857,8 @@ def _semantic_assign_df(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("rnk", F.row_number().over(w))
         .filter(F.col("rnk") == 1)
         .select("vec_id", F.col("seed_id").alias("cluster_id"), "e", "n2")
-        .persist()
     )
-    built.count()  # materialize NOW: the dedup query fans into three
-    # consumers of this relation inside one job, which would each
-    # recompute the seed-scoring chain if the cache were still lazy
-    # when the job launches (same rationale as _inverted_index_df).
-    return built
+    return lineage_checkpoint(built, big=True)
 
 
 # The one-step-Lloyd assignment CTE block, shared verbatim by the
@@ -1144,8 +1127,8 @@ BAND_CONFIGS = [(8, 1), (4, 2), (2, 4), (1, 8)]
 
 @session_memo
 def _signature_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-doc minhash signature arrays (doc_id, mh), persisted and
-    session-memoized like the inverted index: the
+    """Per-doc minhash signature arrays (doc_id, mh), session-memoized
+    like the inverted index: the
     band-tuning audit regroups this ONE table four ways, so the
     signature hash runs once per corpus, not once per configuration."""
     sig = (
@@ -1153,10 +1136,8 @@ def _signature_df(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("doc_id")
         .agg(F.collect_list("sh").alias("shs"))
         .select("doc_id", F.expr(MINHASH_SIG_EXPR).alias("mh"))
-        .persist()
     )
-    sig.count()
-    return sig
+    return lineage_checkpoint(sig, big=True)
 
 
 def _band_tuning_oracle() -> str:

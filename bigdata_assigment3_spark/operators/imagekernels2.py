@@ -8,6 +8,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window
 
+from ..functions.scalar import money_sum, unscaled
 from ..registry import query
 from ..sources import load_table
 from .motion import FRAME_PIXELS_SQL
@@ -205,12 +206,14 @@ def q_skewed_join_hot_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     (spark.sql.adaptive.skewJoin, on in session.py), so the hot key
     stops serializing one reducer.  Correctness is oracle-checked here;
     the skew split itself is plan-asserted in tests/test_plans.py with
-    thresholds scaled to the test corpus."""
+    thresholds scaled to the test corpus.  The decimal sum runs on the
+    exact unscaled longs (``functions/scalar.py``)."""
     return (
         skewed_hot_key_join(spark, sf_dir)
+        .selectExpr("grp", f"{unscaled('value', 18, 2)} AS value_u")
         .groupBy("grp")
         .agg(
             F.count(F.lit(1)).alias("n"),
-            F.round(F.sum(F.col("value").cast("decimal(18,2)")), 3).cast("double").alias("total"),
+            F.expr(f"CAST(round({money_sum('value_u', 2)}, 3) AS DOUBLE) AS total"),
         )
     )

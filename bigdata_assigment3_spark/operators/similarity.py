@@ -28,7 +28,7 @@ from pyspark.sql.window import Window
 from ..functions.hashing import md5_int56_duck, md5_int56_spark
 from ..plans.hints import bounded_broadcast
 from ..registry import query
-from ..session import session_memo
+from ..session import lineage_checkpoint, session_memo
 from ..sources import load_table, load_table_parallel
 
 TOP_K = 5
@@ -925,13 +925,13 @@ PQ_SHORTLIST = 50
 PQ_TRAIN_N = 256  # bounded codebook-training sample (driver-side)
 PQ_L = 2          # exact fixed-point Lloyd steps per subspace codebook
 
-# codebooks + the persisted codes DF are the "index build": the
+# codebooks + the checkpointed codes DF are the "index build": the
 # session memo runs training and encoding once, repeat queries reuse them
 @session_memo
 def _pq_index(spark: SparkSession, sf_dir: str):
-    """Returns (frame, cents_df, codes_df, ds) — the integer spherical
-    frame (vec_id, e, n2, xp), the deterministic codebook table, and
-    the persisted PQ codes.
+    """Returns (frame, cents_df, codes_df, ds) — the checkpointed
+    integer spherical frame (vec_id, e, n2, xp), the deterministic
+    codebook table, and the checkpointed PQ codes.
 
     Round 12/13: codebooks are DETERMINISTIC — per subspace, the PQ_K
     lowest-vec_id subvectors OF the bounded hash-selected training
@@ -941,7 +941,7 @@ def _pq_index(spark: SparkSession, sf_dir: str):
     driver-side (train-small/apply-big) and partition-invariant."""
     import numpy as np
 
-    frame = _sph_frame(spark, sf_dir)
+    frame = lineage_checkpoint(_sph_frame(spark, sf_dir), big=True)
     dim = len(frame.select("e").first()[0])
     if dim != E2_DIM:
         # the oracle's unrolled SQL encodes ds = E2_DIM // PQ_M; a
@@ -995,10 +995,8 @@ def _pq_index(spark: SparkSession, sf_dir: str):
         .withColumn("d2", d2)
         .groupBy("vec_id", "sub_id")
         .agg(F.min_by(F.col("code"), F.struct(F.col("d2"), F.col("code"))).alias("code"))
-        .persist()
     )
-    codes.count()  # materialize the index now (see dedup.py note)
-    return frame, cents, codes, ds
+    return frame, cents, lineage_checkpoint(codes, big=True), ds
 
 
 def _pq_rerank_oracle() -> str:
@@ -1110,7 +1108,7 @@ def q_ann_pq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     int64, so no float reduce order can flip a code or a shortlist.
 
     Scale shape unchanged: codebooks train on a BOUNDED sample
-    (train-small/apply-big); trained codebooks + persisted codes are
+    (train-small/apply-big); trained codebooks + checkpointed codes are
     memoized per session as the index build; ADC scoring is a
     broadcast join + one partial agg, linear in corpus x probes; the
     re-rank join touches O(probes x shortlist) full vectors regardless

@@ -11,15 +11,29 @@ that several queries consume (the shingle inverted index, the
 verified minhash pairs, the PQ codebooks, a parquet table's inferred
 schema ...) is built once per (session, builder, args) and reused by
 every later query of that session; ``args`` are the builder's
-arguments after ``spark``, all hashable.  A miss first drops the
-entries of dead sessions — their persisted blocks died with their
-SparkContext, so there is nothing to unpersist — and then builds.  An
-entry of the LIVE session is never unpersisted: a result DataFrame the
-caller still holds may read its blocks (the curriculum range copy's
-offsets were collected from ITS boundaries), and persisted frames are
-MEMORY_AND_DISK, so the block manager can still evict them under
-pressure.  A session therefore holds at most one entry per (builder,
-args).  Hits and misses are counted per builder (:func:`memo_stats`).
+arguments after ``spark``, all hashable.  Every DataFrame a builder
+returns is ``lineage_checkpoint(df, big=...)`` of its build: the
+checkpoint job runs inside the builder, so the value is materialized
+before any consumer plans against it, and its logical plan is one
+``LogicalRDD`` leaf that reports its measured size.  A warm read therefore plans and runs one scan
+instead of re-planning the whole build chain against a cache, and a
+consumer's exchange census counts only its own shuffles.  A local
+checkpoint never recomputes its blocks, so a value cannot change under
+a holder (the curriculum range copy's offsets were collected from ITS
+boundaries; a re-sampled rebuild could move them); the price is that a
+lost executor takes its blocks with it and later reads of the value
+fail.  ``SPARK_GRAFT_CHECKPOINT_DIR`` selects the reliable checkpoint,
+which survives executor loss.  Memory level: ``big=True`` marks a
+corpus-sized value (the inverted index, signatures, the semantic
+assignment, the PQ frame and codes, the range copy) and puts it on
+DISK_ONLY, so pinned blocks never compete with execution memory;
+bounded values (pair tables, component labels) keep MEMORY_AND_DISK.
+A miss first drops the entries of dead sessions — their blocks died
+with their SparkContext — and then builds.  An entry of the LIVE
+session is never dropped, since a result the caller still holds may
+read its blocks; a session therefore holds at most one entry per
+(builder, args).  Hits and misses are counted per builder
+(:func:`memo_stats`).
 
 Conf pins (:func:`conf_pin`).  Some plans need a conf other than the
 session's for one build (AQE off for a partitioning-preserving
@@ -56,10 +70,12 @@ import hashlib
 import os
 import shutil
 import threading
+import uuid
 from collections.abc import Callable, Iterator
 from typing import TypeVar
 
-from pyspark.sql import SparkSession
+from py4j.protocol import Py4JJavaError
+from pyspark.sql import DataFrame, SparkSession
 
 T = TypeVar("T")
 
@@ -152,7 +168,8 @@ def ensure_session_conf(spark: SparkSession) -> SparkSession:
 
 
 def lineage_checkpoint(df, big: bool = False):
-    """Truncate lineage for iterative loops (EM, label propagation).
+    """Truncate lineage: in iterative loops (EM, label propagation) and
+    at every session-memo boundary (see the module docstring).
 
     ``localCheckpoint`` stores blocks on executors — fast, but lost
     with a dead executor, which on a 1000-executor cluster means a
@@ -168,18 +185,78 @@ def lineage_checkpoint(df, big: bool = False):
     downstream hash aggregation into UNABLE_TO_ACQUIRE_MEMORY.
     Bounded frames (scalars, dim^2 tables, vocab-pruned postings)
     keep the default memory level.
+
+    A local checkpoint reports the bytes its blocks hold as its size,
+    as a materialized cache does.  Spark would keep the pre-execution
+    estimate of the build plan instead, which compounds through joins
+    (285.9 GiB for the 3 KB minhash pair table), so every join against
+    the checkpoint would plan a shuffle where a broadcast is right.
     """
     ckpt_dir = os.environ.get("SPARK_GRAFT_CHECKPOINT_DIR")
+    sc = df.sparkSession.sparkContext
     if ckpt_dir:
-        sc = df.sparkSession.sparkContext
         if sc.getCheckpointDir() is None:
             sc.setCheckpointDir(ckpt_dir)
         return df.checkpoint()
-    if big:
-        from pyspark.storagelevel import StorageLevel
+    from pyspark.storagelevel import StorageLevel
 
-        return df.localCheckpoint(storageLevel=StorageLevel.DISK_ONLY)
-    return df.localCheckpoint()
+    # the thread-local call site tags the checkpoint's RDD, so its entry
+    # in the storage status can be found without a handle on the RDD
+    jsc = sc._jsc
+    site = f"lineage_checkpoint {uuid.uuid4().hex}"
+    prev = sc.getLocalProperty("callSite.short")
+    jsc.setCallSite(site)
+    try:
+        ckpt = df.localCheckpoint(storageLevel=StorageLevel.DISK_ONLY if big else None)
+    finally:
+        if prev is None:
+            jsc.clearCallSite()
+        else:
+            jsc.setCallSite(prev)
+    # block updates reach the storage status through the listener bus;
+    # each was posted before the job ended, so a drained bus has them
+    # all.  A bus still busy after 10 s, or one that dropped the
+    # updates, leaves Spark's estimate in place.
+    try:
+        jsc.sc().listenerBus().waitUntilEmpty()
+    except Py4JJavaError:
+        return ckpt
+    sizes = [
+        i.memSize() + i.diskSize()
+        for i in jsc.sc().getRDDStorageInfo()
+        if i.callSite() == site
+    ]
+    return _with_size(ckpt, sizes[0]) if sizes else ckpt
+
+
+def _with_size(ckpt, size: int):
+    """``ckpt`` with its ``LogicalRDD`` leaf reporting ``size`` bytes.
+
+    py4j returns every scala ``BigInt`` as a Python int, so both
+    constructors take argument arrays filled inside the JVM: the size as
+    a Range's exact row count (a ``Some(BigInt)``), the leaf's own
+    fields from its product iterator."""
+    spark = ckpt.sparkSession
+    jvm, new_array = spark._jvm, spark.sparkContext._gateway.new_array
+    leaf = ckpt._jdf.queryExecution().analyzed()
+    old = leaf.stats()
+    stats_args = new_array(jvm.java.lang.Object, 4)
+    spark.range(size)._jdf.queryExecution().logical().stats().rowCount().toList().copyToArray(
+        stats_args
+    )
+    stats_args[1] = old.rowCount()
+    stats_args[2] = old.attributeStats()
+    stats_args[3] = old.isRuntime()
+    stats = old.getClass().getConstructors()[0].newInstance(stats_args)
+    n = leaf.productArity()
+    leaf_args = new_array(jvm.java.lang.Object, n + 3)
+    leaf.productIterator().copyToArray(leaf_args)
+    leaf_args[n] = spark._jsparkSession
+    leaf_args[n + 1] = jvm.scala.Some(stats)
+    leaf_args[n + 2] = jvm.scala.Some(leaf.constraints())
+    plan = leaf.getClass().getConstructors()[0].newInstance(leaf_args)
+    jdf = jvm.org.apache.spark.sql.classic.Dataset.ofRows(spark._jsparkSession, plan)
+    return DataFrame(jdf, spark)
 
 
 def get_spark(app_name: str = "bigdata_assigment3_spark") -> SparkSession:

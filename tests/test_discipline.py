@@ -400,3 +400,61 @@ def test_worker_import_gate_fires_on_bad_code():
     assert _nested_package_imports(bad, "bad.py") == [
         "bad.py:6", "bad.py:7", "bad.py:8", "bad.py:11",
     ]
+
+
+# --------------------------------------------------------------------
+# One shape for a memo value: a session-memo builder returns each
+# DataFrame as ``lineage_checkpoint(df, big=...)`` (see the session
+# module docstring), never as a persisted frame whose consumers would
+# re-plan its whole build lineage on every warm read.
+
+def _memo_persists(src: str, rel: str) -> list[str]:
+    """``.persist(`` / ``.cache(`` calls inside a ``@session_memo``
+    function, nested functions included."""
+    hits = []
+    for fn in ast.walk(ast.parse(src)):
+        if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            continue
+        if not any(
+            (isinstance(d, ast.Name) and d.id == "session_memo")
+            or (isinstance(d, ast.Attribute) and d.attr == "session_memo")
+            for d in fn.decorator_list
+        ):
+            continue
+        hits += [
+            node.lineno
+            for node in ast.walk(fn)
+            if isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr in ("persist", "cache")
+        ]
+    return [f"{rel}:{n}" for n in sorted(hits)]
+
+
+def test_memo_values_are_checkpoints():
+    hits = []
+    for path in sorted(PKG.rglob("*.py")):
+        hits += _memo_persists(path.read_text(), str(path.relative_to(PKG)))
+    assert hits == [], hits
+
+
+def test_memo_persist_gate_fires_on_bad_code():
+    bad = (
+        "@session_memo\n"
+        "def _index(spark, sf_dir):\n"
+        "    df = load(spark).persist()\n"
+        "    df.count()\n"
+        "    return df\n"
+        "@query('q')\n"
+        "@session.session_memo\n"
+        "def q_pairs(spark, sf_dir):\n"
+        "    def helper(d):\n"
+        "        return d.cache()\n"
+        "    return helper(load(spark)).persist(StorageLevel.DISK_ONLY)\n"
+        "def _not_memoized(spark):\n"
+        "    return load(spark).persist()\n"
+        "@session_memo\n"
+        "def _ok(spark, sf_dir):\n"
+        "    return lineage_checkpoint(load(spark), big=True)\n"
+    )
+    assert _memo_persists(bad, "bad.py") == ["bad.py:3", "bad.py:10", "bad.py:11"]

@@ -133,15 +133,11 @@ def _clear_memo_caches():
     semantic assignment, PQ index, KM/PQ training sample, ranged
     layout) reuses what was built under the DEFAULT partitioning and
     the gate silently stops testing the part most likely to be
-    order-sensitive."""
-    from pyspark.sql import DataFrame
-
+    order-sensitive.  Memo values are local checkpoints, which
+    ``unpersist`` would not free: dropping the entries is what forces
+    the rebuild."""
     from bigdata_assigment3_spark import session
 
-    for val in session._MEMO.values():
-        for part in val if isinstance(val, tuple) else (val,):
-            if isinstance(part, DataFrame):
-                part.unpersist()
     session._MEMO.clear()
 
 
@@ -158,7 +154,7 @@ def test_partition_invariance(spark, name):
     finally:
         for k, v in saved.items():
             spark.conf.set(k, v)
-        # don't leak hostile-built persisted artifacts into later tests
+        # don't leak hostile-built memo values into later tests
         _clear_memo_caches()
     assert alt == base, (
         f"{name}: result depends on partitioning "
