@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..registry import query
-from ..session import conf_pin, sf_tag, stage_dir, staged_fixture
+from ..session import isolated, sf_tag, stage_dir, staged_fixture
 from ..sources import load_table
 
 N_BUCKETS = 8
@@ -153,23 +153,25 @@ def q_runtime_bloom_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     On the tiny testdata the planner would rather broadcast the dim
     (and the application-side scan is below the 10 GiB threshold), so
-    the confs that gate the rule are scoped to THIS query plan —
-    forced while the logical plan optimizes, restored immediately
-    after — pinning exactly the plan a 100 TB fact table gets
-    naturally, where the dim outgrows the broadcast threshold and the
-    fact scan dwarfs the application-side floor.  A plan test asserts
-    ``might_contain`` is really in the optimized plan.
-
-    CLASSIC-ONLY pinning: the conf scoping relies on ``df._jdf`` (a
-    JVM-internal handle absent under Spark Connect) and on the lazy-val
-    caching of QueryExecution.optimizedPlan — an implementation detail.
-    Under Connect (no ``_jdf``) the forced optimization is skipped and
-    the query still returns correct rows, just without the pinned bloom
-    plan; ``test_runtime_bloom_query_plan_pinned`` is the canary that
-    fires if the classic caching behavior ever changes.
+    the query is built in a private session clone with the confs that
+    gate the rule forced while its logical plan optimizes, then handed
+    back the caller's values for physical planning — pinning exactly
+    the plan a 100 TB fact table gets naturally, where the dim outgrows
+    the broadcast threshold and the fact scan dwarfs the
+    application-side floor.  A plan test asserts ``might_contain`` is
+    really in the optimized plan; it relies on the lazy-val caching of
+    QueryExecution.optimizedPlan, an implementation detail, and
+    ``test_runtime_bloom_query_plan_pinned`` is the canary that fires if
+    that caching ever changes.
     """
-    lineitem = load_table(spark, sf_dir, "lineitem")
-    orders = load_table(spark, sf_dir, "orders").filter(
+    scoped = {
+        "spark.sql.autoBroadcastJoinThreshold": "-1",
+        "spark.sql.adaptive.autoBroadcastJoinThreshold": "-1",
+        "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold": "0",
+    }
+    clone = isolated(spark, scoped)
+    lineitem = load_table(clone, sf_dir, "lineitem")
+    orders = load_table(clone, sf_dir, "orders").filter(
         F.col("o_orderpriority") == "1-URGENT"
     )
     out = (
@@ -180,15 +182,13 @@ def q_runtime_bloom_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.col("l_quantity").cast("bigint")).cast("bigint").alias("sum_qty"),
         )
     )
-    if not hasattr(out, "_jdf"):  # Spark Connect: no JVM handle to pin with
-        return out
-    scoped = {
-        "spark.sql.autoBroadcastJoinThreshold": "-1",
-        "spark.sql.adaptive.autoBroadcastJoinThreshold": "-1",
-        "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold": "0",
-    }
-    with conf_pin(spark, scoped):
-        # force logical optimization NOW (lazy vals cache on the
-        # DataFrame's QueryExecution, so later actions reuse this plan)
-        out._jdf.queryExecution().optimizedPlan()
+    # force logical optimization NOW (lazy vals cache on the
+    # DataFrame's QueryExecution, so later actions reuse this plan)
+    out._jdf.queryExecution().optimizedPlan()
+    for k in scoped:
+        caller = spark.conf.get(k, None)
+        if caller is None:
+            clone.conf.unset(k)
+        else:
+            clone.conf.set(k, caller)
     return out

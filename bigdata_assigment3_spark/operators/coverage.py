@@ -139,6 +139,7 @@ def q_custom_stream_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("amount").cast("bigint").alias("total_amount"),
         F.max("tx_id").cast("bigint").alias("max_tx_id"),
     )
+    # not _run_to_memory: a default trigger drained by processAllAvailable
     q = (
         agg.writeStream.outputMode("complete")
         .format("memory")

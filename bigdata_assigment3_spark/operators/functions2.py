@@ -19,7 +19,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..registry import query
-from ..session import conf_pin
 from ..sources import load_table
 
 
@@ -693,21 +692,20 @@ def q_sql_scripting_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources import register_views
 
     register_views(spark, sf_dir)
-    with conf_pin(spark, {"spark.sql.scripting.enabled": "true"}):
-        return spark.sql(
-            """
-            BEGIN
-              DECLARE cutoff DOUBLE DEFAULT 1000.0;
-              WHILE (SELECT COUNT(*) FROM orders
-                      WHERE CAST(o_totalprice AS DOUBLE) < cutoff) * 10 <
-                    (SELECT COUNT(*) FROM orders) * 9 DO
-                SET cutoff = cutoff * 2;
-              END WHILE;
-              SELECT cutoff AS price_cutoff,
-                     CAST((SELECT COUNT(*) FROM orders
-                            WHERE CAST(o_totalprice AS DOUBLE) < cutoff) AS BIGINT)
-                       AS n_below,
-                     CAST((SELECT COUNT(*) FROM orders) AS BIGINT) AS n_total;
-            END
-            """
-        )
+    return spark.sql(
+        """
+        BEGIN
+          DECLARE cutoff DOUBLE DEFAULT 1000.0;
+          WHILE (SELECT COUNT(*) FROM orders
+                  WHERE CAST(o_totalprice AS DOUBLE) < cutoff) * 10 <
+                (SELECT COUNT(*) FROM orders) * 9 DO
+            SET cutoff = cutoff * 2;
+          END WHILE;
+          SELECT cutoff AS price_cutoff,
+                 CAST((SELECT COUNT(*) FROM orders
+                        WHERE CAST(o_totalprice AS DOUBLE) < cutoff) AS BIGINT)
+                   AS n_below,
+                 CAST((SELECT COUNT(*) FROM orders) AS BIGINT) AS n_total;
+        END
+        """
+    )

@@ -25,18 +25,18 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..registry import query
-from ..session import conf_pin, lineage_checkpoint
+from ..session import isolated, lineage_checkpoint
 from ..sources import load_table
 
-# Checkpoints that must keep their partitioning are built with AQE off
-# (round-16 finding, round-15 verdict #3): under AQE the physical plan
-# handed to ``Dataset.localCheckpoint`` is an AdaptiveSparkPlanExec
-# whose outputPartitioning reads UnknownPartitioning, so the
-# checkpointed LogicalRDD LOSES the explicit ``repartition(n, "v")``
-# and every downstream join re-exchanges both inputs (measured: 3
-# exchanges per PageRank iteration).  With AQE off for the build, the
-# HashPartitioning survives into the LogicalRDD and the iteration
-# joins need no exchange at all.
+# PageRank runs in a private session clone with AQE off, so every
+# checkpoint keeps its partitioning (round-16 finding, round-15 verdict
+# #3): under AQE the physical plan handed to ``Dataset.localCheckpoint``
+# is an AdaptiveSparkPlanExec whose outputPartitioning reads
+# UnknownPartitioning, so the checkpointed LogicalRDD LOSES the explicit
+# ``repartition(n, "v")`` and every downstream join re-exchanges both
+# inputs (measured: 3 exchanges per PageRank iteration).  With AQE off
+# for the build, the HashPartitioning survives into the LogicalRDD and
+# the iteration joins need no exchange at all.
 _AQE_OFF = {"spark.sql.adaptive.enabled": "false"}
 
 OUT_K = 5          # out-links generated per document
@@ -114,6 +114,7 @@ def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     checkpoint under SPARK_GRAFT_CHECKPOINT_DIR) so the plan stays
     O(1) deep regardless of iteration count.
     """
+    spark = isolated(spark, _AQE_OFF)
     edges = _edges(spark, sf_dir)
     deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
     verts = (
@@ -143,9 +144,8 @@ def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # with the agg planned non-adaptive its exchange is already
     # exactly (v, n_part).
     n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    with conf_pin(spark, _AQE_OFF):
-        edges_deg = lineage_checkpoint(edges_deg.repartition(n_part, "v"), big=True)
-        verts = lineage_checkpoint(verts.repartition(n_part, "v"), big=True)
+    edges_deg = lineage_checkpoint(edges_deg.repartition(n_part, "v"), big=True)
+    verts = lineage_checkpoint(verts.repartition(n_part, "v"), big=True)
     rank = verts.select("v", F.lit(PR_SCALE).cast("bigint").alias("rank_i"))
     for _ in range(PR_ITERS):
         inflow = (
@@ -160,10 +160,9 @@ def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
                 f"CAST(({15 * PR_SCALE} + 85 * COALESCE(inflow, 0)) div 100 AS BIGINT)"
             ).alias("rank_i"),
         )
-        # checkpoint non-adaptive too: rank's left-join partitioning
-        # (v, n_part) must survive into the next iteration's join
-        with conf_pin(spark, _AQE_OFF):
-            rank = lineage_checkpoint(rank)
+        # rank's left-join partitioning (v, n_part) survives into the
+        # next iteration's join
+        rank = lineage_checkpoint(rank)
     return rank.select(
         "v",
         "rank_i",

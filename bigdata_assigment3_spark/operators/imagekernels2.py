@@ -143,12 +143,18 @@ def q_salted_hot_key_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     decimal partials the two-phase result is bit-identical to the
     direct form — which is exactly what the oracle asserts.  (AQE
     skew-join handles joins; salting is the manual tool for skewed
-    AGGREGATIONS with heavy per-key state.)"""
+    AGGREGATIONS with heavy per-key state.)  Phase 1 sums the exact
+    unscaled longs (``functions/scalar.py``); phase 2 adds 16 decimal
+    partials per key."""
     ev = load_table(spark, sf_dir, "events")
-    salted = ev.withColumn("salt", (F.col("event_id") % 16).cast("int"))
+    salted = ev.selectExpr(
+        "event_type",
+        "CAST(event_id % 16 AS INT) AS salt",
+        f"{unscaled('value', 18, 2)} AS value_u",
+    )
     partial = salted.groupBy("event_type", "salt").agg(
         F.count(F.lit(1)).alias("pn"),
-        F.sum(F.col("value").cast("decimal(18,2)")).alias("pt"),
+        F.expr(money_sum("value_u", 2)).alias("pt"),
     )
     return partial.groupBy("event_type").agg(
         F.sum("pn").alias("n"),

@@ -1,5 +1,6 @@
-"""SparkSession construction, per-session config hardening, and the
-three pieces of session-global state the operators share.
+"""SparkSession construction, per-session config hardening, private
+session clones, and the two pieces of session-global state the
+operators share.
 
 Every config here is chosen for the 100 TB target, not just local
 tests: AQE re-plans shuffles at runtime (skew joins, partition
@@ -35,15 +36,21 @@ read its blocks; a session therefore holds at most one entry per
 (builder, args).  Hits and misses are counted per builder
 (:func:`memo_stats`).
 
-Conf pins (:func:`conf_pin`).  Some plans need a conf other than the
-session's for one build (AQE off for a partitioning-preserving
-checkpoint, keyspace-sized state partitions for a stream start).
-Session confs are global to the session: a query planned on any
-thread while a pin is active plans with the pinned value.  So the pin
-is scoped as tightly as the plan allows, restores every key on exit
-(unsetting the ones that were unset), and pins never overlap — a
-second pin while one is active, nested or from another thread,
-raises instead of silently interleaving save/restore pairs.
+Private clones (:func:`isolated`).  Some queries need a conf other
+than the caller's (AQE off for partitioning-preserving checkpoints,
+keyspace-sized state partitions for a stream, the runtime bloom-filter
+gates while a plan optimizes).  Session confs are global to the
+session, so such a query never writes the caller's: it runs in a clone
+of the caller's session with its confs set there.  The clone shares
+the SparkContext, the cache, the memo entries and the staging dirs,
+and starts from a copy of the caller's runtime conf and temp views, so
+a conf the caller set (a test's hostile partitioning, say) still holds
+inside it.  Any number of clones, nested or on other threads, run at
+once; a memory sink's view lives in the clone that ran the stream.
+A clone is hardened when it is made and then keeps its own confs:
+:func:`ensure_session_conf` leaves it alone.  Building one costs about
+10 ms and its first plan some 40 ms more, so only the queries that
+need another conf make one.
 
 Staging dirs (:func:`stage_dir`, :func:`staged_fixture`).  A query
 that writes files to read them back (a sink round trip, a codec
@@ -64,14 +71,13 @@ crash mid-write is rewritten instead of trusted.
 
 from __future__ import annotations
 
-import contextlib
 import functools
 import hashlib
 import os
 import shutil
 import threading
 import uuid
-from collections.abc import Callable, Iterator
+from collections.abc import Callable
 from typing import TypeVar
 
 from py4j.protocol import Py4JJavaError
@@ -100,7 +106,12 @@ _SQL_CONF = {
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
     "spark.sql.execution.arrow.pyspark.enabled": "true",
+    # BEGIN ... END scripts (sql_scripting_query); the Spark 4.1 default
+    "spark.sql.scripting.enabled": "true",
 }
+
+# set on every session :func:`isolated` returns (see the module docstring)
+_ISOLATED_KEY = "bd3.session.isolated"
 
 
 def default_parallelism() -> int:
@@ -150,7 +161,10 @@ def scratch_dir() -> str:
 
 
 def ensure_session_conf(spark: SparkSession) -> SparkSession:
-    """Apply dynamic confs to an existing session (driver-owned or ours)."""
+    """Apply dynamic confs to an existing session (driver-owned or ours).
+    A private clone was hardened when it was made and is left alone."""
+    if spark.conf.get(_ISOLATED_KEY, None):
+        return spark
     for k, v in _SQL_CONF.items():
         try:
             spark.conf.set(k, v)
@@ -294,7 +308,6 @@ _MEMO: dict[tuple, object] = {}
 # builder -> {"hits": n, "misses": n}, for the life of the process
 _MEMO_STATS: dict[str, dict[str, int]] = {}
 _STATS_LOCK = threading.Lock()
-_PIN_LOCK = threading.Lock()
 
 
 def _count(name: str, outcome: str) -> None:
@@ -335,30 +348,14 @@ def session_memo(build: Callable[..., T]) -> Callable[..., T]:
     return memoized
 
 
-@contextlib.contextmanager
-def conf_pin(spark: SparkSession, confs: dict[str, str]) -> Iterator[None]:
-    """Set ``confs`` for the body, then restore each key (or unset it if
-    it had no value).  Raises ``RuntimeError`` if another pin is active
-    (see the module docstring)."""
-    if not _PIN_LOCK.acquire(blocking=False):
-        raise RuntimeError(
-            f"conf_pin({sorted(confs)}) overlaps an active pin: session confs "
-            "are global, so pins must not nest or run concurrently"
-        )
-    try:
-        saved = {k: spark.conf.get(k, None) for k in confs}
-        try:
-            for k, v in confs.items():
-                spark.conf.set(k, v)
-            yield
-        finally:
-            for k, old in saved.items():
-                if old is None:
-                    spark.conf.unset(k)
-                else:
-                    spark.conf.set(k, old)
-    finally:
-        _PIN_LOCK.release()
+def isolated(spark: SparkSession, confs: dict[str, str]) -> SparkSession:
+    """A private clone of ``spark``, hardened, with ``confs`` set on it
+    (see the module docstring).  ``spark``'s conf is never written."""
+    clone = SparkSession(spark.sparkContext, spark._jsparkSession.cloneSession())
+    ensure_session_conf(clone)
+    for k, v in {**confs, _ISOLATED_KEY: "true"}.items():
+        clone.conf.set(k, v)
+    return clone
 
 
 def sf_tag(sf_dir: str) -> str:

@@ -20,7 +20,6 @@ horizon exactly like the reference's TTL bounds its bucket dict.
 
 from __future__ import annotations
 
-import contextlib
 import os as _os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -30,7 +29,7 @@ from ..operators.multimodal import _gz_corpus_stage, _gz_parse
 from ..operators.relational import SCD2_HIST_CTES
 from ..plans.hints import bounded_broadcast
 from ..registry import query
-from ..session import conf_pin, ensure_session_conf, stage_dir, staged_fixture
+from ..session import ensure_session_conf, isolated, stage_dir, staged_fixture
 from ..sources import load_table
 from ..sources.files import decode_files
 from ..sources.tables import normalize_events_ts, parquet_schema
@@ -64,15 +63,16 @@ def _stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # Default state-store partition count for KEYSPACE-BOUNDED stateful
-# streams (see _state_partitions).  Production sizing is state bytes /
+# streams (see _state_confs).  Production sizing is state bytes /
 # a 64-128 MB per-partition target with this as the floor; the env
 # override is the deployment knob.
 _STATE_PARTS_DEFAULT = 4
 
 
-def _state_partitions() -> int:
-    """State-store partition count for a KEYSPACE-BOUNDED stateful
-    stream, pinned as ``spark.sql.shuffle.partitions`` around its start.
+def _state_confs() -> dict[str, str]:
+    """The conf a KEYSPACE-BOUNDED stateful stream runs with: its
+    state-store partition count as ``spark.sql.shuffle.partitions``,
+    set in the private clone :func:`_run_to_memory` drains it in.
 
     A stateful streaming aggregation runs one state-store partition
     per shuffle partition, fixed at first start (AQE never coalesces
@@ -95,38 +95,42 @@ def _state_partitions() -> int:
     the floor (e.g. billion-user audiences: size to state bytes /
     ~64 MB per partition)."""
     raw = _os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTS")
-    if raw is None:
-        return _STATE_PARTS_DEFAULT
     try:
-        return int(raw)
+        n = _STATE_PARTS_DEFAULT if raw is None else int(raw)
     except ValueError as ex:
         raise ValueError(
             "SPARK_GRAFT_STREAM_STATE_PARTS must be an integer "
             f"(state-store partition count), got {raw!r}"
         ) from ex
+    return {"spark.sql.shuffle.partitions": str(n)}
 
 
 def _run_to_memory(
-    agg: DataFrame, name: str, state_partitions: int | None = None
+    df: DataFrame, name: str, mode: str = "complete", confs: dict[str, str] | None = None
 ):
-    """Drain ``agg`` into a complete-mode memory sink.  Returns the
-    (terminated) StreamingQuery so tests can assert progress metrics
-    (e.g. stateOperators.numShufflePartitions)."""
-    pin = (
-        conf_pin(agg.sparkSession, {"spark.sql.shuffle.partitions": str(state_partitions)})
-        if state_partitions is not None
-        else contextlib.nullcontext()
-    )
-    with pin:
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
+    """Drain ``df`` into a memory sink named ``name`` in output ``mode``
+    with an availableNow trigger.  With ``confs`` the stream runs in
+    ``isolated(df.sparkSession, confs)``, so the caller's conf is never
+    written.  Returns the terminated StreamingQuery (tests assert its
+    progress metrics, e.g. stateOperators.numShufflePartitions) and the
+    sink, read from the session that holds it."""
+    spark = df.sparkSession
+    if confs:
+        spark = isolated(spark, confs)
+        plan = df._jdf.logicalPlan()
+        df = DataFrame(
+            spark._jvm.org.apache.spark.sql.classic.Dataset.ofRows(spark._jsparkSession, plan),
+            spark,
         )
-        q.awaitTermination()
-    return q
+    q = (
+        df.writeStream.outputMode(mode)
+        .format("memory")
+        .queryName(name)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    return q, spark.table(name)
 
 
 def _stamp_arrival(stage: str, i: int) -> None:
@@ -170,8 +174,7 @@ def q_stream_window_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch window aggregation — which is exactly the oracle."""
     ev = _stream_events(spark, sf_dir).withWatermark("ts", "2 days")
     agg = ev.groupBy(F.window("ts", "1 day"), "user_id").agg(F.count(F.lit(1)).alias("n"))
-    _run_to_memory(agg, "stream_window_counts_sink")
-    out = spark.table("stream_window_counts_sink")
+    _, out = _run_to_memory(agg, "stream_window_counts_sink")
     return out.select(
         F.unix_timestamp(F.col("window.start")).alias("window_start"),
         "user_id",
@@ -198,8 +201,7 @@ def q_stream_type_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("double")
         .alias("total_value"),
     )
-    _run_to_memory(agg, "stream_type_totals_sink", state_partitions=_state_partitions())
-    return spark.table("stream_type_totals_sink")
+    return _run_to_memory(agg, "stream_type_totals_sink", confs=_state_confs())[1]
 
 
 @query(
@@ -327,15 +329,7 @@ def q_stream_stateful_rate_limit(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    q = (
-        out.writeStream.outputMode("update")
-        .format("memory")
-        .queryName("stream_stateful_rl_sink")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    sink = spark.table("stream_stateful_rl_sink")
+    _, sink = _run_to_memory(out, "stream_stateful_rl_sink", "update")
     # the update-mode memory sink APPENDS one cumulative row per key
     # per micro-batch; keep only each user's final (largest-total) row
     # so the result is correct even when the source splits into
@@ -436,19 +430,12 @@ def q_stream_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFrame
         outputMode="Update",
         timeMode="None",
     )
-    # transformWithState requires the RocksDB state store; scope the
-    # provider switch to this query and restore the session default.
+    # transformWithState requires the RocksDB state store
     rocksdb = "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-    with conf_pin(spark, {"spark.sql.streaming.stateStore.providerClass": rocksdb}):
-        q = (
-            out.writeStream.outputMode("update")
-            .format("memory")
-            .queryName("stream_tws_sink")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    sink = spark.table("stream_tws_sink")
+    _, sink = _run_to_memory(
+        out, "stream_tws_sink", "update",
+        confs={"spark.sql.streaming.stateStore.providerClass": rocksdb},
+    )
     # update-mode memory sink appends per-batch cumulative rows: keep
     # each user's final row (largest n_events) for multi-batch safety
     return (
@@ -533,8 +520,7 @@ def q_stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = ev.groupBy(F.session_window("ts", "2 hours"), "user_id").agg(
         F.count(F.lit(1)).alias("n_events")
     )
-    _run_to_memory(agg, "stream_session_window_sink")
-    out = spark.table("stream_session_window_sink")
+    _, out = _run_to_memory(agg, "stream_session_window_sink")
     return out.groupBy("user_id").agg(F.count(F.lit(1)).cast("bigint").alias("n_sessions"))
 
 
@@ -575,15 +561,7 @@ def q_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("p_ts") >= F.col("v_ts"))
         & (F.col("p_ts") <= F.col("v_ts") + F.expr("INTERVAL 1 HOUR")),
     )
-    q = (
-        joined.writeStream.outputMode("append")
-        .format("memory")
-        .queryName("stream_stream_join_sink")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    out = spark.table("stream_stream_join_sink")
+    _, out = _run_to_memory(joined, "stream_stream_join_sink", "append")
     return out.groupBy(F.col("v_user").alias("user_id")).agg(
         F.count(F.lit(1)).alias("n_attributed")
     )
@@ -636,20 +614,12 @@ def q_stream_dedup_exactly_once(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withWatermark("ts", "2 days")
     )
     clean = dup.dropDuplicatesWithinWatermark(["event_id"])
-    q = (
-        clean.writeStream.outputMode("append")
-        .format("memory")
-        .queryName("stream_dedup_sink")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    q, out = _run_to_memory(clean, "stream_dedup_sink", "append")
     delivered_total = sum(
         p.observedMetrics["delivered"].n
         for p in q.recentProgress
         if "delivered" in p.observedMetrics
     )
-    out = spark.table("stream_dedup_sink")
     n_unique_total = out.count()
     # distribute the observed global count across types proportionally
     # to uniques (the replay is uniform 2x, so per-type delivered =
@@ -737,22 +707,13 @@ def q_stream_late_data_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("n"))
     )
     # (window x type) state is keyspace-bounded: right-size the state
-    # store partitions (see _state_partitions)
-    with conf_pin(spark, {"spark.sql.shuffle.partitions": str(_state_partitions())}):
-        q = (
-            agg.writeStream.outputMode("append")
-            .format("memory")
-            .queryName("stream_late_drop_sink")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    # store partitions (see _state_confs)
+    q, out = _run_to_memory(agg, "stream_late_drop_sink", "append", confs=_state_confs())
     # expose the drop metric for tests without changing the schema
     dropped = sum(
         p["stateOperators"][0]["numRowsDroppedByWatermark"] for p in q.recentProgress
     )
     spark.conf.set("bd3.stream_late_drop.dropped", str(dropped))
-    out = spark.table("stream_late_drop_sink")
     return out.select(
         F.unix_timestamp(F.col("window.start")).alias("window_start"),
         "event_type",
@@ -866,8 +827,7 @@ def q_stream_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = ev.groupBy(F.window("ts", "4 days", "2 days"), "event_type").agg(
         F.count(F.lit(1)).alias("n")
     )
-    _run_to_memory(agg, "stream_sliding_window_sink", state_partitions=_state_partitions())
-    out = spark.table("stream_sliding_window_sink")
+    _, out = _run_to_memory(agg, "stream_sliding_window_sink", confs=_state_confs())
     return out.select(
         F.unix_timestamp(F.col("window.start")).alias("window_start"),
         "event_type",
@@ -917,16 +877,7 @@ def q_stream_chained_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max("n").cast("bigint").alias("max_user_events"),
         F.sum("n").cast("bigint").alias("total_events"),
     )
-    name = "stream_chained_agg_sink"
-    q = (
-        s2.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    out = spark.table(name)
+    _, out = _run_to_memory(s2, "stream_chained_agg_sink", "append")
     return out.select(
         F.unix_timestamp(F.col("window.start")).alias("window_start"),
         "n_active_users",
@@ -978,8 +929,7 @@ def q_stream_union_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n"),
         F.collect_set("user_id").alias("users"),
     )
-    _run_to_memory(agg, "stream_union_sources_sink", state_partitions=_state_partitions())
-    out = spark.table("stream_union_sources_sink")
+    _, out = _run_to_memory(agg, "stream_union_sources_sink", confs=_state_confs())
     return out.select(
         "event_type", "n", F.size("users").cast("bigint").alias("n_users")
     )
@@ -1020,8 +970,7 @@ def q_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("double")
         .alias("total_value"),
     )
-    _run_to_memory(agg, "stream_static_join_sink", state_partitions=_state_partitions())
-    return spark.table("stream_static_join_sink")
+    return _run_to_memory(agg, "stream_static_join_sink", confs=_state_confs())[1]
 
 
 @query(
@@ -1055,8 +1004,7 @@ def q_stream_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFra
         .dropDuplicatesWithinWatermark(["event_id"])
     )
     agg = deduped.groupBy("event_type").agg(F.count(F.lit(1)).alias("n"))
-    _run_to_memory(agg, "stream_dedup_ww_sink")
-    return spark.table("stream_dedup_ww_sink")
+    return _run_to_memory(agg, "stream_dedup_ww_sink")[1]
 
 
 TOPK_PER_WINDOW = 3
@@ -1099,8 +1047,7 @@ def q_stream_topk_per_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = ev.groupBy(F.window("ts", "1 day"), "event_type").agg(
         F.count(F.lit(1)).alias("n")
     )
-    _run_to_memory(agg, "stream_topk_window_sink", state_partitions=_state_partitions())
-    sink = spark.table("stream_topk_window_sink")
+    _, sink = _run_to_memory(agg, "stream_topk_window_sink", confs=_state_confs())
     w = Window.partitionBy("window").orderBy(F.col("n").desc(), F.col("event_type"))
     return (
         sink.withColumn("rk", F.row_number().over(w))
@@ -1188,15 +1135,8 @@ def q_stream_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("p_ts") <= F.col("v_ts") + F.expr("INTERVAL 1 HOUR")),
         "leftOuter",
     )
-    q = (
-        joined.writeStream.outputMode("append")
-        .format("memory")
-        .queryName("stream_stream_outer_sink")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    out = spark.table("stream_stream_outer_sink").filter(F.col("v_user") >= 0)
+    _, out = _run_to_memory(joined, "stream_stream_outer_sink", "append")
+    out = out.filter(F.col("v_user") >= 0)
     return out.groupBy(F.col("v_user").alias("user_id")).agg(
         F.count(F.lit(1)).alias("n_rows"),
         F.sum(F.col("p_user").isNull().cast("int")).cast("bigint").alias("n_unattributed"),
@@ -1252,6 +1192,8 @@ def q_stream_restart_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.col("value").cast("decimal(18,2)")).alias("tv"),
         )
 
+    # not _run_to_memory: both runs share an explicit checkpointLocation
+    # and the first is stopped mid-stream
     q1 = (
         agg_stream()
         .writeStream.outputMode("complete")
@@ -1358,8 +1300,7 @@ def q_stream_pit_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("double")
         .alias("total_price"),
     )
-    _run_to_memory(agg, "stream_pit_enrich_sink", state_partitions=_state_partitions())
-    return spark.table("stream_pit_enrich_sink")
+    return _run_to_memory(agg, "stream_pit_enrich_sink", confs=_state_confs())[1]
 
 
 @query(
@@ -1447,8 +1388,7 @@ def q_stream_bitmap_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     word, mask = bitmap_word_mask("user_id")
     words = ev.select("event_type", word.alias("word"), mask.alias("mask"))
     agg = words.groupBy("event_type", "word").agg(F.bit_or("mask").alias("bits"))
-    _run_to_memory(agg, "stream_bitmap_distinct_sink", state_partitions=_state_partitions())
-    out = spark.table("stream_bitmap_distinct_sink")
+    _, out = _run_to_memory(agg, "stream_bitmap_distinct_sink", confs=_state_confs())
     return out.groupBy("event_type").agg(
         F.sum(F.bit_count("bits")).cast("bigint").alias("n_users"),
         F.count(F.lit(1)).alias("n_words"),
@@ -1616,7 +1556,6 @@ def q_stream_bitmap_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy(F.window("ts", "1 day"), "event_type", word.alias("word"))
             .agg(F.bit_or(mask).alias("bits"))
         )
-        sink = "stream_bitmap_overlap_sink"
         # State is |windows in horizon| x |types| x |audience|/63 words
         # — keyspace-bounded, a few hundred rows here — while the
         # session default (32) runs 32 state-store partitions, i.e.
@@ -1624,15 +1563,9 @@ def q_stream_bitmap_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
         # across the three triggers for near-empty stores.  Right-size
         # to the keyspace (round-14 verdict finding #2: this is the
         # named mechanism behind the residual fixed per-batch cost).
-        with conf_pin(spark, {"spark.sql.shuffle.partitions": str(_state_partitions())}):
-            q = (
-                agg.writeStream.outputMode("update")
-                .format("memory")
-                .queryName(sink)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
+        q, sink = _run_to_memory(
+            agg, "stream_bitmap_overlap_sink", "update", confs=_state_confs()
+        )
         # observability for tests: real multi-batch run, real re-updates.
         # n_updates comes from the sink's own progress metrics (sum of
         # per-batch numOutputRows == rows in the memory table), not a
@@ -1654,7 +1587,7 @@ def q_stream_bitmap_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
         # session's stage_dir can't reclaim this session's dir, so clean
         # up eagerly (round-11 advice)
         shutil.rmtree(stage, ignore_errors=True)
-    upd = spark.table(sink).select(
+    upd = sink.select(
         F.unix_timestamp(F.col("window.start")).alias("window_start"),
         "event_type",
         "word",

@@ -458,3 +458,92 @@ def test_memo_persist_gate_fires_on_bad_code():
         "    return lineage_checkpoint(load(spark), big=True)\n"
     )
     assert _memo_persists(bad, "bad.py") == ["bad.py:3", "bad.py:10", "bad.py:11"]
+
+
+# --------------------------------------------------------------------
+# One way to run with another conf: a query that needs a conf other
+# than its caller's builds in ``session.isolated(spark, confs)`` (see
+# the session module docstring), so no query writes a session conf
+# that another caller of the same session would plan with.
+
+def _own_nodes(scope: ast.AST):
+    """The nodes of ``scope``, without those of nested scopes."""
+    stack = list(ast.iter_child_nodes(scope))
+    while stack:
+        node = stack.pop()
+        yield node
+        if not isinstance(
+            node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.Lambda, ast.ClassDef)
+        ):
+            stack.extend(ast.iter_child_nodes(node))
+
+
+def _conf_writes(src: str, rel: str) -> list[str]:
+    """``.conf.set(`` / ``.conf.unset(`` calls with a literal ``spark.``
+    key, except on a name assigned from ``isolated(...)`` in the same
+    function."""
+    hits = []
+    tree = ast.parse(src)
+    scopes = [tree] + [
+        n for n in ast.walk(tree)
+        if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef, ast.Lambda, ast.ClassDef))
+    ]
+    for scope in scopes:
+        nodes = list(_own_nodes(scope))
+        clones = {
+            t.id
+            for n in nodes
+            if isinstance(n, ast.Assign)
+            and isinstance(n.value, ast.Call)
+            and _callee(n.value) == "isolated"
+            for t in n.targets
+            if isinstance(t, ast.Name)
+        }
+        for n in nodes:
+            if not (
+                isinstance(n, ast.Call)
+                and isinstance(n.func, ast.Attribute)
+                and n.func.attr in ("set", "unset")
+                and isinstance(n.func.value, ast.Attribute)
+                and n.func.value.attr == "conf"
+                and n.args
+                and isinstance(n.args[0], ast.Constant)
+                and str(n.args[0].value).startswith("spark.")
+            ):
+                continue
+            owner = n.func.value.value
+            if not (isinstance(owner, ast.Name) and owner.id in clones):
+                hits.append(n.lineno)
+    return [f"{rel}:{n}" for n in sorted(hits)]
+
+
+def test_no_conf_writes_outside_isolated_sessions():
+    hits = []
+    for path in sorted(PKG.rglob("*.py")):
+        rel = str(path.relative_to(PKG))
+        if rel != "session.py":
+            hits += _conf_writes(path.read_text(), rel)
+    assert hits == [], hits
+
+
+def test_conf_write_gate_fires_on_bad_code():
+    bad = (
+        "spark.conf.set('spark.sql.ansi.enabled', 'false')\n"
+        "def q(spark, df):\n"
+        "    spark.conf.set('spark.sql.shuffle.partitions', '4')\n"
+        "    spark.conf.unset(\"spark.sql.adaptive.enabled\")\n"
+        "    df.sparkSession.conf.set('spark.sql.ansi.enabled', 'false')\n"
+        "    spark.conf.set('bd3.q.n_batches', '3')\n"
+        "    clone = isolated(spark, {})\n"
+        "    clone.conf.set('spark.sql.adaptive.enabled', 'false')\n"
+        "    clone.conf.unset('spark.sql.adaptive.enabled')\n"
+        "    other = spark.newSession()\n"
+        "    other.conf.set('spark.sql.adaptive.enabled', 'false')\n"
+        "    def inner():\n"
+        "        clone.conf.set('spark.sql.ansi.enabled', 'false')\n"
+        "    return lambda: spark.conf.set('spark.sql.ansi.enabled', 'false')\n"
+    )
+    assert _conf_writes(bad, "bad.py") == [
+        "bad.py:1", "bad.py:3", "bad.py:4", "bad.py:5", "bad.py:11", "bad.py:13",
+        "bad.py:14",
+    ]

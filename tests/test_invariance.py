@@ -22,6 +22,7 @@ import os
 import pytest
 
 from bigdata_assigment3_spark.registry import REGISTRY, _load_all
+from bigdata_assigment3_spark.session import isolated
 from tests.conftest import SF_ORACLE
 
 _load_all()
@@ -145,15 +146,10 @@ def _clear_memo_caches():
 def test_partition_invariance(spark, name):
     base = _rows(spark, name)
     assert base, f"{name}: empty result at oracle SF"
-    saved = {k: spark.conf.get(k) for k in _HOSTILE}
     _clear_memo_caches()
     try:
-        for k, v in _HOSTILE.items():
-            spark.conf.set(k, v)
-        alt = _rows(spark, name)
+        alt = _rows(isolated(spark, _HOSTILE), name)
     finally:
-        for k, v in saved.items():
-            spark.conf.set(k, v)
         # don't leak hostile-built memo values into later tests
         _clear_memo_caches()
     assert alt == base, (
@@ -171,7 +167,7 @@ def test_hostile_conf_actually_changes_partitioning(spark):
 
     from bigdata_assigment3_spark.sources import load_table
 
-    def mono_rows():
+    def mono_rows(spark):
         # placement-dependent on purpose: monotonically_increasing_id
         # encodes the SCAN partition index in the high bits, so its sum
         # changes whenever the split layout does
@@ -184,18 +180,12 @@ def test_hostile_conf_actually_changes_partitioning(spark):
         return sorted(tuple(str(r[c]) for c in sorted(df.columns)) for r in df.collect())
 
     base_parts = load_table(spark, SF_ORACLE, "orders").rdd.getNumPartitions()
-    base = mono_rows()
-    saved = {k: spark.conf.get(k) for k in _HOSTILE}
-    try:
-        for k, v in _HOSTILE.items():
-            spark.conf.set(k, v)
-        # the scan split layout really changed under the hostile conf...
-        n_parts = load_table(spark, SF_ORACLE, "orders").rdd.getNumPartitions()
-        assert n_parts > base_parts, (n_parts, base_parts)
-        alt = mono_rows()
-    finally:
-        for k, v in saved.items():
-            spark.conf.set(k, v)
+    base = mono_rows(spark)
+    hostile = isolated(spark, _HOSTILE)
+    # the scan split layout really changed under the hostile conf...
+    n_parts = load_table(hostile, SF_ORACLE, "orders").rdd.getNumPartitions()
+    assert n_parts > base_parts, (n_parts, base_parts)
+    alt = mono_rows(hostile)
     # ...and the placement-dependent id sum diverges, so the gate's
     # compare would flag a real violation
     assert alt != base

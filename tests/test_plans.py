@@ -132,28 +132,23 @@ def test_runtime_bloom_filter_injection(spark):
     from bigdata_assigment3_spark.sources import load_table
     from pyspark.sql import functions as F
 
-    confs = {
+    from bigdata_assigment3_spark.session import isolated
+
+    scoped = isolated(spark, {
         "spark.sql.optimizer.runtime.bloomFilter.enabled": "true",
         "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold": "1KB",
         "spark.sql.autoBroadcastJoinThreshold": "-1",
-    }
-    saved = {k: spark.conf.get(k) for k in confs}
-    try:
-        for k, v in confs.items():
-            spark.conf.set(k, v)
-        part = load_table(spark, SF_ORACLE, "part").filter(F.col("p_name").like("%red%"))
-        li = load_table(spark, SF_ORACLE, "lineitem")
-        j = (
-            li.join(part, li.l_partkey == part.p_partkey)
-            .groupBy("p_type")
-            .agg(F.count(F.lit(1)).alias("n"))
-        )
-        plan = j._jdf.queryExecution().optimizedPlan().toString()
-        assert "bloom_filter_agg" in plan, plan[:2000]
-        assert "might_contain" in plan, plan[:2000]
-    finally:
-        for k, v in saved.items():
-            spark.conf.set(k, v)
+    })
+    part = load_table(scoped, SF_ORACLE, "part").filter(F.col("p_name").like("%red%"))
+    li = load_table(scoped, SF_ORACLE, "lineitem")
+    j = (
+        li.join(part, li.l_partkey == part.p_partkey)
+        .groupBy("p_type")
+        .agg(F.count(F.lit(1)).alias("n"))
+    )
+    plan = j._jdf.queryExecution().optimizedPlan().toString()
+    assert "bloom_filter_agg" in plan, plan[:2000]
+    assert "might_contain" in plan, plan[:2000]
 
 
 def test_runtime_bloom_query_plan_pinned(spark):
@@ -173,26 +168,20 @@ def test_aqe_splits_skewed_join_partition(spark):
     plan shows SortMergeJoin(skew=true) + a skewed AQEShuffleRead.
     At 100 TB the default 256 MB threshold fires the same way."""
     from bigdata_assigment3_spark.operators.imagekernels2 import skewed_hot_key_join
+    from bigdata_assigment3_spark.session import isolated
 
-    confs = {
+    scoped = isolated(spark, {
         "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes": "2KB",
         "spark.sql.adaptive.advisoryPartitionSizeInBytes": "1KB",
         "spark.sql.adaptive.skewJoin.skewedPartitionFactor": "2",
         "spark.sql.autoBroadcastJoinThreshold": "-1",
-    }
-    saved = {k: spark.conf.get(k) for k in confs}
-    try:
-        for k, v in confs.items():
-            spark.conf.set(k, v)
-        j = skewed_hot_key_join(spark, SF_ORACLE)
-        j.collect()  # AQE finalizes the plan only on execution
-        plan = j._jdf.queryExecution().executedPlan().toString()
-        assert "isFinalPlan=true" in plan
-        assert "skew=true" in plan, plan[:2000]
-        assert "skewed" in plan, plan[:2000]
-    finally:
-        for k, v in saved.items():
-            spark.conf.set(k, v)
+    })
+    j = skewed_hot_key_join(scoped, SF_ORACLE)
+    j.collect()  # AQE finalizes the plan only on execution
+    plan = j._jdf.queryExecution().executedPlan().toString()
+    assert "isFinalPlan=true" in plan
+    assert "skew=true" in plan, plan[:2000]
+    assert "skewed" in plan, plan[:2000]
 
 
 def test_curriculum_buckets_no_global_window(spark):
@@ -548,7 +537,7 @@ def test_cbo_stats_flip_join_strategy(spark):
 
     # ensure the ANALYZEd catalog table exists (same one the query uses)
     REGISTRY["catalog_stats_cbo"].fn(spark, SF_ORACLE).collect()
-    from bigdata_assigment3_spark.session import sf_tag
+    from bigdata_assigment3_spark.session import isolated, sf_tag
 
     tag = sf_tag(SF_ORACLE)
     app = _re.sub(r"\W", "_", spark.sparkContext.applicationId)
@@ -564,29 +553,21 @@ def test_cbo_stats_flip_join_strategy(spark):
         f"ON a.o_custkey = f.o_custkey"
     )
 
-    keys = ("spark.sql.cbo.enabled", "spark.sql.autoBroadcastJoinThreshold")
-    saved = {k: spark.conf.get(k) for k in keys}
-    try:
-        # Measure the size-only (non-CBO) estimate of the filtered side
-        # as the optimizer will see it (incl. its column-pruning ratio),
-        # then pin the threshold just under it: the only thing that can
-        # move the estimate below the threshold is CBO's selectivity.
-        spark.conf.set("spark.sql.cbo.enabled", "false")
-        est_off = int(
-            str(spark.sql(sub)._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-        )
-        spark.conf.set(
-            "spark.sql.autoBroadcastJoinThreshold", str(max(1024, est_off // 2))
-        )
-        plan_off = formatted_plan(spark.sql(q))
-        assert "SortMergeJoin" in plan_off and "BroadcastHashJoin" not in plan_off, plan_off
+    # Measure the size-only (non-CBO) estimate of the filtered side
+    # as the optimizer will see it (incl. its column-pruning ratio),
+    # then pin the threshold just under it: the only thing that can
+    # move the estimate below the threshold is CBO's selectivity.
+    cbo_off = isolated(spark, {"spark.sql.cbo.enabled": "false"})
+    est_off = int(
+        str(cbo_off.sql(sub)._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    )
+    threshold = {"spark.sql.autoBroadcastJoinThreshold": str(max(1024, est_off // 2))}
+    plan_off = formatted_plan(isolated(cbo_off, threshold).sql(q))
+    assert "SortMergeJoin" in plan_off and "BroadcastHashJoin" not in plan_off, plan_off
 
-        spark.conf.set("spark.sql.cbo.enabled", "true")
-        plan_on = formatted_plan(spark.sql(q))
-        assert "BroadcastHashJoin" in plan_on, plan_on
-    finally:
-        for k, v in saved.items():
-            spark.conf.set(k, v)
+    cbo_on = isolated(spark, {"spark.sql.cbo.enabled": "true", **threshold})
+    plan_on = formatted_plan(cbo_on.sql(q))
+    assert "BroadcastHashJoin" in plan_on, plan_on
 
 
 def test_pagerank_iteration_single_exchange(spark):
@@ -596,14 +577,16 @@ def test_pagerank_iteration_single_exchange(spark):
     — under AQE the checkpointed LogicalRDD read UnknownPartitioning
     and every iteration silently re-exchanged both join inputs (4
     exchanges/iteration).  Builds one iteration the way q_pagerank
-    does and pins the exchange count and the preserved partitioning."""
+    does, in an AQE-off clone, and pins the exchange count and the
+    preserved partitioning."""
     from pyspark.sql import functions as F
 
     from bigdata_assigment3_spark.operators.graph import _AQE_OFF, PR_SCALE, _edges
     from bigdata_assigment3_spark.plans.explain import shuffle_exchanges
-    from bigdata_assigment3_spark.session import conf_pin, lineage_checkpoint
+    from bigdata_assigment3_spark.session import isolated, lineage_checkpoint
 
-    edges = _edges(spark, SF_ORACLE)
+    aqe_off = isolated(spark, _AQE_OFF)
+    edges = _edges(aqe_off, SF_ORACLE)
     deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
     verts = (
         edges.select(F.col("src").alias("v"))
@@ -611,10 +594,9 @@ def test_pagerank_iteration_single_exchange(spark):
         .distinct()
     )
     edges_deg = edges.join(deg, "src").select(F.col("src").alias("v"), "dst", "deg")
-    n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    with conf_pin(spark, _AQE_OFF):
-        edges_deg = lineage_checkpoint(edges_deg.repartition(n_part, "v"), big=True)
-        verts = lineage_checkpoint(verts.repartition(n_part, "v"), big=True)
+    n_part = int(aqe_off.conf.get("spark.sql.shuffle.partitions"))
+    edges_deg = lineage_checkpoint(edges_deg.repartition(n_part, "v"), big=True)
+    verts = lineage_checkpoint(verts.repartition(n_part, "v"), big=True)
     rank = verts.select("v", F.lit(PR_SCALE).cast("bigint").alias("rank_i"))
     inflow = (
         edges_deg.join(rank, "v")
@@ -627,5 +609,5 @@ def test_pagerank_iteration_single_exchange(spark):
     # the checkpointed scans carry the explicit hash partitioning
     plan = formatted_plan(rank1)
     assert "UnknownPartitioning" not in plan, plan
-    # conf restored by the context manager
+    # the clone never wrote the caller's conf
     assert spark.conf.get("spark.sql.adaptive.enabled") == "true"

@@ -1799,8 +1799,9 @@ def test_stream_bitmap_overlap_really_updates(spark):
     n_updates = int(spark.conf.get("bd3.stream_bitmap_overlap.n_updates"))
     assert n_batches == 3, n_batches
     # folded-state key count, recomputed from the sink the query left
+    # in the session that ran the stream
     n_keys = (
-        spark.table("stream_bitmap_overlap_sink")
+        df.sparkSession.table("stream_bitmap_overlap_sink")
         .select("window", "event_type", "word")
         .distinct()
         .count()
@@ -2067,7 +2068,7 @@ def test_stream_state_partitions_right_sized(spark):
     """Round-15 optimization pin: keyspace-bounded stateful streams run
     with right-sized state-store partitions (every partition costs a
     provider init + delta write + fsync per micro-batch regardless of
-    rows), the session conf is restored afterwards, and user/id-scaled
+    rows), the caller's conf is never written, and user/id-scaled
     streams keep the session default so their state parallelism still
     scales with the cluster."""
     from bigdata_assigment3_spark.streaming.queries import (
@@ -2078,17 +2079,17 @@ def test_stream_state_partitions_right_sized(spark):
 
     before = spark.conf.get("spark.sql.shuffle.partitions")
     ev = _stream_events(spark, SF_SMOKE)
-    q = _run_to_memory(
+    q, _ = _run_to_memory(
         ev.groupBy("event_type").agg(F.count(F.lit(1)).alias("n")),
         "state_parts_probe_sink",
-        state_partitions=_STATE_PARTS_DEFAULT,
+        confs={"spark.sql.shuffle.partitions": str(_STATE_PARTS_DEFAULT)},
     )
     ops = q.lastProgress["stateOperators"]
     assert ops and ops[0]["numShufflePartitions"] == _STATE_PARTS_DEFAULT, ops
-    # the pin must not leak into the session
+    # the clone's conf must not leak into the caller's session
     assert spark.conf.get("spark.sql.shuffle.partitions") == before
     # default (user-scaled) path: session-sized state partitions
-    q2 = _run_to_memory(
+    q2, _ = _run_to_memory(
         ev.groupBy("user_id").agg(F.count(F.lit(1)).alias("n")),
         "state_parts_probe2_sink",
     )

@@ -1,27 +1,30 @@
-"""The three pieces of session-global state in ``session.py``: the
+"""What ``session.py`` shares between queries: the
 per-session memo behind every index-like intermediate (and its hit/miss
-counts), the conf pin behind every scoped conf override, and the
-staging dirs behind every query that writes files to read back."""
+counts), the private session clone behind every query that needs
+another conf, and the staging dirs behind every query that writes files
+to read back."""
 
 from __future__ import annotations
 
 import os
+import re
 import sys
 import threading
+from concurrent.futures import ThreadPoolExecutor
 from types import SimpleNamespace
 
 import pytest
 
 from bigdata_assigment3_spark import session
 from bigdata_assigment3_spark.session import (
-    conf_pin,
+    isolated,
     session_memo,
     stage_dir,
     staged_fixture,
 )
 
 SET_KEY = "spark.sql.shuffle.partitions"  # always set on the test session
-UNSET_KEY = "bd3.test.conf_pin_probe"  # never set outside these tests
+UNSET_KEY = "bd3.test.isolated_probe"  # never set outside these tests
 
 
 def _fake_spark(app_id: str):
@@ -160,53 +163,71 @@ def _snapshot(spark):
     return spark.conf.get(SET_KEY), spark.conf.get(UNSET_KEY, None)
 
 
-def test_conf_pin_restores_set_and_unset_keys(spark):
+def test_isolated_never_writes_the_caller_conf(spark):
     before = _snapshot(spark)
     assert before[1] is None
-    with conf_pin(spark, {SET_KEY: "3", UNSET_KEY: "x"}):
-        assert _snapshot(spark) == ("3", "x")
+    clone = isolated(spark, {SET_KEY: "3", UNSET_KEY: "x"})
+    assert _snapshot(clone) == ("3", "x")
     assert _snapshot(spark) == before
-    with pytest.raises(ValueError, match="boom"):
-        with conf_pin(spark, {SET_KEY: "3", UNSET_KEY: "x"}):
-            assert _snapshot(spark) == ("3", "x")
-            raise ValueError("boom")
-    assert _snapshot(spark) == before
+    assert spark.conf.get(session._ISOLATED_KEY, None) is None
 
 
-def test_nested_conf_pin_raises(spark):
-    before = _snapshot(spark)
-    with conf_pin(spark, {SET_KEY: "3"}):
-        with pytest.raises(RuntimeError, match="overlaps an active pin"):
-            with conf_pin(spark, {UNSET_KEY: "x"}):
-                pass
-        assert _snapshot(spark) == ("3", None)
-    assert _snapshot(spark) == before
-    # the failed pin did not leave the lock held
-    with conf_pin(spark, {UNSET_KEY: "x"}):
-        pass
-    assert _snapshot(spark) == before
+def test_isolated_conf_survives_hardening(spark):
+    """``load_table`` hardens the session it reads with; a clone's own
+    value of a hardened key (AQE, for pagerank) must survive it."""
+    from bigdata_assigment3_spark.sources import load_table
+    from tests.conftest import SF_SMOKE
+
+    aqe = "spark.sql.adaptive.enabled"
+    clone = isolated(spark, {aqe: "false"})
+    load_table(clone, SF_SMOKE, "region")
+    assert clone.conf.get(aqe) == "false"
+    assert isolated(clone, {}).conf.get(aqe) == "false"
+    assert spark.conf.get(aqe) == "true"
 
 
-def test_conf_pin_from_second_thread_raises(spark):
-    before = _snapshot(spark)
-    entered, release = threading.Event(), threading.Event()
-
-    def hold():
-        with conf_pin(spark, {SET_KEY: "3"}):
-            entered.set()
-            release.wait(60)
-
-    holder = threading.Thread(target=hold)
-    holder.start()
+def test_isolated_inherits_runtime_conf_and_temp_views(spark):
+    spark.conf.set(UNSET_KEY, "caller")
+    spark.range(3).createOrReplaceTempView("isolated_probe_view")
     try:
-        assert entered.wait(60)
-        with pytest.raises(RuntimeError, match="overlaps an active pin"):
-            with conf_pin(spark, {UNSET_KEY: "x"}):
-                pass
-        assert _snapshot(spark) == ("3", None)
+        clone = isolated(spark, {SET_KEY: "3"})
     finally:
-        release.set()
-        holder.join()
+        spark.conf.unset(UNSET_KEY)
+    assert _snapshot(clone) == ("3", "caller")
+    assert clone.table("isolated_probe_view").count() == 3
+    assert clone.sparkContext is spark.sparkContext
+
+
+def test_nested_isolated_sessions_see_their_own_conf(spark):
+    before = _snapshot(spark)
+    outer = isolated(spark, {SET_KEY: "3"})
+    inner = isolated(outer, {UNSET_KEY: "x"})
+    assert _snapshot(inner) == ("3", "x")
+    assert _snapshot(outer) == ("3", None)
+    assert _snapshot(spark) == before
+
+
+def test_concurrent_isolated_sessions_see_their_own_conf(spark):
+    before = _snapshot(spark)
+    n_threads = 2 * (os.cpu_count() or 4)
+    barrier = threading.Barrier(n_threads)
+
+    def run(i: int):
+        clone = isolated(spark, {SET_KEY: str(i + 2), UNSET_KEY: f"t{i}"})
+        barrier.wait(60)
+        # each thread plans while every other clone exists
+        plan = clone.range(100).repartition("id")._jdf.queryExecution().sparkPlan()
+        n = re.search(r"hashpartitioning\(\S+, (\d+)\)", plan.toString())[1]
+        return _snapshot(clone), int(n)
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        with ThreadPoolExecutor(n_threads) as pool:
+            got = list(pool.map(run, range(n_threads), timeout=300))
+    finally:
+        sys.setswitchinterval(interval)
+    assert got == [((str(i + 2), f"t{i}"), i + 2) for i in range(n_threads)]
     assert _snapshot(spark) == before
 
 
