@@ -1,18 +1,37 @@
 #!/usr/bin/env python
 """Benchmark runner: headline queries at $SPARK_GRAFT_SF_DIR on local[$SPARK_GRAFT_CPUS].
 
-Prints ONE JSON line:
-    {"metric": "...", "value": N, "unit": "sec", "queries": {"q": sec, ...}, "sf": ...}
-
-The printed line is kept COMPACT (<1.5 KB — the driver captures only a
-2 KB output tail): "queries" holds the slowest entries only, plus the
-worst regression vs the previous round.  The FULL per-query record
-(all timings, min-of-3 noise floors, complete delta map) is written to
-BENCH_LOCAL.json next to this script and committed each round.
-
 Each query is forced end-to-end with the noop sink (full execution, no
-driver collect).  Wall time includes planning; the session build is
-excluded (it's amortized in any real deployment).
+driver collect) N_RUNS times after a shared warm-up.  Wall time includes
+building and planning; the session build is excluded (it's amortized in
+any real deployment).
+
+``python bench.py`` prints ONE JSON line, kept under 1500 bytes (the
+driver captures only a ~2 KB output tail):
+    metric, value (sum of per-query medians, sec), unit, sf, n_queries,
+    n_runs, value_min (sum of per-query mins: the noise floor),
+    spread_sec (value - value_min), shared_setup_sec (one-time build of
+    the session's shared dedup artifacts), host_steal_frac, queries (the
+    medians of the slowest queries, slowest first) and full_results.
+The full record is written to BENCH_LOCAL.json next to this script:
+the same totals, every query's median (queries) and min (queries_min),
+and queries_split, the job split of each query's fastest sample read
+from Spark's status store (no extra execution): jobs, stages, tasks,
+task_s, shuffle_read_mb, shuffle_write_mb, spill_mb, input_mb,
+input_rows, gc_s, driver_gap_s (wall minus the union of the sample's job
+intervals: building, planning and driver work between jobs) and util
+(task_s / (wall x cores)).
+
+``python bench.py --floors DIR QUERY ...`` times the named queries at DIR
+(a scaled fixture from tests/make_scale_fixture.py) the same way and
+prints one JSON line: metric, dir, unit, n_runs, value_min, queries_min,
+queries_times, host_steal_frac.
+
+host_steal_frac is the share of all CPU time during the timed passes that
+the hypervisor gave this VM's vCPUs to other guests (the steal field of
+the first line of /proc/stat).  It labels how loaded the host was; the
+script does not adjust or re-time anything by it.  Compare runs only
+with runs taken at a similar steal.
 """
 
 from __future__ import annotations
@@ -26,6 +45,8 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from bigdata_assigment3_spark import get_spark, query_fns  # noqa: E402
+from perfbench.stats import covered  # noqa: E402
+from perfbench.tracing import SparkCounters  # noqa: E402
 
 # Headline set: the flagship + the heaviest representatives of each
 # operator family (join-heavy, window-heavy, agg-heavy).
@@ -144,142 +165,9 @@ HEADLINE = [
     "ann_ivf_wide",
 ]
 
-# Environment-shift sentinels (round-13 verdict #2): never-touched
-# queries whose code has been frozen for many rounds — the median of
-# their min-of-N deltas vs the previous round estimates the BOX floor
-# shift, so a noisy round subtracts the floor instead of arguing it.
-# Keep this list to queries nobody optimizes.
-ENV_SENTINELS = (
-    "order_priority_check",
-    "json_extract",
-    "window_topk_orders",
-    "rate_limit_window",
-    "segment_derive",
-)
-
-# A sentinel whose own min-delta sits this far from the sentinel median
-# is flagged: either its code was touched (invariant broken — rotate it
-# out or re-pin tests/test_bench_contract.py) or the box shifted it
-# alone, and either way it should not silently bias env_shift_sec
-# (round-14 advice).  tests pin the sentinels' source hashes too.
-SENTINEL_OUTLIER_SEC = 0.5
-
-PHASE_SPLIT_FLOOR_SEC = 2.5  # queries at least this slow always get attributed
-PHASE_SPLIT_TOP_N = 5
-
-# Automatic regression adjudication (round-14 verdict #2): a query whose
-# min-delta minus the environment shift exceeds BOTH bounds gets one
-# fresh-session re-time (a subprocess, so JIT/cache state can't carry
-# over) before the round record commits — r13/r14 each spent a manual
-# cycle proving a committed "regression" was a steal-episode artifact
-# (systematic_weighted_sample: committed 1.63s, fresh-session 0.51s).
-REGRESSION_FLAG_ABS_SEC = 0.5
-REGRESSION_FLAG_REL = 0.25
-REGRESSION_FLAG_MAX_RETIMES = 5  # bound the extra wall per bench run
-
-# CPU-heavy environment sentinel (round-15 verdict #1a): the env-shift
-# sentinels are light scheduling-bound queries, so they measure the
-# scheduling floor and are BLIND to the box's CPU-steal mode — the
-# round-15 record "confirmed" three regressions on untouched queries
-# because the auto-retime subprocess shared a degraded box.  This is a
-# fixed, data-independent compute job (xxhash64 over a literal range —
-# no input tables, no shuffle, one task per core) whose wall time
-# tracks available CPU directly.  It runs at suite start/end and inside
-# every --retime subprocess; a retime whose CPU sentinel sits far above
-# the calm-floor reference is labeled suspect_load instead of letting
-# its "confirmed" verdict stand unqualified.
-CPU_SENTINEL_ROWS = 1 << 24  # ~16.7M sha2 rows: ~0.6s calm on 32 cores
-# Calm-floor reference, calibrated on this box (min of repeated samples
-# on a quiet window: 0.56-0.72s calm; 1.0-1.4s in the documented
-# degraded/steal mode — re-calibrate when hardware changes).
-CPU_SENTINEL_REF_SEC = 0.6
-CPU_SENTINEL_DEGRADED_FACTOR = 1.25
-
-
-def cpu_sentinel_sec(spark, runs: int = 3) -> float:
-    """Median wall of `runs` fixed-size CPU-bound jobs (xxhash64 sum
-    over a literal range, one task per core).  Data- and sf-independent;
-    inflates proportionally under CPU steal where the scheduling-bound
-    env sentinels stay flat."""
-    par = spark.sparkContext.defaultParallelism
-    times = []
-    for _ in range(runs):
-        t0 = time.perf_counter()
-        # sha2 per row so the job is genuinely compute-bound: a bare
-        # xxhash64-over-range loop is ~1 ns/row and measures the
-        # scheduler, not the CPU (calibrated: 2^31 xxhash rows timed
-        # the same as 2^27).  bit_xor, not sum — the session runs ANSI
-        # mode and a sum of full-range hashes overflows BIGINT.
-        (spark.range(0, CPU_SENTINEL_ROWS, 1, par)
-         .selectExpr("bit_xor(xxhash64(sha2(cast(id AS string), 256))) AS h")
-         .collect())
-        times.append(time.perf_counter() - t0)
-    return round(sorted(times)[len(times) // 2], 3)
-
-
-def compute_regression_flags(
-    delta_min: dict[str, float],
-    prev_qmin: dict[str, float],
-    env_shift: float,
-    abs_sec: float = REGRESSION_FLAG_ABS_SEC,
-    rel: float = REGRESSION_FLAG_REL,
-) -> dict[str, float]:
-    """Queries whose env-adjusted min-delta exceeds both the absolute
-    and relative thresholds -> {name: adjusted_delta}.  Pure so the
-    trip condition is unit-testable without a bench run."""
-    flags: dict[str, float] = {}
-    for name, d in delta_min.items():
-        adj = d - env_shift
-        base = prev_qmin.get(name, 0.0)
-        if adj > abs_sec and adj > rel * max(base, 1e-9):
-            flags[name] = round(adj, 3)
-    return flags
-
-
-def adjudicate_retime(
-    retimed_min: float,
-    prev_min: float,
-    env_shift: float,
-    retime_cpu: float | None = None,
-) -> tuple[bool, bool | None]:
-    """(confirmed, suspect_load) for one fresh-session re-time.
-    confirmed: the fresh floor still exceeds both regression bounds.
-    suspect_load: the re-time's own CPU sentinel sat above the degraded
-    threshold, so a confirmation is box-mode evidence, not code
-    evidence (None when the sentinel is unavailable).  Pure so the
-    round-15 false-confirmation scenario is unit-testable."""
-    adj = retimed_min - prev_min - env_shift
-    confirmed = bool(
-        adj > REGRESSION_FLAG_ABS_SEC and adj > REGRESSION_FLAG_REL * prev_min
-    )
-    suspect = (
-        None
-        if retime_cpu is None
-        else bool(retime_cpu > CPU_SENTINEL_DEGRADED_FACTOR * CPU_SENTINEL_REF_SEC)
-    )
-    return confirmed, suspect
-
-
-def retime_query(name: str, sf_dir: str, n: int = 3) -> dict:
-    """Fresh-session floor for ONE query: new JVM, same warmups as the
-    main bench (JIT + streaming), min-of-n.  Invoked as a subprocess
-    (`bench.py --retime NAME`) so the measurement is genuinely
-    fresh-session — nothing from the suite's GC/JIT/cache state leaks."""
-    spark = get_spark("bench-retime")
-    fns = query_fns()
-    fns["features_topk"](spark, sf_dir).write.format("noop").mode("overwrite").save()
-    fns["stream_type_totals"](spark, sf_dir).write.format("noop").mode("overwrite").save()
-    times = []
-    for _ in range(n):
-        t0 = time.perf_counter()
-        fns[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-        times.append(time.perf_counter() - t0)
-    return {"query": name, "n": n, "min": round(min(times), 3),
-            "times": [round(t, 3) for t in times],
-            # the retime's own box mode: a confirmed regression measured
-            # on a degraded box is a suspect confirmation (verdict r15)
-            "cpu_sentinel": cpu_sentinel_sec(spark)}
-
+# Median and min of N_RUNS samples per query: single-run numbers swing
+# 2-3x on a shared box.
+N_RUNS = 3
 
 FLOORS_USAGE = "usage: bench.py --floors DIR QUERY [QUERY ...]"
 
@@ -298,113 +186,103 @@ def floors_args(argv: list[str]) -> tuple[str, list[str]]:
     return dir_path, names
 
 
-def floors_pass(dir_path: str, names: list[str], n: int = 3) -> dict:
-    """Scaled-fixture floor pass (round-15 verdict #1b): time the given
-    queries at `dir_path` (a derived sf1/10x audit tree), min-of-n with
-    the noop sink, same warmups as the main bench.  The sf0.1 contract
-    bench is fixed-overhead-saturated (7/8 scaling ratios ~1 at r15);
-    this pass is where optimization deltas are falsifiable.  Separate
-    invocation (`bench.py --floors DIR [q ...]`) — the driver's default
-    contract line is untouched."""
+def _noop(df) -> None:
+    df.write.format("noop").mode("overwrite").save()
+
+
+def _warm(spark, fns, sf_dir: str) -> None:
+    """Warm the JVM/codegen on the cheapest query, then the streaming
+    machinery: the first streaming query in a session pays a separate,
+    much larger JIT curve (a fresh-session loop of one streaming query
+    measured 71s -> 23s -> ... -> 6s over nine runs with zero code
+    change), which would otherwise land on whichever streaming query is
+    timed first."""
+    _noop(fns["features_topk"](spark, sf_dir))
+    _noop(fns["stream_type_totals"](spark, sf_dir))
+
+
+def _steal_ticks() -> tuple[int, int]:
+    """(steal, total) jiffies of all CPUs, with the field arithmetic of
+    perfbench/run.py:cpu_ticks (which cannot be imported: run.py imports
+    its siblings as top-level modules)."""
+    with open("/proc/stat") as f:
+        fields = [int(x) for x in f.readline().split()[1:]]
+    return fields[7], sum(fields[:8])
+
+
+def _steal_frac(t0: tuple[int, int], t1: tuple[int, int]) -> float:
+    return round((t1[0] - t0[0]) / max(1, t1[1] - t0[1]), 4)
+
+
+def _time(spark, fn, sf_dir: str, n: int) -> tuple[list[float], dict]:
+    """The n noop-sink wall times of ``fn`` and the job split of the
+    fastest sample, read from the status store after the samples ran.
+    Job ids come from the scheduler's counter, so jobs a query runs from
+    other threads (streams, thread pools) count too."""
+    counters = SparkCounters(spark)
+    times: list[float] = []
+    for _ in range(n):
+        j0, lo, t0 = counters.next_job_id(), time.time(), time.perf_counter()
+        _noop(fn(spark, sf_dir))
+        wall = time.perf_counter() - t0
+        if not times or wall < min(times):
+            fastest = (j0, counters.next_job_id(), lo, time.time(), wall)
+        times.append(wall)
+    counters.flush()
+    j0, j1, lo, hi, wall = fastest
+    split = counters.jobs(j0, j1)
+    # job times in the status store are epoch ms; the union, not the
+    # sum, so concurrent jobs are not counted twice
+    split["driver_gap_s"] = (hi - lo) - covered(split.pop("intervals"), lo, hi)
+    split["util"] = split["task_s"] / (wall * spark.sparkContext.defaultParallelism)
+    return times, {k: round(v, 3) for k, v in split.items()}
+
+
+def floors_pass(dir_path: str, names: list[str]) -> dict:
+    """Scaled-fixture floor pass: the sf0.1 suite is fixed-overhead
+    bound, so a scaled fixture is where compute changes show up.  A
+    separate invocation; the default contract line is untouched."""
     spark = get_spark("bench-floors")
     fns = query_fns()
-    fns["features_topk"](spark, dir_path).write.format("noop").mode("overwrite").save()
-    fns["stream_type_totals"](spark, dir_path).write.format("noop").mode("overwrite").save()
-    cpu0 = cpu_sentinel_sec(spark)
-    qmin: dict[str, float] = {}
-    qtimes: dict[str, list[float]] = {}
-    for name in names:
-        times = []
-        for _ in range(n):
-            t0 = time.perf_counter()
-            fns[name](spark, dir_path).write.format("noop").mode("overwrite").save()
-            times.append(time.perf_counter() - t0)
-        qtimes[name] = [round(t, 3) for t in times]
-        qmin[name] = round(min(times), 3)
+    _warm(spark, fns, dir_path)
+    ticks0 = _steal_ticks()
+    times = {name: _time(spark, fns[name], dir_path, N_RUNS)[0] for name in names}
+    qmin = {name: round(min(ts), 3) for name, ts in times.items()}
     return {
         "metric": "floors_wall_seconds",
         "dir": dir_path,
         "unit": "sec",
-        "n_runs": n,
+        "n_runs": N_RUNS,
         "value_min": round(sum(qmin.values()), 3),
         "queries_min": qmin,
-        "queries_times": qtimes,
-        "cpu_sentinel_start": cpu0,
-        "cpu_sentinel_end": cpu_sentinel_sec(spark),
+        "queries_times": {name: [round(t, 3) for t in ts] for name, ts in times.items()},
+        "host_steal_frac": _steal_frac(ticks0, _steal_ticks()),
     }
 
 
-def _phase_split(spark, fn, sf_dir: str) -> dict:
-    """One extra profiled run of ``fn``: overhead-vs-data attribution
-    from the AppStatusStore (works with spark.ui.enabled=false — the
-    status listener always runs).  Rounds 11/12 each burned a cycle
-    asking "is this query slow or just fixed overhead?" (pagerank,
-    stream_bitmap_overlap); this folds that attribution into every
-    bench run so the answer ships with the number.
-
-    Split semantics:
-      wall        = end-to-end wall of the profiled run
-      job_wall    = sum of per-job (completion - submission)
-      stage_wall  = sum of per-stage wall over the run's distinct stages
-      task_time   = sum of executorRunTime over those stages (all cores)
-      driver_gap  = wall - job_wall (clamped): planning + driver-side
-                    work BETWEEN jobs — the fixed-overhead share
-      sched_gap   = job_wall - stage_wall (clamped): in-job scheduling
-      util        = task_time / (wall * cores): how data-bound the run is
-    Sums, not a timeline union, so concurrent jobs can push gaps to 0 —
-    gaps are a floor on overhead, never an overstatement of data time.
-    """
-    try:
-        sc = spark.sparkContext
-        store = sc._jsc.sc().statusStore()
-        jl = store.jobsList(None)
-        before = {jl.apply(i).jobId() for i in range(jl.size())}
-        t0 = time.perf_counter()
-        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        wall = time.perf_counter() - t0
-
-        def opt_ms(o):
-            return o.get().getTime() if o.isDefined() else None
-
-        jl = store.jobsList(None)
-        jobs = [jl.apply(i) for i in range(jl.size())
-                if jl.apply(i).jobId() not in before]
-        dflt = [getattr(store, f"stageData$default${i}")() for i in (2, 3, 4, 5)]
-        job_wall_ms = 0
-        stage_ids = set()
-        for jd in jobs:
-            sub, comp = opt_ms(jd.submissionTime()), opt_ms(jd.completionTime())
-            if sub is not None and comp is not None:
-                job_wall_ms += comp - sub
-            sids = jd.stageIds()
-            stage_ids.update(sids.apply(i) for i in range(sids.size()))
-        stage_wall_ms = task_ms = n_tasks = n_stages = 0
-        for sid in sorted(stage_ids):
-            sdl = store.stageData(sid, *dflt)
-            for ai in range(sdl.size()):
-                sd = sdl.apply(ai)
-                sub, comp = opt_ms(sd.submissionTime()), opt_ms(sd.completionTime())
-                if sub is None or comp is None:
-                    continue  # skipped stage (AQE-reused exchange)
-                n_stages += 1
-                n_tasks += sd.numTasks()
-                stage_wall_ms += comp - sub
-                task_ms += sd.executorRunTime()
-        cores = sc.defaultParallelism
-        return {
-            "wall": round(wall, 3),
-            "n_jobs": len(jobs),
-            "n_stages": n_stages,
-            "n_tasks": n_tasks,
-            "job_wall": round(job_wall_ms / 1000, 3),
-            "stage_wall": round(stage_wall_ms / 1000, 3),
-            "task_time": round(task_ms / 1000, 3),
-            "driver_gap": round(max(0.0, wall - job_wall_ms / 1000), 3),
-            "sched_gap": round(max(0.0, (job_wall_ms - stage_wall_ms) / 1000), 3),
-            "util": round(task_ms / 1000 / (wall * cores), 3) if wall > 0 else 0.0,
-        }
-    except Exception as ex:  # attribution must never fail the bench
-        return {"error": f"{type(ex).__name__}: {ex}"[:200]}
+def compact_line(record: dict) -> str:
+    """The stdout line of a full record: its totals and as many of its
+    slowest queries (by median, slowest first, at most 10) as fit under
+    1500 bytes."""
+    ranked = sorted(record["queries"].items(), key=lambda kv: -kv[1])
+    for top_n in range(10, -1, -1):
+        line = json.dumps({
+            "metric": record["metric"],
+            "value": record["value"],
+            "unit": record["unit"],
+            "sf": record["sf"],
+            "n_queries": len(ranked),
+            "n_runs": record["n_runs"],
+            "value_min": record["value_min"],
+            "spread_sec": record["spread_sec"],
+            "shared_setup_sec": record["shared_setup_sec"],
+            "host_steal_frac": record["host_steal_frac"],
+            "queries": dict(ranked[:top_n]),
+            "full_results": "BENCH_LOCAL.json",
+        })
+        if len(line) < 1500:
+            break
+    return line
 
 
 def main() -> None:
@@ -414,357 +292,46 @@ def main() -> None:
     spark = get_spark("bench")
     fns = query_fns()
     names = [n for n in HEADLINE if n in fns]
+    _warm(spark, fns, sf_dir)
 
-    # Warm the JVM/codegen once on the cheapest query so per-query times
-    # measure the plan, not first-run JIT.
-    fns["features_topk"](spark, sf_dir).write.format("noop").mode("overwrite").save()
-    # Warm the STREAMING machinery too (round 14): the first streaming
-    # query in a session pays a separate, much larger JIT curve — a
-    # fresh-session sbo loop measured 71s -> 23s -> ... -> 6s over nine
-    # runs with zero code change — so without this, whichever streaming
-    # query runs first ships a warmup artifact as its median.  A
-    # long-lived deployment amortizes this identically.
-    fns["stream_type_totals"](spark, sf_dir).write.format("noop").mode("overwrite").save()
-
-    # Eagerly build the session-scoped shared artifacts (the dedup
-    # inverted index and the verified MinHash pair table) so their
-    # one-time cost lands in setup, not arbitrarily on whichever dedup
-    # query the suite happens to run first — per-query numbers then
-    # measure each query's own plan.  A long-lived deployment amortizes
-    # these builds the same way.
+    # The session-scoped dedup artifacts (inverted index, verified
+    # MinHash pair table) are built here, so their one-time cost lands
+    # in setup, not on whichever dedup query the suite runs first.
     t0 = time.perf_counter()
-    from bigdata_assigment3_spark.operators.dedup import _inverted_index_df
-
-    _inverted_index_df(spark, sf_dir)
-    fns["dedup_minhash_lsh"](spark, sf_dir).write.format("noop").mode("overwrite").save()
+    _noop(fns["dedup_minhash_lsh"](spark, sf_dir))
     shared_setup = round(time.perf_counter() - t0, 3)
 
-    # CPU-mode reading at suite start (and again at the end): tracks
-    # steal/contention the scheduling-bound env sentinels can't see.
-    cpu_start = cpu_sentinel_sec(spark)
-
-    # Median of 3 runs per query: single-run numbers swing 2-3x on a
-    # shared box, which would read as phantom regressions round-over-round.
-    per_query: dict[str, float] = {}
-    per_query_min: dict[str, float] = {}
-    all_times: dict[str, list[float]] = {}
+    ticks0 = _steal_ticks()
+    times, splits = {}, {}
     for name in names:
-        times = []
-        for _ in range(3):
-            t0 = time.perf_counter()
-            fns[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-            times.append(time.perf_counter() - t0)
-        all_times[name] = times
-        per_query[name] = round(sorted(times)[1], 3)
-        # the min is the noise floor: when median >> min the spread is
-        # GC/box noise, not a plan regression — recorded so round-over-
-        # round deltas can be attributed
-        per_query_min[name] = round(min(times), 3)
-
-    # Spread enforcement (round-10 verdict: a snapshot whose own numbers
-    # sit 40% above the floor poisons round-over-round deltas): while
-    # the suite-level median-vs-min spread exceeds 10%, re-time the
-    # widest queries (their medians are the suspect numbers) up to two
-    # extra passes, folding new samples into the same min/median.
-    # Budget raised 2 -> 4 passes and the per-pass set widened to half
-    # the suite (round 14): the residual spread on this box is a
-    # UNIFORM ~0.2s median-vs-min gap across ~90 queries (sampling
-    # noise at n=3), not a few wide outliers — narrowing it needs more
-    # samples on many queries, and four bounded passes keep the whole
-    # re-time under ~4 min.
-    extra_passes = 0
-    while (
-        sum(per_query.values()) - sum(per_query_min.values())
-        > 0.10 * sum(per_query.values())
-        and extra_passes < 4
-    ):
-        extra_passes += 1
-        worst = sorted(
-            names,
-            key=lambda n: per_query[n] - per_query_min[n],
-            reverse=True,
-        )[: max(5, len(names) // 2)]
-        for name in worst:
-            # two extra samples per pass so the count stays ODD: with an
-            # even count, ts[len//2] is the upper-middle element — a
-            # systematically high-biased "median" that would make
-            # re-timed queries read slower than non-re-timed ones
-            for _ in range(2):
-                t0 = time.perf_counter()
-                fns[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-                all_times[name].append(time.perf_counter() - t0)
-            ts = sorted(all_times[name])
-            per_query[name] = round(ts[len(ts) // 2], 3)
-            per_query_min[name] = round(ts[0], 3)
-
-    # Automatic overhead-vs-data attribution for the expensive tail:
-    # the top-N slowest by noise floor, plus anything above the 2.5s
-    # floor (round-12 directive #6 — the stream_bitmap_overlap /
-    # pagerank treatment, now standing).
-    split_names = sorted(names, key=lambda n: -per_query_min[n])[:PHASE_SPLIT_TOP_N]
-    split_names += [
-        n for n in names
-        if per_query_min[n] >= PHASE_SPLIT_FLOOR_SEC and n not in split_names
-    ]
-    # Each entry's "wall" is the profiled pass's OWN wall — an EXTRA
-    # execution that can diverge wildly from the timed min (streaming
-    # staging re-runs cold, caches differ).  timed_min rides along per
-    # entry so the split is never read against the wrong denominator
-    # (round-13 verdict #5).
-    phase_split = {}
-    for n in split_names:
-        ps = _phase_split(spark, fns[n], sf_dir)
-        ps["timed_min"] = per_query_min[n]
-        phase_split[n] = ps
-
-    cpu_end = cpu_sentinel_sec(spark)
+        times[name], splits[name] = _time(spark, fns[name], sf_dir, N_RUNS)
+    steal = _steal_frac(ticks0, _steal_ticks())
+    per_query = {n: round(sorted(ts)[len(ts) // 2], 3) for n, ts in times.items()}
+    per_query_min = {n: round(min(ts), 3) for n, ts in times.items()}
     total = round(sum(per_query.values()), 3)
     total_min = round(sum(per_query_min.values()), 3)
-    out = {
+    record = {
         "metric": "headline_suite_wall_seconds",
         "value": total,
         "unit": "sec",
-        "queries": per_query,
         "sf": sf,
-        # one-time shared-artifact build (dedup inverted index + verified
-        # pair table), reported separately so it is visible, not hidden
-        "shared_setup_sec": shared_setup,
-        "n_runs": 3,
-        # the noise floor: sum of per-query min-of-3.  Round-over-round
-        # perf claims compare THIS number (min-to-min), not the median —
-        # a shared box swings medians 5-15% with zero code change.
+        "n_runs": N_RUNS,
         "value_min": total_min,
         "spread_sec": round(total - total_min, 3),
-        # widest-query re-time passes taken to get under the 10% spread
-        # target; box_loaded flags a snapshot that stayed wide anyway
-        "extra_passes": extra_passes,
-        "box_loaded": bool(total - total_min > 0.10 * total),
-        # CPU-mode sentinel (fixed data-independent compute job): the
-        # box's compute floor at suite start/end vs the calibrated calm
-        # reference.  cpu_degraded means every number in this record was
-        # taken in a degraded-CPU window — treat regressions as suspect.
-        "cpu_sentinel_start": cpu_start,
-        "cpu_sentinel_end": cpu_end,
-        "cpu_sentinel_ref": CPU_SENTINEL_REF_SEC,
-        "cpu_degraded": bool(
-            min(cpu_start, cpu_end)
-            > CPU_SENTINEL_DEGRADED_FACTOR * CPU_SENTINEL_REF_SEC
-        ),
+        "shared_setup_sec": shared_setup,
+        "host_steal_frac": steal,
+        "queries": per_query,
         "queries_min": per_query_min,
-        # overhead-vs-data split for the expensive tail (one profiled
-        # run each; see _phase_split).  driver_gap ~ fixed overhead,
-        # stage_wall ~ data-bound execution, util ~ core saturation.
-        "phase_split": phase_split,
+        "queries_split": splits,
     }
-
-    # Round-over-round tracking: compare against the newest BENCH_r{N}.json
-    # so per-query regressions are visible in the next round's record.
     here = os.path.dirname(os.path.abspath(__file__))
-    prev_rounds = sorted(
-        (int(m.group(1)), f)
-        for f in os.listdir(here)
-        if (m := re.fullmatch(r"BENCH_r(\d+)\.json", f))
-    )
-    if prev_rounds:
-        rnum, fname = prev_rounds[-1]
-        try:
-            with open(os.path.join(here, fname)) as fh:
-                prev = json.load(fh)
-            # driver records wrap our compact line under "parsed", and
-            # from round 5 on that line carries only the slowest-10
-            # queries — so prefer the committed full-results file and
-            # overlay whatever the driver record has
-            parsed = ((prev.get("parsed") or prev) or {})
-            prev_q = dict(parsed.get("queries", {}))
-            prev_qmin = dict(parsed.get("queries_min", {}))
-            try:
-                with open(os.path.join(here, "BENCH_LOCAL.json")) as fh:
-                    local_prev = json.load(fh)
-                # only overlay a BENCH_LOCAL that was produced in round
-                # rnum — a stale or mid-round re-run file would silently
-                # corrupt delta_vs_prev while labeling it prev_round=rnum
-                if local_prev.get("bench_round") == rnum:
-                    prev_q = {**local_prev.get("queries", {}), **prev_q}
-                    prev_qmin = {**local_prev.get("queries_min", {}), **prev_qmin}
-                elif local_prev.get("bench_round") == rnum + 1:
-                    # a mid-round re-run already replaced the file with
-                    # THIS round's numbers; its carried prev_queries map
-                    # is the previous round's full record
-                    prev_q = {**local_prev.get("prev_queries", {}), **prev_q}
-                    prev_qmin = {
-                        **local_prev.get("prev_queries_min", {}), **prev_qmin
-                    }
-            except (OSError, ValueError):
-                pass
-            out["prev_round"] = rnum
-            out["bench_round"] = rnum + 1  # identity stamp for next round's overlay
-            out["prev_queries"] = prev_q  # carried so same-round re-runs keep the diff base
-            out["prev_queries_min"] = prev_qmin
-            out["delta_vs_prev"] = {
-                n: round(t - prev_q[n], 3) for n, t in per_query.items() if n in prev_q
-            }
-            # the delta that counts: noise-floor to noise-floor
-            out["delta_min_vs_prev"] = {
-                n: round(t - prev_qmin[n], 3)
-                for n, t in per_query_min.items()
-                if n in prev_qmin
-            }
-            # environment-shift estimator (round-13 verdict #2): the
-            # median sentinel min-delta is the box's floor shift this
-            # round — subtract it before reading any other delta as a
-            # code regression.  Sentinels are never-touched queries.
-            sent = sorted(
-                out["delta_min_vs_prev"][n]
-                for n in ENV_SENTINELS
-                if n in out["delta_min_vs_prev"]
-            )
-            if sent:
-                out["env_shift_sec"] = sent[len(sent) // 2]
-                out["env_sentinel_deltas"] = {
-                    n: out["delta_min_vs_prev"][n]
-                    for n in ENV_SENTINELS
-                    if n in out["delta_min_vs_prev"]
-                }
-                # a sentinel that moved away from its peers is either a
-                # broken never-touched invariant or a box artifact on
-                # that one query — surface it instead of letting it
-                # bias the median silently (round-14 advice)
-                outliers = {
-                    n: d
-                    for n, d in out["env_sentinel_deltas"].items()
-                    if abs(d - out["env_shift_sec"]) > SENTINEL_OUTLIER_SEC
-                }
-                if outliers:
-                    out["env_sentinel_outliers"] = outliers
-
-            # Automatic regression adjudication: each flagged query gets
-            # ONE fresh-session re-time (subprocess) and the record
-            # carries BOTH numbers — `confirmed` means the fresh floor
-            # still exceeds the thresholds, i.e. a real plan regression,
-            # not a steal episode that covered the suite's samples.
-            flagged = compute_regression_flags(
-                out.get("delta_min_vs_prev", {}),
-                prev_qmin,
-                out.get("env_shift_sec", 0.0),
-            )
-            if flagged:
-                import subprocess
-
-                env_shift = out.get("env_shift_sec", 0.0)
-                rf: dict[str, dict] = {}
-                for name in sorted(flagged, key=flagged.get, reverse=True)[
-                    :REGRESSION_FLAG_MAX_RETIMES
-                ]:
-                    entry = {
-                        "committed_min": per_query_min[name],
-                        "prev_min": prev_qmin.get(name),
-                        "delta_adj": flagged[name],
-                        "retimed_min": None,
-                        "confirmed": None,
-                    }
-                    try:
-                        r = subprocess.run(
-                            [sys.executable, os.path.abspath(__file__),
-                             "--retime", name, "3"],
-                            capture_output=True, text=True, timeout=900,
-                            env={**os.environ, "SPARK_GRAFT_SF_DIR": sf_dir},
-                        )
-                        rt = json.loads(r.stdout.strip().splitlines()[-1])
-                        retimed = rt["min"]
-                        entry["retimed_min"] = retimed
-                        # the retime shares the box: a "confirmed"
-                        # verdict measured in a degraded-CPU window is
-                        # not evidence of a code regression (round-15
-                        # verdict #1a — three phantoms were confirmed
-                        # exactly this way), so it ships labeled
-                        # suspect_load
-                        rt_cpu = rt.get("cpu_sentinel")
-                        confirmed, suspect = adjudicate_retime(
-                            retimed, prev_qmin[name], env_shift, rt_cpu
-                        )
-                        entry["confirmed"] = confirmed
-                        if rt_cpu is not None:
-                            entry["retime_cpu_sentinel"] = rt_cpu
-                            entry["suspect_load"] = suspect
-                    except Exception as ex:  # re-time is best-effort
-                        entry["error"] = f"{type(ex).__name__}: {ex}"[:200]
-                    rf[name] = entry
-                out["regression_flags"] = rf
-        except (OSError, ValueError):
-            pass  # unreadable previous record: skip the comparison
-
-    # Full record → committed file; compact summary → stdout.  The
-    # driver tails only ~2 KB of output, and the full 55-query line
-    # outgrew that in round 4 (BENCH_r04.json parsed: null).
     with open(os.path.join(here, "BENCH_LOCAL.json"), "w") as fh:
-        json.dump(out, fh, indent=1, sort_keys=True)
-
-    ranked = sorted(per_query.items(), key=lambda kv: -kv[1])
-    # prefer min-to-min deltas; fall back to median-based ones (older
-    # records lack queries_min) and LABEL which source populated the
-    # summary so a fallback never masquerades as a noise-floor delta
-    deltas = out.get("delta_min_vs_prev", {})
-    delta_source = "min"
-    if not deltas:
-        deltas = out.get("delta_vs_prev", {})
-        delta_source = "median"
-    # The driver captures only a ~2 KB output tail: shrink the slowest-N
-    # list until the line fits rather than asserting (an assert is
-    # stripped under -O, and firing it would suppress the only summary).
-    for top_n in range(10, 0, -1):
-        compact = {
-            "metric": out["metric"],
-            "value": total,
-            "unit": "sec",
-            "sf": sf,
-            "n_queries": len(per_query),
-            "n_runs": 3,
-            "value_min": total_min,   # noise floor: sum of per-query min-of-3
-            "spread_sec": round(total - total_min, 3),
-            "extra_passes": extra_passes,
-            "box_loaded": bool(total - total_min > 0.10 * total),
-            "cpu_sent": [cpu_start, cpu_end],
-            "cpu_degraded": out["cpu_degraded"],
-            "shared_setup_sec": shared_setup,
-            "queries": dict(ranked[:top_n]),  # slowest N; full map in BENCH_LOCAL.json
-            "full_results": "BENCH_LOCAL.json",
-        }
-        if deltas:
-            worst = max(deltas, key=lambda n: deltas[n])
-            best = min(deltas, key=lambda n: deltas[n])
-            compact["prev_round"] = out["prev_round"]
-            if "env_shift_sec" in out:
-                compact["env_shift_sec"] = out["env_shift_sec"]
-            # min-to-min over queries benched in BOTH rounds — the
-            # drift signal medians can't provide on a shared box
-            sfx = delta_source  # "min", or "median" on the fallback path
-            compact[f"delta_total_{sfx}_shared"] = round(sum(deltas.values()), 3)
-            compact[f"max_regression_{sfx}"] = {worst: deltas[worst]}
-            compact[f"max_improvement_{sfx}"] = {best: deltas[best]}
-            # adjudicated regressions ride the compact line: {} means
-            # nothing tripped the flag thresholds this round
-            compact["regression_flags"] = {
-                n: {"adj": e["delta_adj"], "retimed_min": e["retimed_min"],
-                    "confirmed": e["confirmed"],
-                    **({"suspect_load": True} if e.get("suspect_load") else {})}
-                for n, e in out.get("regression_flags", {}).items()
-            }
-            if "env_sentinel_outliers" in out:
-                compact["env_sentinel_outliers"] = out["env_sentinel_outliers"]
-        line = json.dumps(compact)
-        if len(line) < 1500:
-            break
-    print(line)
+        json.dump(record, fh, indent=1, sort_keys=True)
+    print(compact_line(record))
 
 
 if __name__ == "__main__":
-    if len(sys.argv) >= 3 and sys.argv[1] == "--retime":
-        _name = sys.argv[2]
-        _n = int(sys.argv[3]) if len(sys.argv) > 3 else 3
-        _sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-        print(json.dumps(retime_query(_name, _sf_dir, _n)))
-    elif len(sys.argv) >= 2 and sys.argv[1] == "--floors":
-        # scaled-fixture floor pass: bench.py --floors DIR q1 q2 ...
+    if len(sys.argv) >= 2 and sys.argv[1] == "--floors":
         print(json.dumps(floors_pass(*floors_args(sys.argv[2:]))))
     else:
         main()
