@@ -1,6 +1,10 @@
 #!/usr/bin/env python
 """Benchmark runner: headline queries at $SPARK_GRAFT_SF_DIR on local[$SPARK_GRAFT_CPUS].
 
+The headline set is the registered queries declared ``@query(...,
+bench=True)``: the flagship and the heaviest representatives of each
+operator family, timed in registry order (``queries()`` order).
+
 Each query is forced end-to-end with the noop sink (full execution, no
 driver collect) N_RUNS times after a shared warm-up.  Wall time includes
 building and planning; the session build is excluded (it's amortized in
@@ -44,126 +48,9 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from bigdata_assigment3_spark import get_spark, query_fns  # noqa: E402
+from bigdata_assigment3_spark import REGISTRY, get_spark, query_fns  # noqa: E402
 from perfbench.stats import covered  # noqa: E402
 from perfbench.tracing import SparkCounters  # noqa: E402
-
-# Headline set: the flagship + the heaviest representatives of each
-# operator family (join-heavy, window-heavy, agg-heavy).
-HEADLINE = [
-    "frequent_pairs",
-    "pricing_summary",
-    "top_revenue_orders",
-    "region_revenue",
-    "order_priority_check",
-    "window_topk_orders",
-    "window_running_total",
-    "rate_limit_window",
-    "segment_derive",
-    "json_extract",
-    "sessionize",
-    "block_match_full",
-    "hough_peak",
-    "icm_step_transitions",
-    "dedup_minhash_lsh",
-    "dedup_embedding_cosine",
-    "dedup_semantic_clustered",
-    "ann_cosine_topk",
-    "ann_cosine_topk_vec",
-    "ann_pq_rerank",
-    "ann_srp_bucketed",
-    "text_quality",
-    "langid_nb_classifier",
-    "ellipse_candidate_score",
-    "gaussian_denoise",
-    "nlm_denoise",
-    "skewed_join_hot_key",
-    "pagerank",
-    "span_dedup_ratio",
-    "lm_bigram_score",
-    "image_phash_dedup",
-    "triangle_count",
-    "curation_pipeline_verdict",
-    "frequent_triples",
-    "fuzzy_part_match",
-    "regression_stats",
-    "ewma_user_value",
-    "max_concurrent_orders",
-    # round-4 closing batch: TPC-H join anchors + pipeline ops
-    "volume_shipping",
-    "market_share",
-    "min_cost_supplier",
-    "chunk_documents",
-    "timeseries_interpolate",
-    "winsorize_values",
-    "rag_chunk_index",
-    "supplier_part_variety",
-    # fifth-session batch: 2-D layout + containment dedup + Arrow kernel
-    "zorder_layout_stats",
-    "dedup_containment",
-    "arrow_batch_norm",
-    "token_zipf_slope",
-    "pandas_udaf_mad",
-    # governance batch: runtime-pruned star join, distributed ID
-    # assignment, constraint audit
-    "dpp_partitioned_join",
-    "surrogate_keys",
-    "dq_audit",
-    # refresh + CDC + codec batch
-    "incremental_view_maintenance",
-    "snapshot_cdc_extract",
-    "sql_udf_battery",
-    "image_pgm_decode",
-    # round-6 closures: PNG/JPEG codecs, NIfTI export, RFC crypto
-    # battery, QA-figure sink, int8 embedding quantization
-    "image_png_decode",
-    "image_jpeg_decode",
-    "embedding_int8_quantize",
-    "volume_nifti_export",
-    "security_hash_battery",
-    "figure_heatmap_sink",
-    # round-6 ingestion formats (representatives)
-    "compressed_text_ingest",
-    "webdataset_tar_ingest",
-    # round-6 mergeable sketches
-    "cms_heavy_hitters",
-    "hll_registers_portable",
-    # round-8: quality-100 textured JPEG (exact integer IDCT path)
-    "image_jpeg_q100_decode",
-    # round-8 continuation: scale-pattern batch (grid interval join,
-    # bitmap exact distinct, codegen HTML extraction, hybrid fusion)
-    "interval_overlap_pairs",
-    "bitmap_distinct_users",
-    "html_text_extract",
-    "ann_rrf_fusion",
-    # round-10: the 14 previously-unbenched round-8 queries (judge
-    # directive — every headline-claimed operator needs a number)
-    "bm25_topk_docs",
-    "embedding_power_iteration",
-    "bitmap_audience_overlap",
-    "pareto_skyline_parts",
-    "interval_union_coverage",
-    "ann_recall_eval",
-    "ann_ivf_deterministic",
-    "ann_pq_deterministic",
-    "dedup_cascade_attrition",
-    "dedup_keep_longest",
-    "lsh_band_tuning_audit",
-    "mixture_token_budget",
-    "systematic_weighted_sample",
-    "stream_bitmap_distinct",
-    # round-11: fused ANN tuning table, char-ngram langid, streaming
-    # bitmap-overlap twin
-    "ann_band_recall_tradeoff",
-    "langid_char_ngram",
-    "stream_bitmap_overlap",
-    # round-12: the deterministic (now oracle-backed) E2LSH and
-    # multi-assign IVF scale paths
-    "ann_lsh_bucketed",
-    "ann_ivf_probe",
-    # round-14: the large-k (mapInArrow) assignment path in production
-    "ann_ivf_wide",
-]
 
 # Median and min of N_RUNS samples per query: single-run numbers swing
 # 2-3x on a shared box.
@@ -180,7 +67,8 @@ def floors_args(argv: list[str]) -> tuple[str, list[str]]:
     if len(argv) < 2:
         sys.exit(FLOORS_USAGE)
     dir_path, names = argv[0], argv[1:]
-    unknown = [n for n in names if n not in query_fns()]
+    fns = query_fns()
+    unknown = [n for n in names if n not in fns]
     if unknown:
         sys.exit(f"{FLOORS_USAGE}\nunknown queries: {' '.join(unknown)}")
     return dir_path, names
@@ -291,7 +179,7 @@ def main() -> None:
     sf = float(m.group(1).rstrip(".")) if m else -1.0
     spark = get_spark("bench")
     fns = query_fns()
-    names = [n for n in HEADLINE if n in fns]
+    names = [n for n in fns if REGISTRY[n].bench]
     _warm(spark, fns, sf_dir)
 
     # The session-scoped dedup artifacts (inverted index, verified

@@ -142,6 +142,7 @@ def q_partitioned_write_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE o.o_orderpriority = '1-URGENT'
     GROUP BY l.l_returnflag
     """,
+    exchanges=2,
 )
 def q_runtime_bloom_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Runtime bloom-filter semi-join reduction: lineitem ⋈ a

@@ -34,6 +34,7 @@ from ..sources.custom import SYNTH_PARTS, SYNTH_ROWS, register_synthtx
            CAST(MAX(amount) AS BIGINT) AS max_amount
     FROM t GROUP BY kind
     """,
+    exchanges=2,
 )
 def q_custom_source_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scan through a CUSTOM Python DataSource (PySpark 4 DataSource
@@ -245,6 +246,7 @@ def q_table_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM orders
     WINDOW w AS (PARTITION BY o_custkey ORDER BY o_totalprice DESC, o_orderkey)
     """,
+    order_sensitive=True,
 )
 def q_window_rank_kinds(spark: SparkSession, sf_dir: str) -> DataFrame:
     """rank / dense_rank / ntile in one spec (SURVEY §2.5 'absent' row).
@@ -278,6 +280,7 @@ def q_window_rank_kinds(spark: SparkSession, sf_dir: str) -> DataFrame:
                 AS BIGINT) AS max_gap_s
     FROM m GROUP BY user_id
     """,
+    order_sensitive=True,
 )
 def q_asof_last_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     """As-of lookup: for every event, the most recent PRIOR error of
@@ -966,6 +969,7 @@ def q_array_map_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM s LEFT JOIN (SELECT sig_id, err_id, delta_us FROM cand WHERE rk = 1) c
       USING (sig_id)
     """,
+    exchanges=2, order_sensitive=True,
 )
 def q_asof_nearest_event(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Nearest-match as-of join with tolerance: for every signup, the
@@ -1085,6 +1089,7 @@ def q_parquet_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM events
     GROUP BY event_type
     """,
+    exchanges=1,
 )
 def q_argmax_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Conditional/argmax aggregate battery: max_by/min_by, count_if,
@@ -1126,6 +1131,7 @@ def q_argmax_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     GROUP BY event_type
     """,
+    exchanges=2,
 )
 def q_variant_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Semi-structured analytics through Spark 4's VARIANT type:
@@ -1165,6 +1171,7 @@ def q_variant_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
            LIMIT 2
          ) t
     """,
+    exchanges=2, order_sensitive=True,
 )
 def q_lateral_topk_per_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Correlated LATERAL subquery: top-2 customers by balance per
@@ -1438,6 +1445,7 @@ def q_bitwise_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM base
     ORDER BY 1, 2
     """,
+    exchanges=1,
 )
 def q_dynamic_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dynamic partition overwrite (SURVEY S4/S13 depth): the
@@ -1489,6 +1497,7 @@ def q_dynamic_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame
     WHERE o_orderdate >= DATE '1995-01-01'
     GROUP BY 1
     """,
+    bench=True, exchanges=3,  # inlined SQL UDFs + lateral TVF + band agg
 )
 def q_sql_udf_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Spark 4 SQL user-defined functions — logic shipped as CATALOG
@@ -1543,6 +1552,7 @@ def q_sql_udf_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
              AS kept_revenue
     FROM orders
     """,
+    exchanges=0,  # one eager pass; literal result row
 )
 def q_observed_metrics_single_pass(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batch `df.observe` (the Observation API): pipeline accounting

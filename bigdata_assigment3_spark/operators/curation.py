@@ -396,6 +396,7 @@ _DUCK_QUALITY_DOC_SQL = f"""
            CAST(MIN(doc_id) AS BIGINT) AS example_doc
     FROM v GROUP BY verdict
     """,
+    exchanges=2,
 )
 def q_quality_filter_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Composite C4/Gopher-style quality gate: length, word-shape,
@@ -449,6 +450,7 @@ def q_quality_filter_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
            ROUND(SUM(nll) / COUNT(*), 4) AS mean_nll
     FROM nll GROUP BY doc_id
     """,
+    bench=True, exchanges=9,
 )
 def q_lm_bigram_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CCNet-style language-model quality score: train an add-one
@@ -523,6 +525,10 @@ SPAN_N = 8  # words per span (the "repeated span" granularity)
     FROM spans s JOIN df USING (span_h)
     GROUP BY s.doc_id
     """,
+    # skew-safe decomposition (n_shared = n_spans - df==1 spans routed to
+    # their owner) over the checkpointed span table: two constant-buffer
+    # hash aggs, no posting lists, no join
+    bench=True, exchanges=2,
 )
 def q_span_dedup_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Span-level exact-substring dedup (the Lee-et-al "repeated
@@ -738,6 +744,7 @@ def _ranged_lm_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(MIN(doc_id) AS BIGINT) AS example_doc
     FROM b GROUP BY bucket
     """,
+    order_sensitive=True,
 )
 def q_curriculum_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Curriculum bucketing: documents cut into {N_BUCKETS} equal-

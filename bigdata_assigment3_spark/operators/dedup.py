@@ -172,6 +172,7 @@ def _jaccard_pairs_df(spark: SparkSession, sf_dir: str) -> DataFrame:
            COUNT(*) - COUNT(DISTINCT md5(substr(text, 1, 40))) AS n_prefix_dups
     FROM documents
     """,
+    exchanges=2,
 )
 def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact/prefix dedup stats via hash count-distinct (the
@@ -244,6 +245,7 @@ cand AS (
            COALESCE(j.jaccard, 0) >= {JACC_T} AS is_dup
     FROM cand c LEFT JOIN jacc j ON j.doc_a = c.doc_a AND j.doc_b = c.doc_b
     """,
+    bench=True, order_sensitive=True,
 )
 @session_memo
 def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -411,6 +413,7 @@ COS_DIMS = 1 << 20    # hashed feature space: sparse -> join cost tracks true ov
     JOIN norms nb ON nb.doc_id = doc_b
     WHERE CAST(dot AS DOUBLE) / SQRT(CAST(na.n2 AS DOUBLE) * nb.n2) >= {COS_T}
     """,
+    bench=True,
 )
 def q_dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-cosine near-dup (the fifth dedup family member,
@@ -716,6 +719,9 @@ def q_dedup_minhash_estimate_audit(spark: SparkSession, sf_dir: str) -> DataFram
     GROUP BY b.source
     ORDER BY b.source
     """,
+    # +2 for the data-relative midpoint split (the scalar cut aggregate
+    # feeds both sides)
+    exchanges=6,
 )
 def q_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Snapshot-incremental exact dedup — the recurring-crawl pattern:
@@ -771,6 +777,8 @@ CONT_NUM, CONT_DEN = 4, 5  # containment threshold 4/5 = 0.8, integer-exact
     FROM jacc
     WHERE n_common * {CONT_DEN} >= LEAST(n_a, n_b) * {CONT_NUM}
     """,
+    # pair agg + two size joins over the checkpointed index
+    bench=True, exchanges=3,
 )
 def q_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Containment near-dup pairs: C = |A∩B| / min(|A|,|B|) >=
@@ -922,6 +930,8 @@ SEM_ASSIGN_DUCK_CTES = f"""
            COALESCE(d.n_dup_peers, 0) > 0 AS is_dup
     FROM memb m LEFT JOIN dups d ON d.vec_id = m.vec_id
     """,
+    # cluster pair join + verdict join over the checkpointed assignment
+    bench=True, exchanges=2, order_sensitive=True,
 )
 def q_dedup_semantic_clustered(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup-shaped semantic dedup over learned embeddings (Abbas
@@ -1013,6 +1023,8 @@ def q_dedup_semantic_clustered(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(n1.n - n2.n AS BIGINT)
     FROM n1, n2
     """,
+    # exact groupBy + checkpointed canonical + funnel aggs
+    bench=True, exchanges=12,
 )
 def q_dedup_cascade_attrition(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The dedup attrition funnel a production pipeline reports
@@ -1080,6 +1092,8 @@ def q_dedup_cascade_attrition(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ORDER BY n_chars_actual DESC, doc_id) = 1) AS is_survivor
     FROM lab
     """,
+    # checkpointed canonical join + rank window
+    bench=True, exchanges=2, order_sensitive=True,
 )
 def q_dedup_keep_longest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quality-aware canonicalization: within each near-dup component
@@ -1183,7 +1197,14 @@ def _band_tuning_oracle() -> str:
     """
 
 
-@query("lsh_band_tuning_audit", oracle=_band_tuning_oracle())
+@query(
+    "lsh_band_tuning_audit",
+    oracle=_band_tuning_oracle(),
+    # single-position sweep: one bucket shuffle + bounded pair agg +
+    # config agg + the single-row report, over the checkpointed
+    # signatures and truth
+    bench=True, exchanges=4, order_sensitive=True,
+)
 def q_lsh_band_tuning_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LSH INDEX TUNING AS A QUERY: sweep every (bands x rows)
     factorization of the J=8 minhash signature — 8x1

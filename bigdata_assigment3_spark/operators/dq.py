@@ -68,6 +68,9 @@ from ..sources import load_table
       UNION ALL SELECT 'lineitem_fk_orders', l.n, fk_l.viol FROM l, fk_l
     )
     """,
+    # two FK anti-joins + per-table aggregate passes + union; every one
+    # is an aggregate-sized exchange, no row-level shuffle
+    bench=True, exchanges=7,
 )
 def q_dq_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """See module docstring.  Reference parity: the reference app

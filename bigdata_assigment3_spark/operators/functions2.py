@@ -39,6 +39,7 @@ from ..sources import load_table
     WHERE doc_id < 40
     ORDER BY doc_id
     """,
+    exchanges=1,
 )
 def q_url_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``parse_url`` battery: PROTOCOL/HOST/PATH/QUERY/QUERY:key/REF.
@@ -103,6 +104,7 @@ def q_url_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY c_mktsegment
     ORDER BY c_mktsegment
     """,
+    exchanges=2,
 )
 def q_null_semantics(spark: SparkSession, sf_dir: str) -> DataFrame:
     """NULL / three-valued-logic battery: NULLIF, COALESCE, ``<=>``,
@@ -149,6 +151,7 @@ def q_null_semantics(spark: SparkSession, sf_dir: str) -> DataFrame:
          LATERAL (SELECT UNNEST(range(0, least(len(d.toks), 12))) AS i) g
     ORDER BY d.doc_id, pos
     """,
+    exchanges=1,
 )
 def q_posexplode_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Positional explode: ``posexplode(split(text))`` with position.
@@ -174,6 +177,8 @@ def q_posexplode_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY o_totalprice DESC, o_orderkey
     LIMIT 20 OFFSET 40
     """,
+    # TakeOrderedAndProject with offset, no exchange
+    exchanges=0, order_sensitive=True,
 )
 def q_offset_pagination(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LIMIT/OFFSET pagination (page 3 of the price-ranked orders).
@@ -213,6 +218,7 @@ def q_offset_pagination(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY l_returnflag
     ORDER BY l_returnflag
     """,
+    exchanges=3,  # Expand-based filtered count-distinct + sort
 )
 def q_filtered_aggregates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SQL:2003 FILTER-clause aggregates (one pass, many predicates).
@@ -253,6 +259,7 @@ def q_filtered_aggregates(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY 1
     ORDER BY 1
     """,
+    exchanges=2,
 )
 def q_collation_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Case-insensitive collation grouping (Spark 4 UTF8_LCASE).
@@ -302,7 +309,7 @@ def _udtf_chunk_oracle() -> str:
     """
 
 
-@query("udtf_chunk_spans", oracle=_udtf_chunk_oracle())
+@query("udtf_chunk_spans", oracle=_udtf_chunk_oracle(), exchanges=1)
 def q_udtf_chunk_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Python UDTF surface (SURVEY §2.10): a table function expanding
     each document's token count into its sliding-window chunk spans —
@@ -361,6 +368,7 @@ def q_udtf_chunk_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE doc_id < 50
     ORDER BY doc_id
     """,
+    exchanges=1,
 )
 def q_map_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Map-function battery beyond map_from_entries/element_at:
@@ -408,6 +416,7 @@ def q_map_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(n * (n + 1) AS BIGINT) AS reduced_doubled   -- finish lambda: 2 * sum
     FROM t ORDER BY doc_id
     """,
+    exchanges=1,
 )
 def q_higher_order_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Lambda higher-order-function battery: transform (with index),
@@ -460,6 +469,7 @@ def q_higher_order_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE doc_id < 40
     ORDER BY doc_id
     """,
+    exchanges=1,
 )
 def q_xml_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """XPath battery (F-surface beyond JSON/VARIANT): xpath_string /
@@ -504,6 +514,7 @@ def q_xml_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT doc_id, lang AS lang_c, n_chars AS len_c, source AS src_c
     FROM documents WHERE doc_id < 40 ORDER BY doc_id
     """,
+    exchanges=1,
 )
 def q_csv_column_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``from_csv`` typed in-column parsing — the embedded-CSV twin of
@@ -538,6 +549,7 @@ def q_csv_column_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
             WHERE r_regionkey NOT IN (SELECT rk FROM sub WHERE rk IS NOT NULL)) AS BIGINT)
         AS n_not_in_filtered
     """,
+    exchanges=3,  # three scalar subqueries over dim tables
 )
 def q_not_in_null_trap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The NOT IN / NOT EXISTS null trap, executed not just described:
@@ -580,6 +592,7 @@ def q_not_in_null_trap(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY o_orderpriority
     ORDER BY o_orderpriority
     """,
+    exchanges=2,
 )
 def q_pipe_syntax_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SQL pipe syntax (Spark 4 ``|>`` operators): the same relational
@@ -620,6 +633,7 @@ def q_pipe_syntax_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     HAVING COUNT(*) * 25 > (SELECT thr FROM v)
     ORDER BY n_name
     """,
+    exchanges=2,
 )
 def q_sql_variables_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SQL session variables (Spark 4 DECLARE / SET VARIABLE):
@@ -674,6 +688,7 @@ def q_sql_variables_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM q WHERE n_below * 10 >= n_total * 9
     ORDER BY cutoff LIMIT 1
     """,
+    exchanges=0,  # final SELECT is scalar subqueries
 )
 def q_sql_scripting_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SQL scripting (Spark 4 BEGIN/DECLARE/WHILE): a data-dependent

@@ -483,6 +483,7 @@ def q_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
            END, 4) AS value_interp
     FROM j
     """,
+    bench=True, exchanges=3,
 )
 def q_timeseries_interpolate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Linear interpolation over a densified daily series — the

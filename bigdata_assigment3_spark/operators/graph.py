@@ -101,7 +101,7 @@ def _pr_oracle() -> str:
     )
 
 
-@query("pagerank", oracle=_pr_oracle())
+@query("pagerank", oracle=_pr_oracle(), bench=True, order_sensitive=True)
 def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PageRank over the document link graph: {PR_ITERS} fixed
     iterations, damping 0.85, teleport to every vertex — the
@@ -270,6 +270,7 @@ def q_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
            n_triangles
     FROM tri
     """,
+    bench=True,
 )
 def q_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Triangle count on the undirected document link graph, using the
@@ -334,6 +335,7 @@ def q_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     UNION ALL
     SELECT 'in', deg, COUNT(*) FROM ind GROUP BY deg
     """,
+    exchanges=4,
 )
 def q_degree_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """In/out-degree histogram of the link graph — the first profiling

@@ -131,6 +131,7 @@ def q_voxel_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM vox WHERE in_mask
     GROUP BY 1
     """,
+    order_sensitive=True,
 )
 def q_mstep_class_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """M-step: per-class mean/variance (SURVEY A9; ref
@@ -223,7 +224,7 @@ def _argmin_label():
     )
 
 
-@query("icm_step_transitions", oracle=_ICM_ORACLE)
+@query("icm_step_transitions", oracle=_ICM_ORACLE, bench=True)
 def q_icm_step_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One Jacobi ICM step: MAP label update with Potts prior over the
     6-neighborhood, reported as an old->new transition matrix
@@ -320,7 +321,9 @@ def _kmeans_1d_oracle() -> str:
     )
 
 
-@query("kmeans_init", oracle=_kmeans_1d_oracle())
+# exchanges: the histogram agg runs eagerly inside the bounded collect; the
+# returned frame is a LocalRelation
+@query("kmeans_init", oracle=_kmeans_1d_oracle(), exchanges=0, order_sensitive=True)
 def q_kmeans_init(spark: SparkSession, sf_dir: str) -> DataFrame:
     """K-means intensity init, classes ordered by mean (SURVEY U6/O3;
     ref brain_segmentation.py:100-116 — sklearn KMeans(n_init=4,
@@ -581,6 +584,7 @@ def _denoised_voxels(spark: SparkSession) -> DataFrame:
     SELECT z, y, x, CAST(swv // sw AS BIGINT) AS dn_m
     FROM sm WHERE in_mask
     """,
+    bench=True,
 )
 def q_gaussian_denoise(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-slice Gaussian denoise as a 9-offset weighted neighborhood
@@ -630,6 +634,7 @@ NLM_T = 60000  # patch-distance cutoff: same-class pairs cluster ~24k,
     FROM pd WHERE np = 9 AND in_mask
     GROUP BY 1, 2, 3
     """,
+    bench=True,
 )
 def q_nlm_denoise(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Non-local-means denoise, relational form (SURVEY U8; ref
@@ -1108,6 +1113,7 @@ def q_hmrf_em_slab(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(bit_xor(z * {Y * X} + y * {X} + x) AS BIGINT) AS coord_checksum
     FROM vox GROUP BY in_mask
     """,
+    exchanges=1,  # broadcast mask join + final group agg
 )
 def q_mask_npy_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S12 done for real: the brain mask arrives as a PRECOMPUTED .npy
@@ -1209,6 +1215,7 @@ def _label_rows(vol: np.ndarray) -> list[tuple]:
            CAST(bit_xor(z * {Y * X} + y * {X} + x) AS BIGINT) AS coord_checksum
     FROM vox GROUP BY 1
     """,
+    exchanges=1,  # read-back label agg (the export runs eagerly)
 )
 def q_volume_npy_export(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S15 made real (minus the NIfTI header — nibabel stays absent,
@@ -1258,6 +1265,7 @@ def q_volume_npy_export(spark: SparkSession, sf_dir: str) -> DataFrame:
            'n+1' AS magic
     FROM vox GROUP BY 1
     """,
+    bench=True, exchanges=1,
 )
 def q_volume_nifti_export(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S15 complete: the segmented volume is exported as a REAL

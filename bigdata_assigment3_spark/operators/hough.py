@@ -154,6 +154,7 @@ def q_hough_votes(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "hough_peak",
     oracle=f"WITH edge AS ({EDGE_POINTS_SQL}){_VOTES_SQL}{_NMS_PEAK_SQL}",
+    bench=True, exchanges=6, order_sensitive=True,
 )
 def q_hough_peak(spark: SparkSession, sf_dir: str) -> DataFrame:
     """3x3 NMS + argmax peak per image, with the NO_CIRCLE fallback
@@ -374,6 +375,7 @@ _ELL_CANDS_SQL = """
                ORDER BY support DESC, ey, ex, ea, eb) AS rn FROM scored)
     WHERE rn = 1
     """,
+    bench=True,
 )
 def q_ellipse_candidate_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ellipse-candidate sweep + perimeter-support argmax (SURVEY F10/

@@ -204,6 +204,7 @@ def skewed_hot_key_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM facts f JOIN dim d USING (hot_key)
     GROUP BY d.grp
     """,
+    bench=True,
 )
 def q_skewed_join_hot_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Skewed-key shuffle join, the AUTOMATIC counterpart of

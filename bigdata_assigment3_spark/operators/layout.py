@@ -85,6 +85,8 @@ def _interleave_duck(x: str, y: str) -> str:
            CAST(MAX(dd) - MIN(dd) AS BIGINT) AS day_span
     FROM z GROUP BY file_id
     """,
+    # 1-row max broadcast + final 64-group agg
+    bench=True, exchanges=2, order_sensitive=True,
 )
 def q_zorder_layout_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Z-order clustering index over orders on (o_custkey,
@@ -142,6 +144,7 @@ N_COMPACT = 2  # target file count
            TRUE AS ranges_disjoint
     FROM orders
     """,
+    exchanges=1,  # final agg over the compacted read-back
 )
 def q_compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Small-file compaction — the lakehouse maintenance op a
@@ -248,6 +251,8 @@ def _dpp_paths(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     WHERE dim.fiscal_quarter = '1997-Q1'
     GROUP BY 1
     """,
+    # join + count-distinct agg; fact I/O pruned by DPP
+    bench=True, exchanges=2,
 )
 def q_dpp_partitioned_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dynamic partition pruning: the fact table is partitioned by
@@ -296,6 +301,8 @@ def q_dpp_partitioned_join(spark: SparkSession, sf_dir: str) -> DataFrame:
              AS assignment_checksum
     FROM r
     """,
+    # rank+agg run eagerly inside fn; the returned proof row is literal
+    bench=True, exchanges=0, order_sensitive=True,
 )
 def q_surrogate_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dense surrogate-key assignment (sid = 1..N in (o_orderdate,
@@ -372,6 +379,7 @@ RETAIN_FROM = "1996-01"  # keep months >= this; drop everything older
            CAST(bit_xor(o_orderkey) AS BIGINT) AS kept_checksum
     FROM m WHERE order_month >= '{RETAIN_FROM}'
     """,
+    exchanges=1,  # final agg over the surviving partitions
 )
 def q_retention_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Partition-retention vacuum — the data-lifecycle job that ages
@@ -434,6 +442,7 @@ def q_retention_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE v.version >= 1 OR o_orderkey <= m2
     GROUP BY 1, 2
     """,
+    exchanges=3,  # one per-version snapshot aggregate
 )
 def q_txn_log_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A minimal ACID table format: an append-only JSON transaction
@@ -529,6 +538,9 @@ _STATS_COLS = ("o_orderkey", "o_custkey", "o_totalprice")
     FROM orders, (VALUES ('o_orderkey'), ('o_custkey'), ('o_totalprice')) AS c(col_name)
     GROUP BY col_name
     """,
+    # the one-pass stats scan runs eagerly inside fn; the result is
+    # literal rows
+    exchanges=0,
 )
 def q_catalog_stats_cbo(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Catalog statistics collection — the `ANALYZE TABLE ... COMPUTE

@@ -283,7 +283,11 @@ def _bm_winners(spark: SparkSession, cur_df: DataFrame) -> DataFrame:
     )
 
 
-@query("block_match_full", oracle=f"WITH px AS ({FRAME_PIXELS_SQL}){_BM_SQL}")
+@query(
+    "block_match_full",
+    oracle=f"WITH px AS ({FRAME_PIXELS_SQL}){_BM_SQL}",
+    bench=True, exchanges=2, order_sensitive=True,
+)
 def q_block_match_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full-search block matching as a relational argmin (SURVEY J4/A12;
     ref motion_codec.py:77-90).

@@ -452,6 +452,7 @@ def q_multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE bit_count(xor(x.b0, y.b0)) + bit_count(xor(x.b1, y.b1))
         + bit_count(xor(x.b2, y.b2)) + bit_count(xor(x.b3, y.b3)) <= 6
     """,
+    bench=True,
 )
 def q_image_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Perceptual-hash near-duplicate image detection: decode each
@@ -668,6 +669,7 @@ N_PGM, PGM_W, PGM_H = 64, 32, 24
            CAST(bit_xor(v * 1024 + y * {PGM_W} + x) AS BIGINT) AS pixel_checksum
     FROM px GROUP BY img
     """,
+    bench=True, exchanges=0,  # pure per-file kernel
 )
 def q_image_pgm_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A REAL image codec, no cv2 required: {N_PGM} genuine binary P5
@@ -723,6 +725,7 @@ N_WAV, WAV_SAMPLES, WAV_FRAME = 16, 2048, 256
            CAST(MAX(energy) AS BIGINT) AS peak_frame_energy
     FROM fr GROUP BY f
     """,
+    exchanges=0,  # pure per-file kernel
 )
 def q_audio_wav_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A REAL audio codec via the stdlib: {N_WAV} genuine RIFF/WAVE
@@ -784,6 +787,7 @@ Y4M_W, Y4M_H, Y4M_FRAMES = 32, 24, 20
            CAST(COALESCE(d.sad_prev, 0) AS BIGINT) AS sad_vs_prev
     FROM fr JOIN d ON d.i = fr.i
     """,
+    exchanges=0,  # single-pass demux kernel
 )
 def q_video_y4m_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A REAL video container, no cv2: one genuine YUV4MPEG2 (.y4m)
@@ -925,6 +929,7 @@ def _dicom_elements(b: bytes) -> dict[tuple[int, int], bytes]:
            CAST(bit_xor(raw * 1024 + yy * {DCM_W} + xx) AS BIGINT) AS raw_checksum
     FROM px GROUP BY s
     """,
+    exchanges=0,  # per-file element-walk kernel
 )
 def q_dicom_decode_rescale(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL DICOM bytes, no pydicom: {DCM_N} genuine Part-10 files are
@@ -973,6 +978,7 @@ def q_dicom_decode_rescale(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(raw_sum AS BIGINT) AS raw_sum
     FROM px
     """,
+    exchanges=0,  # tag-parse kernel
 )
 def q_dicom_series_sort(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S11 — DICOM series assembly: slice order comes from the PARSED
@@ -1019,6 +1025,7 @@ N_PNG, PNG_W, PNG_H = 40, 32, 25
            CAST(bit_xor(v * 1024 + y * {PNG_W} + x) AS BIGINT) AS pixel_checksum
     FROM px GROUP BY img
     """,
+    bench=True, exchanges=0,  # pure per-file scan
 )
 def q_image_png_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A REAL compressed raster codec with zero image libraries: {N_PNG}
@@ -1093,6 +1100,7 @@ HEAT_CELL = 8  # pixel block per heatmap cell
            CAST(bit_xor(v * 32 + h) AS BIGINT) AS intensity_checksum
     FROM grid GROUP BY row_idx
     """,
+    bench=True, exchanges=0,
 )
 def q_figure_heatmap_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S16 made real: the QA-figure sink (reference renders heatmap /
@@ -1192,6 +1200,7 @@ def _jpeg_stats_df(spark: SparkSession, stage: str) -> DataFrame:
            CAST(bit_xor(v * 1024 + y * {JPG_BW} * 8 + x) AS BIGINT) AS pixel_checksum
     FROM px GROUP BY img
     """,
+    bench=True, exchanges=0,  # pure per-file scan
 )
 def q_image_jpeg_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S8's LAST codec gap closed: genuine baseline JPEGs — real SOI/
@@ -1248,6 +1257,7 @@ def q_image_jpeg_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(bit_xor(v * 1024 + y * {JPG_BW} * 8 + x) AS BIGINT) AS pixel_checksum
     FROM v GROUP BY img
     """,
+    bench=True,
 )
 def q_image_jpeg_q100_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quality-100 JPEG decode, pixel-exact on TEXTURED content (round-8
@@ -1348,6 +1358,7 @@ def _gz_parse(_path: str, blob: bytes) -> list[tuple]:
                 AS BIGINT) AS content_checksum
     FROM documents GROUP BY 1
     """,
+    bench=True, exchanges=1,  # exactly the one final-agg shuffle
 )
 def q_compressed_text_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Compressed-corpus ingestion, the Common-Crawl-shaped front door
@@ -1391,6 +1402,7 @@ _CODECS = {"gz": gzip, "bz2": bz2, "xz": lzma}
                 AS BIGINT) AS content_checksum
     FROM documents GROUP BY 1
     """,
+    exchanges=1,  # exactly the one final-agg shuffle
 )
 def q_multiformat_text_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Heterogeneous compressed-corpus ingestion: real corpora arrive
@@ -1439,6 +1451,7 @@ ARROW_SHARDS = 4
            CAST(bit_xor(doc_id * 131071 + n_chars) AS BIGINT) AS row_checksum
     FROM documents GROUP BY 1
     """,
+    exchanges=1,  # exactly the one final-agg shuffle
 )
 def q_arrow_ipc_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Arrow IPC (Feather v2) ingestion — the zero-copy interchange
@@ -1523,6 +1536,7 @@ def _doc_shard_stats(parsed: DataFrame, n_shards: int, mul: int) -> DataFrame:
                 AS BIGINT) AS content_checksum
     FROM documents GROUP BY 1
     """,
+    exchanges=1,  # exactly the one final-agg shuffle
 )
 def q_sqlite_db_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Operational-database dump ingestion — the migration path every
@@ -1590,6 +1604,7 @@ WDS_SHARDS, WDS_PER_SHARD = 4, 8  # 32 (image, caption) samples
     FROM sample JOIN px USING (sample_id)
     GROUP BY 1
     """,
+    bench=True, exchanges=1,  # exactly the one final-agg shuffle
 )
 def q_webdataset_tar_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """WebDataset-shard ingestion — THE storage layout of multimodal
@@ -1666,6 +1681,7 @@ AVRO_SHARDS = 4
                 AS BIGINT) AS content_checksum
     FROM documents GROUP BY 1
     """,
+    exchanges=1,  # exactly the one final-agg shuffle
 )
 def q_avro_ocf_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Avro Object Container File ingestion — the row-interchange
@@ -1719,6 +1735,7 @@ PB_SHARDS = 4
                 AS BIGINT) AS content_checksum
     FROM documents GROUP BY 1
     """,
+    exchanges=1,  # exactly the one final-agg shuffle
 )
 def q_protobuf_stream_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Protobuf wire-format ingestion — the Kafka/gRPC payload shape:
@@ -1775,6 +1792,7 @@ GIF_W, GIF_H, GIF_FRAMES = 48, 32, 6
            CAST(bit_xor(v * 2048 + yy * {GIF_W} + xx) AS BIGINT) AS pixel_checksum
     FROM px GROUP BY i
     """,
+    exchanges=0,  # pure per-file scan
 )
 def q_gif_frames_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Animated-GIF demux + decode, the third hand-rolled raster codec

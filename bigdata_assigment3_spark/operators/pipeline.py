@@ -40,6 +40,7 @@ def _sub(name: str) -> str:
     LEFT JOIN lm ON lm.doc_id = q.doc_id
     LEFT JOIN canon ON canon.doc_id = q.doc_id
     """,
+    bench=True,
 )
 def q_curation_pipeline_verdict(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document curation decision: the C4/Gopher quality verdict,
@@ -214,7 +215,7 @@ def _rag_oracle() -> str:
     """
 
 
-@query("rag_chunk_index", oracle=_rag_oracle())
+@query("rag_chunk_index", oracle=_rag_oracle(), bench=True, exchanges=3)
 def q_rag_chunk_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The retrieval-side capstone (the RAG twin of
     ``curation_pipeline_verdict``): corpus-wide sliding-window chunking,
@@ -294,6 +295,9 @@ def q_rag_chunk_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM orders o JOIN lineitem l ON l.l_orderkey = o.o_orderkey
     GROUP BY 1
     """,
+    # the four delta-algebra join terms' partial aggregates + the merge
+    # re-aggregation; each term is delta-sized at scale
+    bench=True, exchanges=8, order_sensitive=True,
 )
 def q_incremental_view_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental maintenance of a materialized JOIN view under
@@ -447,6 +451,8 @@ def cdc_diff(old: DataFrame, new: DataFrame) -> DataFrame:
            CAST(bit_xor(k) AS BIGINT) AS key_checksum
     FROM diff GROUP BY op
     """,
+    # full-outer diff join + final op agg
+    bench=True, exchanges=4, order_sensitive=True,
 )
 def q_snapshot_cdc_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Change-data-capture by snapshot diffing — the batch CDC

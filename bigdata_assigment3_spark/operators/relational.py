@@ -77,6 +77,7 @@ def _money_avg(u: str, s: int, digits: int, name: str) -> Column:
     WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
     GROUP BY l_returnflag, l_linestatus
     """,
+    bench=True, exchanges=1,  # one partial+final agg
 )
 def q_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q1 pricing summary — the canonical wide hash aggregate.
@@ -122,6 +123,7 @@ def q_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY revenue DESC, orderkey
     LIMIT 10
     """,
+    bench=True, exchanges=1, order_sensitive=True,  # broadcast dims + one agg
 )
 def q_top_revenue_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q3 shape: dim filter -> fact joins -> agg -> top-k.
@@ -160,6 +162,7 @@ def q_top_revenue_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     JOIN supplier s ON s.s_suppkey = l.l_suppkey AND s.s_nationkey = c.c_nationkey
     GROUP BY n.n_name
     """,
+    bench=True, exchanges=1,
 )
 def q_region_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q5 shape: 6-way star join with a correlated supplier condition.
@@ -289,6 +292,7 @@ def q_customers_without_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM orders
     ) WHERE rn <= 3
     """,
+    bench=True, exchanges=1, order_sensitive=True,
 )
 def q_window_topk_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-k per group via row_number (SURVEY W4; ref top-K=40 contours,
@@ -321,6 +325,7 @@ def q_window_topk_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
            AS running_total
     FROM orders
     """,
+    bench=True,
 )
 def q_window_running_total(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Running total per customer — frame-based window aggregate (SURVEY W2)."""
@@ -476,6 +481,7 @@ def q_part_brand_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
                     AND l.l_shipdate > o.o_orderdate)
     GROUP BY o_orderpriority
     """,
+    bench=True,
 )
 def q_order_priority_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q4 shape: correlated EXISTS -> left_semi with extra predicate."""
@@ -657,6 +663,7 @@ def q_full_outer_reconciliation(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT n_orders, COUNT(*) AS n_customers
     FROM per_cust GROUP BY n_orders
     """,
+    exchanges=2,
 )
 def q_order_count_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q13 shape: distribution of customers by order count,
@@ -697,6 +704,7 @@ def q_order_count_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
              AS share
     FROM nrev
     """,
+    exchanges=2,
 )
 def q_nation_revenue_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q11 shape: per-nation revenue with its share of the
@@ -756,6 +764,7 @@ def q_nation_revenue_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM blame b JOIN supplier s ON b.l_suppkey = s.s_suppkey
     GROUP BY s.s_name
     """,
+    exchanges=3,
 )
 def q_waiting_supplier_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q21 shape: suppliers SOLELY to blame for late multi-
@@ -820,6 +829,7 @@ def q_waiting_supplier_check(spark: SparkSession, sf_dir: str) -> DataFrame:
           )
     GROUP BY c.c_mktsegment
     """,
+    exchanges=2,
 )
 def q_idle_customer_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q22 shape: well-funded customers with no RECENT orders
@@ -872,6 +882,7 @@ def q_idle_customer_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM events
     GROUP BY 1
     """,
+    exchanges=2,
 )
 def q_multi_count_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Several COUNT(DISTINCT ...) over different keys in one
@@ -924,6 +935,7 @@ def q_multi_count_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY revenue DESC, c_name
     LIMIT 20
     """,
+    exchanges=2, order_sensitive=True,
 )
 def q_returned_item_ranking(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q10 shape: customers ranked by revenue lost to returned
@@ -967,6 +979,7 @@ def q_returned_item_ranking(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM supplier s JOIN rev ON s.s_suppkey = rev.l_suppkey
     WHERE rev.r = (SELECT MAX(r) FROM rev)
     """,
+    exchanges=3,
 )
 def q_top_supplier_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q15 shape: the supplier(s) achieving the maximum quarterly
@@ -1013,6 +1026,7 @@ def q_top_supplier_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY b.sum_qty DESC, o.o_orderkey
     LIMIT 20
     """,
+    exchanges=1,
 )
 def q_large_quantity_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q18 shape: customers behind the largest-volume orders
@@ -1075,6 +1089,7 @@ def q_large_quantity_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM changes
     ORDER BY custkey, version
     """,
+    exchanges=2,  # one customer shuffle + presentation sort
 )
 def q_scd2_customer_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Slowly-changing-dimension Type 2 history build — the warehouse
@@ -1178,6 +1193,7 @@ def customer_priority_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY h.priority
     ORDER BY h.priority
     """,
+    exchanges=3,  # history build + interval hash join + agg
 )
 def q_point_in_time_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Point-in-time (PIT) join — the consumer side of SCD Type 2:
@@ -1249,6 +1265,10 @@ TRANSIT_IT_SQL = """
      AND a.s <= b.r AND b.s <= a.r
     GROUP BY 1
     """,
+    # 1 at test scale (the small side broadcasts); once BOTH explode
+    # sides grow past the broadcast threshold the same plan becomes a
+    # sort-merge join (3 exchanges), still with no quadratic group join
+    bench=True, exchanges=1, order_sensitive=True,
 )
 def q_interval_overlap_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Interval-overlap self-join via GRID BUCKETING — the scale-safe
@@ -1351,6 +1371,8 @@ def grid_overlap_pairs(it: DataFrame) -> DataFrame:
     FROM per_day
     GROUP BY 1
     """,
+    # sweep delta agg + suppkey window/agg
+    bench=True, exchanges=2, order_sensitive=True,
 )
 def q_interval_union_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Union-of-intervals per supplier via SWEEP LINE: busy days (days
@@ -1418,6 +1440,8 @@ def sweep_union_coverage(it: DataFrame) -> DataFrame:
           OR (b.price_c <= a.price_c AND b.p_size > a.p_size))
     )
     """,
+    # one brand shuffle feeds both windows
+    bench=True, exchanges=1, order_sensitive=True,
 )
 def q_pareto_skyline_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SKYLINE (Pareto frontier) per brand — cheapest-for-the-size

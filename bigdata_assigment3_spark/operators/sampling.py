@@ -34,6 +34,7 @@ STRATUM_QUOTA = 40    # rows kept per language in the stratified sample
     SELECT split, lang, COUNT(*) AS n
     FROM tagged GROUP BY split, lang
     """,
+    exchanges=1, order_sensitive=True,
 )
 def q_train_test_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic {TRAIN_PCT}/{100 - TRAIN_PCT} train/test split by
@@ -68,6 +69,7 @@ def q_train_test_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM ranked WHERE rn <= {STRATUM_QUOTA}
     GROUP BY lang
     """,
+    order_sensitive=True,
 )
 def q_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stratified sampling with exact per-class quotas: rank rows
@@ -126,6 +128,7 @@ SAMPLE_SCALE = 1_000_000  # hash-threshold resolution for keep rates
     FROM rates r LEFT JOIN kept k ON k.source = r.source
     GROUP BY r.source, r.n_docs, r.keep_rate
     """,
+    exchanges=7, order_sensitive=True,
 )
 def q_temperature_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Temperature (alpha=0.5) mixture rebalancing: down-sample each
@@ -185,6 +188,7 @@ K_FOLDS = 5
     SELECT CAST(fold AS BIGINT) AS fold, lang, COUNT(*) AS n
     FROM tagged GROUP BY fold, lang
     """,
+    order_sensitive=True,
 )
 def q_kfold_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """{K_FOLDS}-fold cross-validation assignment by key hash,
@@ -221,6 +225,7 @@ W_CAP = 2000  # per-doc weight cap = the hash-threshold denominator
            CAST(SUM(CASE WHEN kept THEN doc_id ELSE 0 END) AS BIGINT) AS sum_kept_ids
     FROM w GROUP BY lang
     """,
+    exchanges=1,  # pure projection filter + report agg
 )
 def q_importance_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-row importance-weighted Bernoulli sampling: each document
@@ -290,6 +295,8 @@ def q_importance_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM rates r LEFT JOIN kept k ON k.source = r.source
     GROUP BY r.source, r.n_docs, r.tokens_total, r.keep_ppm
     """,
+    # enum-keyed aggs + rate join-back
+    bench=True, exchanges=7, order_sensitive=True,
 )
 def q_mixture_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token-budgeted mixture resampling: give every source an equal
@@ -375,6 +382,8 @@ SYS_STEP = 1000  # select one threshold per SYS_STEP chars of stratum mass
     FROM cum
     WHERE c // {SYS_STEP} > (c - n_chars) // {SYS_STEP}
     """,
+    # one stratum-window shuffle
+    bench=True, exchanges=1, order_sensitive=True,
 )
 def q_systematic_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Systematic (fixed-interval) weighted sampling per source

@@ -73,7 +73,11 @@ _ANN_ORACLE = f"""
     """
 
 
-@query("ann_cosine_topk", oracle=_ANN_ORACLE)
+@query(
+    "ann_cosine_topk",
+    oracle=_ANN_ORACLE,
+    bench=True, exchanges=3, order_sensitive=True,
+)
 def q_ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force cosine top-k: a fixed 10-probe set (vec_id % 50 = 0
     and vec_id < 500) against the full corpus, exact integer dot
@@ -203,7 +207,9 @@ GROUP BY query_id
 """
 
 
-@query("ann_lsh_bucketed", oracle=_E2_ORACLE)
+# exchanges: candidate-pair distinct + per-query agg; hashing is stateless
+# per row; + scan-width guards
+@query("ann_lsh_bucketed", oracle=_E2_ORACLE, bench=True, exchanges=6)
 def q_ann_lsh_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Euclidean-LSH bucketed approximate neighbor join — the bucketed
     random-projection family made DETERMINISTIC (round 12): each of the
@@ -598,7 +604,13 @@ def _purity_oracle() -> str:
     """
 
 
-@query("embedding_kmeans_purity", oracle=_purity_oracle())
+@query(
+    "embedding_kmeans_purity",
+    oracle=_purity_oracle(),
+    # (cluster,label) agg + majority agg; training runs driver-side on
+    # the bounded sorted sample
+    exchanges=3, order_sensitive=True,
+)
 def q_embedding_kmeans_purity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """K-means over embeddings vs the planted labels: per-cluster size
     and majority-label purity — the clustering-quality report of an
@@ -693,7 +705,13 @@ def _ivf_probe_oracle() -> str:
     """
 
 
-@query("ann_ivf_probe", oracle=_ivf_probe_oracle())
+@query(
+    "ann_ivf_probe",
+    oracle=_ivf_probe_oracle(),
+    # candidate-pair distinct + per-query top-k window; list assignment
+    # is stateless per row; + scan-width guards
+    bench=True, exchanges=6, order_sensitive=True,
+)
 def q_ann_ivf_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF approximate nearest neighbors — the classic scale path next
     to LSH: a coarse quantizer partitions the corpus into N_LISTS
@@ -809,7 +827,9 @@ def _wide_oracle() -> str:
     """
 
 
-@query("ann_ivf_wide", oracle=_wide_oracle())
+# exchanges: the mapInArrow assignment kernel is map-side, so only the final
+# 64-group aggregate + the scan-width guard
+@query("ann_ivf_wide", oracle=_wide_oracle(), bench=True, exchanges=2)
 def q_ann_ivf_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF list assignment at a REALISTIC nlist (k = {WIDE_K} >
     K_LITERAL_MAX): per-list population and distance mass for the
@@ -845,7 +865,7 @@ def q_ann_ivf_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # Same result contract as ann_cosine_topk, different physical plan.
-@query("ann_cosine_topk_vec", oracle=_ANN_ORACLE)
+@query("ann_cosine_topk_vec", oracle=_ANN_ORACLE, bench=True)
 def q_ann_cosine_topk_vec(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Vectorized twin of `ann_cosine_topk` (same oracle, same rows):
     the probe set is tiny, so its quantized matrix rides into an
@@ -1090,7 +1110,9 @@ def _pq_rerank_oracle() -> str:
     return "WITH " + ",\n".join(parts) + "," + body
 
 
-@query("ann_pq_rerank", oracle=_pq_rerank_oracle())
+# exchanges: ADC agg + shortlist/rerank windows over the checkpointed frame
+# and codes (the bounded LUT/codebook sides all broadcast)
+@query("ann_pq_rerank", oracle=_pq_rerank_oracle(), bench=True, exchanges=2)
 def q_ann_pq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Product-quantization ANN with exact re-rank — the memory-bound
     scale path beside LSH/IVF: vectors compress to PQ_M 4-bit codes
@@ -1241,6 +1263,7 @@ def _arrow_norm_batches(batches):
            CAST(SUM(norm2) AS BIGINT) AS sum_norm2
     FROM n GROUP BY label
     """,
+    bench=True, exchanges=1,  # Arrow kernel is map-side; one label agg
 )
 def q_arrow_batch_norm(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``mapInArrow`` vectorized kernel: per-vector exact squared norm
@@ -1304,6 +1327,7 @@ def q_arrow_batch_norm(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(MAX(qmax) AS BIGINT) AS q_max
     FROM per_vec GROUP BY label
     """,
+    bench=True, exchanges=1,
 )
 def q_embedding_int8_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-vector symmetric int8 quantization of the embedding column —
@@ -1444,7 +1468,12 @@ _SRP_ORACLE = f"""
     """
 
 
-@query("ann_srp_bucketed", oracle=_SRP_ORACLE)
+@query(
+    "ann_srp_bucketed",
+    oracle=_SRP_ORACLE,
+    # bucket equi-join + rerank window + scan-width guards
+    bench=True, exchanges=6, order_sensitive=True,
+)
 def q_ann_srp_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Banded sign-random-projection LSH ANN (Charikar SRP) with
     DETERMINISTIC hyperplanes: the ±1 weights derive from md5, so —
@@ -1580,7 +1609,12 @@ def _ivf_det_oracle() -> str:
     """
 
 
-@query("ann_ivf_deterministic", oracle=_ivf_det_oracle())
+@query(
+    "ann_ivf_deterministic",
+    oracle=_ivf_det_oracle(),
+    # per-query rerank window over the checkpointed assignment
+    bench=True, exchanges=1, order_sensitive=True,
+)
 def q_ann_ivf_deterministic(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF ANN with a DETERMINISTIC coarse quantizer — the
     seed-quantizer twin of the Lloyd-trained ``ann_ivf_probe`` (also
@@ -1704,6 +1738,8 @@ PQD_K = 16     # codebook entries per subspace (seed codebooks)
       FROM adc
     ) WHERE rank <= {TOP_K}
     """,
+    # encode agg + code argmin + ADC agg + top-k + scan-width guards
+    bench=True, exchanges=9, order_sensitive=True,
 )
 def q_ann_pq_deterministic(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Product quantization + ADC with DETERMINISTIC seed codebooks —
@@ -1810,6 +1846,9 @@ def q_ann_pq_deterministic(spark: SparkSession, sf_dir: str) -> DataFrame:
       ON e.query_id = s.query_id AND e.cand_id = s.cand_id
     GROUP BY 1
     """,
+    # exact pipeline + SRP bucket join/rerank + eval join/agg over
+    # probe-sized sides, with the scan-width guards
+    bench=True, exchanges=12, order_sensitive=True,
 )
 def q_ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall@{TOP_K} of the banded SRP-LSH index against exact
@@ -1942,6 +1981,11 @@ _BAND_CFG_DUCK = ", ".join(f"({b}, {r})" for b, r in SRP_BAND_SWEEP)
     FROM pred p
     LEFT JOIN st ON st.bands = p.bands AND st.band_bits = p.band_bits
     """,
+    # candidate-pair distinct + the two 5-row config aggs; the
+    # corpus-sized signature table only streams (truth/probe sides are
+    # waivered broadcasts), and the signature build + truth top-k run
+    # once at lineage-checkpoint time
+    bench=True, exchanges=3, order_sensitive=True,
 )
 def q_ann_band_recall_tradeoff(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The fused ANN index-tuning table: recall vs candidate cost vs
@@ -2142,6 +2186,9 @@ RRF_K = 60  # the standard Cormack/Clarke/Buettcher damping constant
       FROM fused
     ) WHERE fused_rank <= {TOP_K}
     """,
+    # 3 probe-sized hash exchanges (SRP and IVF reranks, fusion) + 4
+    # scan-width guards; IVF reads the checkpointed assignment
+    bench=True, exchanges=7, order_sensitive=True,
 )
 def q_ann_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Reciprocal-rank fusion (RRF, Cormack et al. SIGIR'09) of the
@@ -2515,9 +2562,14 @@ def q_embedding_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 q_embedding_power_iteration.__doc__ = _POWER_ITERATION_DOC
-query("embedding_power_iteration", oracle=_power_iteration_oracle())(
-    q_embedding_power_iteration
-)
+query(
+    "embedding_power_iteration",
+    oracle=_power_iteration_oracle(),
+    # the corpus-sized Gram agg runs eagerly at the bounded dim^2 collect
+    # and the integer iterations run driver-side, so the returned plan is
+    # a LocalRelation
+    bench=True, exchanges=0, order_sensitive=True,
+)(q_embedding_power_iteration)
 
 
 def q_embedding_power_iteration_relational(

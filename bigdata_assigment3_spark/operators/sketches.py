@@ -60,6 +60,9 @@ def _cms_hash_duck(depth_col: str, key: str) -> str:
            e.cms_estimate >= x.n AS never_undercounts
     FROM est e JOIN exact x USING (event_type)
     """,
+    # sketch built from checkpointed per-key counts: one corpus scan,
+    # keyspace-sized exchanges only
+    bench=True, exchanges=2,
 )
 def q_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Count-min sketch over the events stream — the heavy-hitter /
@@ -170,6 +173,7 @@ def _bloom_bit_duck(k: int, key: str) -> str:
            BOOL_AND(NOT is_member OR bloom_positive) AS no_false_negatives
     FROM verdicts GROUP BY 1
     """,
+    exchanges=1,  # ship-the-filter: zero probe-side joins
 )
 def q_bloom_filter_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Explicit Bloom filter as DATA: build an {BLOOM_M}-bit /
@@ -302,6 +306,8 @@ _DUCK_B, _DUCK_R = _hll_fields_duck("CAST(user_id AS VARCHAR)")
                END / x.n - 1) < 0.4 AS within_3sigma
     FROM state s JOIN exact x USING (event_type)
     """,
+    # map-side-combined register build + tiny broadcast probe joins
+    bench=True, exchanges=4,
 )
 def q_hll_registers_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Portable HyperLogLog per group — the cardinality sketch, with
@@ -402,6 +408,7 @@ def bitmap_word_mask(id_col: str = "user_id"):
     FROM events
     GROUP BY event_type
     """,
+    bench=True, exchanges=2,  # (type,word) bit_or agg + popcount agg
 )
 def q_bitmap_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXACT distinct counting via bitmap words — the
@@ -459,6 +466,9 @@ AUDIENCE_VALUE_MIN = 180.0  # high-value event threshold
     FROM s sa JOIN s sb ON sa.event_type < sb.event_type
     LEFT JOIN i ON i.type_a = sa.event_type AND i.type_b = sb.event_type
     """,
+    # one bitmap build shuffled 3 ways (sizes, pair-join sides) + matrix
+    # aggs, all word-compressed, no per-user rows
+    bench=True, exchanges=8,
 )
 def q_bitmap_audience_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXACT audience-overlap matrix (the 'did X and Y' cross-feature

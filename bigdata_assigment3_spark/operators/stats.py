@@ -66,6 +66,7 @@ _DEC_P = "decimal(12,2)"  # l_extendedprice
                     / NULLIF(SQRT(GREATEST(n * sxx - sx * sx, 0) * GREATEST(n * syy - sy * sy, 0)), 0)), 6) AS r2
     FROM s
     """,
+    bench=True, exchanges=1,
 )
 def q_regression_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-group OLS slope/intercept + Pearson correlation + R² of
@@ -126,6 +127,7 @@ def q_regression_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM events
     GROUP BY event_type
     """,
+    exchanges=1,
 )
 def q_grouped_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact interpolated quartiles + IQR per event type (the
@@ -165,6 +167,7 @@ def q_grouped_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT event_type, bucket AS mode_bucket, n AS n_mode
     FROM r WHERE rk = 1
     """,
+    exchanges=2,
 )
 def q_mode_bucket(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic per-group mode over value buckets.
@@ -198,6 +201,7 @@ def q_mode_bucket(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM orders
     GROUP BY 1
     """,
+    exchanges=1,
 )
 def q_histogram_totalprice(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fixed-width 10-bucket histogram of order totals (the
@@ -249,6 +253,7 @@ def q_histogram_totalprice(spark: SparkSession, sf_dir: str) -> DataFrame:
            ROUND(MAX(az), 4) AS max_abs_z
     FROM z GROUP BY event_type
     """,
+    exchanges=2,
 )
 def q_anomaly_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-type z-score outlier flagging: grouped mean/std from
@@ -316,6 +321,7 @@ def q_anomaly_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT n_name, CAST(MAX(open_now) AS BIGINT) AS peak_concurrent
     FROM cum GROUP BY n_name
     """,
+    bench=True, exchanges=1,
 )
 def q_max_concurrent_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sweep-line interval-overlap: peak number of simultaneously open
@@ -377,6 +383,7 @@ def q_max_concurrent_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
              AS ewma
     FROM l
     """,
+    bench=True, exchanges=1, order_sensitive=True,
 )
 def q_ewma_user_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Trailing exponentially-weighted moving average (decay 0.5 over
@@ -433,6 +440,7 @@ def q_ewma_user_value(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(COUNT(*) AS BIGINT) AS n_streaks
     FROM runs GROUP BY user_id
     """,
+    exchanges=2, order_sensitive=True,
 )
 def q_activity_streaks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gaps-and-islands: longest run of consecutive active days per
@@ -480,6 +488,7 @@ def q_activity_streaks(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM events e JOIN b USING (event_type)
     GROUP BY e.event_type, b.lo, b.hi
     """,
+    bench=True, exchanges=2,
 )
 def q_winsorize_values(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Winsorization (percentile clipping) — the outlier-capping step
@@ -527,6 +536,8 @@ def q_winsorize_values(spark: SparkSession, sf_dir: str) -> DataFrame:
     UNION ALL
     SELECT 'ALL', CAST(COUNT(DISTINCT user_id) AS BIGINT), TRUE FROM events
     """,
+    # audit query: deliberately computes the exact AND the sketch paths
+    exchanges=6,
 )
 def q_hll_distinct_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HyperLogLog sketch audit: per-type HLL estimates and their
@@ -585,6 +596,7 @@ def q_hll_distinct_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY n DESC, token
     LIMIT 5
     """,
+    exchanges=1,
 )
 def q_approx_topk_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Heavy hitters via ``approx_top_k`` — the sketched frequent-items
@@ -628,6 +640,7 @@ def q_approx_topk_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
            ROUND(MEDIAN(dev), 4) AS mad_price
     FROM d GROUP BY o_orderpriority
     """,
+    bench=True, exchanges=1,  # one group-key shuffle into the UDAF
 )
 def q_pandas_udaf_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Grouped-aggregate Pandas UDF (the UDAF surface): per-priority

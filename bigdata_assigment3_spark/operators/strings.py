@@ -38,6 +38,11 @@ from ..sources import load_table
              AS sum_close_lev
     FROM pairs GROUP BY p_brand
     """,
+    # the weighted distinct-name rewrite: all 5 exchanges run over the
+    # (brand, name, count) table (64 distinct names) instead of one
+    # row-level self-join, and the levenshtein count drops ~160x (7.9s ->
+    # ~1.0s at sf0.1)
+    bench=True, exchanges=5,
 )
 def q_fuzzy_part_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Blocked fuzzy self-match of part names: per-brand pair counts at
@@ -119,6 +124,7 @@ def q_fuzzy_part_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM part
     WHERE p_partkey % 37 = 0
     """,
+    exchanges=0,
 )
 def q_string_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scalar string-function battery (F11 beyond text_quality):
@@ -155,6 +161,7 @@ def q_string_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM documents
     WHERE doc_id % 11 = 0
     """,
+    exchanges=0,
 )
 def q_regexp_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Regexp scalar battery (F11's pattern-matching half):

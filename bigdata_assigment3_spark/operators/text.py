@@ -82,6 +82,7 @@ _STOP_IN = ", ".join(f"'{w}'" for w in _STOPWORDS)
            ROUND(CAST(LEN(REPLACE(text, ' ', '')) AS DOUBLE) / len(words), 6) AS avg_word_len
     FROM w WHERE len(words) > 0
     """,
+    bench=True, exchanges=0,  # pure projection
 )
 def q_text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document quality features: length, word count, stopword
@@ -556,6 +557,7 @@ def q_bpe_encode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
            ROUND(2.0 * tp / (2.0 * tp + fp + fn), 6) AS f1
     FROM c
     """,
+    exchanges=1,
 )
 def q_langid_pr_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Precision/recall/F1 sweep of the stopword-density language-ID
@@ -618,6 +620,7 @@ def q_langid_pr_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM chunk_s
     ORDER BY doc_id, chunk_idx
     """,
+    bench=True, exchanges=1,
 )
 def q_chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sliding-window document chunking (16-token chunks, 50% overlap)
@@ -666,6 +669,7 @@ ZIPF_TOP = 200
                  / COUNT(*), 6) AS zipf_intercept
     FROM pts
     """,
+    bench=True, exchanges=1,  # token count agg; rank over LIMIT-200
 )
 def q_token_zipf_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Zipf's-law fit over the corpus vocabulary: OLS slope of
@@ -749,6 +753,9 @@ def q_token_zipf_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT r.doc_id, d.lang, r.c AS predicted, (r.c = d.lang) AS correct, r.score_e4
     FROM ranked r JOIN documents d USING (doc_id) WHERE rnk = 1
     """,
+    # MapReduce-NB: wc/tokc/vocab aggs over the checkpointed (doc, word)
+    # counts + scoring joins; tokenize runs once
+    bench=True, exchanges=12, order_sensitive=True,
 )
 def q_langid_nb_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Trained language/domain classifier — the fastText-style
@@ -905,6 +912,11 @@ _LANGID_GRAM_BUCKET_DUCK = (
     SELECT r.doc_id, d.lang, r.c AS predicted, (r.c = d.lang) AS correct, r.score_e4
     FROM ranked r JOIN documents d USING (doc_id) WHERE rnk = 1
     """,
+    # model-build aggs over the checkpointed (doc, bucket) counts +
+    # doc-score agg + argmax window; inference joins the broadcast model
+    # (no vocab-keyed postings shuffle), and the corpus-sized explode+md5
+    # pass runs once at lineage-checkpoint time
+    bench=True, exchanges=10, order_sensitive=True,
 )
 def q_langid_char_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CCNet-style language identification on HASHED CHARACTER
@@ -1070,7 +1082,8 @@ def _html_extract_duck() -> str:
     """
 
 
-@query("html_text_extract", oracle=_html_extract_duck())
+# exchanges: pure codegen string projection
+@query("html_text_extract", oracle=_html_extract_duck(), bench=True, exchanges=0)
 def q_html_text_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HTML -> main-text extraction — the first stage of every web-
     scrape LLM corpus pipeline (trafilatura/jusText class), expressed
@@ -1212,6 +1225,12 @@ _BM25_QUERY_VALUES = ", ".join(f"({q}, '{t}')" for q, t in BM25_QUERY_REL)
       FROM scored
     ) WHERE rank <= {BM25_TOPN}
     """,
+    # dft term agg over the checkpointed postings + stats SinglePartition
+    # agg + (query_id, doc_id) score agg + per-query WindowGroupLimit
+    # exchange + the scan-width guard (fires only when the docs scan has
+    # fewer splits than cores); the vocab-pruned postings build runs once
+    # at lineage-checkpoint time
+    bench=True, exchanges=5, order_sensitive=True,
 )
 def q_bm25_topk_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BM25 keyword retrieval (Robertson/Sparck Jones) over a QUERY

@@ -51,6 +51,7 @@ _DEC_PCT = "decimal(6,4)"
     GROUP BY 1, 2, 3
     ORDER BY 1, 2, 3
     """,
+    bench=True, exchanges=4,
 )
 def q_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q7 volume shipping: revenue between a nation pair by year.
@@ -123,6 +124,9 @@ def q_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY o_year
     ORDER BY o_year
     """,
+    # static-plan count without forced broadcasts (the supplier/customer
+    # slices grow ~SF); AQE re-broadcasts the small sides at runtime
+    bench=True, exchanges=4,
 )
 def q_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q8 market share: NATION_6's slice of AMERICA PROMO volume.
@@ -207,6 +211,7 @@ def q_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE r.rn = 1 AND p.p_size < 10
     ORDER BY p.p_partkey
     """,
+    bench=True, exchanges=3,
 )
 def q_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q2 shape: cheapest supplier per part (correlated minimum).
@@ -264,6 +269,7 @@ def q_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY l.l_returnflag
     ORDER BY l.l_returnflag
     """,
+    exchanges=2,
 )
 def q_late_shipment_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q12 shape: late-shipment lines split by order priority.
@@ -317,6 +323,9 @@ def q_late_shipment_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY 1, 2
     ORDER BY supplier_cnt DESC, p.p_brand, p.p_type
     """,
+    # Q16/Q20 shape: distinct + anti-join + count-distinct chains, +2 for
+    # the data-relative (median) complaint cut
+    bench=True, exchanges=7,
 )
 def q_supplier_part_variety(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q16 shape: supplier variety per (brand, type) with a
@@ -378,6 +387,7 @@ def q_supplier_part_variety(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE s.s_suppkey IN (SELECT l_suppkey FROM qualifying)
     ORDER BY s.s_suppkey
     """,
+    exchanges=3,  # Q16/Q20 shape: distinct + anti-join + count-distinct chain
 )
 def q_excess_stock_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q20 shape: nested-IN supplier qualification (suppliers

@@ -38,6 +38,7 @@ BURST = 5
     GROUP BY 1
     HAVING COUNT(*) >= {MIN_SUPPORT}
     """,
+    bench=True, exchanges=3,
 )
 def q_frequent_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Market-basket frequent pairs (flagship; ref app/services.py:16-23).
@@ -101,6 +102,7 @@ def q_features_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(ROUND(SUM(CAST(value AS DECIMAL(18,2))), 3) AS DOUBLE) AS total_value
     FROM events
     """,
+    exchanges=2,
 )
 def q_event_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Global distinct/count/sum stats (ref app/services.py:31-32).
@@ -132,6 +134,7 @@ def q_event_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM events
     GROUP BY 1
     """,
+    bench=True,
 )
 def q_segment_derive(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Segment-string derivation (ref app/services.py:8-14 build_segment).
@@ -166,6 +169,7 @@ def q_segment_derive(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM events
     WHERE event_id = 123
     """,
+    exchanges=0,  # scan + pushed filter only
 )
 def q_point_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PK point lookup + projection (ref app/routers.py:105 get-by-id).
@@ -270,6 +274,7 @@ def q_upsert_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM w
     WHERE n > {BURST}
     """,
+    bench=True, exchanges=1,
 )
 def q_rate_limit_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tumbling-window rate limiting, batch form (ref app/rate_limit.py:31-53).
@@ -337,6 +342,7 @@ def q_request_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM events
     GROUP BY 1
     """,
+    bench=True,
 )
 def q_json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Semi-structured payload extraction (ref app/services.py:20 payload JSON).
@@ -439,6 +445,7 @@ def q_email_validation(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY support DESC, p1, p2, p3
     LIMIT 10
     """,
+    bench=True, exchanges=2,
 )
 def q_frequent_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Frequent 3-itemsets over order baskets — the Apriori step above
@@ -534,6 +541,7 @@ _SEC_CASES = [
        || 'cGxlLmNvbS9pc19yb290Ijp0cnVlfQ.dBjftJeZ4CVP-mB92K27uhbUJU1p1r_wW1gFWFOEjXk')
     ) t(case_id, result)
     """,
+    bench=True, exchanges=0,
 )
 def q_security_hash_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F12 complete: the reference's security layer — PBKDF2 password

@@ -3,7 +3,23 @@
 Each query is a function ``(spark, sf_dir) -> DataFrame`` registered
 together with (when SQL-expressible) its DuckDB oracle SQL, so
 ``__spark_entry__.queries()`` / ``oracle_sql()`` are generated from a
-single source of truth.
+single source of truth.  The registry is the only list of queries:
+every other set of queries is derived from these ``@query`` fields.
+
+- ``bench``: the query is in ``bench.py``'s headline set, timed in
+  registry order.
+- ``exchanges``: the exact ``plans.explain.shuffle_exchanges`` count of
+  the query's plan at sf0.01 in the test session.
+  ``tests/test_plans.py`` asserts equality, so a new exchange (a lost
+  broadcast, a re-partition regression) fails review instead of
+  shipping silently.  The count includes the scan-width guard's
+  round-robin exchange (``sources.load_table_parallel``) once per
+  guarded scan; the guard fires because the one-file test tables have
+  fewer files than cores.  A count that changes is a reviewed edit of
+  the decorator, named in CHANGES.md.
+- ``order_sensitive``: the query has a tie-break, ordering or placement
+  dependence worth re-running under a hostile partitioning;
+  ``tests/test_invariance.py`` runs each such query under it.
 """
 
 from __future__ import annotations
@@ -22,18 +38,27 @@ class QuerySpec:
     fn: QueryFn
     oracle: str | None  # DuckDB SQL over the pre-registered views; None => rows-only check
     doc: str
+    bench: bool = False
+    exchanges: int | None = None
+    order_sensitive: bool = False
 
 
 REGISTRY: dict[str, QuerySpec] = {}
 
 
-def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
-    """Register ``fn`` as query ``name`` with optional DuckDB oracle SQL."""
+def query(
+    name: str, oracle: str | None = None, *, bench: bool = False,
+    exchanges: int | None = None, order_sensitive: bool = False,
+) -> Callable[[QueryFn], QueryFn]:
+    """Register ``fn`` as query ``name`` with optional DuckDB oracle SQL
+    and the facts the module docstring lists."""
 
     def deco(fn: QueryFn) -> QueryFn:
         if name in REGISTRY:
             raise ValueError(f"duplicate query name: {name}")
-        REGISTRY[name] = QuerySpec(name=name, fn=fn, oracle=oracle, doc=fn.__doc__ or "")
+        REGISTRY[name] = QuerySpec(name=name, fn=fn, oracle=oracle, doc=fn.__doc__ or "",
+                                   bench=bench, exchanges=exchanges,
+                                   order_sensitive=order_sensitive)
         return fn
 
     return deco

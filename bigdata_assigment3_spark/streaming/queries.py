@@ -234,6 +234,7 @@ def q_stream_type_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM sessions GROUP BY user_id, session_id
     ) GROUP BY user_id
     """,
+    bench=True,
 )
 def q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sessionization: gap > 2h starts a new session (lag + cumulative
@@ -1251,6 +1252,7 @@ def q_stream_restart_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
      AND (h.valid_to IS NULL OR o.o_orderdate < h.valid_to)
     GROUP BY 1
     """,
+    exchanges=0,  # broadcast history into each micro-batch
 )
 def q_stream_pit_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming point-in-time enrichment — the feature-store lookup
@@ -1367,6 +1369,7 @@ def q_stream_corpus_backfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM events
     GROUP BY event_type
     """,
+    bench=True,
 )
 def q_stream_bitmap_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXACT streaming distinct-user counts with BITMAP state — the
@@ -1424,6 +1427,7 @@ def q_stream_bitmap_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     LEFT JOIN i ON i.window_start = sa.window_start
                AND i.type_a = sa.event_type AND i.type_b = sb.event_type
     """,
+    bench=True,
 )
 def q_stream_bitmap_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """WINDOWED audience overlap on streaming BITMAP state — the

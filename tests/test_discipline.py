@@ -547,3 +547,69 @@ def test_conf_write_gate_fires_on_bad_code():
         "bad.py:1", "bad.py:3", "bad.py:4", "bad.py:5", "bad.py:11", "bad.py:13",
         "bad.py:14",
     ]
+
+
+# --------------------------------------------------------------------
+# The registry is the only list of queries: a query's facts (bench
+# membership, exchange count, order sensitivity) are ``@query`` fields
+# (see the registry docstring), and every set of queries is derived
+# from them.  PRIORITY, the driver-window order, is the one hand-kept
+# list.
+
+REPO = PKG.parent
+MAX_LISTED_QUERIES = 20
+
+
+def _query_name_lists(src: str, rel: str, names: set[str]) -> list[str]:
+    """List, tuple, set and dict literals holding more than
+    MAX_LISTED_QUERIES registered query names, as ``rel:TARGET`` for a
+    literal assigned to a name and ``rel:LINE`` otherwise."""
+    tree = ast.parse(src)
+    targets = {}
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Assign):
+            for t in node.targets:
+                if isinstance(t, ast.Name):
+                    targets[id(node.value)] = t.id
+        elif isinstance(node, ast.AnnAssign) and isinstance(node.target, ast.Name):
+            targets[id(node.value)] = node.target.id
+    hits = []
+    for node in ast.walk(tree):
+        if isinstance(node, (ast.List, ast.Tuple, ast.Set)):
+            elts = node.elts
+        elif isinstance(node, ast.Dict):
+            elts = node.keys + node.values
+        else:
+            continue
+        listed = {e.value for e in elts
+                  if isinstance(e, ast.Constant) and e.value in names}
+        if len(listed) > MAX_LISTED_QUERIES:
+            hits.append(f"{rel}:{targets.get(id(node), node.lineno)}")
+    return hits
+
+
+def test_registry_is_the_only_query_list():
+    from bigdata_assigment3_spark.registry import REGISTRY, _load_all
+
+    _load_all()
+    names, hits = set(REGISTRY), []
+    for path in [REPO / "bench.py", *(REPO / "tests").glob("*.py"), *PKG.rglob("*.py")]:
+        hits += _query_name_lists(path.read_text(), str(path.relative_to(REPO)), names)
+    assert [h for h in hits if h != f"{PKG.name}/registry.py:PRIORITY"] == [], hits
+
+
+def test_query_list_gate_fires_on_bad_code():
+    names = [f"q{i}" for i in range(MAX_LISTED_QUERIES + 1)]
+    many, few = repr(names), repr(names[:-1])
+    bad = (
+        f"HEADLINE = {many}\n"
+        f"SHORT = {few}\n"
+        f"budgets: dict = {{{', '.join(f'{n!r}: 1' for n in names)}}}\n"
+        "def test_x():\n"
+        f"    for name in {repr(tuple(names))}:\n"
+        "        pass\n"
+        f"    return {{{many[1:-1]}, 'not_a_query'}}\n"
+    )
+    assert _query_name_lists(bad, "bad.py", set(names)) == [
+        "bad.py:HEADLINE", "bad.py:budgets", "bad.py:5", "bad.py:7",
+    ]

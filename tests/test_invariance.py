@@ -8,9 +8,10 @@ first/last without order, id assignment, float reduce order) that the
 fixed-parallelism oracle suite cannot see: DuckDB agreement at ONE
 partitioning proves nothing about another.
 
-The gate re-runs the tie-break- and ordering-sensitive query families
-(windows/ranks, top-k, distributed id assignment, sampling splits,
-argmin/argmax votes, iterative models, LSH banding) under a hostile
+The gate re-runs the tie-break- and ordering-sensitive queries, those
+registered with ``order_sensitive=True`` (windows/ranks, top-k,
+distributed id assignment, sampling splits, argmin/argmax votes, as-of
+joins, iterative models, LSH banding, state diffs), under a hostile
 configuration — 5 shuffle partitions and 256 KB scan splits — and
 requires the row multiset to be IDENTICAL to the default run.
 """
@@ -27,86 +28,14 @@ from tests.conftest import SF_ORACLE
 
 _load_all()
 
-# Families chosen for order/tie sensitivity, one representative each
-# where a family has twins (the twin shares the same plan shape).
-INVARIANCE_QUERIES = [
-    # windows / ranks / top-k (row_number ties, frame ordering)
-    "window_topk_orders",
-    "window_rank_kinds",
-    "lateral_topk_per_nation",
-    "top_revenue_orders",
-    "returned_item_ranking",
-    "curriculum_buckets",
-    "offset_pagination",
-    "ewma_user_value",
-    "activity_streaks",
-    # distributed id / layout (total-order rank across partitions)
-    "surrogate_keys",
-    "zorder_layout_stats",
-    # sampling membership (must be value-hash-, not placement-, based)
-    "train_test_split",
-    "stratified_sample",
-    "kfold_assignment",
-    "temperature_sample",
-    "mixture_token_budget",
-    # argmin/argmax vote peaks (cost ties across partitions)
-    "hough_peak",
-    "block_match_full",
-    "mstep_class_stats",
-    # as-of joins (nearest-event ties)
-    "asof_last_error",
-    "asof_nearest_event",
-    # iterative / model state (reduce order, init selection) — the
-    # round-8 full sweep caught pyspark.ml KMeans's partition-dependent
-    # k-means|| init in the two quantizer queries; both now train
-    # driver-side on a bounded sorted sample and stay in the list
-    "pagerank",
-    # integer power-iteration trajectory (reduce-order-sensitive if
-    # any step leaked float; must be bit-stable under repartitioning)
-    "embedding_power_iteration",
-    "kmeans_init",
-    "embedding_kmeans_purity",
-    "ann_ivf_probe",
-    # LSH banding + sparse similarity (collect_list ordering)
-    "dedup_minhash_lsh",
-    "lsh_band_tuning_audit",
-    "ann_cosine_topk",
-    "ann_srp_bucketed",
-    "ann_ivf_deterministic",
-    "ann_pq_deterministic",
-    # recall eval composes two rank-tie-sensitive pipelines
-    "ann_recall_eval",
-    # RRF fusion (float score ties broken by cand_id)
-    "ann_rrf_fusion",
-    # banding trade-off table (exact-topk ties + decimal miss-sum fold)
-    "ann_band_recall_tradeoff",
-    # hashed-trigram NB (float log-prob sums rounded before the argmax)
-    "langid_char_ngram",
-    # BM25 top-k (TakeOrdered ties on integer scores + doc_id)
-    "bm25_topk_docs",
-    # integer prefix-sum membership (stratum window order)
-    "systematic_weighted_sample",
-    # grid interval join (exact-once cell-ownership rule)
-    "interval_overlap_pairs",
-    # sweep-line running sum + lead; skyline RANGE-frame maxes
-    "interval_union_coverage",
-    "pareto_skyline_parts",
-    # one-step-Lloyd semantic dedup (LIMIT seed selection + rank ties)
-    "dedup_semantic_clustered",
-    # NB classifier (float log-prob sums rounded before the argmax)
-    "langid_nb_classifier",
-    # keep-longest survivor rule (rank ties on equal-length twins)
-    "dedup_keep_longest",
-    # state diffs (hash-wide row compares)
-    "snapshot_cdc_extract",
-    "incremental_view_maintenance",
-]
-
-# Opt-in full sweep: SPARK_GRAFT_INVARIANCE_ALL=1 runs EVERY registered
+# The queries declared ``@query(..., order_sensitive=True)``.  The
+# opt-in full sweep SPARK_GRAFT_INVARIANCE_ALL=1 runs EVERY registered
 # query through the gate (a per-round audit habit like the 10x scale
-# run), not just the curated order-sensitive families.
+# run), not just the order-sensitive ones.
 if os.environ.get("SPARK_GRAFT_INVARIANCE_ALL"):
-    INVARIANCE_QUERIES = sorted(REGISTRY)
+    GATED = sorted(REGISTRY)
+else:
+    GATED = [name for name, spec in REGISTRY.items() if spec.order_sensitive]
 
 _HOSTILE = {
     # initial shuffle parallelism off the default...
@@ -142,7 +71,7 @@ def _clear_memo_caches():
     session._MEMO.clear()
 
 
-@pytest.mark.parametrize("name", INVARIANCE_QUERIES)
+@pytest.mark.parametrize("name", GATED)
 def test_partition_invariance(spark, name):
     base = _rows(spark, name)
     assert base, f"{name}: empty result at oracle SF"
@@ -162,7 +91,7 @@ def test_hostile_conf_actually_changes_partitioning(spark):
     """Teeth check: the hostile configuration must really alter the
     physical partitioning, and a deliberately placement-dependent
     expression must be CAUGHT by the same compare the gate uses —
-    otherwise the 26 green results above could be a silent no-op."""
+    otherwise the green results above could be a silent no-op."""
     from pyspark.sql import functions as F
 
     from bigdata_assigment3_spark.sources import load_table
