@@ -4,6 +4,8 @@ prove the rows are produced by a plan that survives a 100x scale-up
 
 from __future__ import annotations
 
+import pytest
+
 from bigdata_assigment3_spark.plans.explain import formatted_plan, has_pushed_filter, plan_summary
 from bigdata_assigment3_spark.registry import REGISTRY, _load_all
 from tests.conftest import SF_ORACLE
@@ -34,24 +36,31 @@ def test_dim_joins_broadcast(spark):
         assert s["cartesian"] == 0, (name, s)
 
 
-def test_registered_plans_scale(spark):
-    """One walk over every registered query's plan.  No relational
-    query may degrade to CartesianProduct (broadcast nested-loop
-    against a tiny generator table is fine), none may plan an
-    unpartitioned total-order window over unbounded input (the
-    single-task sort that dies at 100 TB), and every query that
-    declares ``exchanges`` on its ``@query`` must plan exactly that
-    many shuffle exchanges: an extra Exchange is a new 100 TB cost
-    class (a lost broadcast, a re-partition regression) and fails
-    review rather than shipping silently.  A count that changes is an
-    edit of the query's decorator, named in CHANGES.md."""
+@pytest.fixture(scope="module")
+def registered_plans(spark):
+    """One walk over every registered query's plan, shared by the two
+    tests below so the 147 exchange counts do not rebuild the plans.
+    Maps name -> (plan_summary, global_windows, planned exchanges or
+    None when the spec declares no ``exchanges``)."""
     from bigdata_assigment3_spark.plans.explain import global_windows, shuffle_exchanges
 
-    assert spark.sparkContext.defaultParallelism > 1, (
-        "the pinned exchange counts include the scan-width guard's "
-        "round-robin exchanges, which fire only when a one-file test "
-        "table has fewer files than cores"
-    )
+    walked = {}
+    for name, spec in REGISTRY.items():
+        if name in ("hmrf_em_segmentation",
+                    "stream_window_counts", "stream_type_totals",
+                    "multimodal_decode", "multimodal_features", "binary_dir_scan"):
+            continue  # iterative/streaming/UDF paths checked elsewhere
+        df = spec.fn(spark, SF_ORACLE)
+        got = None if spec.exchanges is None else shuffle_exchanges(df)
+        walked[name] = (plan_summary(df), global_windows(df), got)
+    return walked
+
+
+def test_no_cartesian_anywhere(registered_plans):
+    """No relational query may degrade to CartesianProduct (broadcast
+    nested-loop against a tiny generator table is fine), and none may
+    plan an unpartitioned total-order window over unbounded input (the
+    single-task sort that dies at 100 TB)."""
     # Global windows over provably bounded inputs (fine at any scale):
     # otsu_threshold scans a <=256-row grayscale histogram;
     # largest_component_3d ranks a LIMIT-10 result;
@@ -59,20 +68,28 @@ def test_registered_plans_scale(spark):
     # ann_pq_deterministic densely ranks the LIMIT-16 seed codebook.
     bounded_window_ok = {"otsu_threshold", "largest_component_3d", "token_zipf_slope",
                          "ann_pq_deterministic"}
-    wrong_exchanges = {}
-    for name, spec in REGISTRY.items():
-        if name in ("hmrf_em_segmentation",
-                    "stream_window_counts", "stream_type_totals",
-                    "multimodal_decode", "multimodal_features", "binary_dir_scan"):
-            continue  # iterative/streaming/UDF paths checked elsewhere
-        df = spec.fn(spark, SF_ORACLE)
-        s = plan_summary(df)
+    for name, (s, windows, _) in registered_plans.items():
         assert s["cartesian"] == 0, (name, s)
         if name not in bounded_window_ok:
-            assert global_windows(df) == 0, name
-        got = None if spec.exchanges is None else shuffle_exchanges(df)
-        if got != spec.exchanges:
-            wrong_exchanges[name] = (got, spec.exchanges)
+            assert windows == 0, name
+
+
+def test_shuffle_exchange_budgets(spark, registered_plans):
+    """Every query that declares ``exchanges`` on its ``@query`` must
+    plan exactly that many shuffle exchanges: an extra Exchange is a
+    new 100 TB cost class (a lost broadcast, a re-partition regression)
+    and fails review rather than shipping silently.  A count that
+    changes is an edit of the query's decorator, named in CHANGES.md."""
+    assert spark.sparkContext.defaultParallelism > 1, (
+        "the pinned exchange counts include the scan-width guard's "
+        "round-robin exchanges, which fire only when a one-file test "
+        "table has fewer files than cores"
+    )
+    wrong_exchanges = {
+        name: (got, REGISTRY[name].exchanges)
+        for name, (_, _, got) in registered_plans.items()
+        if got != REGISTRY[name].exchanges
+    }
     assert wrong_exchanges == {}, wrong_exchanges  # name: (planned, declared)
 
 
