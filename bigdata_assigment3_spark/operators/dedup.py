@@ -651,23 +651,17 @@ def q_dedup_minhash_estimate_audit(spark: SparkSession, sf_dir: str) -> DataFram
     report that tells you whether J=8 is enough before trusting the
     sketch at full scale.
 
-    Reuses the memoized verified-pair table for the exact side (no
-    recomputation) and rebuilds the J-wide signatures with the same
-    one-shuffle array plan as the LSH query; the agreement count is a
-    zip_with fold inside codegen.  The candidate-pair table grows with
+    Reuses the memoized verified-pair table for the exact side and the
+    memoized J-wide signatures (``_signature_df``, shared with the
+    band-tuning audit), so nothing is recomputed; the agreement count
+    is a zip_with fold inside codegen.  The candidate-pair table grows with
     the corpus dup rate (template-spam corpora are exactly where dedup
     matters), so it is NOT broadcast — the doc_id equi-joins shuffle on
     the key and AQE downgrades to broadcast only when the pair set is
     actually small.
     """
     pairs = q_dedup_minhash_lsh(spark, sf_dir)
-    sh_by_doc = _shingles_df(spark, sf_dir).groupBy("doc_id").agg(
-        F.collect_list("sh").alias("shs")
-    )
-    sig = sh_by_doc.select(
-        "doc_id",
-        F.expr(MINHASH_SIG_EXPR).alias("mh"),
-    )
+    sig = _signature_df(spark, sf_dir)
     siga = sig.select(F.col("doc_id").alias("doc_a"), F.col("mh").alias("mh_a"))
     sigb = sig.select(F.col("doc_id").alias("doc_b"), F.col("mh").alias("mh_b"))
     n_agree = F.expr(

@@ -1,25 +1,30 @@
-"""Multimodal-column operators: opaque binary payloads + typed
-metadata, decode / feature-extract as Arrow-batched pandas UDFs over
-``mapInPandas`` (BASELINE.json north star; SURVEY S7/S8/U1-U4).
+"""Multimodal-column operators: opaque binary payloads with typed
+metadata, decoded and feature-extracted on Spark (BASELINE.json north
+star; SURVEY S7/S8/U1-U4).
 
 The container has no image/audio codec LIBRARIES, but the codecs are
 hand-rolled from their published specs and bit-exact under value
 oracles: P5 PGM, PNG (zlib IDAT + all five scanline filters,
 functions/png.py), baseline JPEG (Annex-K tables + Huffman + DCT,
 functions/jpeg.py), RIFF/WAVE PCM16, Y4M, DICOM Part-10, NIfTI-1,
-.npy.  Only containers genuinely out of scope (MP4/H.264, progressive
-or chroma-subsampled JPEG) keep a clearly-marked deterministic STUB
-(_fake_decode) — and even there the Spark-side plumbing is real and
-tested: binaryFile directory scan with glob
-filter + path exclusion + ordering (the reference's folder scan,
-hough_heart_detector.py:227-236), BinaryType columns with metadata
-structs, Arrow batch iteration, and partition-parallel feature
-extraction.  Swapping _fake_decode for cv2/pydicom is a one-function
-change (ref hough_heart_detector.py:34-84 raster/DICOM decode).
+GIF, .npy.  Their fixtures are staged as files and decoded by Python
+kernels over ``binaryFile`` rows (``sources/files.py``), since a codec
+is what Spark cannot express.
 
-Scale notes: binaryFile splits by file; mapInPandas streams Arrow
-batches so a 10 TB image corpus never materializes per-executor; the
-feature aggregation is an ordinary groupBy afterwards.
+Six queries model a codec pipeline's shapes without a codec: decode
+metadata (``multimodal_decode``), per-payload features
+(``multimodal_features``), resize geometry (``multimodal_resize``),
+1 -> N frame sampling (``multimodal_frame_sample``), perceptual-hash
+dedup (``image_phash_dedup``) and windowed audio energy
+(``audio_frame_energy``).  Their payload is a document's text as
+UTF-8 bytes, and the geometry, pixels, frames and samples are md5
+digest bytes of it.  That is Spark expression arithmetic (``md5``,
+``conv``, ``sequence``/``transform``/``aggregate``), so these queries never
+leave the JVM, and each oracle replays the same digest math in DuckDB.
+
+Scale notes: binaryFile splits by file; the decode kernels stream
+Arrow batches so a 10 TB image corpus never materializes per
+executor; feature aggregation is an ordinary groupBy afterwards.
 """
 
 from __future__ import annotations
@@ -43,14 +48,6 @@ import pandas as pd
 import pyarrow as pa
 from pyarrow import ipc
 from pyspark.sql import DataFrame, SparkSession, functions as F
-from pyspark.sql.types import (
-    BinaryType,
-    IntegerType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
 
 from ..functions.avro import avro_ocf_bytes, read_avro_ocf
 from ..functions.gif import gif_decode_gray, gif_encode_gray
@@ -58,18 +55,9 @@ from ..functions.jpeg import QTABLE_Q100, SIG44, jpeg_decode_gray, jpeg_encode_g
 from ..functions.png import png_decode, png_encode
 from ..functions.protowire import _varint, decode_stream, encode_doc, fixed64_field
 from ..registry import query
-from ..session import staged_fixture
+from ..session import lineage_checkpoint, staged_fixture
 from ..sources import load_table
 from ..sources.files import decode_files, staged_files, write_shards
-
-
-def _fake_decode(payload: bytes) -> tuple[int, int, int]:
-    """STUB decoder: derives deterministic (height, width, channels)
-    from the payload hash.  Replace with cv2.imdecode / pydicom
-    (ref hough_heart_detector.py:36-80) in a codec-equipped image.
-    """
-    h = hashlib.md5(payload).digest()
-    return 16 + h[0] % 48, 16 + h[1] % 48, (1, 3)[h[2] % 2]
 
 
 def _file_id(path: str) -> int:
@@ -97,16 +85,57 @@ _IMAGE_STATS = (
 )
 
 
-_DECODE_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType()),
-        StructField("n_bytes", LongType()),
-        StructField("height", IntegerType()),
-        StructField("width", IntegerType()),
-        StructField("channels", IntegerType()),
-        StructField("content_hash", StringType()),
-    ]
-)
+def _payloads(spark: SparkSession, sf_dir: str, *cols: str) -> DataFrame:
+    """``documents`` with each text as an opaque BinaryType ``payload``
+    (its UTF-8 bytes), the stand-in for image, video or audio bytes."""
+    return load_table(spark, sf_dir, "documents").select(
+        "doc_id", *cols, F.encode(F.coalesce(F.col("text"), F.lit("")), "utf-8").alias("payload")
+    )
+
+
+def _digest_bytes(md5_hex: str) -> str:
+    """SQL for the 16 bytes of the md5 digest whose hex string is
+    ``md5_hex``, as an ARRAY<INT>: the oracles' ``('0x' ||
+    substr(md5(...), 2k+1, 2))::BIGINT`` for every k at once."""
+    return f"transform(regexp_extract_all({md5_hex}, '(..)', 1), x -> CAST(conv(x, 16, 10) AS INT))"
+
+
+def _rolling_md5(g: str) -> str:
+    """SQL for the hex md5 of ``payload || UTF-8 decimal string of g``,
+    the g-th rolling digest of a payload."""
+    return f"md5(concat(payload, CAST(CAST({g} AS STRING) AS BINARY)))"
+
+
+def _byte_hist_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    """mapInArrow kernel: each payload's distinct byte count and top
+    byte frequency, from one bincount over (row, byte) per batch."""
+    for batch in batches:
+        raw = batch.column(batch.schema.get_field_index("payload")).to_pylist()
+        lens = np.fromiter(map(len, raw), np.int64, len(raw))
+        rows = np.repeat(np.arange(len(raw)), lens)
+        flat = np.frombuffer(b"".join(raw), np.uint8)
+        hist = np.bincount(rows * 256 + flat, minlength=256 * len(raw)).reshape(len(raw), 256)
+        yield pa.RecordBatch.from_arrays(
+            [
+                batch.column(batch.schema.get_field_index("source")),
+                pa.array((hist > 0).sum(axis=1), pa.int32()),
+                pa.array(hist.max(axis=1, initial=0), pa.int32()),
+            ],
+            names=["source", "n_distinct_bytes", "max_byte_freq"],
+        )
+
+
+def _stub_geometry(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, payload, md5, height, width, channels): the stub decode
+    of each payload, from md5 digest bytes 0-2."""
+    docs = _payloads(spark, sf_dir).select("doc_id", "payload", F.md5("payload").alias("md5"))
+    docs = docs.select("doc_id", "payload", "md5", F.expr(_digest_bytes("md5")).alias("d"))
+    return docs.select(
+        "doc_id", "payload", "md5",
+        (16 + F.col("d")[0] % 48).alias("height"),
+        (16 + F.col("d")[1] % 48).alias("width"),
+        F.when(F.col("d")[2] % 2 == 0, 1).otherwise(3).alias("channels"),
+    )
 
 
 @query(
@@ -126,44 +155,26 @@ _DECODE_SCHEMA = StructType(
            substr(md5(COALESCE(text, '')), 1, 16) AS content_hash
     FROM documents
     """,
+    exchanges=0,
 )
 def q_multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Binary ingestion + batch decode: documents' text re-encoded as
-    an opaque BinaryType payload (stand-in for image bytes), decoded
-    per Arrow batch via mapInPandas into typed metadata (SURVEY S8/U1).
-
-    Value-oracled: the stub decoder is deterministic md5 arithmetic,
-    so the whole mapInPandas pipeline — binary encode, Arrow batch
-    iteration, per-payload decode, schema — is checked bit-for-bit
-    against a declarative replay, proving the UDF plumbing (not just
-    the stub) preserves every row and byte.
-    """
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", F.encode(F.coalesce(F.col("text"), F.lit("")), "utf-8").cast(BinaryType()).alias("payload")
+    """Binary ingestion + decode metadata: documents' text re-encoded as
+    an opaque BinaryType payload (stand-in for image bytes), "decoded"
+    into typed metadata (SURVEY S8/U1): byte size, the stub geometry
+    from md5 digest bytes, and a content hash.  Every column is a
+    Spark expression, and the oracle replays the same digest math."""
+    g = _stub_geometry(spark, sf_dir)
+    return g.select(
+        "doc_id",
+        F.length("payload").cast("bigint").alias("n_bytes"),
+        "height", "width", "channels",
+        F.substring("md5", 1, 16).alias("content_hash"),
     )
-
-    def decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            metas = [_fake_decode(bytes(p)) for p in pdf["payload"]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "n_bytes": [len(bytes(p)) for p in pdf["payload"]],
-                    "height": [m[0] for m in metas],
-                    "width": [m[1] for m in metas],
-                    "channels": [m[2] for m in metas],
-                    "content_hash": [
-                        hashlib.md5(bytes(p)).hexdigest()[:16] for p in pdf["payload"]
-                    ],
-                }
-            )
-
-    return docs.mapInPandas(decode_batches, _DECODE_SCHEMA)
 
 
 @query(
     "multimodal_features",
-    # byte-exact declarative replay of the UDF's byte histogram: the
+    # byte-exact declarative replay of the kernel's byte histogram: the
     # payload's hex dump unnested into 2-char chunks IS the byte
     # sequence, engine-independent for any encoding
     oracle="""
@@ -192,41 +203,19 @@ def q_multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
            MAX(max_byte_freq) AS max_byte_freq
     FROM per_doc GROUP BY source
     """,
+    exchanges=1,
 )
 def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-payload feature extraction (byte-histogram entropy-ish
-    stats, the stand-in for resize/embed), then relational
-    aggregation per source — UDF only where SQL can't reach, agg
-    stays JVM-side (SURVEY U2-U4 shape).
+    """Per-payload feature extraction (byte-histogram stats, the
+    stand-in for resize/embed), then relational aggregation per source
+    (SURVEY U2-U4 shape).
 
-    Value-oracled via a hex-dump byte-histogram replay in DuckDB, so
-    the Arrow-batched histogram kernel is checked end to end."""
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", "source", F.encode(F.coalesce(F.col("text"), F.lit("")), "utf-8").cast(BinaryType()).alias("payload")
+    Value-oracled via a hex-dump byte-histogram replay in DuckDB."""
+    payloads = _payloads(spark, sf_dir, "source").select("source", "payload")
+    # Python kernel: one numpy bincount per batch; a sort + fold HOF ran 3x slower at sf0.1
+    f = payloads.mapInArrow(
+        _byte_hist_batches, "source STRING, n_distinct_bytes INT, max_byte_freq INT"
     )
-    schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("source", StringType()),
-            StructField("n_distinct_bytes", IntegerType()),
-            StructField("max_byte_freq", IntegerType()),
-        ]
-    )
-
-    def feats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, source, p in zip(pdf["doc_id"], pdf["source"], pdf["payload"]):
-                b = bytes(p)
-                counts: dict[int, int] = {}
-                for ch in b:
-                    counts[ch] = counts.get(ch, 0) + 1
-                rows.append(
-                    (int(doc_id), source, len(counts), max(counts.values()) if counts else 0)
-                )
-            yield pd.DataFrame(rows, columns=["doc_id", "source", "n_distinct_bytes", "max_byte_freq"])
-
-    f = docs.mapInPandas(feats, schema)
     return f.groupBy("source").agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.round(F.avg("n_distinct_bytes"), 4).alias("avg_distinct_bytes"),
@@ -275,8 +264,8 @@ def q_binary_dir_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "multimodal_resize",
-    # The stub decode is deterministic md5 math, so the pandas-UDF
-    # pipeline is fully oracle-checkable: the SQL replays the stub.
+    # The stub decode is deterministic md5 math, so the SQL replays it
+    # exactly.
     oracle="""
     WITH m AS (
       SELECT doc_id,
@@ -293,50 +282,27 @@ def q_binary_dir_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
                 * GREATEST(1, w * 32 // GREATEST(h, w)) * c AS BIGINT) AS out_bytes
     FROM m
     """,
+    exchanges=0,
 )
 def q_multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Resize plumbing (the reference's downscale-to-max_side,
-    hough_heart_detector.py:249-253): decode metadata, compute the
-    aspect-preserving target geometry with integer math, and emit the
-    resized payload size.  The pixel resample itself is the
-    clearly-marked stub (no codecs in this container) — swapping in
-    cv2.resize touches only the inner function; schema, batching and
-    partitioning are the real, tested surface."""
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", F.encode(F.coalesce(F.col("text"), F.lit("")), "utf-8").cast(BinaryType()).alias("payload")
-    )
-    schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("height", IntegerType()),
-            StructField("width", IntegerType()),
-            StructField("out_h", IntegerType()),
-            StructField("out_w", IntegerType()),
-            StructField("out_bytes", LongType()),
-        ]
-    )
+    """Resize geometry (the reference's downscale-to-max_side,
+    hough_heart_detector.py:249-253): the stub decode's metadata, the
+    aspect-preserving target geometry in integer math, and the byte
+    size of the resized raster."""
     max_side = 32
-
-    def resize_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        def fake_resize(payload: bytes, oh: int, ow: int, c: int) -> int:
-            # STUB: cv2.resize(img, (ow, oh)) would go here; the fake
-            # returns the exact byte size the real one would produce.
-            return oh * ow * c
-
-        for pdf in batches:
-            rows = []
-            for doc_id, p in zip(pdf["doc_id"], pdf["payload"]):
-                b = bytes(p)
-                h, w, c = _fake_decode(b)
-                scale_num, scale_den = max_side, max(h, w)
-                oh = max(1, h * scale_num // scale_den)
-                ow = max(1, w * scale_num // scale_den)
-                rows.append((int(doc_id), h, w, oh, ow, fake_resize(b, oh, ow, c)))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "height", "width", "out_h", "out_w", "out_bytes"]
-            )
-
-    return docs.mapInPandas(resize_batches, schema)
+    g = _stub_geometry(spark, sf_dir)
+    scaled = g.select(
+        "doc_id", "height", "width", "channels",
+        *[
+            F.expr(f"greatest(1, {side} * {max_side} div greatest(height, width))")
+            .cast("int").alias(out)
+            for side, out in (("height", "out_h"), ("width", "out_w"))
+        ],
+    )
+    return scaled.select(
+        "doc_id", "height", "width", "out_h", "out_w",
+        (F.col("out_h") * F.col("out_w") * F.col("channels")).cast("bigint").alias("out_bytes"),
+    )
 
 
 @query(
@@ -355,47 +321,31 @@ def q_multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST((n_eff + 3) // 4 AS BIGINT) AS n_distinct_frames
     FROM m
     """,
+    exchanges=0,
 )
 def q_multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Frame sampling plumbing (the reference's VideoCapture loop with
+    """Frame sampling (the reference's VideoCapture loop with
     max_frames, motion_codec.py:11-29): each payload plays a 'video'
-    whose frame count derives from its length; every k-th frame is
-    emitted as its own row — the UDTF shape (one input row -> N
-    output rows) that video pipelines need, with the frame decode
-    stubbed to a deterministic hash.  Downstream per-video stats are
-    an ordinary JVM-side aggregation."""
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", F.encode(F.coalesce(F.col("text"), F.lit("")), "utf-8").cast(BinaryType()).alias("payload")
-    )
-    schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("frame_idx", IntegerType()),
-            StructField("frame_hash", StringType()),
-        ]
-    )
+    whose frame count derives from its length, and every
+    ``stride``-th frame up to ``max_frames`` is sampled and hashed as
+    md5(payload || 4-byte big-endian frame index).  The frames are a
+    per-row array, so the per-video stats need no explode and no
+    regroup."""
     stride, max_frames = 4, 16
-
-    def sample_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out_id, out_idx, out_hash = [], [], []
-            for doc_id, p in zip(pdf["doc_id"], pdf["payload"]):
-                b = bytes(p)
-                n_frames = 8 + len(b) % 56
-                for i in range(0, min(n_frames, max_frames * stride), stride):
-                    # STUB: cap.read() + decode would land here.
-                    out_id.append(int(doc_id))
-                    out_idx.append(i)
-                    out_hash.append(hashlib.md5(b + i.to_bytes(4, "big")).hexdigest()[:12])
-            yield pd.DataFrame(
-                {"doc_id": out_id, "frame_idx": out_idx, "frame_hash": out_hash}
-            )
-
-    frames = docs.mapInPandas(sample_batches, schema)
-    return frames.groupBy("doc_id").agg(
-        F.count(F.lit(1)).alias("n_sampled"),
-        F.max("frame_idx").alias("last_frame"),
-        F.countDistinct("frame_hash").cast("bigint").alias("n_distinct_frames"),
+    docs = _payloads(spark, sf_dir).select(
+        "doc_id", "payload",
+        F.expr(f"(least(8 + length(payload) % 56, {max_frames * stride}) + {stride - 1})"
+               f" div {stride}").alias("n_sampled"),
+    )
+    frame_hashes = F.expr(
+        "transform(sequence(0, n_sampled - 1), k -> substr(md5(concat(payload,"
+        f" unhex(lpad(hex(k * {stride}), 8, '0')))), 1, 12))"
+    )
+    return docs.select(
+        "doc_id",
+        "n_sampled",
+        ((F.col("n_sampled") - 1) * stride).cast("int").alias("last_frame"),
+        F.size(F.array_distinct(frame_hashes)).cast("bigint").alias("n_distinct_frames"),
     )
 
 
@@ -452,18 +402,17 @@ def q_multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE bit_count(xor(x.b0, y.b0)) + bit_count(xor(x.b1, y.b1))
         + bit_count(xor(x.b2, y.b2)) + bit_count(xor(x.b3, y.b3)) <= 6
     """,
-    bench=True,
+    bench=True, exchanges=1,
 )
 def q_image_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Perceptual-hash near-duplicate image detection: decode each
-    payload to an 8x8 grayscale thumbnail (STUB — cv2 decode+resize
-    would land here; the fake derives pixels from payload digests),
-    compute the average-hash (bit = pixel >= image mean, in exact
-    integer form ``p * 64 >= total``) inside the UDF, then find
-    near-duplicates relationally: split the 64-bit hash into 4
-    16-bit bands, bucket-join on band equality (pigeonhole: any pair
-    within hamming distance 3 shares an identical band), and verify
-    candidates with a popcount hamming distance <= 6.
+    """Perceptual-hash near-duplicate image detection: each payload's
+    8x8 grayscale thumbnail is the bytes of 4 rolling md5 digests (the
+    stub for a decode + resize), its average-hash bit is pixel >= image
+    mean in exact integer form ``p * 64 >= total``, and near-duplicates
+    are found relationally: split the 64-bit hash into 4 16-bit bands,
+    bucket-join on band equality (pigeonhole: any pair within hamming
+    distance 3 shares an identical band), and verify candidates with a
+    popcount hamming distance <= 6.
 
     Ground truth is planted: every 10th document also emits a
     re-encoded variant (3 pixels perturbed), so the pipeline must
@@ -477,63 +426,34 @@ def q_image_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate pairs — the same plan pHash dedup runs over a billion
     images.
     """
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", F.encode(F.coalesce(F.col("text"), F.lit("")), "utf-8").cast(BinaryType()).alias("payload")
+    n_bands = 4
+    px = F.expr(f"flatten(transform(sequence(0, {n_bands - 1}), g -> {_digest_bytes(_rolling_md5('g'))}))")
+    thumbs = _payloads(spark, sf_dir).select("doc_id", px.alias("px")).select(
+        "px",
+        F.explode(F.expr("IF(doc_id % 10 = 0, array(doc_id, -(doc_id + 1)), array(doc_id))"))
+        .alias("img_id"),
     )
-    schema = StructType(
-        [
-            StructField("img_id", LongType()),
-            StructField("b0", LongType()),
-            StructField("b1", LongType()),
-            StructField("b2", LongType()),
-            StructField("b3", LongType()),
-        ]
+    # the planted variant of the same image: 3 pixels shifted by +8
+    thumbs = thumbs.select(
+        "img_id",
+        F.expr("IF(img_id < 0, transform(px, (v, j) -> IF(j % 29 = 1, (v + 8) % 256, v)), px)")
+        .alias("px"),
     )
-
-    def phash_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        def thumb(payload: bytes) -> list[int]:
-            # STUB decode+resize: cv2.imdecode + cv2.resize((8, 8))
-            # would land here; the fake derives the 64 pixels from
-            # rolling md5 digests of the payload.
-            return [
-                hashlib.md5(payload + str(j // 16).encode()).digest()[j % 16]
-                for j in range(64)
-            ]
-
-        def bands(px: list[int]) -> tuple[int, int, int, int]:
-            tot = sum(px)
-            bits = [1 if p * 64 >= tot else 0 for p in px]
-            return tuple(
-                sum(bits[16 * b + k] << k for k in range(16)) for b in range(4)
-            )
-
-        for pdf in batches:
-            rows = []
-            for doc_id, p in zip(pdf["doc_id"], pdf["payload"]):
-                b = bytes(p)
-                px = thumb(b)
-                rows.append((int(doc_id),) + bands(px))
-                if doc_id % 10 == 0:
-                    # planted near-dup: the re-encoded variant of the
-                    # same image (3 pixels shifted by +8).
-                    pv = [
-                        (v + 8) % 256 if j % 29 == 1 else v
-                        for j, v in enumerate(px)
-                    ]
-                    rows.append((-(int(doc_id) + 1),) + bands(pv))
-            yield pd.DataFrame(rows, columns=["img_id", "b0", "b1", "b2", "b3"])
-
-    bw = docs.mapInPandas(phash_batches, schema)
-    # Materialize the decode+hash pass ONCE (round 15): `bw` feeds the
-    # band explode twice (join build/probe) and the verify step twice
-    # (x and y), and the verify-side exchanges (img keys) can never
-    # reuse the band-side exchanges — so without the checkpoint the
-    # opaque Python pass over every payload ran up to 4x.  This is the
-    # §8 "decode once, move decisions on small rows" rule: at a
-    # billion images the decode is the dominant cost and must be a
-    # single pass; the checkpoint is 5 BIGINTs per image.
-    from ..session import lineage_checkpoint
-
+    thumbs = thumbs.select("img_id", "px", F.expr("aggregate(px, 0, (t, v) -> t + v)").alias("tot"))
+    bw = thumbs.select(
+        "img_id",
+        *[
+            F.expr(f"aggregate(sequence(0, 15), 0L,"
+                   f" (acc, k) -> acc | IF(px[{16 * b} + k] * 64 >= tot, shiftleft(1L, k), 0L))")
+            .alias(f"b{b}")
+            for b in range(n_bands)
+        ],
+    )
+    # Materialize the hash pass once: `bw` feeds the band explode twice
+    # (join build/probe) and the verify step twice (x and y), and the
+    # verify-side exchanges (img keys) can never reuse the band-side
+    # ones, so without the checkpoint the digest pass over every
+    # payload runs up to 4x.  The checkpoint is 5 BIGINTs per image.
     bw = lineage_checkpoint(bw, big=True)
     bands_long = bw.select(
         "img_id",
@@ -541,7 +461,7 @@ def q_image_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.array(
                 *[
                     F.struct(F.lit(i).alias("band_idx"), F.col(f"b{i}").alias("band_val"))
-                    for i in range(4)
+                    for i in range(n_bands)
                 ]
             )
         ).alias("s"),
@@ -561,7 +481,7 @@ def q_image_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     x = bw.select(*[F.col(c).alias(f"x_{c}") for c in bw.columns])
     y = bw.select(*[F.col(c).alias(f"y_{c}") for c in bw.columns])
     hamming = sum(
-        F.expr(f"bit_count(x_b{i} ^ y_b{i})") for i in range(4)
+        F.expr(f"bit_count(x_b{i} ^ y_b{i})") for i in range(n_bands)
     ).cast("bigint")
     return (
         cand.join(x, cand.img_a == x.x_img_id)
@@ -594,58 +514,40 @@ def q_image_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(MAX(win_energy) AS BIGINT) AS peak_window_energy
     FROM win GROUP BY doc_id
     """,
+    exchanges=0,
 )
 def q_audio_frame_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Audio-column plumbing (the third modality next to image and
-    video): each payload plays a waveform whose samples derive from
-    the payload hash (STUB — soundfile/librosa decode would replace
-    the inner function), windowed into 32-sample frames whose energy
-    is computed in the UDF; per-track aggregation stays JVM-side.
-    The shape is the standard audio featurizer: 1 track -> N frame
-    rows -> per-track stats (VAD, loudness normalization, silence
-    trimming all start exactly like this).
+    """Audio-column shape (the third modality next to image and
+    video): each payload plays a waveform whose samples are the bytes
+    of rolling md5 digests of it, minus 128 (the stub for a
+    soundfile/librosa decode), framed into 32-sample windows whose
+    energy is summed per track.  The standard audio featurizer (VAD,
+    loudness normalization, silence trimming) starts exactly like
+    this: 1 track -> N frames -> per-track stats.
 
-    Scale shape: mapInPandas streams Arrow batches (a 10 TB audio
-    corpus never materializes per-executor); the frame rows are
-    narrow (doc_id, win_idx, energy) and aggregate with map-side
-    combine."""
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", F.encode(F.coalesce(F.col("text"), F.lit("")), "utf-8").cast(BinaryType()).alias("payload")
+    The samples and windows are per-row arrays, so the per-track stats
+    need no explode and no regroup; a track holds at most 255 samples."""
+    win = 32  # samples per window: the bytes of two 16-byte digests
+    tracks = _payloads(spark, sf_dir).select(
+        "doc_id", F.expr("64 + length(payload) % 192").alias("n"), "payload",
     )
-    schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("win_idx", IntegerType()),
-            StructField("win_energy", LongType()),
-        ]
+    # window w's samples are digests 2w and 2w+1, cut at sample n; each
+    # digest is taken once, inside the one window that holds it
+    samples = (
+        f"slice(flatten(transform(sequence(w * 2, least(w * 2 + 1, (n - 1) div 16)),"
+        f" g -> {_digest_bytes(_rolling_md5('g'))})), 1, least({win}, n - w * {win}))"
     )
-
-    def frame_energy(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out_id, out_win, out_e = [], [], []
-            for doc_id, p in zip(pdf["doc_id"], pdf["payload"]):
-                b = bytes(p)
-                n = 64 + len(b) % 192
-                # STUB decode: real soundfile.read() lands here; the fake
-                # derives sample bytes from rolling md5 digests.
-                energies: dict[int, int] = {}
-                for i in range(n):
-                    d = hashlib.md5(b + str(i // 16).encode()).digest()
-                    v = d[i % 16] - 128
-                    energies[i // 32] = energies.get(i // 32, 0) + v * v
-                for w, e in energies.items():
-                    out_id.append(int(doc_id))
-                    out_win.append(w)
-                    out_e.append(e)
-            yield pd.DataFrame(
-                {"doc_id": out_id, "win_idx": out_win, "win_energy": out_e}
-            )
-
-    frames = docs.mapInPandas(frame_energy, schema)
-    return frames.groupBy("doc_id").agg(
-        F.count(F.lit(1)).alias("n_windows"),
-        F.sum("win_energy").cast("bigint").alias("total_energy"),
-        F.max("win_energy").cast("bigint").alias("peak_window_energy"),
+    wins = tracks.select(
+        "doc_id",
+        F.expr(f"transform(sequence(0, (n - 1) div {win}),"
+               f" w -> aggregate({samples}, 0L, (e, b) -> e + (b - 128) * (b - 128)))")
+        .alias("e"),
+    )
+    return wins.select(
+        "doc_id",
+        F.size("e").cast("bigint").alias("n_windows"),
+        F.expr("aggregate(e, 0L, (t, x) -> t + x)").alias("total_energy"),
+        F.array_max("e").alias("peak_window_energy"),
     )
 
 

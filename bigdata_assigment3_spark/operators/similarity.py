@@ -865,7 +865,7 @@ def q_ann_ivf_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # Same result contract as ann_cosine_topk, different physical plan.
-@query("ann_cosine_topk_vec", oracle=_ANN_ORACLE, bench=True)
+@query("ann_cosine_topk_vec", oracle=_ANN_ORACLE, bench=True, exchanges=2)
 def q_ann_cosine_topk_vec(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Vectorized twin of `ann_cosine_topk` (same oracle, same rows):
     the probe set is tiny, so its quantized matrix rides into an
@@ -920,12 +920,6 @@ def q_ann_cosine_topk_vec(spark: SparkSession, sf_dir: str) -> DataFrame:
                 }
             )
 
-    n_parts = spark.sparkContext.defaultParallelism
-    # widen only when the scan is narrower than the cluster (single
-    # test file): a real corpus already has >= parallelism splits and
-    # must NOT pay a full-corpus shuffle here
-    if len(emb.inputFiles()) < n_parts:
-        quant = quant.repartition(n_parts)
     scored = (
         quant
         .mapInPandas(score_batches, "query_id BIGINT, cand_id BIGINT, cos_raw DOUBLE")

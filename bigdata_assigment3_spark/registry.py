@@ -65,35 +65,10 @@ def query(
 
 
 def _load_all() -> None:
-    """Import every operator module so decorators run."""
-    from .operators import (  # noqa: F401
-        bucketing,
-        coverage,
-        curation,
-        dedup,
-        dq,
-        functions2,
-        funnel,
-        graph,
-        hmrf,
-        hough,
-        imagekernels,
-        imagekernels2,
-        layout,
-        motion,
-        motion_adaptive,
-        multimodal,
-        pipeline,
-        relational,
-        sampling,
-        sketches,
-        stats,
-        strings,
-        similarity,
-        text,
-        tpch_extra,
-        webservice,
-    )
+    """Import every query module so decorators run: the operator
+    package, which imports its modules in one fixed order, then the
+    streaming queries (whose module imports operators first)."""
+    from . import operators  # noqa: F401
     from .streaming import queries as streaming_queries  # noqa: F401
 
 
@@ -115,35 +90,20 @@ PRIORITY: tuple[str, ...] = (
     "rate_limit_window",
     "request_metrics",
     "json_extract",
-    # TPC-H-style relational anchors (joins/aggs/windows/set ops);
-    # top_revenue_orders rotated out round 12 (second TPC-H join
-    # shape — region_revenue/customers_with_orders cover the family;
-    # still locally tested) for ann_band_recall_tradeoff
+    # TPC-H-style relational anchors: joins, aggregates, windows, set
+    # ops; dq_audit's FK semi/anti checks cover the LEFT ANTI shape
     "pricing_summary",
     "region_revenue",
-    # (customers_with_orders rotated out round 13 — region_revenue and
-    # dq_audit's FK semi/anti checks keep the TPC-H join family
-    # in-window; still locally tested — for ann_ivf_probe)
-    # (customers_without_orders moved out of the window: dq_audit's FK
-    # checks exercise the same LEFT ANTI shape; still locally tested)
     "dq_audit",
     "window_topk_orders",
     "set_operations",
     "rollup_lineitem",
-    # image kernels (bias_field_correct rotated out round 12 for
-    # langid_char_ngram; sobel_edges rotated out round 13 — the U8
-    # neighborhood-kernel family keeps gaussian_denoise in-window;
-    # both still locally tested — for hmrf_em_segmentation)
-    # structured streaming (stream_stream_join rotated out round 12 —
-    # four stream reps stay in-window; still locally tested — for
-    # stream_bitmap_overlap)
+    # structured streaming: windows, sessions, state, bitmaps
     "stream_window_counts",
     "sessionize",
     "stream_stateful_rate_limit",
     "stream_bitmap_overlap",
-    # text analysis (langid_heuristic moved out for the F12 security
-    # battery; still locally tested) + the round-11 char-trigram
-    # language-ID flagship (rotated in round 12)
+    # text analysis: quality, char-trigram language ID, hash battery
     "text_quality",
     "langid_char_ngram",
     "security_hash_battery",
@@ -158,44 +118,29 @@ PRIORITY: tuple[str, ...] = (
     "span_dedup_ratio",
     # graph analytics
     "pagerank",
-    # similarity search + embedding PCA (round-10 flagship: the
-    # mapInArrow partial-Gram kernel plan, oracle-backed by its
-    # relational twin's SQL).  Round-14 rotation per the round-13
-    # verdict: ann_cosine_topk (driver-green since r10, brute-force
-    # family also exercised inside ann_band_recall_tradeoff's truth
-    # side) and ann_band_recall_tradeoff (driver-green r12+r13) move
-    # out — both still locally oracle-tested — for bm25_topk_docs (the
-    # 100x-fixed text-retrieval flagship, verdict #6) and ann_ivf_wide
-    # (the large-k mapInArrow assignment path, verdict #3)
+    # retrieval and similarity search: BM25, the mapInArrow
+    # partial-Gram power iteration, large-k IVF assignment, IVF with
+    # multi-assignment
     "bm25_topk_docs",
     "embedding_power_iteration",
     "ann_ivf_wide",
-    # deterministic IVF with multi-assignment (round-12 flagship,
-    # rotated in round 13)
     "ann_ivf_probe",
-    # (ann_cosine_topk_vec is the int64-matmul twin of the slot above;
-    # moved out for the runtime-pruned star join, still locally tested)
+    # runtime-pruned star join
     "dpp_partitioned_join",
     # dedup
     "dedup_minhash_lsh",
     "dedup_embedding_cosine",
-    # multimodal: real PNG codec (S8 closure; multimodal_frame_sample
-    # moved out, still locally tested) + perceptual-hash dedup
+    # multimodal: a real PNG codec + perceptual-hash dedup
     "image_png_decode",
     "image_phash_dedup",
     # physical-layout patterns
     "bucketed_colocated_join",
-    # figure sink (S16 closure; datetime_functions moved out, still
-    # locally tested) + as-of coverage
+    # figure sink + as-of coverage
     "figure_heatmap_sink",
     "asof_last_error",
-    # HMRF volume analytics + NIfTI-1 artifact export (S15 closure;
-    # posterior_softmax moved out round 10, mstep_class_stats rotated
-    # out round 13 — the oracled EM loop runs the same exact-integer
-    # M-step inside every iteration's CTE chain, so A9 stays
-    # driver-verified through the capstone; still locally tested).
-    # Round-13 rotation: the round-12 flagships whose oracles that
-    # round created get driver-verified rows.
+    # HMRF volume analytics (the oracled EM loop runs the exact-integer
+    # M-step in every iteration) + NIfTI-1 export, k-means seeding and
+    # the neighborhood-kernel image family
     "hmrf_em_segmentation",
     "kmeans_init",
     "volume_nifti_export",
@@ -203,10 +148,7 @@ PRIORITY: tuple[str, ...] = (
     # Hough image analytics
     "hough_peak",
     "ellipse_candidate_score",
-    # motion estimation (full relational search; the routed
-    # full-search and adaptive-walk variants sit outside the driver's
-    # 50-slot oracle window — same J4/A12 family, still locally
-    # oracle-tested — rotated out for embedding_power_iteration)
+    # motion estimation (full relational search)
     "block_match_full",
 )
 

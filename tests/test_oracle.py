@@ -60,8 +60,8 @@ def test_contract_alignment():
 
 # sha256 of "\n".join(queries()).  After PRIORITY the order is
 # registration order, which follows the import order in
-# registry._load_all: reordering those imports, or adding, renaming or
-# moving a query, changes it.  Such a change re-pins this value and
+# operators/__init__.py: reordering those imports, or adding, renaming
+# or moving a query, changes it.  Such a change re-pins this value and
 # names the new order in CHANGES.md.
 CONTRACT_ORDER_SHA256 = "ab97ee7b75dd31bd9a132b0242a2d2620cc3971efc509809525971f2998b6648"
 
@@ -84,9 +84,7 @@ def test_contract_order_pinned(tmp_path):
     50 names are PRIORITY (the driver's window), oracle_sql() keys
     follow the same order, and the whole order is pinned.  It is read
     the way the driver reads it, from a fresh process that loads
-    ``__spark_entry__.py`` by path: in this process, test modules that
-    import an operator module before the registry loads register its
-    queries first."""
+    ``__spark_entry__.py`` by path."""
     env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
     proc = subprocess.run(
         [sys.executable, "-c", _ORDER, str(REPO / "__spark_entry__.py")],
@@ -96,6 +94,17 @@ def test_contract_order_pinned(tmp_path):
     names, oracles, priority = json.loads(proc.stdout.strip().splitlines()[-1])
     assert len(names) == 299
     assert names[:50] == priority
+    assert oracles == [n for n in names if n in oracles]
+    assert hashlib.sha256("\n".join(names).encode()).hexdigest() == CONTRACT_ORDER_SHA256
+
+
+def test_contract_order_pinned_in_process():
+    """The same pin read inside the pytest process, where test modules
+    imported operator modules at collection in their own order: the
+    order of queries() must not depend on import history."""
+    import __spark_entry__ as e
+
+    names, oracles = list(e.queries()), list(e.oracle_sql())
     assert oracles == [n for n in names if n in oracles]
     assert hashlib.sha256("\n".join(names).encode()).hexdigest() == CONTRACT_ORDER_SHA256
 

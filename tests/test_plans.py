@@ -47,9 +47,8 @@ def registered_plans(spark):
     walked = {}
     for name, spec in REGISTRY.items():
         if name in ("hmrf_em_segmentation",
-                    "stream_window_counts", "stream_type_totals",
-                    "multimodal_decode", "multimodal_features", "binary_dir_scan"):
-            continue  # iterative/streaming/UDF paths checked elsewhere
+                    "stream_window_counts", "stream_type_totals", "binary_dir_scan"):
+            continue  # iterative/streaming/file-scan paths checked elsewhere
         df = spec.fn(spark, SF_ORACLE)
         got = None if spec.exchanges is None else shuffle_exchanges(df)
         walked[name] = (plan_summary(df), global_windows(df), got)
@@ -91,6 +90,32 @@ def test_shuffle_exchange_budgets(spark, registered_plans):
         if got != REGISTRY[name].exchanges
     }
     assert wrong_exchanges == {}, wrong_exchanges  # name: (planned, declared)
+
+
+_PYTHON_NODES = ("MapInPandas", "MapInArrow", "ArrowEvalPython", "BatchEvalPython")
+
+
+@pytest.mark.parametrize("name", [
+    "multimodal_decode", "multimodal_resize", "multimodal_frame_sample",
+    "image_phash_dedup", "audio_frame_energy",
+])
+def test_digest_stub_queries_stay_jvm_side(spark, name):
+    """The md5-stub multimodal queries are Spark expressions end to
+    end: no SQL execution the query starts, its checkpoint job
+    included, plans a Python node (``MapInArrow`` also matches
+    ``PythonMapInArrow``)."""
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def executions():
+        el = store.executionsList()
+        return {el.apply(i).executionId(): el.apply(i) for i in range(el.size())}
+
+    before = set(executions())
+    assert _plan(spark, name).count() > 0
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    plans = [e.physicalPlanDescription() for i, e in executions().items() if i not in before]
+    assert plans
+    assert [(node, p) for p in plans for node in _PYTHON_NODES if node in p] == []
 
 
 def test_topk_uses_take_ordered(spark):
