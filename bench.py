@@ -29,7 +29,8 @@ intervals: building, planning and driver work between jobs) and util
 ``python bench.py --floors DIR QUERY ...`` times the named queries at DIR
 (a scaled fixture from tests/make_scale_fixture.py) the same way and
 prints one JSON line: metric, dir, unit, n_runs, value_min, queries_min,
-queries_times, host_steal_frac.
+queries_times, host_steal_frac.  Any other argument prints the usage
+lines and exits non-zero without running anything.
 
 host_steal_frac is the share of all CPU time during the timed passes that
 the hypervisor gave this VM's vCPUs to other guests (the steal field of
@@ -56,21 +57,25 @@ from perfbench.tracing import SparkCounters  # noqa: E402
 # 2-3x on a shared box.
 N_RUNS = 3
 
-FLOORS_USAGE = "usage: bench.py --floors DIR QUERY [QUERY ...]"
+USAGE = "usage: bench.py\n       bench.py --floors DIR QUERY [QUERY ...]"
 
 
-def floors_args(argv: list[str]) -> tuple[str, list[str]]:
-    """``DIR QUERY ...`` of a ``--floors`` invocation.  Exits non-zero
-    with the usage line when no query is named or a name is not a
-    registered query, before any session is built, so a bad invocation
-    never prints a floors record."""
-    if len(argv) < 2:
-        sys.exit(FLOORS_USAGE)
-    dir_path, names = argv[0], argv[1:]
+def parse_args(argv: list[str]) -> tuple[str, list[str]] | None:
+    """The run ``argv`` (the arguments after the script name) asks for:
+    None for the headline run (no argument), ``(DIR, QUERIES)`` for a
+    floors pass.  Anything else, a floors pass without a query or with a
+    name that is not a registered query included, exits non-zero with
+    the usage lines before any session is built, so a bad invocation
+    never starts a run or prints a record."""
+    if not argv:
+        return None
+    if argv[0] != "--floors" or len(argv) < 3:
+        sys.exit(USAGE)
+    dir_path, names = argv[1], argv[2:]
     fns = query_fns()
     unknown = [n for n in names if n not in fns]
     if unknown:
-        sys.exit(f"{FLOORS_USAGE}\nunknown queries: {' '.join(unknown)}")
+        sys.exit(f"{USAGE}\nunknown queries: {' '.join(unknown)}")
     return dir_path, names
 
 
@@ -219,7 +224,8 @@ def main() -> None:
 
 
 if __name__ == "__main__":
-    if len(sys.argv) >= 2 and sys.argv[1] == "--floors":
-        print(json.dumps(floors_pass(*floors_args(sys.argv[2:]))))
-    else:
+    floors = parse_args(sys.argv[1:])
+    if floors is None:
         main()
+    else:
+        print(json.dumps(floors_pass(*floors)))

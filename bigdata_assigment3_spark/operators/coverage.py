@@ -132,6 +132,7 @@ def q_custom_stream_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     cursor at end), then stops — the complete-mode aggregate at that
     point is batch-equal, which is the oracle."""
     from ..sources.custom import register_synthtx_stream
+    from ..streaming.queries import start_memory_sink
 
     register_synthtx_stream(spark)
     stream = spark.readStream.format("synthtxstream").load()
@@ -141,17 +142,12 @@ def q_custom_stream_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max("tx_id").cast("bigint").alias("max_tx_id"),
     )
     # not _run_to_memory: a default trigger drained by processAllAvailable
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName("custom_stream_scan_sink")
-        .start()
-    )
+    q, sink = start_memory_sink(agg, "custom_stream_scan")
     try:
         q.processAllAvailable()
     finally:
         q.stop()
-    return spark.table("custom_stream_scan_sink")
+    return sink
 
 
 @query(

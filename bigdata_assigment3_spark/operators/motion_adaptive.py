@@ -51,9 +51,15 @@ def _paired_pixels(spark: SparkSession) -> DataFrame:
     )
 
 
+# diamond search patterns, large then small (motion_codec.py diamond
+# search); the kernel and the oracle replay (_diamond_walk_sql) share them
+_LDP = [(-2, 0), (2, 0), (0, -2), (0, 2), (-1, -1), (-1, 1), (1, -1), (1, 1)]
+_SDP = [(-1, 0), (1, 0), (0, -1), (0, 1)]
+
+
 def _make_search(kind: str):
     """Build the per-group pandas function for search ``kind``."""
-    blk, search, h, w = BLK, SEARCH, H, W
+    blk, search, h, w, ldp, sdp = BLK, SEARCH, H, W, _LDP, _SDP
 
     def run(pdf: pd.DataFrame) -> pd.DataFrame:
         import numpy as np
@@ -83,9 +89,6 @@ def _make_search(kind: str):
                 probes = 1
                 if kind == "diamond":
                     # large diamond until center wins, then small diamond
-                    # (motion_codec.py diamond search)
-                    ldp = [(-2, 0), (2, 0), (0, -2), (0, 2), (-1, -1), (-1, 1), (1, -1), (1, 1)]
-                    sdp = [(-1, 0), (1, 0), (0, -1), (0, 1)]
                     moved = True
                     while moved:
                         moved = False
@@ -141,10 +144,6 @@ def _make_search(kind: str):
         )
 
     return run
-
-
-_LDP = [(-2, 0), (2, 0), (0, -2), (0, 2), (-1, -1), (-1, 1), (1, -1), (1, 1)]
-_SDP = [(-1, 0), (1, 0), (0, -1), (0, 1)]
 
 
 def _diamond_walk_sql(seed_filter: str = "") -> str:

@@ -21,8 +21,10 @@ horizon exactly like the reference's TTL bounds its bucket dict.
 from __future__ import annotations
 
 import os as _os
+import uuid
+from concurrent.futures import ThreadPoolExecutor
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 from pyspark.sql.window import Window
 
 from ..operators.multimodal import _gz_corpus_stage, _gz_parse
@@ -37,113 +39,134 @@ from ..sources.tables import normalize_events_ts, parquet_schema
 _SESSION_GAP_S = 7200  # 2h
 
 
-def _stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """events.parquet as a streaming source (schema from the session's
-    memoized parquet schema, the one ``load_table`` reads with).
-
-    The probe and the stream share one physical-form normalization
-    (:func:`normalize_events_ts`), so batch and stream cannot diverge
-    when the driver regenerates testdata with a different ``ts``
-    encoding (bigint-nanos / NTZ / TZ have all shipped).  The conf
-    hardening must run here too: a bare driver session cannot even
-    read a TIMESTAMP(NANOS) probe without nanosAsLong."""
+def _stream_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """``{sf_dir}/{name}.parquet`` as a streaming source, read with the
+    session's memoized parquet schema (the one ``load_table`` reads
+    with).  The conf hardening runs here too: a bare driver session
+    cannot even read a TIMESTAMP(NANOS) schema probe without
+    nanosAsLong.  The table path itself is streamed (a single file or a
+    directory of part files both work); a pathGlobFilter on the parent
+    dir would match only a literal single-file name and silently stream
+    zero rows if the driver ever ships a directory."""
     ensure_session_conf(spark)
-    path = f"{sf_dir}/events.parquet"
-    raw_schema = parquet_schema(spark, path)
-    # stream the table path itself (works whether events.parquet is a
-    # single file or a directory of part files) — a pathGlobFilter on
-    # the parent dir would match only a literal single-file name and
-    # silently stream zero rows if the driver ever ships a directory
-    stream = (
-        spark.readStream.schema(raw_schema)
+    path = f"{sf_dir}/{name}.parquet"
+    return (
+        spark.readStream.schema(parquet_schema(spark, path))
         .option("recursiveFileLookup", "true")
         .parquet(path)
     )
-    return normalize_events_ts(stream)
 
 
-# Default state-store partition count for KEYSPACE-BOUNDED stateful
-# streams (see _state_confs).  Production sizing is state bytes /
-# a 64-128 MB per-partition target with this as the floor; the env
-# override is the deployment knob.
+def _stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """events.parquet as a streaming source.  The probe and the stream
+    share one physical-form normalization (:func:`normalize_events_ts`),
+    so batch and stream cannot diverge when the driver regenerates
+    testdata with a different ``ts`` encoding (bigint-nanos / NTZ / TZ
+    have all shipped)."""
+    return normalize_events_ts(_stream_table(spark, sf_dir, "events"))
+
+
+# State-store partition count for KEYSPACE-BOUNDED stateful streams.
 _STATE_PARTS_DEFAULT = 4
+# The conf such a stream runs with: its state-store partition count as
+# ``spark.sql.shuffle.partitions``, set in the private clone
+# :func:`_run_to_memory` drains it in.
+#
+# A stateful streaming aggregation runs one state-store partition per
+# shuffle partition, fixed at first start (AQE never coalesces stateful
+# streams), and EVERY partition pays a fixed per-micro-batch cost —
+# provider init, delta file write, fsync, maintenance — regardless of
+# how many rows it holds.  At sf0.01 on local[4] (min of 3), 32
+# partitions against 4 cost stream_sliding_window 0.88 s vs 0.54 s,
+# stream_topk_per_window 1.06 s vs 0.57 s and stream_bitmap_overlap
+# 3.44 s vs 1.98 s.
+#
+# Callers opt in ONLY where state is bounded by a small KEYSPACE
+# (|event types|, |windows in horizon| x |types|, |audience|/63 bitmap
+# words ...), never by input or user count — so the same small number
+# stays right at 100 TB, where these states are still keyspace-sized.
+# User/id-scaled state (per-user sessions, dedup ids, stream-stream
+# join buffers) keeps the session default, which scales with the
+# cluster.
+_STATE_CONFS = {"spark.sql.shuffle.partitions": str(_STATE_PARTS_DEFAULT)}
 
 
-def _state_confs() -> dict[str, str]:
-    """The conf a KEYSPACE-BOUNDED stateful stream runs with: its
-    state-store partition count as ``spark.sql.shuffle.partitions``,
-    set in the private clone :func:`_run_to_memory` drains it in.
+def start_memory_sink(
+    df: DataFrame,
+    tag: str,
+    mode: str = "complete",
+    *,
+    available_now: bool = False,
+    checkpoint: str | None = None,
+):
+    """Start ``df`` streaming into a memory sink in output ``mode`` (an
+    availableNow trigger if ``available_now``, else the default one;
+    ``checkpoint`` is an explicit checkpointLocation) and return the
+    running StreamingQuery and the sink as a DataFrame.
 
-    A stateful streaming aggregation runs one state-store partition
-    per shuffle partition, fixed at first start (AQE never coalesces
-    stateful streams), and EVERY partition pays a fixed per-micro-batch
-    cost — provider init, delta file write, fsync, maintenance —
-    regardless of how many rows it holds.  With the session default
-    sized for batch parallelism (cores, 32 here), a 3-trigger stream
-    whose whole state is a few hundred keyspace-bounded rows commits
-    ~100 near-empty state files per run (measured round 15:
-    stream_bitmap_overlap spent most of its fixed cost there).
-
-    Callers opt in ONLY where state is bounded by a small KEYSPACE
-    (|event types|, |windows in horizon| x |types|, |audience|/63
-    bitmap words ...), never by input or user count — so the same
-    small number stays right at 100 TB, where these states are still
-    keyspace-sized.  User/id-scaled state (per-user sessions, dedup
-    ids, stream-stream join buffers) keeps the session default, which
-    scales with the cluster.  ``SPARK_GRAFT_STREAM_STATE_PARTS``
-    overrides for deployments whose keyspace-bounded state outgrows
-    the floor (e.g. billion-user audiences: size to state bytes /
-    ~64 MB per partition)."""
-    raw = _os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTS")
-    try:
-        n = _STATE_PARTS_DEFAULT if raw is None else int(raw)
-    except ValueError as ex:
-        raise ValueError(
-            "SPARK_GRAFT_STREAM_STATE_PARTS must be an integer "
-            f"(state-store partition count), got {raw!r}"
-        ) from ex
-    return {"spark.sql.shuffle.partitions": str(n)}
+    Every call names its query ``{tag}_sink_{random}``, so concurrent
+    calls on one session never collide on an active query name or on a
+    temp view.  The view the memory sink registers under that name is
+    dropped at once: the returned frame is bound to the sink itself,
+    still reads it without the view, and, planned when it runs, sees
+    every row the query has added by then."""
+    name = f"{tag}_sink_{uuid.uuid4().hex}"
+    writer = df.writeStream.outputMode(mode).format("memory").queryName(name)
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    if checkpoint is not None:
+        writer = writer.option("checkpointLocation", checkpoint)
+    q = writer.start()
+    spark = df.sparkSession
+    sink = spark.table(name)
+    spark.catalog.dropTempView(name)
+    return q, sink
 
 
 def _run_to_memory(
-    df: DataFrame, name: str, mode: str = "complete", confs: dict[str, str] | None = None
+    df: DataFrame, tag: str, mode: str = "complete", confs: dict[str, str] | None = None
 ):
-    """Drain ``df`` into a memory sink named ``name`` in output ``mode``
-    with an availableNow trigger.  With ``confs`` the stream runs in
+    """Drain ``df`` into a per-call memory sink (:func:`start_memory_sink`)
+    in output ``mode`` with an availableNow trigger.  Without ``confs``
+    the stream runs in the caller's session, so the caller's
+    StreamingQueryListeners see its progress; with ``confs`` it runs in
     ``isolated(df.sparkSession, confs)``, so the caller's conf is never
     written.  Returns the terminated StreamingQuery (tests assert its
     progress metrics, e.g. stateOperators.numShufflePartitions) and the
-    sink, read from the session that holds it."""
-    spark = df.sparkSession
+    sink, bound as a DataFrame of the session that ran the stream."""
     if confs:
-        spark = isolated(spark, confs)
+        spark = isolated(df.sparkSession, confs)
         plan = df._jdf.logicalPlan()
         df = DataFrame(
             spark._jvm.org.apache.spark.sql.classic.Dataset.ofRows(spark._jsparkSession, plan),
             spark,
         )
-    q = (
-        df.writeStream.outputMode(mode)
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
+    q, sink = start_memory_sink(df, tag, mode, available_now=True)
     q.awaitTermination()
-    return q, spark.table(name)
+    return q, sink
 
 
-def _stamp_arrival(stage: str, i: int) -> None:
-    """Stamp staged batch ``i``'s files with arrival time ``i``: the
-    file source orders new files by modification time."""
-    for f in _os.listdir(f"{stage}/b{i}"):
-        _os.utime(f"{stage}/b{i}/{f}", (1_000_000 + i * 100,) * 2)
+def _stage_batches(stage: str, batches, first: int = 0) -> list[int]:
+    """Stage each of ``batches`` as micro-batch ``first + i``: one
+    parquet file under ``{stage}/b{first + i}``.  The writes are
+    independent jobs and run concurrently, so later writes back-fill
+    executors freed by an earlier one's tail; each file is then stamped
+    with arrival time ``first + i`` (the file source orders new files
+    by modification time).  Returns each batch's row count, measured by
+    ``observe`` on the write itself, so no extra job counts them."""
+    obs = [Observation() for _ in batches]
 
+    def write(i: int) -> None:
+        batches[i].observe(obs[i], F.count(F.lit(1)).alias("n")).coalesce(1).write.parquet(
+            f"{stage}/b{first + i}"
+        )
 
-def _stage_batch(df: DataFrame, stage: str, i: int) -> None:
-    """Stage ``df`` as micro-batch ``i``: one parquet file, stamped."""
-    df.coalesce(1).write.parquet(f"{stage}/b{i}")
-    _stamp_arrival(stage, i)
+    with ThreadPoolExecutor(len(batches)) as pool:
+        list(pool.map(write, range(len(batches))))
+    for i in range(first, first + len(batches)):
+        for f in _os.listdir(f"{stage}/b{i}"):
+            _os.utime(f"{stage}/b{i}/{f}", (1_000_000 + i * 100,) * 2)
+    return [o.get["n"] for o in obs]
 
 
 def _staged_stream(spark: SparkSession, schema, stage: str) -> DataFrame:
@@ -174,7 +197,7 @@ def q_stream_window_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch window aggregation — which is exactly the oracle."""
     ev = _stream_events(spark, sf_dir).withWatermark("ts", "2 days")
     agg = ev.groupBy(F.window("ts", "1 day"), "user_id").agg(F.count(F.lit(1)).alias("n"))
-    _, out = _run_to_memory(agg, "stream_window_counts_sink")
+    _, out = _run_to_memory(agg, "stream_window_counts")
     return out.select(
         F.unix_timestamp(F.col("window.start")).alias("window_start"),
         "user_id",
@@ -201,7 +224,7 @@ def q_stream_type_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("double")
         .alias("total_value"),
     )
-    return _run_to_memory(agg, "stream_type_totals_sink", confs=_state_confs())[1]
+    return _run_to_memory(agg, "stream_type_totals", confs=_STATE_CONFS)[1]
 
 
 @query(
@@ -330,7 +353,7 @@ def q_stream_stateful_rate_limit(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    _, sink = _run_to_memory(out, "stream_stateful_rl_sink", "update")
+    _, sink = _run_to_memory(out, "stream_stateful_rl", "update")
     # the update-mode memory sink APPENDS one cumulative row per key
     # per micro-batch; keep only each user's final (largest-total) row
     # so the result is correct even when the source splits into
@@ -434,7 +457,7 @@ def q_stream_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFrame
     # transformWithState requires the RocksDB state store
     rocksdb = "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
     _, sink = _run_to_memory(
-        out, "stream_tws_sink", "update",
+        out, "stream_tws", "update",
         confs={"spark.sql.streaming.stateStore.providerClass": rocksdb},
     )
     # update-mode memory sink appends per-batch cumulative rows: keep
@@ -521,7 +544,7 @@ def q_stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = ev.groupBy(F.session_window("ts", "2 hours"), "user_id").agg(
         F.count(F.lit(1)).alias("n_events")
     )
-    _, out = _run_to_memory(agg, "stream_session_window_sink")
+    _, out = _run_to_memory(agg, "stream_session_window")
     return out.groupBy("user_id").agg(F.count(F.lit(1)).cast("bigint").alias("n_sessions"))
 
 
@@ -562,7 +585,7 @@ def q_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("p_ts") >= F.col("v_ts"))
         & (F.col("p_ts") <= F.col("v_ts") + F.expr("INTERVAL 1 HOUR")),
     )
-    _, out = _run_to_memory(joined, "stream_stream_join_sink", "append")
+    _, out = _run_to_memory(joined, "stream_stream_join", "append")
     return out.groupBy(F.col("v_user").alias("user_id")).agg(
         F.count(F.lit(1)).alias("n_attributed")
     )
@@ -615,7 +638,7 @@ def q_stream_dedup_exactly_once(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withWatermark("ts", "2 days")
     )
     clean = dup.dropDuplicatesWithinWatermark(["event_id"])
-    q, out = _run_to_memory(clean, "stream_dedup_sink", "append")
+    q, out = _run_to_memory(clean, "stream_dedup", "append")
     delivered_total = sum(
         p.observedMetrics["delivered"].n
         for p in q.recentProgress
@@ -699,8 +722,7 @@ def q_stream_late_data_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     # above, BEFORE staging): the windowed count needs (ts, event_type)
     # and the late-drop metric counts rows, not columns
     stage_cols = ("ts", "event_type")
-    for i, df in enumerate(batches, 1):
-        _stage_batch(df.select(*stage_cols), stage, i)
+    _stage_batches(stage, [df.select(*stage_cols) for df in batches])
     stream = _staged_stream(spark, ev.select(*stage_cols).schema, stage)
     agg = (
         stream.withWatermark("ts", "2 days")
@@ -709,7 +731,7 @@ def q_stream_late_data_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # (window x type) state is keyspace-bounded: right-size the state
     # store partitions (see _state_confs)
-    q, out = _run_to_memory(agg, "stream_late_drop_sink", "append", confs=_state_confs())
+    q, out = _run_to_memory(agg, "stream_late_drop", "append", confs=_STATE_CONFS)
     # expose the drop metric for tests without changing the schema
     dropped = sum(
         p["stateOperators"][0]["numRowsDroppedByWatermark"] for p in q.recentProgress
@@ -753,8 +775,7 @@ def q_stream_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     base = stage_dir(spark, "upsert", sf_dir)
     stage, target = f"{base}/in", f"{base}/target"
-    for i in range(3):
-        _stage_batch(ev.filter(F.col("event_id") % 3 == i), stage, i)
+    _stage_batches(stage, [ev.filter(F.col("event_id") % 3 == i) for i in range(3)])
 
     def merge_batch(batch: DataFrame, batch_id: int) -> None:
         sess = batch.sparkSession
@@ -828,7 +849,7 @@ def q_stream_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = ev.groupBy(F.window("ts", "4 days", "2 days"), "event_type").agg(
         F.count(F.lit(1)).alias("n")
     )
-    _, out = _run_to_memory(agg, "stream_sliding_window_sink", confs=_state_confs())
+    _, out = _run_to_memory(agg, "stream_sliding_window", confs=_STATE_CONFS)
     return out.select(
         F.unix_timestamp(F.col("window.start")).alias("window_start"),
         "event_type",
@@ -878,7 +899,7 @@ def q_stream_chained_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max("n").cast("bigint").alias("max_user_events"),
         F.sum("n").cast("bigint").alias("total_events"),
     )
-    _, out = _run_to_memory(s2, "stream_chained_agg_sink", "append")
+    _, out = _run_to_memory(s2, "stream_chained_agg", "append")
     return out.select(
         F.unix_timestamp(F.col("window.start")).alias("window_start"),
         "n_active_users",
@@ -907,7 +928,6 @@ def q_stream_union_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the complete-mode result equals the batch aggregate over the
     union — which the oracle states over the original table.
     """
-    ensure_session_conf(spark)
     ev = load_table(spark, sf_dir, "events")
 
     def write_legs(stage: str) -> None:
@@ -930,7 +950,7 @@ def q_stream_union_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n"),
         F.collect_set("user_id").alias("users"),
     )
-    _, out = _run_to_memory(agg, "stream_union_sources_sink", confs=_state_confs())
+    _, out = _run_to_memory(agg, "stream_union_sources", confs=_STATE_CONFS)
     return out.select(
         "event_type", "n", F.size("users").cast("bigint").alias("n_users")
     )
@@ -971,7 +991,7 @@ def q_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("double")
         .alias("total_value"),
     )
-    return _run_to_memory(agg, "stream_static_join_sink", confs=_state_confs())[1]
+    return _run_to_memory(agg, "stream_static_join", confs=_STATE_CONFS)[1]
 
 
 @query(
@@ -1005,7 +1025,7 @@ def q_stream_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFra
         .dropDuplicatesWithinWatermark(["event_id"])
     )
     agg = deduped.groupBy("event_type").agg(F.count(F.lit(1)).alias("n"))
-    return _run_to_memory(agg, "stream_dedup_ww_sink")[1]
+    return _run_to_memory(agg, "stream_dedup_ww")[1]
 
 
 TOPK_PER_WINDOW = 3
@@ -1048,7 +1068,7 @@ def q_stream_topk_per_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = ev.groupBy(F.window("ts", "1 day"), "event_type").agg(
         F.count(F.lit(1)).alias("n")
     )
-    _, sink = _run_to_memory(agg, "stream_topk_window_sink", confs=_state_confs())
+    _, sink = _run_to_memory(agg, "stream_topk_window", confs=_STATE_CONFS)
     w = Window.partitionBy("window").orderBy(F.col("n").desc(), F.col("event_type"))
     return (
         sink.withColumn("rk", F.row_number().over(w))
@@ -1116,8 +1136,7 @@ def q_stream_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             one.withColumn("event_type", F.lit("purchase"))
         ).select(*ev.columns)
 
-    for i, df in enumerate((ev, sentinel(30), sentinel(90)), 1):
-        _stage_batch(df, stage, i)
+    _stage_batches(stage, [ev, sentinel(30), sentinel(90)])
     stream = _staged_stream(spark, ev.schema, stage)
     views = (
         stream.filter(F.col("event_type") == "view")
@@ -1136,7 +1155,7 @@ def q_stream_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("p_ts") <= F.col("v_ts") + F.expr("INTERVAL 1 HOUR")),
         "leftOuter",
     )
-    _, out = _run_to_memory(joined, "stream_stream_outer_sink", "append")
+    _, out = _run_to_memory(joined, "stream_stream_outer", "append")
     out = out.filter(F.col("v_user") >= 0)
     return out.groupBy(F.col("v_user").alias("user_id")).agg(
         F.count(F.lit(1)).alias("n_rows"),
@@ -1178,13 +1197,8 @@ def q_stream_restart_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
     mx = ev.agg(F.max("event_id").alias("m")).collect()[0][0]
     cuts = ((0, mx // 3), (mx // 3, 2 * mx // 3), (2 * mx // 3, mx + 1))
 
-    def write_batch(i: int, lo: int, hi: int) -> None:
-        _stage_batch(
-            ev.filter((F.col("event_id") >= lo) & (F.col("event_id") < hi)), stage, i
-        )
-
-    for i, (lo, hi) in enumerate(cuts[:2], 1):
-        write_batch(i, lo, hi)
+    batches = [ev.filter((F.col("event_id") >= lo) & (F.col("event_id") < hi)) for lo, hi in cuts]
+    _stage_batches(stage, batches[:2])
 
     def agg_stream() -> DataFrame:
         s = _staged_stream(spark, ev.schema, stage)
@@ -1195,14 +1209,7 @@ def q_stream_restart_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # not _run_to_memory: both runs share an explicit checkpointLocation
     # and the first is stopped mid-stream
-    q1 = (
-        agg_stream()
-        .writeStream.outputMode("complete")
-        .format("memory")
-        .queryName("restart_recovery_phase1")
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
+    q1, _ = start_memory_sink(agg_stream(), "restart_recovery_phase1", checkpoint=ckpt)
     # Poll recentProgress (cumulative history), not lastProgress: a
     # trailing no-data batch overwrites lastProgress with numInputRows=0
     # and a lastProgress-only poll would then burn the whole timeout
@@ -1217,19 +1224,13 @@ def q_stream_restart_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # the held-back final third arrives only now — the restart always
     # has fresh data to trigger its complete-mode output
-    write_batch(3, *cuts[2])
+    _stage_batches(stage, batches[2:], first=2)
 
-    q2 = (
-        agg_stream()
-        .writeStream.outputMode("complete")
-        .format("memory")
-        .queryName("restart_recovery_sink")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+    q2, sink = start_memory_sink(
+        agg_stream(), "restart_recovery", available_now=True, checkpoint=ckpt
     )
     q2.awaitTermination()
-    return spark.table("restart_recovery_sink").select(
+    return sink.select(
         "event_type",
         "n",
         F.round(F.col("tv"), 3).cast("double").alias("total_value"),
@@ -1276,15 +1277,7 @@ def q_stream_pit_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     discipline gate pins per call site."""
     from ..operators.relational import customer_priority_history
 
-    ensure_session_conf(spark)
-    path = f"{sf_dir}/orders.parquet"
-    schema = parquet_schema(spark, path)
-    orders_stream = (
-        spark.readStream.schema(schema)
-        .option("recursiveFileLookup", "true")
-        .parquet(path)
-        .filter(F.col("o_custkey") < 100)
-    )
+    orders_stream = _stream_table(spark, sf_dir, "orders").filter(F.col("o_custkey") < 100)
     hist = customer_priority_history(spark, sf_dir)
     enriched = orders_stream.join(
         bounded_broadcast(
@@ -1302,7 +1295,7 @@ def q_stream_pit_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("double")
         .alias("total_price"),
     )
-    return _run_to_memory(agg, "stream_pit_enrich_sink", confs=_state_confs())[1]
+    return _run_to_memory(agg, "stream_pit_enrich", confs=_STATE_CONFS)[1]
 
 
 @query(
@@ -1391,7 +1384,7 @@ def q_stream_bitmap_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     word, mask = bitmap_word_mask("user_id")
     words = ev.select("event_type", word.alias("word"), mask.alias("mask"))
     agg = words.groupBy("event_type", "word").agg(F.bit_or("mask").alias("bits"))
-    _, out = _run_to_memory(agg, "stream_bitmap_distinct_sink", confs=_state_confs())
+    _, out = _run_to_memory(agg, "stream_bitmap_distinct", confs=_STATE_CONFS)
     return out.groupBy("event_type").agg(
         F.sum(F.bit_count("bits")).cast("bigint").alias("n_users"),
         F.count(F.lit(1)).alias("n_words"),
@@ -1498,58 +1491,24 @@ def q_stream_bitmap_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev.filter((F.col("ts") >= F.lit(replay_from)) & (F.col("ts") < F.lit(c2))),
         ev.filter(F.col("ts") >= F.lit(c2)),
     )
-    # the midnight-cut clamping guarantees DISTINCT in-range cuts, not
-    # non-empty slices: a conforming >= 3-day table with an event gap
-    # around a cut would stage an empty batch and break the
-    # three-trigger contract — fail with a descriptive error instead
-    # (round-12 advice).  The guard is FREE (round-13 verdict: its
-    # predecessor, one conditional-count job, was still a full extra
-    # events scan per invocation — a whole corpus pass at 100 TB just
-    # for a precondition message): ``df.observe`` counters ride the
-    # three staged writes the query already performs (the
-    # stream_dedup_exactly_once pattern) and are validated after
-    # materialization, with the same error contract.
-    from pyspark.sql import Observation
-
-    stage_obs = [Observation(f"bitmap_stage_{i}") for i in range(3)]
-    # Stage only the columns the stream consumes (round 15, guide
-    # §2.3 "project before the exchange"): the staged micro-batches
-    # previously carried the full events row — including `props`, the
-    # widest column — through three parquet writes and the streaming
-    # re-read, none of which the windowed bitmap aggregation ever
-    # touches.  At 100 TB the staging write is the dominant I/O of
-    # this query; shipping 4 narrow columns instead of 6 is a
-    # multiple-x cut in staged bytes.  (Batch emptiness semantics are
-    # unchanged: the observe counter counts rows, not columns.)
+    # Stage only the columns the stream consumes: the windowed bitmap
+    # aggregation never touches `props`, the widest column, and at
+    # 100 TB the staging write is this query's dominant I/O.
     stage_cols = ("ts", "user_id", "event_type", "value")
     try:
-        # The three staged writes are independent jobs — submit them
-        # from a small thread pool (guide §2.6 "overlap independent
-        # jobs") so the second and third writes back-fill executors
-        # freed by the first's tail instead of paying three sequential
-        # job latencies.  Ordering is re-established afterwards: the
-        # guard check and the arrival-order mtimes run sequentially
-        # once every write has committed.
-        from concurrent.futures import ThreadPoolExecutor
-
-        def _stage_one(i: int, bdf) -> None:
-            bdf.select(*stage_cols).observe(
-                stage_obs[i], F.count(F.lit(1)).alias("n")
-            ).coalesce(1).write.parquet(f"{stage}/b{i}")
-
-        with ThreadPoolExecutor(max_workers=3) as pool:
-            futs = [pool.submit(_stage_one, i, bdf)
-                    for i, bdf in enumerate(batches)]
-            for f_ in futs:
-                f_.result()
-        for i in range(3):
-            if stage_obs[i].get["n"] == 0:
+        counts = _stage_batches(stage, [bdf.select(*stage_cols) for bdf in batches])
+        # the midnight-cut clamping guarantees DISTINCT in-range cuts, not
+        # non-empty slices: a conforming >= 3-day table with an event gap
+        # around a cut would stage an empty batch and break the
+        # three-trigger contract — fail with a descriptive error instead
+        # (the counts ride the staged writes, so the guard costs no job)
+        for i, n in enumerate(counts):
+            if n == 0:
                 raise ValueError(
                     f"stream_bitmap_overlap needs three non-empty "
                     f"midnight-cut batches; batch {i} (cuts {c1} / {c2}) "
                     f"is empty for ts in [{lo}, {hi}]"
                 )
-            _stamp_arrival(stage, i)
         stream = normalize_events_ts(
             _staged_stream(spark, ev.select(*stage_cols).schema, stage)
         )
@@ -1560,16 +1519,9 @@ def q_stream_bitmap_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy(F.window("ts", "1 day"), "event_type", word.alias("word"))
             .agg(F.bit_or(mask).alias("bits"))
         )
-        # State is |windows in horizon| x |types| x |audience|/63 words
-        # — keyspace-bounded, a few hundred rows here — while the
-        # session default (32) runs 32 state-store partitions, i.e.
-        # ~96 fixed-cost provider-init + delta-write + fsync commits
-        # across the three triggers for near-empty stores.  Right-size
-        # to the keyspace (round-14 verdict finding #2: this is the
-        # named mechanism behind the residual fixed per-batch cost).
-        q, sink = _run_to_memory(
-            agg, "stream_bitmap_overlap_sink", "update", confs=_state_confs()
-        )
+        # state is |windows in horizon| x |types| x |audience|/63 words,
+        # keyspace-bounded: right-size its partitions (see _STATE_CONFS)
+        q, sink = _run_to_memory(agg, "stream_bitmap_overlap", "update", confs=_STATE_CONFS)
         # observability for tests: real multi-batch run, real re-updates.
         # n_updates comes from the sink's own progress metrics (sum of
         # per-batch numOutputRows == rows in the memory table), not a

@@ -89,18 +89,25 @@ def test_scratch_dir_accepts_roomy_tmpfs(monkeypatch):
         pytest.param(["--floors", "fixture_dir"], id="no-query"),
         pytest.param(["--floors"], id="no-dir"),
         pytest.param(["--floors", "fixture_dir", "region_revenue", "no_such_query"], id="unknown"),
+        pytest.param(["--help"], id="help"),
+        pytest.param(["--no-such-flag", "fixture_dir", "region_revenue"], id="unknown-flag"),
     ],
 )
-def test_floors_without_valid_queries_is_a_usage_error(args):
-    """A floors pass with nothing (or something unknown) to time must
-    fail up front, not print an empty or partial floors record."""
-    proc = subprocess.run(
-        [sys.executable, str(REPO / "bench.py"), *args],
-        capture_output=True, text=True, timeout=120, cwd=REPO,
-    )
-    assert proc.returncode != 0
-    assert "usage: bench.py --floors DIR QUERY" in proc.stderr
-    assert "floors_wall_seconds" not in proc.stdout and proc.stdout.strip() == ""
+def test_floors_without_valid_queries_is_a_usage_error(args, capsys):
+    """An invocation that is neither the headline run (no argument) nor
+    a floors pass with registered queries must fail up front with the
+    usage lines: never start a run, print a record or rewrite
+    BENCH_LOCAL.json.  Checked in-process, so a regression cannot
+    launch a benchmark."""
+    with pytest.raises(SystemExit) as exc:
+        bench.parse_args(args)
+    assert exc.value.code not in (0, None)
+    assert str(exc.value.code).startswith(bench.USAGE)
+    assert capsys.readouterr().out == ""
+
+
+def test_no_argument_is_the_headline_run():
+    assert bench.parse_args([]) is None
 
 
 def test_floors_pass_end_to_end():

@@ -341,6 +341,19 @@ def test_staging_gate_fires_on_bad_code():
     ]
 
 
+def test_memory_sinks_start_in_one_place():
+    """Every memory sink starts in ``streaming.queries.start_memory_sink``,
+    which names it per call: a fixed query name collides when two
+    callers drain the same query on one session."""
+    for pattern in (r"\.\s*queryName\s*\(", r"""\bformat\s*\(\s*["']memory["']"""):
+        rx = re.compile(pattern)
+        sites = {
+            str(path.relative_to(PKG)): len(rx.findall(_code_only(path)))
+            for path in sorted(PKG.rglob("*.py"))
+        }
+        assert {k: n for k, n in sites.items() if n} == {"streaming/queries.py": 1}, pattern
+
+
 # --------------------------------------------------------------------
 # One way for worker code to reach the package: the package pickles by
 # value (see its __init__ docstring), so a Python worker never imports
