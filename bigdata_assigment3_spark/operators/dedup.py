@@ -27,6 +27,7 @@ from ..functions.hashing import md5_int56_duck, md5_int56_spark
 from ..registry import REGISTRY, query
 from ..session import lineage_checkpoint, session_memo
 from ..sources import load_table, load_table_parallel
+from .vectors import int_cosine, nonzero_frame
 
 K = 16        # char-shingle length
 STRIDE = 4
@@ -432,7 +433,7 @@ def q_dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate pairs for 500 docs, 273k for 5000 — vs 125k/12.5M
     all-pairs).  Cosine is over the kept dims in BOTH engines.
     Learned float embeddings slot into the same plan after
-    milli-quantization (see similarity.py).
+    milli-quantization (see vectors.py).
     """
     docs = load_table_parallel(spark, sf_dir, "documents")
     shingle_str = f"substring(text, 1 + i * {STRIDE}, {K})"
@@ -815,7 +816,6 @@ SEM_T = 0.35    # within-cluster near-dup cosine threshold (data-relative:
 #                 "semantic twin" band sits at ~0.35+; real learned
 #                 embeddings would use ~0.95 with the same plan)
 
-_SEM_QUANT_SPARK = "transform(embedding, x -> CAST(ROUND(CAST(x AS DOUBLE) * 1000) AS BIGINT))"
 _SEM_QUANT_DUCK = (
     "list_transform(embedding, x -> CAST(ROUND(CAST(x AS DOUBLE) * 1000) AS BIGINT))"
 )
@@ -832,13 +832,7 @@ def _semantic_assign_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     within-cluster pair join plus the final verdict join), and without
     a materialized copy each consumer would re-run the corpus-wide
     seed scoring pass — 3 full corpus scans instead of 1 at 100 TB."""
-    emb = load_table_parallel(spark, sf_dir, "embeddings")
-    norm2 = F.expr("aggregate(transform(e, x -> x * x), 0L, (a, b) -> a + b)")
-    nz = (
-        emb.select("vec_id", F.expr(_SEM_QUANT_SPARK).alias("e"))
-        .withColumn("n2", norm2)
-        .filter(F.col("n2") > 0)
-    )
+    nz = nonzero_frame(spark, sf_dir)
     seeds = (
         nz.orderBy("vec_id")
         .limit(K_SEM)
@@ -848,8 +842,7 @@ def _semantic_assign_df(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("n2").alias("ns2"),
         )
     )
-    dot_seed = F.expr("aggregate(zip_with(e, es, (x, y) -> x * y), 0L, (a, b) -> a + b)")
-    cos_seed = dot_seed.cast("double") / F.sqrt(F.col("n2").cast("double") * F.col("ns2"))
+    cos_seed = int_cosine("e", "n2", "es", "ns2")
     w = Window.partitionBy("vec_id").orderBy(F.desc("cos_seed"), F.asc("seed_id"))
     # seeds is <= K_SEM rows by the LIMIT above — a constant-size side
     # at every SF, so the broadcast never grows with the corpus.
@@ -968,8 +961,7 @@ def q_dedup_semantic_clustered(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("e").alias("eb"),
         F.col("n2").alias("nb2"),
     )
-    dot_pair = F.expr("aggregate(zip_with(ea, eb, (x, y) -> x * y), 0L, (a, b) -> a + b)")
-    cos_pair = dot_pair.cast("double") / F.sqrt(F.col("na2").cast("double") * F.col("nb2"))
+    cos_pair = int_cosine("ea", "na2", "eb", "nb2")
     dups = (
         a.join(b, "cluster_id")
         .filter(F.col("va") < F.col("vb"))

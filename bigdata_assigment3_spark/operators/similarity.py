@@ -3,15 +3,25 @@ embedding: array<float>, label) — ANN for LLM-data pipelines
 (BASELINE.json north star).
 
 Brute-force cosine top-k is the oracle-checked baseline; the scale
-paths are LSH/IVF/PQ variants — ALL value-oracled since round 12:
-every index build (E2LSH hyperplanes, the spherical k-means coarse
-quantizer, the PQ codebooks) is deterministic integer math that the
-DuckDB oracle replays verbatim as unrolled SQL.
+paths are LSH/IVF/PQ variants, every one value-oracled: each index
+build (E2LSH hyperplanes, the spherical k-means coarse quantizer, the
+PQ codebooks) is deterministic integer math that the DuckDB oracle
+replays verbatim as unrolled SQL.  Vectors are milli-quantized
+(``vectors.py``), so dot products and norms are exact BIGINTs in both
+engines and only the final cosine division is floating point.
 
-Cross-engine exactness trick: elements are quantized to integer
-milli-units (round(x*1000)) so dot products and norms are exact
-BIGINTs in both engines; only the final cosine division is floating
-point, on identical inputs.
+The probe set is fixed: ``vec_id % QUERY_STRIDE = 0 AND vec_id <
+PROBE_MAX_ID`` (``_is_probe``), at most N_PROBE_QUERIES ids whatever
+the corpus size, so every probe-side table is bounded and broadcast.
+
+The cosine-ranked ANN queries run in two stages.  Each index owns its
+candidate generator — LSH buckets, IVF lists, a PQ shortlist — which
+emits (query_id, cand_id) pairs; one exact stage, ``_rerank``, scores
+the candidates by integer-dot cosine against the broadcast probe
+vectors and keeps each probe's top TOP_K (``_cosine_top_k``: cosine
+descending, ties to the lowest cand_id, a BIGINT rank, the cosine
+rounded to 6 places).  A probe is never its own neighbour, and
+zero-norm vectors are never ranked.
 
 Scale notes: brute force is queries x corpus — fine for a broadcast
 query set (the common "probe batch vs 100 TB corpus" shape: corpus
@@ -22,25 +32,72 @@ join, the classic IVF/LSH trade.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window
 
 from ..functions.hashing import md5_int56_duck, md5_int56_spark
 from ..plans.hints import bounded_broadcast
 from ..registry import query
 from ..session import lineage_checkpoint, session_memo
-from ..sources import load_table, load_table_parallel
+from ..sources import load_table
+from .vectors import QUANT_SPARK, int_cosine, int_dot, nonzero_frame, quantized
 
 TOP_K = 5
 QUERY_STRIDE = 50
-# Fixed-size probe set: vec_id % STRIDE == 0 AND vec_id < PROBE_MAX_ID
-# gives at most N_PROBE_QUERIES probes no matter how big the corpus is,
-# so the probe broadcast / driver collect is O(1) in corpus size (the
-# smallest testdata corpus has 500 ids, so every sf yields all 10).
+# the smallest testdata corpus has 500 ids, so every sf yields all 10
 N_PROBE_QUERIES = 10
 PROBE_MAX_ID = QUERY_STRIDE * N_PROBE_QUERIES  # 500
 
-_QUANT_SPARK = "transform(embedding, x -> CAST(ROUND(CAST(x AS DOUBLE) * 1000) AS BIGINT))"
+
+def _is_probe() -> Column:
+    """The fixed probe set over ``vec_id``."""
+    return (F.col("vec_id") % QUERY_STRIDE == 0) & (F.col("vec_id") < PROBE_MAX_ID)
+
+
+def _probe_vectors(frame: DataFrame) -> DataFrame:
+    """(query_id, eq, na2): the probe rows of a (vec_id, e, n2) frame,
+    broadcast."""
+    return bounded_broadcast(
+        frame.filter(_is_probe()).select(
+            F.col("vec_id").alias("query_id"), F.col("e").alias("eq"), F.col("n2").alias("na2")
+        ),
+        "probe set is <= PROBE_MAX_ID/QUERY_STRIDE = 10 literal ids at every SF",
+    )
+
+
+def _top_k(df: DataFrame, order: Column, k: int = TOP_K, tie: str = "cand_id") -> DataFrame:
+    """Each query's ``k`` first rows by ``order``, ties to the lowest
+    ``tie``, numbered by a BIGINT ``rank``."""
+    w = Window.partitionBy("query_id").orderBy(order, F.asc(tie))
+    return df.withColumn("rank", F.row_number().over(w).cast("bigint")).filter(F.col("rank") <= k)
+
+
+def _cosine_top_k(scored: DataFrame) -> DataFrame:
+    """(query_id, cand_id, rank, cosine) from (query_id, cand_id,
+    cos_raw) pairs: the top TOP_K cosines of each probe, itself
+    excluded."""
+    ranked = _top_k(scored.filter(F.col("query_id") != F.col("cand_id")), F.desc("cos_raw"))
+    return ranked.select("query_id", "cand_id", "rank", F.round("cos_raw", 6).alias("cosine"))
+
+
+def _rerank(cand: DataFrame, frame: DataFrame, on: str = "cand_id") -> DataFrame:
+    """The exact stage: score candidates against the probe vectors by
+    integer-dot cosine and keep each probe's top TOP_K.
+
+    ``frame`` is a nonzero (vec_id, e, n2[, on]) frame.  ``cand`` holds
+    (query_id, on); ``on`` is cand_id for a candidate list, or a frame
+    column naming a whole inverted list (``ann_ivf_deterministic``
+    joins its probed lists by cluster_id, so list members never
+    shuffle)."""
+    vecs = frame.select(
+        F.col("vec_id").alias("cand_id"), F.col("e").alias("ev"), F.col("n2").alias("nb2"),
+        *([on] if on != "cand_id" else []),
+    )
+    pairs = cand.join(_probe_vectors(frame), "query_id").join(vecs, on)
+    return _cosine_top_k(
+        pairs.select("query_id", "cand_id", int_cosine("eq", "na2", "ev", "nb2").alias("cos_raw"))
+    )
+
 
 _DUCK_QUANT_PAIRS = f"""
 q AS (SELECT vec_id, embedding FROM embeddings
@@ -79,42 +136,18 @@ _ANN_ORACLE = f"""
     bench=True, exchanges=3, order_sensitive=True,
 )
 def q_ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Brute-force cosine top-k: a fixed 10-probe set (vec_id % 50 = 0
-    and vec_id < 500) against the full corpus, exact integer dot
-    products, rank window with deterministic tie-break.
+    """Brute-force cosine top-k: every corpus vector is a candidate of
+    every probe.
 
     The corpus side never shuffles — dot products are computed where
     the data lives; only the tiny (query, cand, score) triples move.
     """
-    emb = load_table_parallel(spark, sf_dir, "embeddings")
-    norm2 = F.expr("aggregate(transform(e, x -> x * x), 0L, (a, b) -> a + b)")
-    # norms are per-vector, not per-pair: compute them once on each
-    # side before the join (halves the per-pair flops vs naive).
-    quant = emb.select("vec_id", F.expr(_QUANT_SPARK).alias("e")).withColumn("n2", norm2)
-    q = quant.filter((F.col("vec_id") % QUERY_STRIDE == 0) & (F.col("vec_id") < PROBE_MAX_ID)).select(
-        F.col("vec_id").alias("query_id"), F.col("e").alias("eq"), F.col("n2").alias("na2")
-    )
-    v = quant.select(
+    frame = nonzero_frame(spark, sf_dir)
+    pairs = frame.select(
         F.col("vec_id").alias("cand_id"), F.col("e").alias("ev"), F.col("n2").alias("nb2")
-    )
-    pairs = v.crossJoin(
-        bounded_broadcast(q, "probe set is <= PROBE_MAX_ID/QUERY_STRIDE = 10 "
-                             "literal ids at every SF")
-    ).filter(F.col("query_id") != F.col("cand_id"))
-    dot = F.expr("aggregate(zip_with(eq, ev, (x, y) -> x * y), 0L, (a, b) -> a + b)")
-    # zero-norm guard BEFORE the division: under the session's pinned
-    # ANSI mode double/0.0 throws (a post-hoc isNotNull filter is dead
-    # code), and the oracle excludes zero-norm vectors the same way
-    scored = pairs.filter((F.col("na2") > 0) & (F.col("nb2") > 0)).select(
-        "query_id",
-        "cand_id",
-        (dot.cast("double") / F.sqrt(F.col("na2").cast("double") * F.col("nb2"))).alias("cos_raw"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_raw"), F.asc("cand_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "cand_id", "rank", F.round("cos_raw", 6).alias("cosine"))
+    ).crossJoin(_probe_vectors(frame))
+    return _cosine_top_k(
+        pairs.select("query_id", "cand_id", int_cosine("eq", "na2", "ev", "nb2").alias("cos_raw"))
     )
 
 
@@ -229,20 +262,16 @@ def q_ann_lsh_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     the distance check.  The floor division is exact: the shift makes
     every dividend positive and is a multiple of the width.
     """
-    emb = load_table_parallel(spark, sf_dir, "embeddings")
-    quant = emb.select("vec_id", F.expr(_QUANT_SPARK).alias("e"))
+    quant = quantized(spark, sf_dir)
     tables = []
     for t in range(E2_TABLES):
         arr = "array(" + ",".join(f"{w}L" for w in _e2_proj(t)) + ")"
-        dot = f"aggregate(zip_with(e, {arr}, (x, w) -> x * w), 0L, (a, b) -> a + b)"
         b_t = ((t + 1) * 7919) % E2_W
-        tables.append(f"({dot} + {b_t} + {E2_SHIFT}) div {E2_W}")
+        tables.append(f"({int_dot('e', arr)} + {b_t} + {E2_SHIFT}) div {E2_W}")
     bk = quant.select(
-        "vec_id", "e", F.posexplode(F.expr(f"array({', '.join(tables)})")).alias("t", "bucket")
+        "vec_id", F.posexplode(F.expr(f"array({', '.join(tables)})")).alias("t", "bucket")
     )
-    qb = bk.filter(
-        (F.col("vec_id") % QUERY_STRIDE == 0) & (F.col("vec_id") < PROBE_MAX_ID)
-    ).select(F.col("vec_id").alias("query_id"), F.col("e").alias("eq"), "t", "bucket")
+    qb = bk.filter(_is_probe()).select(F.col("vec_id").alias("query_id"), "t", "bucket")
     cand = (
         bk.join(
             bounded_broadcast(qb, "probe bucket table is <= 10 queries x 3 tables at every SF"),
@@ -252,13 +281,10 @@ def q_ann_lsh_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("query_id", F.col("vec_id").alias("cand_id"))
         .distinct()
     )
-    a = quant.select(F.col("vec_id").alias("query_id"), F.col("e").alias("eq"))
     b = quant.select(F.col("vec_id").alias("cand_id"), F.col("e").alias("ev"))
     d2 = F.expr("aggregate(zip_with(eq, ev, (x, y) -> (x - y) * (x - y)), 0L, (a, b) -> a + b)")
     return (
-        cand.join(bounded_broadcast(a.filter((F.col("query_id") % QUERY_STRIDE == 0)
-                                             & (F.col("query_id") < PROBE_MAX_ID)),
-                                    "probe vectors are <= 10 rows at every SF"), "query_id")
+        cand.join(_probe_vectors(quant), "query_id")
         .join(b, "cand_id")
         .withColumn("d2m", d2)
         .filter(F.col("d2m") <= E2_D2M)
@@ -292,13 +318,7 @@ _SPH_XP_SPARK = (
 def _sph_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(vec_id, e, n2, xp): milli-int embedding, exact norm, and the
     positive fixed-point unit-sphere requant xp used for clustering."""
-    emb = load_table_parallel(spark, sf_dir, "embeddings")
-    quant = (
-        emb.select("vec_id", F.expr(_QUANT_SPARK).alias("e"))
-        .withColumn("n2", F.expr("aggregate(transform(e, x -> x * x), 0L, (a, b) -> a + b)"))
-        .filter(F.col("n2") > 0)
-    )
-    return quant.withColumn("xp", F.expr(_SPH_XP_SPARK))
+    return nonzero_frame(spark, sf_dir).withColumn("xp", F.expr(_SPH_XP_SPARK))
 
 
 @session_memo
@@ -317,18 +337,13 @@ def _hash_sample(spark: SparkSession, sf_dir: str) -> list[tuple[int, list[int]]
     Cost discipline (caught by the round-13 bench phase_split: the
     first cut computed xp corpus-wide and put 4s of interpreted-HOF
     work into every training pass): the id-selection scan keeps only
-    CODEGEN-CHEAP expressions — md5-int56 plus a short-circuit
-    ``exists`` for the n2 > 0 guard (exists(e_i != 0) <=> n2 > 0,
-    exact) — so the corpus pass never pays the interpreted array HOFs
-    that build xp; those run on the winners only, behind a pushed
-    vec_id membership filter."""
-    emb = load_table_parallel(spark, sf_dir, "embeddings")
-    nz = F.expr(
-        "exists(embedding, x -> CAST(ROUND(CAST(x AS DOUBLE) * 1000) AS BIGINT) != 0)"
-    )
+    CODEGEN-CHEAP expressions — md5-int56 plus ``nonzero_frame``'s
+    short-circuit ``exists`` guard — so the corpus pass never pays the
+    interpreted array HOFs that build xp; those run on the winners
+    only, behind a pushed vec_id membership filter."""
     ids = [
         int(r.vec_id)
-        for r in emb.filter(nz)
+        for r in nonzero_frame(spark, sf_dir)
         .select(
             "vec_id",
             F.expr(md5_int56_spark("CAST(vec_id AS STRING)")).alias("h"),
@@ -735,42 +750,15 @@ def q_ann_ivf_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-query top-k, both proportional to the scanned fraction."""
     frame = _sph_frame(spark, sf_dir)
     cents = _sph_train_cents(spark, sf_dir, N_LISTS)
-    memb = _explode_nearest(frame, cents, IVF_MULTI).select(
-        "vec_id", "e", "n2", F.col("s.k").alias("list_id")
+    memb = _explode_nearest(frame, cents, IVF_MULTI, cols=("vec_id",)).select(
+        "vec_id", F.col("s.k").alias("list_id")
     )
-    qpr = memb.filter(
-        (F.col("vec_id") % QUERY_STRIDE == 0) & (F.col("vec_id") < PROBE_MAX_ID)
-    ).select(F.col("vec_id").alias("query_id"), "list_id")
-    cand = (
-        memb.join(
-            bounded_broadcast(qpr, "probe list table is <= 10 queries x 2 lists at every SF"),
-            "list_id",
-        )
-        .filter(F.col("query_id") != F.col("vec_id"))
-        .select("query_id", F.col("vec_id").alias("cand_id"))
-        .distinct()
-    )
-    a = frame.filter(
-        (F.col("vec_id") % QUERY_STRIDE == 0) & (F.col("vec_id") < PROBE_MAX_ID)
-    ).select(F.col("vec_id").alias("query_id"), F.col("e").alias("eq"), F.col("n2").alias("na2"))
-    b = frame.select(
-        F.col("vec_id").alias("cand_id"), F.col("e").alias("ev"), F.col("n2").alias("nb2")
-    )
-    dot = F.expr("aggregate(zip_with(eq, ev, (x, y) -> x * y), 0L, (a, b) -> a + b)")
-    scored = (
-        cand.join(bounded_broadcast(a, "probe vectors are <= 10 rows at every SF"), "query_id")
-        .join(b, "cand_id")
-        .select(
-            "query_id", "cand_id",
-            (dot.cast("double") / F.sqrt(F.col("na2").cast("double") * F.col("nb2"))).alias("cos_raw"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_raw"), F.asc("cand_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "cand_id", "rank", F.round("cos_raw", 6).alias("cosine"))
-    )
+    qpr = memb.filter(_is_probe()).select(F.col("vec_id").alias("query_id"), "list_id")
+    cand = memb.join(
+        bounded_broadcast(qpr, "probe list table is <= 10 queries x 2 lists at every SF"),
+        "list_id",
+    ).select("query_id", F.col("vec_id").alias("cand_id")).distinct()
+    return _rerank(cand, frame)
 
 
 WIDE_K = 64       # realistic IVF nlist slice — deliberately > K_LITERAL_MAX
@@ -868,68 +856,49 @@ def q_ann_ivf_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query("ann_cosine_topk_vec", oracle=_ANN_ORACLE, bench=True, exchanges=2)
 def q_ann_cosine_topk_vec(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Vectorized twin of `ann_cosine_topk` (same oracle, same rows):
-    the probe set is tiny, so its quantized matrix rides into an
-    Arrow-batched mapInPandas closure and every corpus batch scores
-    against ALL queries with one int64 matmul — ~3x the codegen
-    fold's throughput at sf0.1, because dense 64-dim dot products are
-    exactly what BLAS-shaped numpy is for (task brief: 'vectorized
-    Pandas UDF' path).
+    the probe set is tiny, so its quantized matrix rides into a
+    mapInArrow closure and every corpus batch scores against ALL
+    probes with one int64 matmul — ~3x the codegen fold's throughput
+    at sf0.1, because dense 64-dim dot products are pure array math.
 
     Exactness: quantization happens JVM-side with SQL ROUND (half-up;
     Python round() is banker's and would drift), so the ints entering
     the matmul are identical to the oracle's; the only float ops are
-    an IEEE divide+sqrt, identical in every engine.  The corpus still
-    never shuffles — only (query, cand, score) triples move into the
-    per-query top-k."""
-    emb = load_table_parallel(spark, sf_dir, "embeddings")
-    quant = emb.select("vec_id", F.expr(_QUANT_SPARK).alias("e"))
-    q_rows = quant.filter((F.col("vec_id") % QUERY_STRIDE == 0) & (F.col("vec_id") < PROBE_MAX_ID)).collect()
-    q_ids = [int(r.vec_id) for r in q_rows]
-    q_vecs = [list(map(int, r.e)) for r in q_rows]
+    an IEEE divide+sqrt, identical in every engine."""
+    # the norms are squared and summed in numpy, not by the JVM's
+    # interpreted n2 expression, so only (vec_id, e) is read
+    frame = nonzero_frame(spark, sf_dir).select("vec_id", "e")
+    probes = frame.filter(_is_probe()).collect()
+    q_ids = [int(r.vec_id) for r in probes]
+    q_vecs = [[int(x) for x in r.e] for r in probes]
 
     def score_batches(batches):
         import numpy as np
-        import pandas as pd
+        import pyarrow as pa
 
-        Q = np.array(q_vecs, dtype=np.int64)
-        qn = (Q * Q).sum(axis=1)
+        dim = len(q_vecs[0]) if q_vecs else 0
+        Q = np.array(q_vecs, dtype=np.int64).reshape(len(q_vecs), dim)
+        qn = (Q * Q).sum(axis=1).astype(np.float64)
         qid = np.array(q_ids, dtype=np.int64)
-        # zero-norm guard (mirrors the codegen twin's na2/nb2 > 0
-        # filter): a zero-quantized vector would produce NaN cosines,
-        # and NaN sorts FIRST under desc — silently taking rank 1
-        qmask = qn > 0
-        Q, qn, qid = Q[qmask], qn[qmask], qid[qmask]
-        for pdf in batches:
-            E = np.array(pdf["e"].tolist(), dtype=np.int64)
-            if len(E) == 0 or len(Q) == 0:
+        for batch in batches:
+            if batch.num_rows == 0 or len(qid) == 0:
                 continue
-            en = (E * E).sum(axis=1)
-            emask = en > 0
-            E, en = E[emask], en[emask]
-            cids = pdf["vec_id"].to_numpy()[emask]
-            if len(E) == 0:
-                continue
-            dots = E @ Q.T
-            cos = dots / np.sqrt(en[:, None].astype(np.float64) * qn[None, :].astype(np.float64))
+            cols = dict(zip(batch.schema.names, batch.columns))
+            e = cols["e"]
+            if np.any(np.diff(e.offsets.to_numpy()) != dim):
+                raise ValueError(f"embedding width differs from the probes' {dim}")
+            E = e.flatten().to_numpy().astype(np.int64).reshape(-1, dim)
+            en = (E * E).sum(axis=1).astype(np.float64)
+            cos = (E @ Q.T) / np.sqrt(en[:, None] * qn[None, :])
             n, m = cos.shape
-            yield pd.DataFrame(
-                {
-                    "query_id": np.tile(qid, n),
-                    "cand_id": np.repeat(cids, m),
-                    "cos_raw": cos.ravel(),
-                }
+            cids = cols["vec_id"].to_numpy()
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(np.tile(qid, n)), pa.array(np.repeat(cids, m)), pa.array(cos.ravel())],
+                names=["query_id", "cand_id", "cos_raw"],
             )
 
-    scored = (
-        quant
-        .mapInPandas(score_batches, "query_id BIGINT, cand_id BIGINT, cos_raw DOUBLE")
-        .filter(F.col("query_id") != F.col("cand_id"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_raw"), F.asc("cand_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "cand_id", "rank", F.round("cos_raw", 6).alias("cosine"))
+    return _cosine_top_k(
+        frame.mapInArrow(score_batches, "query_id BIGINT, cand_id BIGINT, cos_raw DOUBLE")
     )
 
 
@@ -1133,8 +1102,7 @@ def q_ann_pq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     frame, cents, codes, ds = _pq_index(spark, sf_dir)
 
     # --- per-query ADC lookup tables (probes x PQ_M x PQ_K rows) ---
-    q = frame.filter((F.col("vec_id") % QUERY_STRIDE == 0) & (F.col("vec_id") < PROBE_MAX_ID))
-    qsubs = q.select(
+    qsubs = frame.filter(_is_probe()).select(
         F.col("vec_id").alias("query_id"),
         F.posexplode(
             F.expr(f"transform(sequence(0, {PQ_M - 1}), m -> slice(xp, m * {ds} + 1, {ds}))")
@@ -1147,38 +1115,16 @@ def q_ann_pq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         "query_id", "sub_id", "code", d2.alias("ld2")
     )
 
-    # --- ADC scoring from codes only + shortlist (exact int sums) ---
+    # --- ADC scoring from codes only + shortlist (exact int sums); the
+    # probe itself is dropped first so it takes no shortlist slot ---
     approx = (
         codes.join(F.broadcast(lut), ["sub_id", "code"])
         .filter(F.col("query_id") != F.col("vec_id"))
-        .groupBy("query_id", "vec_id")
+        .groupBy("query_id", F.col("vec_id").alias("cand_id"))
         .agg(F.sum("ld2").alias("approx_d2"))
     )
-    ws = Window.partitionBy("query_id").orderBy(F.asc("approx_d2"), F.asc("vec_id"))
-    shortlist = (
-        approx.withColumn("sn", F.row_number().over(ws))
-        .filter(F.col("sn") <= PQ_SHORTLIST)
-        .select("query_id", F.col("vec_id").alias("cand_id"))
-    )
-
-    # --- exact integer-dot cosine re-rank of the shortlist only ---
-    qv = q.select(F.col("vec_id").alias("query_id"), F.col("e").alias("eq"),
-                  F.col("n2").alias("na2"))
-    cv = frame.select(F.col("vec_id").alias("cand_id"), F.col("e").alias("ev"),
-                      F.col("n2").alias("nb2"))
-    dot = F.expr("aggregate(zip_with(eq, ev, (x, y) -> x * y), 0L, (a, b) -> a + b)")
-    wr = Window.partitionBy("query_id").orderBy(F.desc("cos_raw"), F.asc("cand_id"))
-    return (
-        shortlist.join(cv, "cand_id")
-        .join(F.broadcast(qv), "query_id")
-        .withColumn("cos_raw",
-                    dot.cast("double") / F.sqrt(F.col("na2").cast("double") * F.col("nb2")))
-        .withColumn("rank", F.row_number().over(wr).cast("bigint"))
-        .filter(F.col("rank") <= TOP_K)
-        .select(
-            "query_id", "cand_id", "rank", F.round("cos_raw", 6).alias("cosine")
-        )
-    )
+    shortlist = _top_k(approx, F.asc("approx_d2"), k=PQ_SHORTLIST).select("query_id", "cand_id")
+    return _rerank(shortlist, frame)
 
 
 def _arrow_norm_batches(batches):
@@ -1344,7 +1290,7 @@ def q_embedding_int8_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb.select(
             "vec_id",
             "label",
-            F.expr(_QUANT_SPARK).alias("m"),
+            F.expr(QUANT_SPARK).alias("m"),
         )
         .withColumn(
             "scale",
@@ -1403,10 +1349,17 @@ def _srp_weight(b: int, d: int) -> int:
 
 _SRP_FLAT = [_srp_weight(b, d) for b in range(SRP_BITS) for d in range(SRP_DIM)]
 _SRP_DUCK_LIT = "[" + ",".join(str(x) for x in _SRP_FLAT) + "]"
-_SRP_SPARK_ROWS = [
-    "array(" + ",".join(f"{x}L" for x in _SRP_FLAT[b * SRP_DIM:(b + 1) * SRP_DIM]) + ")"
-    for b in range(SRP_BITS)
-]
+
+
+def _srp_sig() -> Column:
+    """The packed SRP_BITS-bit signature of ``e``: bit b is set when the
+    exact dot with hyperplane b is >= 0, so band i's bucket is bits
+    [i * SRP_BAND_BITS, (i + 1) * SRP_BAND_BITS) of it."""
+    sig = F.lit(0)
+    for b in range(SRP_BITS):
+        w = "array(" + ",".join(f"{x}L" for x in _SRP_FLAT[b * SRP_DIM:(b + 1) * SRP_DIM]) + ")"
+        sig = sig + F.when(F.expr(int_dot("e", w)) >= 0, F.lit(1 << b)).otherwise(0)
+    return sig.cast("bigint")
 
 
 _SRP_ORACLE = f"""
@@ -1475,11 +1428,10 @@ def q_ann_srp_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     (sketch -> band buckets -> candidate join -> exact rerank) is
     value-oracled end to end.
 
-    Each vector gets {SRP_BITS} sign bits (exact integer hyperplane
-    dots on the milli-quantized embedding), packed into
-    {SRP_BITS // SRP_BAND_BITS} bands of {SRP_BAND_BITS} bits;
-    candidates for the fixed 10-probe set are vectors sharing ANY band
-    bucket, reranked by exact cosine to top-{TOP_K}.
+    Each vector gets one packed {SRP_BITS}-bit signature (exact integer
+    hyperplane dots on the milli-quantized embedding), cut into
+    {SRP_BITS // SRP_BAND_BITS} bands of {SRP_BAND_BITS} bits; a
+    probe's candidates are the vectors sharing ANY band bucket.
 
     Scale shape: sketches are a pure projection (O(dim x bits) per
     row, no shuffle); the candidate search is an equi-join on
@@ -1487,56 +1439,24 @@ def q_ann_srp_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     is bounded by the literal-id contract so AQE broadcasts it
     unhinted.  Band width trades recall for candidate count exactly
     as in the MinHash banding above."""
-    emb = load_table_parallel(spark, sf_dir, "embeddings")
-    norm2 = F.expr("aggregate(transform(e, x -> x * x), 0L, (a, b) -> a + b)")
-    nz = (
-        emb.select("vec_id", F.expr(_QUANT_SPARK).alias("e"))
-        .withColumn("n2", norm2)
-        .filter(F.col("n2") > 0)
+    nz = nonzero_frame(spark, sf_dir)
+    mask = (1 << SRP_BAND_BITS) - 1
+    buckets = [
+        F.shiftright("sig", band * SRP_BAND_BITS).bitwiseAND(mask)
+        for band in range(SRP_BITS // SRP_BAND_BITS)
+    ]
+    skb = (
+        nz.select("vec_id", _srp_sig().alias("sig"))
+        .select("vec_id", F.posexplode(F.array(*buckets)).alias("band", "bucket"))
+        .select("vec_id", F.col("band").cast("bigint").alias("band"), "bucket")
     )
-    band_cols = []
-    for band in range(SRP_BITS // SRP_BAND_BITS):
-        bucket = F.lit(0)
-        for j in range(SRP_BAND_BITS):
-            b = band * SRP_BAND_BITS + j
-            dot_b = F.expr(
-                f"aggregate(zip_with(e, {_SRP_SPARK_ROWS[b]},"
-                " (x, y) -> x * y), 0L, (a, b) -> a + b)"
-            )
-            bucket = bucket + F.when(dot_b >= 0, F.lit(1 << j)).otherwise(0)
-        band_cols.append(bucket.cast("bigint"))
-    skb = nz.select(
-        "vec_id", F.posexplode(F.array(*band_cols)).alias("band", "bucket")
-    ).select("vec_id", F.col("band").cast("bigint").alias("band"), "bucket")
-    qb = skb.filter(
-        (F.col("vec_id") % QUERY_STRIDE == 0) & (F.col("vec_id") < PROBE_MAX_ID)
-    ).select(F.col("vec_id").alias("query_id"), "band", "bucket")
+    qb = skb.filter(_is_probe()).select(F.col("vec_id").alias("query_id"), "band", "bucket")
     cand = (
         qb.join(skb.withColumnRenamed("vec_id", "cand_id"), ["band", "bucket"])
-        .filter(F.col("query_id") != F.col("cand_id"))
         .select("query_id", "cand_id")
         .distinct()
     )
-    a = nz.select(F.col("vec_id").alias("query_id"), F.col("e").alias("eq"),
-                  F.col("n2").alias("na2"))
-    b = nz.select(F.col("vec_id").alias("cand_id"), F.col("e").alias("ev"),
-                  F.col("n2").alias("nb2"))
-    dot = F.expr("aggregate(zip_with(eq, ev, (x, y) -> x * y), 0L, (a, b) -> a + b)")
-    scored = (
-        cand.join(a, "query_id")
-        .join(b, "cand_id")
-        .select(
-            "query_id",
-            "cand_id",
-            (dot.cast("double") / F.sqrt(F.col("na2").cast("double") * F.col("nb2"))).alias("cos_raw"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_raw"), F.asc("cand_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "cand_id", "rank", F.round("cos_raw", 6).alias("cosine"))
-    )
+    return _rerank(cand, nz)
 
 
 # --------------------------------------- deterministic IVF (oracle-backed)
@@ -1615,9 +1535,8 @@ def q_ann_ivf_deterministic(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle-backed since round 12): the inverted lists are the
     one-step-Lloyd clusters
     already memoized for SemDeDup (dedup.py:_semantic_assign_df — K
-    lowest-id seeds, cosine argmax), each probe scans only its
-    {IVF_DET_PROBE} highest-cosine lists, and survivors rerank by
-    exact integer-dot cosine to top-{TOP_K}.
+    lowest-id seeds, cosine argmax), and each probe's candidates are
+    the members of its {IVF_DET_PROBE} highest-cosine lists.
 
     Scale shape identical to the KMeans twin: at 100 TB the corpus is
     partitioned BY list (scan-prunes to the probed lists), the seed
@@ -1643,37 +1562,17 @@ def q_ann_ivf_deterministic(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("n2").alias("ns2"),
         )
     )
-    probes = assign.filter(
-        (F.col("vec_id") % QUERY_STRIDE == 0) & (F.col("vec_id") < PROBE_MAX_ID)
-    ).select(F.col("vec_id").alias("query_id"), F.col("e").alias("eq"),
-             F.col("n2").alias("na2"))
-    dot_s = F.expr("aggregate(zip_with(eq, es, (x, y) -> x * y), 0L, (a, b) -> a + b)")
-    cos_s = dot_s.cast("double") / F.sqrt(F.col("na2").cast("double") * F.col("ns2"))
-    wl = Window.partitionBy("query_id").orderBy(F.desc("cos_s"), F.asc("seed_id"))
-    plists = (
-        probes.crossJoin(F.broadcast(seeds))
-        .select("query_id", "eq", "na2", "seed_id", cos_s.alias("cos_s"))
-        .withColumn("rnk", F.row_number().over(wl))
-        .filter(F.col("rnk") <= IVF_DET_PROBE)
-        .select("query_id", "eq", "na2", F.col("seed_id").alias("cluster_id"))
-    )
-    cand = plists.join(
-        assign.select("cluster_id", F.col("vec_id").alias("cand_id"),
-                      F.col("e").alias("ev"), F.col("n2").alias("nb2")),
-        "cluster_id",
-    ).filter(F.col("query_id") != F.col("cand_id"))
-    dot = F.expr("aggregate(zip_with(eq, ev, (x, y) -> x * y), 0L, (a, b) -> a + b)")
-    scored = cand.select(
-        "query_id",
-        "cand_id",
-        (dot.cast("double") / F.sqrt(F.col("na2").cast("double") * F.col("nb2"))).alias("cos_raw"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_raw"), F.asc("cand_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "cand_id", "rank", F.round("cos_raw", 6).alias("cosine"))
-    )
+    plists = _top_k(
+        _probe_vectors(assign).crossJoin(F.broadcast(seeds)).select(
+            "query_id",
+            F.col("seed_id").alias("cluster_id"),
+            int_cosine("eq", "na2", "es", "ns2").alias("cos_s"),
+        ),
+        F.desc("cos_s"),
+        k=IVF_DET_PROBE,
+        tie="cluster_id",
+    ).select("query_id", "cluster_id")
+    return _rerank(plists, assign, on="cluster_id")
 
 
 # ------------------------------- deterministic PQ + ADC (oracle-backed)
@@ -1758,8 +1657,7 @@ def q_ann_pq_deterministic(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB the code table is the ~32x-compressed index you keep hot
     while the raw vectors stay cold — the standard IVF-PQ memory
     layout."""
-    emb = load_table_parallel(spark, sf_dir, "embeddings")
-    quant = emb.select("vec_id", F.expr(_QUANT_SPARK).alias("e"))
+    quant = quantized(spark, sf_dir)
     fe = quant.select(
         "vec_id", F.posexplode("e").alias("d", "val")
     ).select(
@@ -1795,12 +1693,7 @@ def q_ann_pq_deterministic(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("rnk") == 1)
         .select("vec_id", "m", F.col("k").alias("code"))
     )
-    lut = (
-        dist.filter(
-            (F.col("vec_id") % QUERY_STRIDE == 0) & (F.col("vec_id") < PROBE_MAX_ID)
-        )
-        .select(F.col("vec_id").alias("query_id"), "m", "k", "d2")
-    )
+    lut = dist.filter(_is_probe()).select(F.col("vec_id").alias("query_id"), "m", "k", "d2")
     # lut is 10 probes x PQD_M x PQD_K = 1280 rows by the literal-id
     # contract, bounded at every SF
     # codes and lut share the `dist` lineage — rename lut's join keys
@@ -1818,11 +1711,8 @@ def q_ann_pq_deterministic(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("query_id", F.col("vec_id").alias("cand_id"))
         .agg(F.sum("d2").alias("adc_d2"))
     )
-    w = Window.partitionBy("query_id").orderBy(F.asc("adc_d2"), F.asc("cand_id"))
-    return (
-        adc.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "cand_id", "rank", F.col("adc_d2").cast("bigint").alias("adc_d2"))
+    return _top_k(adc, F.asc("adc_d2")).select(
+        "query_id", "cand_id", "rank", F.col("adc_d2").cast("bigint").alias("adc_d2")
     )
 
 
@@ -2008,22 +1898,7 @@ def q_ann_band_recall_tradeoff(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from decimal import Decimal
 
-    from ..session import lineage_checkpoint
-
-    emb = load_table_parallel(spark, sf_dir, "embeddings")
-    norm2 = F.expr("aggregate(transform(e, x -> x * x), 0L, (a, b) -> a + b)")
-    nz = (
-        emb.select("vec_id", F.expr(_QUANT_SPARK).alias("e"))
-        .withColumn("n2", norm2)
-        .filter(F.col("n2") > 0)
-    )
-    sig = F.lit(0)
-    for b in range(SRP_BITS):
-        dot_b = F.expr(
-            f"aggregate(zip_with(e, {_SRP_SPARK_ROWS[b]},"
-            " (x, y) -> x * y), 0L, (a, b) -> a + b)"
-        )
-        sig = sig + F.when(dot_b >= 0, F.lit(1 << b)).otherwise(0)
+    nz = nonzero_frame(spark, sf_dir)
 
     # The two materializations below — the SRP signature table and the
     # exact top-k truth table (<= 10 probes x TOP_K rows at any SF,
@@ -2039,9 +1914,7 @@ def q_ann_band_recall_tradeoff(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     with ThreadPoolExecutor(max_workers=2) as pool:
         f_sigs = pool.submit(
-            lambda: lineage_checkpoint(
-                nz.select("vec_id", sig.cast("bigint").alias("sig"))
-            )
+            lambda: lineage_checkpoint(nz.select("vec_id", _srp_sig().alias("sig")))
         )
         f_truth = pool.submit(
             lambda: lineage_checkpoint(
@@ -2105,9 +1978,7 @@ def q_ann_band_recall_tradeoff(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("bucket"),
         )
     )
-    qbk = buck.filter(
-        (F.col("vec_id") % QUERY_STRIDE == 0) & (F.col("vec_id") < PROBE_MAX_ID)
-    ).select(
+    qbk = buck.filter(_is_probe()).select(
         "bands", "band_bits", F.col("vec_id").alias("query_id"), "band", "bucket"
     )
     cand = (
@@ -2210,12 +2081,9 @@ def q_ann_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_lists"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("cand_id"))
-    return (
-        fused.withColumn("fused_rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("fused_rank") <= TOP_K)
-        .select("query_id", "cand_id", "fused_rank", "n_lists",
-                F.round("score", 6).alias("rrf_score"))
+    return _top_k(fused, F.desc("score")).select(
+        "query_id", "cand_id", F.col("rank").alias("fused_rank"), "n_lists",
+        F.round("score", 6).alias("rrf_score"),
     )
 
 
@@ -2301,7 +2169,7 @@ def _gram_relational(spark: SparkSession, sf_dir: str) -> DataFrame:
     constant the kernel removes."""
     emb = load_table(spark, sf_dir, "embeddings")
     u = (
-        emb.select("vec_id", F.expr(_QUANT_SPARK).alias("e"))
+        emb.select("vec_id", F.expr(QUANT_SPARK).alias("e"))
         .select("vec_id", F.posexplode("e").alias("d", "val"))
     )
     a = u.select("vec_id", F.col("d").alias("i"), F.col("val").alias("va"))

@@ -269,10 +269,11 @@ def test_bounded_broadcast_waivers_pinned():
                 ):
                     sites.add((str(path.relative_to(PKG)), fn.name))
     assert sites == {
-        ("operators/similarity.py", "q_ann_cosine_topk"),
+        # the probe vectors every cosine-ranked ANN query broadcasts
+        ("operators/similarity.py", "_probe_vectors"),
         ("operators/similarity.py", "q_ann_band_recall_tradeoff"),
-        # round 12: the deterministic E2LSH / multi-assign IVF probe
-        # sides — both bounded by the fixed 10-probe set at every SF
+        # the deterministic E2LSH bucket / multi-assign IVF list probe
+        # tables — both bounded by the fixed 10-probe set at every SF
         ("operators/similarity.py", "q_ann_lsh_bucketed"),
         ("operators/similarity.py", "q_ann_ivf_probe"),
         ("operators/text.py", "q_bm25_topk_docs"),
@@ -352,6 +353,22 @@ def test_memory_sinks_start_in_one_place():
             for path in sorted(PKG.rglob("*.py"))
         }
         assert {k: n for k, n in sites.items() if n} == {"streaming/queries.py": 1}, pattern
+
+
+def test_ann_rank_pieces_written_once():
+    """The ANN queries share one per-query top-k window
+    (``similarity._top_k``: order, tie to the lowest id, BIGINT rank)
+    and one exact integer dot (``vectors.int_dot``, under
+    ``int_cosine``): a query that restates either can drift from the
+    others' ranking contract while its own oracle still passes."""
+    window = re.compile(r"""partitionBy\s*\(\s*["']query_id["']\s*\)""")
+    assert len(window.findall(_code_only(PKG / "operators" / "similarity.py"))) == 1
+    dot = re.compile(r"\(\s*x\s*,\s*y\s*\)\s*->\s*x\s*\*\s*y\b")
+    sites = {
+        str(path.relative_to(PKG)): len(dot.findall(_code_only(path)))
+        for path in sorted(PKG.rglob("*.py"))
+    }
+    assert {k: n for k, n in sites.items() if n} == {"operators/vectors.py": 1}
 
 
 # --------------------------------------------------------------------
