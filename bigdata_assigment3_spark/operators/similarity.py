@@ -88,12 +88,16 @@ def _rerank(cand: DataFrame, frame: DataFrame, on: str = "cand_id") -> DataFrame
     (query_id, on); ``on`` is cand_id for a candidate list, or a frame
     column naming a whole inverted list (``ann_ivf_deterministic``
     joins its probed lists by cluster_id, so list members never
-    shuffle)."""
+    shuffle).  A generator that already scored the probe vectors
+    (``eq``, ``na2`` of ``_probe_vectors``) passes them along in
+    ``cand``, and they are not broadcast a second time."""
     vecs = frame.select(
         F.col("vec_id").alias("cand_id"), F.col("e").alias("ev"), F.col("n2").alias("nb2"),
         *([on] if on != "cand_id" else []),
     )
-    pairs = cand.join(_probe_vectors(frame), "query_id").join(vecs, on)
+    if "eq" not in cand.columns:
+        cand = cand.join(_probe_vectors(frame), "query_id")
+    pairs = cand.join(vecs, on)
     return _cosine_top_k(
         pairs.select("query_id", "cand_id", int_cosine("eq", "na2", "ev", "nb2").alias("cos_raw"))
     )
@@ -1565,13 +1569,15 @@ def q_ann_ivf_deterministic(spark: SparkSession, sf_dir: str) -> DataFrame:
     plists = _top_k(
         _probe_vectors(assign).crossJoin(F.broadcast(seeds)).select(
             "query_id",
+            "eq",
+            "na2",
             F.col("seed_id").alias("cluster_id"),
             int_cosine("eq", "na2", "es", "ns2").alias("cos_s"),
         ),
         F.desc("cos_s"),
         k=IVF_DET_PROBE,
         tie="cluster_id",
-    ).select("query_id", "cluster_id")
+    ).select("query_id", "cluster_id", "eq", "na2")
     return _rerank(plists, assign, on="cluster_id")
 
 

@@ -50,9 +50,10 @@ def nonzero_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     cosine; every cosine-ranked query reads this frame.
 
     The test runs on the raw rows as ``exists`` (some element quantizes
-    to nonzero, which holds exactly when n2 > 0): it stops at the first
-    nonzero element and runs before any other filter on the frame,
-    where ``n2 > 0`` would quantize, square and sum every element of
-    every row first."""
+    to nonzero): it stops at the first nonzero element and runs before
+    any other filter on the frame, where ``n2 > 0`` would quantize,
+    square and sum every element of every row first.  The two agree
+    exactly when no element is null; a null element makes n2 NULL
+    while ``exists`` may still hold on another element."""
     emb = load_table_parallel(spark, sf_dir, "embeddings")
     return _quantize(emb.filter(F.expr(f"exists(embedding, x -> {QUANT_ELEM} != 0)")))
