@@ -27,6 +27,7 @@ from ..functions.hashing import md5_int56_duck, md5_int56_spark
 from ..registry import REGISTRY, query
 from ..session import lineage_checkpoint, session_memo
 from ..sources import load_table, load_table_parallel
+from .components import connected_components
 from .vectors import int_cosine, nonzero_frame
 
 K = 16        # char-shingle length
@@ -521,68 +522,17 @@ def q_dedup_canonical_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     actionable keep/drop list: connected components over the verified
     MinHash-LSH pairs (duplicate relations are transitive in
     practice: A~B~C is one content cluster), canonical survivor =
-    min doc_id per component.
-
-    Scale shape: min-label propagation — each round is one shuffle
-    join (labels x undirected pair edges) + a min-agg + a
-    pointer-doubling relabel, lineage truncated per round; rounds
-    needed = O(log component diameter), so the cap is effectively
-    unreachable.  The cap raises rather than returning unconverged
-    labels (same contract as largest_component).
+    min doc_id per component (``components.connected_components``).
     """
     pairs = q_dedup_minhash_lsh(spark, sf_dir).filter(F.col("is_dup")).select(
-        "doc_a", "doc_b"
+        F.col("doc_a").alias("a"), F.col("doc_b").alias("b")
     )
-    und = (
-        pairs.select(F.col("doc_a").alias("v"), F.col("doc_b").alias("u"))
-        .unionAll(pairs.select(F.col("doc_b").alias("v"), F.col("doc_a").alias("u")))
-        .distinct()
-    )
-    und = lineage_checkpoint(und)  # pair mining runs once, reused per round
-    lbl = und.select("v").distinct().select("v", F.col("v").alias("lbl"))
-    # Each round takes the neighbor minimum AND the current label's own
-    # label (pointer-doubling): labels fall to the component minimum in
-    # O(log diameter) rounds instead of O(diameter), so a 50-round cap
-    # covers any component a real corpus can produce (2^50 diameter) —
-    # a plain neighbor-min loop with a small fixed cap hard-fails on a
-    # long mutation chain of near-dups.
-    for _ in range(50):
-        nbr = (
-            und.join(lbl.select(F.col("v").alias("u"), "lbl"), "u")
-            .groupBy("v")
-            .agg(F.min("lbl").alias("nbr_lbl"))
-        )
-        # carry the previous label through the round so convergence is
-        # a filter over the checkpointed result — no extra join+shuffle
-        # per round just to detect "no change"
-        step = lbl.join(nbr, "v", "left").select(
-            "v",
-            F.col("lbl").alias("old_lbl"),
-            F.least("lbl", F.coalesce("nbr_lbl", "lbl")).alias("mid"),
-        )
-        nxt = (
-            step.join(
-                lbl.select(F.col("v").alias("mid"), F.col("lbl").alias("mid_lbl")),
-                "mid",
-                "left",
-            )
-            .select(
-                "v",
-                "old_lbl",
-                F.least("mid", F.coalesce("mid_lbl", "mid")).alias("lbl"),
-            )
-        )
-        nxt = lineage_checkpoint(nxt)
-        changed = nxt.filter(F.col("lbl") != F.col("old_lbl")).count()
-        lbl = nxt.select("v", "lbl")
-        if changed == 0:
-            break
-    else:
-        raise RuntimeError("label propagation did not converge in 50 rounds")
+    nodes = pairs.select(F.col("a").alias("id")).unionByName(pairs.select(F.col("b").alias("id")))
+    lbl = connected_components(nodes, pairs)
     out = lbl.select(
-        F.col("v").alias("doc_id"),
-        F.col("lbl").cast("bigint").alias("canonical_id"),
-        (F.col("lbl") == F.col("v")).alias("is_survivor"),
+        F.col("id").alias("doc_id"),
+        F.col("comp").cast("bigint").alias("canonical_id"),
+        (F.col("comp") == F.col("id")).alias("is_survivor"),
     )
     return lineage_checkpoint(out)
 
@@ -1027,7 +977,7 @@ def q_dedup_cascade_attrition(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: stage 1 is one hash groupBy on md5(text); stage 2
     reuses the memoized verified-pair table and component labels
-    (pointer-doubling propagation, O(log diameter) rounds); the funnel
+    (``dedup_canonical_docs``); the funnel
     rows themselves are three 1-row count aggregates cross-joined —
     nothing here adds a corpus-growing shuffle beyond the stages it
     measures."""
@@ -1093,8 +1043,8 @@ def q_dedup_keep_longest(spark: SparkSession, sf_dir: str) -> DataFrame:
     no float scores, so membership can never flip on a rounding edge.
 
     Scale shape: reuses the memoized verified-pair table and the
-    pointer-doubling component labels; the survivor choice is one
-    rank window partitioned by component_id — a high-cardinality key
+    component labels of ``dedup_canonical_docs``; the survivor choice
+    is one rank window partitioned by component_id — a high-cardinality key
     (components are small by construction), so the window is fully
     parallel."""
     docs = load_table_parallel(spark, sf_dir, "documents")

@@ -41,6 +41,7 @@ from ..functions.nifti import nifti1_bytes, parse_nifti1
 from ..registry import query
 from ..session import lineage_checkpoint, stage_dir, staged_fixture
 from ..sources.files import decode_files, staged_files, write_shards
+from .components import connected_components
 
 Z, Y, X = 16, 32, 32
 NVOX = Z * Y * X
@@ -870,9 +871,10 @@ def q_largest_component_3d(spark: SparkSession, sf_dir: str) -> DataFrame:
     """3-D connected components at scale (SURVEY A14 / §8 open item):
     the distributed BSP pattern — label each z-slab locally (dense
     numpy min-propagation inside applyInPandas, no cross-slab
-    traffic), then merge across slab faces with a DISTRIBUTED
-    min-label propagation over the contracted component graph (nodes =
-    slab-local roots, edges = face adjacencies from one equi-join) —
+    traffic), then merge across slab faces with the distributed
+    ``components.connected_components`` over the contracted component
+    graph (nodes = slab-local roots, edges = face adjacencies from one
+    equi-join) —
     nothing proportional to the volume, faces, or component count ever
     reaches the driver, so the merge scales with executors like
     everything else.  Verified against a whole-volume numpy labeling
@@ -919,58 +921,19 @@ def q_largest_component_3d(spark: SparkSession, sf_dir: str) -> DataFrame:
     comp_sizes = roots.groupBy("root").agg(F.count(F.lit(1)).alias("n"))
 
     # Slab-boundary adjacency as a DISTRIBUTED equi-join (last-z rows of
-    # one slab against first-z rows of the next): nothing proportional
-    # to components or faces ever reaches the driver — the old driver
-    # union-find capped scale at driver memory.
+    # one slab against first-z rows of the next), labelled over the
+    # contracted component graph (nodes = slab-local roots): nothing
+    # proportional to components or faces ever reaches the driver.
     lo = roots.filter(F.col("z") % SLAB_Z_CC == SLAB_Z_CC - 1).select(
-        "z", "y", "x", F.col("root").alias("ra")
+        "z", "y", "x", F.col("root").alias("a")
     )
     hi = roots.filter(F.col("z") % SLAB_Z_CC == 0).select(
-        (F.col("z") - 1).alias("z"), "y", "x", F.col("root").alias("rb")
+        (F.col("z") - 1).alias("z"), "y", "x", F.col("root").alias("b")
     )
-    edges = lo.join(hi, ["z", "y", "x"]).select("ra", "rb").distinct()
-    edges = edges.unionByName(
-        edges.select(F.col("rb").alias("ra"), F.col("ra").alias("rb"))
-    )
-
-    # Min-label propagation + pointer jumping over the COMPONENT graph
-    # (nodes = slab-local roots — tiny next to voxels): the same
-    # O(log diameter) loop as the 2-D largest_component, but on the
-    # contracted graph, so each round shuffles components, not voxels.
-    lab = comp_sizes.select("root", F.col("root").alias("comp"))
-    lab = lineage_checkpoint(lab)
-    for _ in range(12):
-        prop = (
-            lab.join(edges, lab.root == edges.ra)
-            .join(
-                lab.select(F.col("root").alias("b_root"), F.col("comp").alias("b_comp")),
-                F.col("rb") == F.col("b_root"),
-            )
-            .groupBy("root")
-            .agg(F.min("b_comp").alias("nbr_min"))
-        )
-        m1 = lab.join(prop, ["root"], "left").select(
-            "root", F.least(F.col("comp"), F.coalesce("nbr_min", F.col("comp"))).alias("comp")
-        )
-        rep = m1.select(F.col("root").alias("cell"), F.col("comp").alias("rep_comp"))
-        nxt = m1.join(rep, m1.comp == rep.cell, "left").select(
-            "root", F.coalesce("rep_comp", "comp").alias("comp")
-        )
-        nxt = lineage_checkpoint(nxt)
-        changed = (
-            nxt.alias("a")
-            .join(lab.alias("b"), ["root"])
-            .filter(F.col("a.comp") != F.col("b.comp"))
-            .count()
-        )
-        lab = nxt
-        if changed == 0:
-            break
-    else:
-        raise RuntimeError(
-            "largest_component_3d: component-graph propagation did not "
-            f"converge within the round cap (last round changed {changed})"
-        )
+    lab = connected_components(
+        comp_sizes.select(F.col("root").alias("id")),
+        lo.join(hi, ["z", "y", "x"]).select("a", "b"),
+    ).select(F.col("id").alias("root"), "comp")
 
     merged = (
         comp_sizes.join(lab, "root")

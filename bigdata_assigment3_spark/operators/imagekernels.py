@@ -11,8 +11,8 @@ oracle-checked bit-for-bit.
 
 Scale notes: a kernel join shuffles on coordinates once, independent
 of image count; partitioning by image_id makes a billion-image corpus
-embarrassingly parallel.  For very wide kernels the per-image pandas
-UDF (operators/multimodal.py machinery) is the fallback — these
+embarrassingly parallel.  For very wide kernels a per-image numpy
+kernel (the shape of hough.py's ``hough_peak_udf``) is the fallback — these
 relational forms shine when images are huge (gigapixel) and must be
 split ACROSS executors, which dense per-image arrays cannot do.
 """
@@ -24,11 +24,12 @@ from pyspark.sql.window import Window
 
 from ..registry import query
 from ..session import lineage_checkpoint
+from .components import connected_components
 from .hough import EDGE_POINTS_SQL, SIZE
 from .motion import FRAME_PIXELS_SQL, H, W
 
 # one test frame of the synthetic video (moderate, t=5)
-_FRAME_FILTER = "video_id = 'moderate' AND frame_idx = 5"
+FRAME_FILTER = "video_id = 'moderate' AND frame_idx = 5"
 
 _OFFS9 = """
 offs9 AS (
@@ -42,7 +43,7 @@ offs9 AS (
     "conv_box_blur",
     oracle=f"""
     WITH px AS ({FRAME_PIXELS_SQL}),
-    f AS (SELECT y, x, v FROM px WHERE {_FRAME_FILTER}),
+    f AS (SELECT y, x, v FROM px WHERE {FRAME_FILTER}),
     {_OFFS9},
     blur AS (
       SELECT a.y, a.x, COUNT(b.v) AS n, SUM(b.v) AS s
@@ -61,7 +62,7 @@ def q_conv_box_blur(spark: SparkSession, sf_dir: str) -> DataFrame:
     form of cv2.blur; ref hough_heart_detector.py:90-99 preprocessing).
     Border pixels (incomplete neighborhooods) are excluded, matching a
     'valid' convolution."""
-    px = spark.sql(FRAME_PIXELS_SQL).filter(F.expr(_FRAME_FILTER)).select("y", "x", "v")
+    px = spark.sql(FRAME_PIXELS_SQL).filter(F.expr(FRAME_FILTER)).select("y", "x", "v")
     offs = spark.sql(f"WITH {_OFFS9} SELECT * FROM offs9")
     a, b = px.alias("a"), px.alias("b")
     blur = (
@@ -86,7 +87,7 @@ def q_conv_box_blur(spark: SparkSession, sf_dir: str) -> DataFrame:
     "sobel_edges",
     oracle=f"""
     WITH px AS ({FRAME_PIXELS_SQL}),
-    f AS (SELECT y, x, v FROM px WHERE {_FRAME_FILTER}),
+    f AS (SELECT y, x, v FROM px WHERE {FRAME_FILTER}),
     {_OFFS9},
     grad AS (
       SELECT a.y, a.x,
@@ -109,7 +110,7 @@ def q_sobel_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     relational Canny-lite; ref Canny at hough_heart_detector.py:276).
     Kernel weights are the closed form ox*(2-|oy|) / oy*(2-|ox|) —
     exactly the Sobel masks — so one join computes both gradients."""
-    px = spark.sql(FRAME_PIXELS_SQL).filter(F.expr(_FRAME_FILTER)).select("y", "x", "v")
+    px = spark.sql(FRAME_PIXELS_SQL).filter(F.expr(FRAME_FILTER)).select("y", "x", "v")
     offs = spark.sql(f"WITH {_OFFS9} SELECT * FROM offs9")
     a, b = px.alias("a"), px.alias("b")
     gx_w = F.col("o.ox") * (2 - F.abs(F.col("o.oy")))
@@ -275,12 +276,12 @@ def q_morphology_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     # reachable from root over the 4-neighbor edge list; a component's
     # label is the min cell id it can reach.  Closure size is
     # sum(|component|^2) — fine for the bounded fixture; the Spark side
-    # uses pointer-jumping min-propagation instead, which is the shape
-    # that scales.
+    # labels the edge list with components.connected_components instead,
+    # which is the shape that scales.
     oracle=f"""
     WITH RECURSIVE px AS ({FRAME_PIXELS_SQL}),
     cells AS (SELECT y * {W} + x AS cell, y, x FROM px
-              WHERE {_FRAME_FILTER} AND v >= 190),
+              WHERE {FRAME_FILTER} AND v >= 190),
     offs(dy, dx) AS (VALUES (1,0),(-1,0),(0,1),(0,-1)),
     edges AS (
       SELECT a.cell AS src, b.cell AS dst
@@ -299,70 +300,30 @@ def q_morphology_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_largest_component(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Connected components on the 2-D in-mask slice via iterative
-    min-label propagation (SURVEY A14; ref keep-largest-CC skull
-    strip, brain_segmentation.py:88-92).  Driver loop over distributed
-    joins with lineage checkpointing; converges in O(diameter) rounds.
-    Returns component sizes (largest first).
+    """Connected components on the 2-D in-mask slice (SURVEY A14; ref
+    keep-largest-CC skull strip, brain_segmentation.py:88-92): the
+    4-neighbor cell-id edge list is built once, by one join of each
+    cell's right and lower neighbor ids against the cell set, and
+    labelled by ``components.connected_components``; isolated cells are
+    nodes without edges.  Returns component sizes (largest first).
 
     Value-oracled: DuckDB computes the same components by recursive-CTE
     transitive closure over the shared SQL pixel fixture — two utterly
     different algorithms agreeing on labels AND sizes."""
-    frame = (
+    # the pixel generator runs once: the nodes and the edge join read it
+    cells = lineage_checkpoint(
         spark.sql(FRAME_PIXELS_SQL)
-        .filter(F.expr(_FRAME_FILTER) & (F.col("v") >= 190))
-        .select("y", "x")
+        .filter(F.expr(FRAME_FILTER) & (F.col("v") >= 190))
+        .select((F.col("y") * W + F.col("x")).alias("id"), "x")
     )
-    lab = frame.select("y", "x", (F.col("y") * W + F.col("x")).alias("comp"))
-    lab = lineage_checkpoint(lab)
-    offs = spark.sql(
-        "SELECT * FROM (VALUES (1,0),(-1,0),(0,1),(0,-1)) AS o(dy, dx)"
+    right = cells.filter(F.col("x") < W - 1).select(
+        F.col("id").alias("a"), (F.col("id") + 1).alias("b")
     )
-    # Each round: 4-neighbor min, then pointer jumping (adopt the label
-    # currently held by the representative cell comp points at) —
-    # label depth halves per round, so any mask converges in
-    # O(log diameter) rounds.
-    for _ in range(12):
-        l, nb = lab.alias("l"), lab.alias("n")
-        prop = (
-            l.crossJoin(F.broadcast(offs.alias("o")))
-            .join(
-                nb,
-                (F.col("n.y") == F.col("l.y") + F.col("o.dy"))
-                & (F.col("n.x") == F.col("l.x") + F.col("o.dx")),
-            )
-            .groupBy("l.y", "l.x")
-            .agg(F.min("n.comp").alias("nbr_min"))
-        )
-        m1 = lab.join(prop, ["y", "x"], "left").select(
-            "y",
-            "x",
-            F.least(F.col("comp"), F.coalesce("nbr_min", F.col("comp"))).alias("comp"),
-        )
-        rep = m1.select(
-            (F.col("y") * W + F.col("x")).alias("cell_id"), F.col("comp").alias("rep_comp")
-        )
-        nxt = (
-            m1.join(rep, m1.comp == rep.cell_id, "left")
-            .select("y", "x", F.coalesce("rep_comp", "comp").alias("comp"))
-        )
-        nxt = lineage_checkpoint(nxt)
-        changed = (
-            nxt.alias("a")
-            .join(lab.alias("b"), ["y", "x"])
-            .filter(F.col("a.comp") != F.col("b.comp"))
-            .count()
-        )
-        lab = nxt
-        if changed == 0:
-            break
-    else:
-        raise RuntimeError(
-            "largest_component: min-label propagation did not converge "
-            f"within the round cap (last round still changed {changed} cells)"
-        )
+    down = cells.select(F.col("id").alias("a"), (F.col("id") + W).alias("b"))
+    edges = right.unionByName(down).join(cells.select(F.col("id").alias("b")), "b")
     return (
-        lab.groupBy("comp")
+        connected_components(cells, edges)
+        .groupBy("comp")
         .agg(F.count(F.lit(1)).alias("size"))
         .orderBy(F.desc("size"), F.asc("comp"))
         .select(F.col("comp").cast("bigint").alias("component"), "size")

@@ -11,9 +11,9 @@ from pyspark.sql.window import Window
 from ..functions.scalar import money_sum, unscaled
 from ..registry import query
 from ..sources import load_table
+from .imagekernels import FRAME_FILTER
 from .motion import FRAME_PIXELS_SQL
 
-_FRAME_FILTER = "video_id = 'moderate' AND frame_idx = 5"
 _BIAS_R = 4  # bias-blur radius -> (2r+1)^2 box
 
 _OFFS_BIAS = f"""
@@ -29,7 +29,7 @@ offs AS (
     "bias_field_correct",
     oracle=f"""
     WITH px AS ({FRAME_PIXELS_SQL}),
-    f AS (SELECT y, x, v FROM px WHERE {_FRAME_FILTER}),
+    f AS (SELECT y, x, v FROM px WHERE {FRAME_FILTER}),
     {_OFFS_BIAS},
     bias AS (
       SELECT a.y, a.x, a.v, SUM(b.v) AS s, COUNT(b.v) AS n
@@ -49,7 +49,7 @@ def q_bias_field_correct(spark: SparkSession, sf_dir: str) -> DataFrame:
     a large-sigma Gaussian blur — box blur here, same normalization
     semantics).  corrected = v * n / sum stays a rational of integers
     until one final division -> exact cross-engine."""
-    px = spark.sql(FRAME_PIXELS_SQL).filter(F.expr(_FRAME_FILTER)).select("y", "x", "v")
+    px = spark.sql(FRAME_PIXELS_SQL).filter(F.expr(FRAME_FILTER)).select("y", "x", "v")
     offs = spark.sql(f"WITH {_OFFS_BIAS} SELECT * FROM offs")
     a, b = px.alias("a"), px.alias("b")
     bias = (
@@ -77,7 +77,7 @@ def q_bias_field_correct(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT CAST(FLOOR(y / 16) AS BIGINT) AS ty,
              CAST(FLOOR(x / 16) AS BIGINT) AS tx,
              y, x, v
-      FROM px WHERE {_FRAME_FILTER}
+      FROM px WHERE {FRAME_FILTER}
     ),
     ranked AS (
       SELECT ty, tx, y, x, v,
@@ -99,7 +99,7 @@ def q_tile_hist_equalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     remap v -> 255 * CDF(v).  The CDF is a RANGE-framed window count
     (ties share their cumulative rank, like the classic transform);
     output is the per-tile value mapping."""
-    px = spark.sql(FRAME_PIXELS_SQL).filter(F.expr(_FRAME_FILTER))
+    px = spark.sql(FRAME_PIXELS_SQL).filter(F.expr(FRAME_FILTER))
     f = px.select(
         F.floor(F.col("y") / 16).cast("bigint").alias("ty"),
         F.floor(F.col("x") / 16).cast("bigint").alias("tx"),

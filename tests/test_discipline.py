@@ -371,6 +371,39 @@ def test_ann_rank_pieces_written_once():
     assert {k: n for k, n in sites.items() if n} == {"operators/vectors.py": 1}
 
 
+def _component_labelling(src: str) -> tuple[int, int]:
+    """(driver loops that checkpoint a ``F.min`` aggregate each round,
+    ``RuntimeError`` raises about non-convergence) in ``src``."""
+    loops = raises = 0
+    for node in ast.walk(ast.parse(src)):
+        if isinstance(node, (ast.For, ast.While)):
+            calls = {
+                ast.unparse(n.func) for n in ast.walk(node) if isinstance(n, ast.Call)
+            }
+            loops += {"lineage_checkpoint", "F.min"} <= calls
+        elif (
+            isinstance(node, ast.Raise)
+            and isinstance(node.exc, ast.Call)
+            and ast.unparse(node.exc.func) == "RuntimeError"
+        ):
+            raises += "converge" in ast.unparse(node.exc)
+    return loops, raises
+
+
+def test_components_labelled_in_one_place():
+    """Connected components are labelled only by
+    ``components.connected_components``: one neighbour-min propagation
+    loop and one round-cap raise.  A restated loop can keep a round cap
+    its graphs outgrow while its own oracle still passes."""
+    sites = {
+        str(path.relative_to(PKG)): _component_labelling(path.read_text())
+        for path in sorted(PKG.rglob("*.py"))
+    }
+    assert {k: n for k, n in sites.items() if n != (0, 0)} == {
+        "operators/components.py": (1, 1)
+    }
+
+
 # --------------------------------------------------------------------
 # One way for worker code to reach the package: the package pickles by
 # value (see its __init__ docstring), so a Python worker never imports
